@@ -388,6 +388,10 @@ def main() -> None:
     # floored at 1): a fast host's numbers stand as measured.
     canary = host_canary_ms()
     slow_factor = max(1.0, canary / QUIET_HOST_CANARY_MS)
+    pipeline_times = pipeline.get("queries", {})
+    # a name in both suites would silently keep only the pipeline time
+    shared = set(times) & set(pipeline_times)
+    assert not shared, f"headline and pipeline suites share queries: {sorted(shared)}"
     summary_line = json.dumps({
         "metric": "headline_summary",
         "value": total,
@@ -400,7 +404,7 @@ def main() -> None:
         # the big line's "queries"; pipeline values are the same
         # median-of-3 totals as pipeline_suite.queries. Additions-only:
         # nothing removed, renamed, or re-measured.
-        "queries": {**times, **pipeline.get("queries", {})},
+        "queries": {**times, **pipeline_times},
         "concurrent_wall_sec": concurrent_wall,
         "concurrent_wall_median3_sec": concurrent_median3,
         "concurrent_wall_normalized_sec": round(concurrent_wall / slow_factor, 4),

@@ -29,12 +29,24 @@ compacted SSTables, session buffer = memtable).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BooleanType,
+    DateType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 from pyspark.sql.window import Window
 
 from .catalog import table
@@ -52,6 +64,7 @@ from .cql import (
     cql_type_to_spark,
     mask_column,
     normalize_mask_spec,
+    parse,
     parse_create_table,
     split_top_level,
     translate_function_body,
@@ -59,6 +72,18 @@ from .cql import (
 
 ROW_MARKER = "__row__"
 ROW_TOMBSTONE = "*"
+
+#: the one-column result of a lightweight transaction
+_APPLIED = StructType([StructField("[applied]", BooleanType())])
+
+#: memtable cell columns after the primary key (see CqlSession._emit)
+_CELL_FIELDS = [
+    StructField("column", StringType()),
+    StructField("value", StringType()),
+    StructField("writetime", LongType()),
+    StructField("expires_at", LongType()),
+    StructField("tombstone", BooleanType()),
+]
 
 _USING = (
     r"(?:\s+USING\s+(?:TTL\s+(?P<ttl>\d+)(?:\s+AND\s+TIMESTAMP\s+(?P<wts>\d+))?"
@@ -689,17 +714,18 @@ class CqlSession:
         finally:
             self._in_trigger = False
 
-    def _row_exists(self, tbl: str, key: dict) -> bool:
-        df = self.snapshot(tbl)
+    def _key_rows(self, tbl: str, key: dict) -> DataFrame:
+        """The merged rows whose columns equal ``key``'s values."""
+        df = self.snapshot(tbl, single_partition=self._pins_partition(tbl, key))
         for k, v in key.items():
             df = df.filter(F.col(k) == v)
-        return df.limit(1).count() > 0
+        return df
+
+    def _row_exists(self, tbl: str, key: dict) -> bool:
+        return self._key_rows(tbl, key).limit(1).count() > 0
 
     def _cell_value(self, tbl: str, key: dict, col: str):
-        df = self.snapshot(tbl)
-        for k, v in key.items():
-            df = df.filter(F.col(k) == v)
-        rows = df.select(col).limit(1).collect()
+        rows = self._key_rows(tbl, key).select(col).limit(1).collect()
         return rows[0][0] if rows else None
 
     def prepare(self, statement: str) -> Prepared:
@@ -1222,7 +1248,7 @@ class CqlSession:
                     )
                     for f in self._system_schema(tbl).schema.fields
                 ]
-                return self.spark.createDataFrame(
+                return self._local_frame(
                     rows, "column_name STRING, type STRING, kind STRING"
                 )
             if dks and dks not in self._keyspaces:
@@ -1248,7 +1274,7 @@ class CqlSession:
             ]
             # the ``mask`` column renders the attached mask exactly as a
             # Cassandra 5 DESCRIBE renders ``MASKED WITH fn(args)``
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows, "column_name STRING, type STRING, kind STRING, mask STRING"
             )
 
@@ -1551,9 +1577,9 @@ class CqlSession:
             row = dict(zip(cols, vals))
             key = {c: row[c] for c in (*pk, *cc) if c in row}
             if self._row_exists(tbl, key):
-                return self.spark.createDataFrame([(False,)], "`[applied]` BOOLEAN")
+                return self._local_frame([(False,)], _APPLIED)
             self.execute(bare)
-            return self.spark.createDataFrame([(True,)], "`[applied]` BOOLEAN")
+            return self._local_frame([(True,)], _APPLIED)
 
         m = _UPDATE.match(s)
         if m and m.group("cond"):
@@ -1564,12 +1590,12 @@ class CqlSession:
             key = self._key_of(tbl, m.group("where"))
             current = self._cell_value(tbl, key, cm.group(1).lower())
             if current != _literal(cm.group(2)):
-                return self.spark.createDataFrame([(False,)], "`[applied]` BOOLEAN")
+                return self._local_frame([(False,)], _APPLIED)
             # Slice at the regex's cond span, not a textual ' IF ' search —
             # a quoted value may contain ' IF ' (e.g. SET note = 'as if new').
             bare = re.sub(r"\s+IF\s*$", "", s[: m.start("cond")], flags=re.IGNORECASE)
             self.execute(bare)
-            return self.spark.createDataFrame([(True,)], "`[applied]` BOOLEAN")
+            return self._local_frame([(True,)], _APPLIED)
 
         m = _INSERT.match(s)
         if m:
@@ -1760,7 +1786,7 @@ class CqlSession:
                 for n in names
                 if n in self._roles
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows, "role STRING, super BOOLEAN, login BOOLEAN"
             )
         m = _LIST_PERMISSIONS.match(s)
@@ -1781,20 +1807,59 @@ class CqlSession:
                 and (want_perm == "ALL" or p == want_perm)
                 and (want_res is None or res == want_res)
             )
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows, "role STRING, resource STRING, permission STRING"
             )
         return NotImplemented
 
     # -- read path ----------------------------------------------------------
 
-    def snapshot(self, tbl: str, with_writetimes: bool = False) -> DataFrame:
+    def _local_frame(self, rows: list[tuple], schema: StructType | str) -> DataFrame:
+        """Driver-held rows as an Arrow-backed ``LocalRelation``.
+
+        The rows travel inside the plan (``LocalTableScan``), so reading
+        them starts no Spark job and no Python worker — unlike a frame made
+        from a Python list, whose ``ExistingRDD`` runs a Python worker per
+        partition. ``schema`` is a StructType or a DDL string.
+        TIMESTAMP and DATE fields also take ISO-8601 text (CQL literals
+        arrive as text); naive datetimes are read as UTC, the engine's
+        pinned session time zone."""
+        struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+        arrow = to_arrow_schema(struct)
+        cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+        arrays = []
+        for values, field, af in zip(cols, struct.fields, arrow):
+            if isinstance(field.dataType, (TimestampType, DateType)):
+                iso = dt.datetime if isinstance(field.dataType, TimestampType) else dt.date
+                values = [iso.fromisoformat(v) if isinstance(v, str) else v for v in values]
+            arrays.append(pa.array(values, type=af.type))
+        return self.spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
+
+    def _pins_partition(self, tbl: str, restricted) -> bool:
+        """True when the columns restricted by ``=``/``IN`` cover the
+        table's whole partition key: the read names its partitions."""
+        return set(self._keys(tbl)[0]) <= set(restricted)
+
+    def snapshot(
+        self, tbl: str, with_writetimes: bool = False, single_partition: bool = False
+    ) -> DataFrame:
         """The merged live view of a table: snapshot + mutations, compacted
-        cell-wise. Pure DataFrame plan; no driver-side row materialization."""
+        cell-wise. The parquet snapshot is melted into cells inside the
+        plan; the memtable (the session cell buffer, driver-held) enters it
+        as a ``LocalRelation`` (``_local_frame``), unioned with those cells.
+
+        ``single_partition`` is for reads that fix every partition-key
+        column with ``=``/``IN`` (Cassandra's single-partition read).
+        Catalyst pushes such a key filter below the windows and the pivot,
+        which are keyed on the primary key, so only the named partitions'
+        cells reach the merge; they are coalesced to one partition before
+        the two windows and the pivot, and the read runs as one task with
+        no Exchange. Coalescing never changes the result. Every other read
+        keeps the hash-partitioned merge."""
         if tbl in self._created:
             # DDL-created table: empty snapshot with the declared schema;
             # all rows live in the session cell buffer
-            base = self.spark.createDataFrame([], self._created[tbl].spark_schema)
+            base = self._local_frame([], self._created[tbl].spark_schema)
         else:
             base = table(self.spark, self.sf_dir, tbl)
         pk, cc = self._keys(tbl)
@@ -1839,17 +1904,18 @@ class CqlSession:
                 + (m["column"], m["value"], m["writetime"], m["expires_at"], m["tombstone"])
                 for m in muts
             ]
-            schema = (
-                ", ".join(f"{k} {dtypes[k]}" for k in keys)
-                + ", column STRING, value STRING, writetime LONG, expires_at LONG, tombstone BOOLEAN"
+            schema = StructType(
+                [StructField(k, base.schema[k].dataType) for k in keys] + _CELL_FIELDS
             )
-            cells = cells.unionByName(self.spark.createDataFrame(rows, schema))
+            cells = cells.unionByName(self._local_frame(rows, schema))
 
         # TRUNCATE record: every cell at or below the truncate writetime is
         # gone — including the whole melted snapshot (writetime 0); only
         # post-truncate mutations survive
         if tbl in self._truncated:
             cells = cells.filter(F.col("writetime") > F.lit(self._truncated[tbl]))
+        if single_partition:
+            cells = cells.coalesce(1)
 
         # row tombstones shadow all older cells of the key
         w_key = Window.partitionBy(*keys)
@@ -1957,7 +2023,7 @@ class CqlSession:
             for r in rows:
                 self._insert_row(tbl, {c: r[c] for c in cols}, None)
             n = len(rows)
-        return self.spark.createDataFrame([(n,)], "n_rows BIGINT")
+        return self._local_frame([(n,)], "n_rows BIGINT")
 
     # -- schema DDL beyond tables -------------------------------------------
 
@@ -2129,12 +2195,12 @@ class CqlSession:
         ks = self._current_ks
         if which == "keyspaces":
             rows = [(k, True) for k in sorted(self._keyspaces)]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows, "keyspace_name STRING, durable_writes BOOLEAN"
             )
         if which == "tables":
             rows = [(ks, t) for t in sorted(self._all_tables())]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows, "keyspace_name STRING, table_name STRING"
             )
         if which == "columns":
@@ -2149,7 +2215,7 @@ class CqlSession:
                     pos = pk.index(c) if c in pk else cc.index(c) if c in cc else -1
                     order = "asc" if c in cc else "none"
                     rows.append((ks, tbl, c, order, kind, pos, t))
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, table_name STRING, column_name STRING, "
                 "clustering_order STRING, kind STRING, position INT, type STRING",
@@ -2164,7 +2230,7 @@ class CqlSession:
                 for c, spec in sorted(td.masks.items()):
                     fn, _, argtext = spec.partition("(")
                     rows.append((ks, tbl, c, "system", fn, argtext.rstrip(")")))
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, table_name STRING, column_name STRING, "
                 "function_keyspace_name STRING, function_name STRING, "
@@ -2189,14 +2255,14 @@ class CqlSession:
                         _json.dumps(opts, sort_keys=True),
                     )
                 )
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, table_name STRING, index_name STRING, "
                 "kind STRING, options STRING",
             )
         if which == "views":
             rows = [(ks, v.name, v.base) for v in self._views.values()]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, view_name STRING, base_table_name STRING",
             )
@@ -2207,7 +2273,7 @@ class CqlSession:
                 for tbl, trig in sorted(self._triggers.items())
                 for name, cls in sorted(trig.items())
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, table_name STRING, "
                 "trigger_name STRING, options MAP<STRING, STRING>",
@@ -2217,7 +2283,7 @@ class CqlSession:
                 (ks, name, list(fields), [fields[f] for f in fields])
                 for name, fields in sorted(self._udts.items())
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, type_name STRING, "
                 "field_names ARRAY<STRING>, field_types ARRAY<STRING>",
@@ -2227,7 +2293,7 @@ class CqlSession:
                 (ks, f.name, [t for _, t in f.args], f.returns, f.body_sql)
                 for f in self._functions.values()
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, function_name STRING, "
                 "argument_types ARRAY<STRING>, return_type STRING, body STRING",
@@ -2237,7 +2303,7 @@ class CqlSession:
                 (ks, a.name, a.arg_type, a.stype, a.sfunc, a.finalfunc)
                 for a in self._aggregates.values()
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "keyspace_name STRING, aggregate_name STRING, "
                 "argument_type STRING, state_type STRING, state_func STRING, "
@@ -2248,13 +2314,13 @@ class CqlSession:
                 ("local", "dcosb", "3.4.7", "5.0.0",
                  "org.apache.spark.sql.catalyst.expressions.Murmur3Hash", ks)
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "key STRING, cluster_name STRING, cql_version STRING, "
                 "release_version STRING, partitioner STRING, keyspace_name STRING",
             )
         if which == "peers":  # single-engine: no peers, schema only
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 [], "peer STRING, data_center STRING, release_version STRING"
             )
         if which == "settings":
@@ -2268,7 +2334,7 @@ class CqlSession:
                 "spark.sql.legacy.parquet.nanosAsLong",
             )
             rows = [(n, str(self.spark.conf.get(n, "<unset>"))) for n in names]
-            return self.spark.createDataFrame(rows, "name STRING, value STRING")
+            return self._local_frame(rows, "name STRING, value STRING")
         if which == "clients":
             # [PK `db/virtual/ClientsTable.java`] — every principal that
             # authenticated on this session with its statement count; the
@@ -2277,7 +2343,7 @@ class CqlSession:
                 (u, "ready" if u == self._principal else "authenticated", c)
                 for u, c in sorted(self._request_counts.items())
             ]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows,
                 "username STRING, connection_stage STRING, request_count BIGINT",
             )
@@ -2300,7 +2366,7 @@ class CqlSession:
                 "query_batch": _sim._QUERY_BATCH_CACHE,
             }
             rows = [(n, len(d)) for n, d in sorted(regs.items())]
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 rows, "name STRING, entry_count BIGINT"
             )
         raise InvalidRequest(f"unknown system table {which}")
@@ -2350,7 +2416,12 @@ class CqlSession:
         if tbl in self._views:
             src = self._mv_source(self._views[tbl])
         else:
-            src = self.snapshot(tbl, with_writetimes=with_wt)
+            restricted = [c for c, op, _ in parse(statement, extra).conds if op in ("=", "in")]
+            src = self.snapshot(
+                tbl,
+                with_writetimes=with_wt,
+                single_partition=self._pins_partition(tbl, restricted),
+            )
         post_mask: tuple[str, ...] = ()
         if tbl in self._created and self._created[tbl].masks:
             src, post_mask = self._apply_attached_masks(tbl, src, statement)

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 
@@ -26,12 +27,14 @@ SF_DIR = os.environ.get("SELFCHECK_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
+@pytest.hookimpl(trylast=True)
 def pytest_collection_modifyitems(config, items):
-    """Start test_local_cluster's ~3-minute subprocess at COLLECTION time
-    (r15 suite-wall work): it runs in its own JVMs, so it overlaps the
-    ~40% of the suite that sorts before its file instead of serializing
-    in front of its first test. Only fires when that file's tests are
-    actually selected; --collect-only never spawns it."""
+    """Start test_local_cluster's ~3-minute subprocess at COLLECTION time:
+    it runs in its own JVMs, so it overlaps the ~40% of the suite that
+    sorts before its file instead of serializing in front of its first
+    test. ``trylast`` runs this after ``-k``/``-m`` deselection, so it
+    fires only when that file's tests survive selection; --collect-only
+    never spawns it."""
     if config.option.collectonly:
         return
     if any("test_local_cluster" in item.nodeid for item in items):
@@ -40,13 +43,23 @@ def pytest_collection_modifyitems(config, items):
         test_local_cluster.start_cluster_subprocess()
 
 
+def pytest_sessionfinish(session, exitstatus):
+    """Reap the local-cluster subprocess (killed if a failure or an
+    interrupt left it running) and delete its output files."""
+    lc = sys.modules.get(f"{__package__}.test_local_cluster")
+    if lc is not None:
+        lc.stop_cluster_subprocess()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("dcosb-tests")
     yield s
 
 
-#: session-scoped memo of built query frames — see query_frame below
+#: session-scoped memo of built query frames — see query_frame below.
+#: Its bound is |REGISTRY|: one entry per (query name, sf_dir), and every
+#: caller builds frames at the one SF directory the suite checks.
 _FRAME_MEMO: dict = {}
 
 

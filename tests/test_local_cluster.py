@@ -122,6 +122,21 @@ def start_cluster_subprocess() -> None:
     )
 
 
+def stop_cluster_subprocess() -> None:
+    """Kill the subprocess if it still runs, reap it, and delete its
+    output files; a no-op when it was never started."""
+    proc = _LC_PROC.pop("proc", None)
+    if proc is None:
+        return
+    if proc.poll() is None:
+        proc.kill()
+    proc.wait()
+    for name in ("out", "err"):
+        f = _LC_PROC.pop(name)
+        f.close()
+        os.unlink(f.name)
+
+
 @pytest.fixture(scope="module")
 def cluster_results() -> dict:
     """Results of the representative set run in a local-cluster subprocess
