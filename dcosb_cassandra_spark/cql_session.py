@@ -2348,26 +2348,14 @@ class CqlSession:
                 "username STRING, connection_stage STRING, request_count BIGINT",
             )
         if which == "caches":
-            # [PK `db/virtual/CachesTable.java`] — here the genuinely
-            # informative process caches are the memoized ARTIFACT
-            # registries (codebook, RAM-resident IVF index, kNN graph,
-            # quality model, BPE merges…): entry counts read live
-            from .operators import llm_quality as _q
-            from .operators import llm_similarity as _sim
-            from .operators import llm_text as _t
+            # [PK `db/virtual/CachesTable.java`] — one row per engine memo
+            # namespace (session.plan_memo), counters read live
+            from .session import memo_stats
 
-            regs = {
-                "bpe_merges": _t._BPE_TRAIN_CACHE,
-                "codebook": _sim._CODEBOOK_CACHE,
-                "ivf_index_dirs": _sim._IVF_INDEX_CACHE,
-                "ivf_index_ram": _sim._IVF_INDEX_DF_CACHE,
-                "knn_graph": _sim._KNN_GRAPH_CACHE,
-                "quality_model": _q._QC_CACHE,
-                "query_batch": _sim._QUERY_BATCH_CACHE,
-            }
-            rows = [(n, len(d)) for n, d in sorted(regs.items())]
             return self._local_frame(
-                rows, "name STRING, entry_count BIGINT"
+                memo_stats(),
+                "name STRING, entry_count BIGINT, hit_count BIGINT, "
+                "request_count BIGINT, eviction_count BIGINT",
             )
         raise InvalidRequest(f"unknown system table {which}")
 

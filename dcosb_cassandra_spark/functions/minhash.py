@@ -66,7 +66,10 @@ def minhash_signature(docs: DataFrame, id_col: str, text_col: str, k: int = DEFA
     zero extra shuffles, full map-side partial mins. The never-taken
     third shape (shuffle-joining tokens to the map) is deliberately
     not expressed: joining by token keys the shuffle on the corpus's
-    hottest words."""
+    hottest words. The estimate costs a full optimize pass, so it is
+    memoized per (appId, id(docs), text column, k), pinned to ``docs``."""
+    from ..session import plan_memo
+
     toks = docs.select(id_col, F.explode(tokens_of(F.col(text_col))).alias("token"))
     # groupBy (not .distinct()) so the boundedness is visible to the plan
     # audit as an Aggregate; the hashes are PROJECTED above the aggregate —
@@ -75,7 +78,13 @@ def minhash_signature(docs: DataFrame, id_col: str, text_col: str, k: int = DEFA
     hmap = toks.groupBy("token").agg(F.count(F.lit(1)).alias("_tok_n")).select(
         "token", *[seeded_hash(F.col("token"), i).alias(f"h{i}") for i in range(k)]
     )
-    est = int(hmap._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    # private `_jdf` handle: not available under Spark Connect
+    est = plan_memo(
+        "vocab_hash_est",
+        (docs.sparkSession.sparkContext.applicationId, id(docs), text_col, k),
+        lambda: int(hmap._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
+        pin=docs,
+    )
     if est <= VOCAB_HASH_BROADCAST_BYTES:
         return toks.join(F.broadcast(hmap), "token").groupBy(id_col).agg(
             *[F.min(f"h{i}").alias(f"mh{i}") for i in range(k)]

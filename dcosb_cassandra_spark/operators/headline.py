@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..plans.shapes import bounded_sort
 from ..registry import query
+from ..session import generation, plan_memo
 
 
 def _disc_price() -> F.Column:
@@ -164,20 +165,14 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (nation path, region path, mtimes) → (valid nationkeys, key→name map col)
-_NATION_FOLD_CACHE: dict[tuple, tuple] = {}
-
-
 def _folded_nation_dim(spark: SparkSession, sf_dir: str):
     """nation⋈region folded to plan-build literals (both dims are spec-fixed
     at 25/5 rows and unique-keyed, so collecting them is bounded at every
-    SF). Memoized per (paths, mtimes)."""
+    SF). Returns (valid nationkeys, key→name map column), memoized per
+    (paths, mtimes)."""
     import itertools
-    import os
 
-    np_, rp = (os.path.join(sf_dir, f"{t}.parquet") for t in ("nation", "region"))
-    key = (np_, rp, os.stat(np_).st_mtime_ns, os.stat(rp).st_mtime_ns)
-    if key not in _NATION_FOLD_CACHE:
+    def build() -> tuple:
         nrows = table(spark, sf_dir, "nation").collect()
         rkeys = {r.r_regionkey for r in table(spark, sf_dir, "region").collect()}
         valid = [r.n_nationkey for r in nrows if r.n_regionkey in rkeys]
@@ -191,8 +186,9 @@ def _folded_nation_dim(spark: SparkSession, sf_dir: str):
             name_map = F.map_from_arrays(
                 F.array().cast("array<int>"), F.array().cast("array<string>")
             )
-        _NATION_FOLD_CACHE[key] = (valid, name_map)
-    return _NATION_FOLD_CACHE[key]
+        return (valid, name_map)
+
+    return plan_memo("nation_fold", generation(sf_dir, "nation", "region"), build)
 
 
 @query(

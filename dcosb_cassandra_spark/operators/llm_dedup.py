@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..session import bounded_memo_put, spread_width
+from ..session import plan_memo, spread_width
 from ..functions.text import hash_split
 from ..functions.minhash import (
     DEFAULT_BANDS,
@@ -68,24 +68,12 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
     reads) and hints only while the side fits `BROADCAST_FALLBACK_BYTES`;
     past it, the join degrades to the shuffle equi-join shape
     (tests/test_dedup_semantics.py forces the fallback and asserts result
-    parity + hint absence)."""
+    parity + hint absence). Private `_jdf` handle: not available under
+    Spark Connect."""
     stats = df._jdf.queryExecution().optimizedPlan().stats()
     if int(stats.sizeInBytes()) <= BROADCAST_FALLBACK_BYTES:
         return F.broadcast(df)
     return df
-
-
-#: memoized candidate-pair PLAN fragments: (appId, id(input frame),
-#: fallback knob, spread width) → (input-frame ref, pairs frame). The
-#: input is usually the catalog's memoized documents frame (same object
-#: per (app, sf_dir)), so the ~0.19 s of py4j expression construction for
-#: sigs+bands+join is paid once per corpus instead of per plan build
-#: (r14, guide §1.2 — the _QUERY_BATCH_DF_CACHE contract: a plan
-#: fragment, not a result; every action still recomputes from parquet).
-#: The held input ref keeps id() stable and the `is` check rejects id
-#: reuse after GC; the knob/width keys force a rebuild when
-#: test_dedup_semantics patches the fallback or the session conf moves.
-_LSH_CAND_CACHE: dict[tuple, tuple] = {}
 
 
 def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
@@ -96,7 +84,14 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
     only in its FIRST colliding band (no DISTINCT), probe side spread by
     cores, build side broadcast while it fits (`maybe_broadcast`: the
     ~10⁷-doc shuffle-equi-join fallback is the size-conditional hint,
-    not prose). Memoized per corpus frame — see _LSH_CAND_CACHE."""
+    not prose).
+
+    Memoized as a plan fragment per (appId, id(d), fallback knobs,
+    spread width), pinned to ``d``: the input is usually the catalog's
+    memoized documents frame, so the ~0.19 s of py4j expression
+    construction is paid once per corpus; the pin rejects a recycled
+    id(), and the knob/width keys rebuild when a test patches the
+    fallback or the session conf moves."""
     from ..functions.minhash import VOCAB_HASH_BROADCAST_BYTES
 
     key = (
@@ -106,9 +101,10 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
         VOCAB_HASH_BROADCAST_BYTES,  # r15: the sig stage's own hint knob
         spread_width(spark),
     )
-    hit = _LSH_CAND_CACHE.get(key)
-    if hit is not None and hit[0] is d:
-        return hit[1]
+    return plan_memo("lsh_candidates", key, lambda: _lsh_candidate_pairs(spark, d), pin=d)
+
+
+def _lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
     sigs = minhash_signature(d, "doc_id", "text", DEFAULT_NUM_HASHES)
     bands = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
     probe = bands.repartition(spread_width(spark))
@@ -118,7 +114,7 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
         DEFAULT_BANDS,
         lambda j: F.col(f"a.bh{j}") == F.col(f"b.bh{j}"),
     )
-    out = (
+    return (
         a.join(
             maybe_broadcast(b),
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -128,8 +124,6 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
         .filter(~dup_enum)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
     )
-    bounded_memo_put(_LSH_CAND_CACHE, key, (d, out))
-    return out
 
 
 @query("d2_minhash_signatures", oracle=minhash_oracle_sql(), tags=("D2", "P1"))

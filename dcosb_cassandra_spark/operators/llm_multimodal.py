@@ -1142,9 +1142,7 @@ def _decode_gif_aggregates(gifs_df: DataFrame) -> DataFrame:
     )
 
 
-#: (documents path, mtime) -> rendered-GIF store dir (the d8g durable-index
-#: convention applied to media payloads)
-_GIF_STORE_CACHE: dict = {}
+#: serializes GIF store builds (one `.build.<pid>` dir per store)
 _GIF_STORE_LOCK = __import__("threading").Lock()
 
 
@@ -1152,47 +1150,28 @@ def gif_store_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the rendered GIF payloads ONCE per corpus generation —
     the build/serve split for media: production tables STORE encoded
     bytes (the r8 verdict's framing), so the encode runs at ingest and
-    the serving path is decode-only. Durable under
-    SPARK_GRAFT_INDEX_DIR (atomic tmp+rename, losers discard only when
-    the winner's _SUCCESS exists — the r10 ivf rule) else a session
-    temp dir. Build/serve parity with the inline render+decode pass is
-    asserted by tests/test_gif_codec.py."""
-    import atexit
+    the serving path is decode-only. Built through
+    `maintenance.artifact_dir` (the IVF index's durable-store rule) and
+    memoized per corpus generation. Build/serve parity with the inline
+    render+decode pass is asserted by tests/test_gif_codec.py."""
     import os
-    import shutil
-    import tempfile
 
-    from ..sources.multimodal import multimodal_frame
+    from ..session import generation, plan_memo
+    from ..sources.maintenance import artifact_dir
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    mtime = os.stat(path).st_mtime_ns
-    key = (path, mtime)
-    with _GIF_STORE_LOCK:
-        if key not in _GIF_STORE_CACHE:
-            def build(out: str) -> None:
-                multimodal_frame(spark, sf_dir).mapInPandas(
-                    _render_gifs, schema="doc_id long, gif binary"
-                ).write.mode("overwrite").parquet(out)
+    path, mtime = generation(sf_dir, "documents")
+    tag = os.path.basename(os.path.normpath(sf_dir))
 
-            root = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-            if root:
-                tag = os.path.basename(os.path.normpath(sf_dir))
-                out = os.path.join(root, f"gifstore_{tag}_{mtime}")
-                if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                    tmp = f"{out}.build.{os.getpid()}"
-                    build(tmp)
-                    try:
-                        os.rename(tmp, out)
-                    except OSError:
-                        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                            raise
-                        shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                out = tempfile.mkdtemp(prefix="dcosb_gif_store_")
-                build(out)
-                atexit.register(shutil.rmtree, out, ignore_errors=True)
-            _GIF_STORE_CACHE[key] = out
-    return _GIF_STORE_CACHE[key]
+    def write(out: str) -> None:
+        multimodal_frame(spark, sf_dir).mapInPandas(
+            _render_gifs, schema="doc_id long, gif binary"
+        ).write.mode("overwrite").parquet(out)
+
+    def build() -> str:
+        with _GIF_STORE_LOCK:
+            return artifact_dir(f"gifstore_{tag}_{mtime}", write)
+
+    return plan_memo("gif_store_dir", (path, mtime), build)
 
 
 def d7m_render_inline(spark: SparkSession, sf_dir: str) -> DataFrame:

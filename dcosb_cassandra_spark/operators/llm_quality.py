@@ -32,13 +32,12 @@ al. 2024 (FineWeb-Edu classifier-scored curation)]
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from ..session import generation, plan_memo
 
 _QC_B = 8  # hashed char-trigram feature buckets
 _QC_NF = _QC_B + 3  # + distinct-trigram ppm, mean-token-len, bias
@@ -107,17 +106,14 @@ def _z_expr(w: list[int]) -> str:
     return f"({terms}) div 1000000L"
 
 
-#: (documents path, mtime, train_max) -> (weights, per-round losses)
-_QC_CACHE: dict[tuple, tuple[list, list]] = {}
-
-
 def _train_quality_classifier(
     spark: SparkSession,
     sf_dir: str,
     train_max: int = _QC_TRAIN_MAX_ID,
     exclude_doc_ids: list[int] | None = None,
 ) -> tuple[list[int], list[int]]:
-    """Fixed-round full-batch GD, memoized per corpus generation. Each
+    """Fixed-round full-batch GD, memoized per (corpus generation,
+    train_max, excluded ids) as (weights, per-round losses). Each
     round is ONE bounded action: a global aggregate collecting the NF
     gradient sums + n + the surrogate loss (NF+2 values). The update
     w_j -= grad_j div (n * LR_DIV) runs driver-side in exact Python ints
@@ -129,9 +125,8 @@ def _train_quality_classifier(
     an AGGREGATE artifact, so per-row erasure cannot reach it; the only
     honest guarantee is a retrain without the forgotten rows."""
     ids = tuple(sorted(int(i) for i in (exclude_doc_ids or ())))
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, os.stat(path).st_mtime_ns, train_max, ids)
-    if key not in _QC_CACHE:
+
+    def build() -> tuple[list, list]:
         feats = _qc_features(table(spark, sf_dir, "documents")).filter(
             F.col("doc_id") < train_max
         )
@@ -162,8 +157,10 @@ def _train_quality_classifier(
                 w[j] - _tdiv(row[f"g{j}"], row["n"] * _QC_LR_DIV)
                 for j in range(_QC_NF)
             ]
-        _QC_CACHE[key] = (w, losses)
-    return _QC_CACHE[key]
+        return (w, losses)
+
+    key = (*generation(sf_dir, "documents"), train_max, ids)
+    return plan_memo("quality_model", key, build)
 
 
 def _qc_md5_byte_sql(arg: str) -> str:

@@ -43,40 +43,28 @@ def _ws_token_count(c) -> F.Column:
     Used for dl/avgdl wherever the term list itself is not needed."""
     return F.length(c) - F.length(F.replace(c, F.lit(" "))) + F.lit(1)
 
-#: memoized RRF query-vector local relation: (appId, embeddings path,
-#: mtime) → the 5-row (qid, qe, qnrm) DataFrame d18b's vector arm probes
-#: with. The VALUES are already memoized (llm_similarity._query_batch);
-#: this memoizes the createDataFrame WRAP (~0.1-0.4 s of py4j/Arrow
-#: driver work per plan build) — the _QUERY_BATCH_DF_CACHE contract
-#: exactly (r15, judge r14 task #4): an immutable plan fragment, never a
-#: result; every action still recomputes from parquet.
-_RRF_QDF_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _rrf_query_df(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The d18b query batch as an Arrow-backed local relation, memoized
-    per (appId, corpus generation); None when the embeddings are empty."""
-    import os
-
-    from ..session import bounded_memo_put
+    """The 5-row (qid, qe, qnrm) query batch d18b's vector arm probes
+    with, as an Arrow-backed local relation; None when the embeddings are
+    empty. The values are memoized by `llm_similarity._query_batch`; the
+    createDataFrame wrap (~0.1-0.4 s of py4j/Arrow driver work per plan
+    build) is memoized per (appId, corpus generation)."""
+    from ..session import generation, plan_memo
     from .llm_similarity import _query_batch
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    cached = _RRF_QDF_CACHE.get(key)
-    if cached is not None:
-        return cached
-    qid, qvecs, qnrms, _ranks = _query_batch(spark, sf_dir)
-    if not qid:
-        return None
-    import pandas as pd
+    def build() -> DataFrame | None:
+        qid, qvecs, qnrms, _ranks = _query_batch(spark, sf_dir)
+        if not qid:
+            return None
+        import pandas as pd
 
-    qdf = spark.createDataFrame(
-        pd.DataFrame({"qid": qid, "qe": qvecs, "qnrm": qnrms}),
-        "qid long, qe array<double>, qnrm double",
-    )
-    bounded_memo_put(_RRF_QDF_CACHE, key, qdf)
-    return qdf
+        return spark.createDataFrame(
+            pd.DataFrame({"qid": qid, "qe": qvecs, "qnrm": qnrms}),
+            "qid long, qe array<double>, qnrm double",
+        )
+
+    key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"))
+    return plan_memo("rrf_query_df", key, build)
 
 
 #: Okapi BM25 parameters (the Lucene/ES defaults — public constants).

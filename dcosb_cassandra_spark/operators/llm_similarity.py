@@ -7,6 +7,8 @@ JVM-side, cast to double first for oracle parity (FIXTURES.md gotcha).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +25,7 @@ from ..functions.vectors import (
     sign_bits_range,
 )
 from ..registry import query
+from ..session import generation, memo_evict, plan_memo
 
 _DOT = "list_sum(list_transform(range(1, 65), i -> a.e[i] * b.e[i]))"
 _NORM = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
@@ -457,28 +460,17 @@ def _label_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-#: materialized coarse-quantizer cache: (embeddings path, mtime) → collected
-#: (cand, ce) rows. Real ANN systems (FAISS IVF, ScaNN) train and STORE the
-#: quantizer once — recomputing a k-row codebook on every query would be the
-#: benchmark artifact, not the cache. Entries are k rows × dim doubles
-#: (~5 KB here); mtime invalidates on data change.
-_CODEBOOK_CACHE: dict[tuple, list] = {}
-
-
 def _codebook(spark: SparkSession, sf_dir: str) -> list:
-    """The sf_dir corpus's IVF coarse-quantizer codebook as collected rows,
-    memoized per (path, mtime). First call runs `_label_centroids` (one
-    distributed partial-agg pass); every later query against the same
-    corpus reuses the stored quantizer, exactly like a production index."""
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (path, os.stat(path).st_mtime_ns)
-    if key not in _CODEBOOK_CACHE:
-        _CODEBOOK_CACHE[key] = _label_centroids(
-            table(spark, sf_dir, "embeddings")
-        ).collect()
-    return _CODEBOOK_CACHE[key]
+    """The sf_dir corpus's IVF coarse-quantizer codebook as collected
+    (cand, ce) rows (k rows × dim doubles), memoized per corpus
+    generation. Real ANN systems (FAISS IVF, ScaNN) train and STORE the
+    quantizer once: the first call runs `_label_centroids` (one
+    distributed partial-agg pass), every later query reuses it."""
+    return plan_memo(
+        "codebook",
+        generation(sf_dir, "embeddings"),
+        lambda: _label_centroids(table(spark, sf_dir, "embeddings")).collect(),
+    )
 
 
 def _with_centroid_bucket(df: DataFrame, cent) -> DataFrame:
@@ -535,10 +527,8 @@ def _argmin_centroid(code, e):
     return dist2.argmin(axis=1)
 
 
-#: materialized IVF inverted lists: (embeddings path, mtime) → directory of
-#: (vec_id, ve, nrm) parquet PARTITIONED BY bucket — the index layout every
-#: production ANN system stores (FAISS IVF lists, Lucene HNSW segments).
-_IVF_INDEX_CACHE: dict[tuple, str] = {}
+#: serializes IVF index builds: two same-process builds of one index
+#: would collide in its `.build.<pid>` directory
 _IVF_INDEX_LOCK = __import__("threading").Lock()
 
 _IVF_INDEX_SCHEMA = (
@@ -565,15 +555,6 @@ FUSED_SMALL_INDEX_BYTES = 64 << 20
 #: tests/test_similarity_paths). Tests monkeypatch this to force the
 #: uncached path.
 RAM_INDEX_BYTES = 64 << 20
-
-#: memoized RAM-resident index: (applicationId, embeddings path, mtime) →
-#: cached DataFrame. The applicationId key (matching catalog._table_memo)
-#: prevents returning a DataFrame bound to a stopped SparkContext after a
-#: session restart in the same process; superseded entries for the same
-#: path are unpersisted on replacement so a data refresh doesn't leak
-#: executor cache memory (judge r7 advice).
-_IVF_INDEX_DF_CACHE: dict[tuple, DataFrame] = {}
-
 
 def write_ivf_index(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     """Materialize the IVF index for sf_dir's embeddings into ``out_dir``:
@@ -608,105 +589,60 @@ def write_ivf_index(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
 
 
 def ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Directory of the materialized IVF index for sf_dir (building it on
-    first use) — see `ivf_index` for the layout and caching contract.
-    Placement policy (r8): with $SPARK_GRAFT_INDEX_DIR set the index is
-    DURABLE — built under that root with the corpus mtime in the dir name
-    (so a fresh build is skipped when a complete index for this corpus
-    generation already exists, across processes) and never deleted;
-    without it the index lives in a tempdir removed at interpreter exit
-    (the pre-r8 behavior, right for tests and one-off sessions)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    """Directory of the materialized IVF index for sf_dir (built on first
+    use into `maintenance.artifact_dir`, durable under
+    $SPARK_GRAFT_INDEX_DIR), memoized per corpus generation — see
+    `ivf_index` for the layout and caching contract. The ``ivf3`` name
+    version bumps whenever the index schema grows (PQ codes, label)."""
+    from ..sources.maintenance import artifact_dir
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    mtime = os.stat(path).st_mtime_ns
-    key = (path, mtime)
-    with _IVF_INDEX_LOCK:
-        if key not in _IVF_INDEX_CACHE:
-            root = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-            if root:
-                tag = os.path.basename(os.path.normpath(sf_dir))
-                # v2: the index schema grew PQ codes (r8) — the version
-                # bump keeps durable pre-codes indexes from being reused
-                # v3: the schema grew the indexed metadata column (r10,
-                # label — the SAI posture d4l filters on); the bump keeps
-                # durable pre-metadata indexes from being reused
-                out = os.path.join(root, f"ivf3_{tag}_{mtime}")
-                if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                    # Cross-process atomicity (judge r8 advice): build into
-                    # a pid-suffixed sibling and rename into place. POSIX
-                    # rename onto an existing non-empty dir fails, so if
-                    # two sessions race the loser discards its build and
-                    # serves the winner's — readers never see a partial
-                    # index under the durable name.
-                    tmp = f"{out}.build.{os.getpid()}"
-                    write_ivf_index(spark, sf_dir, tmp)
-                    try:
-                        os.rename(tmp, out)
-                    except OSError:
-                        # Only a LOST RACE leaves a complete index under
-                        # the durable name; any other rename failure
-                        # (permissions, read-only fs) must propagate —
-                        # swallowing it would discard the fresh build and
-                        # point callers at a missing path (judge r9
-                        # advice).
-                        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                            raise
-                        shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                out = tempfile.mkdtemp(prefix="dcosb_ivf_index_")
-                write_ivf_index(spark, sf_dir, out)
-                atexit.register(shutil.rmtree, out, ignore_errors=True)
-            _IVF_INDEX_CACHE[key] = out
-    return _IVF_INDEX_CACHE[key]
+    path, mtime = generation(sf_dir, "embeddings")
+    tag = os.path.basename(os.path.normpath(sf_dir))
+
+    def build() -> str:
+        with _IVF_INDEX_LOCK:
+            return artifact_dir(
+                f"ivf3_{tag}_{mtime}", lambda out: write_ivf_index(spark, sf_dir, out)
+            )
+
+    return plan_memo("ivf_index_dirs", (path, mtime), build)
+
+
+def _erasure_epoch(index_dir: str) -> object:
+    """Token that `invalidate_index_caches` replaces on every erasure of
+    ``index_dir``: the RAM index and kNN graph pin it, so an entry built
+    across an erasure is never served."""
+    return plan_memo("index_epoch", os.path.normpath(index_dir), object)
+
+
+def _serving_memo(namespace: str, key: tuple, index_dir: str, build):
+    """`plan_memo` for a serving structure built on ``index_dir``: the
+    value is ``build()`` + (normalized index_dir,), pinned to the dir's
+    erasure epoch; a build that an erasure overtook is rebuilt."""
+    while True:
+        epoch = _erasure_epoch(index_dir)
+        value = plan_memo(
+            namespace,
+            key,
+            lambda: (*build(), os.path.normpath(index_dir)),
+            pin=epoch,
+        )
+        if _erasure_epoch(index_dir) is epoch:
+            return value[:-1]
 
 
 def invalidate_index_caches(index_dir: str) -> None:
-    """Evict every RAM-resident serving structure derived from
-    ``index_dir`` — called by ``maintenance.forget_vectors`` after it
-    rewrites the on-disk IVF index (judge r10 advice: erasure must reach
-    the serving caches too, or a live session keeps answering probes
-    from the pre-erasure in-memory columnar cache and can cite forgotten
-    vec_ids). Drops and unpersists the cached index DataFrame(s) for the
-    corpus that materialized this directory, and the kNN graph built on
-    top of it (`_KNN_GRAPH_CACHE`); the (path, mtime) → directory memo
-    itself is kept — the directory now holds the POST-erasure rows, so
-    the next probe lazily re-caches the rewritten index."""
-    import os
-
+    """Evict (and unpersist) the RAM-resident index and kNN graph built
+    on ``index_dir`` — called by ``maintenance.forget_vectors`` after it
+    rewrites the on-disk IVF index, so a live session stops citing
+    forgotten vec_ids. Entries are matched on the index dir they record,
+    not through the bounded dir memo, and the dir's erasure epoch is
+    replaced so a build racing this call is never served. The directory
+    itself holds the post-erasure rows; the next probe re-caches it."""
     norm = os.path.normpath(index_dir)
-    with _IVF_INDEX_LOCK:
-        paths = {
-            k[0]
-            for k, v in _IVF_INDEX_CACHE.items()
-            if os.path.normpath(v) == norm
-        }
-        for dfk in [k for k in _IVF_INDEX_DF_CACHE if k[1] in paths]:
-            stale = _IVF_INDEX_DF_CACHE.pop(dfk)
-            try:
-                stale.unpersist()
-            except Exception:
-                pass  # context already stopped — blocks died with it
-        for gk in [k for k in _KNN_GRAPH_CACHE if k[1] in paths]:
-            stale_und, _ = _KNN_GRAPH_CACHE.pop(gk)
-            try:
-                # the edge DataFrame holds eager localCheckpoint blocks
-                # on executors; without this, repeated erasures in a
-                # long-lived session accumulate orphaned checkpoint
-                # storage (judge r11 advice)
-                stale_und.unpersist()
-            except Exception:
-                pass  # context already stopped — blocks died with it
-        # Bump the erasure generation (read by knn_graph's memoization):
-        # the graph cache key is (appId, embeddings path, mtime) and
-        # forget_vectors does NOT touch the embeddings parquet, so a
-        # graph build racing this eviction could otherwise re-insert a
-        # pre-erasure graph under an unchanged key and serve it for the
-        # rest of the session (judge r11 advice).
-        _ERASURE_GEN[0] += 1
+    memo_evict("index_epoch", lambda k, _: k == norm)
+    for ns in ("ivf_index_ram", "knn_graph"):
+        memo_evict(ns, lambda _, v: v[-1] == norm)
 
 
 def index_bytes(index_dir: str) -> int:
@@ -714,7 +650,6 @@ def index_bytes(index_dir: str) -> int:
     the fused-vs-distributed strategy pick reads (parquet footers not
     needed; file sizes are the same signal AQE uses for join strategy)."""
     import glob
-    import os
 
     return sum(
         os.path.getsize(f)
@@ -740,36 +675,28 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar cache — the FAISS in-RAM serving shape, built once per
     (path, mtime) — so every probe and Gram pass reads RAM, not parquet;
     a large index stays on disk where partition pruning on `bucket` cuts
-    each probe to its probed buckets' files."""
-    import os
+    each probe to its probed buckets' files.
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
+    The RAM entry is memoized per (appId, corpus generation): the appId
+    keeps a DataFrame bound to a stopped SparkContext from being served,
+    and a superseded generation of the same path is unpersisted before
+    the new one is cached, so a data refresh doesn't leak executor
+    cache memory."""
+    key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"))
     idx_dir = ivf_index_dir(spark, sf_dir)
     scan = spark.read.schema(_IVF_INDEX_SCHEMA).parquet(idx_dir)
     if index_bytes(idx_dir) > RAM_INDEX_BYTES:
         return scan
-    with _IVF_INDEX_LOCK:
-        if key not in _IVF_INDEX_DF_CACHE:
-            # evict superseded entries for the same path (older mtime or a
-            # stopped application) and release their executor cache blocks
-            for old in [k for k in _IVF_INDEX_DF_CACHE if k[1] == path and k != key]:
-                stale = _IVF_INDEX_DF_CACHE.pop(old)
-                try:
-                    stale.unpersist()
-                except Exception:
-                    pass  # context already stopped — blocks died with it
-            cached = scan.cache()
-            cached.count()  # materialize the cache once, off the query path
-            _IVF_INDEX_DF_CACHE[key] = cached
-    return _IVF_INDEX_DF_CACHE[key]
 
+    def build() -> tuple:
+        # Spark's CacheManager matches cached plans by content, so every
+        # older entry of this path is unpersisted before caching anew
+        memo_evict("ivf_index_ram", lambda k, _: k[1] == key[1])
+        cached = scan.cache()
+        cached.count()  # materialize the cache once, off the query path
+        return (cached,)
 
-#: memoized probe batch: (embeddings path, mtime) → (query_ids, vectors,
-#: norms, assigned buckets). The d4d query set is fixed (vec_id < 5), so
-#: collecting it once per corpus is the "ANN service holds the query batch"
-#: posture; mtime invalidates on data change.
-_QUERY_BATCH_CACHE: dict[tuple, tuple] = {}
+    return _serving_memo("ivf_index_ram", key, idx_dir, build)[0]
 
 
 def _seq_norm(vec) -> float:
@@ -787,12 +714,11 @@ def _query_batch(spark: SparkSession, sf_dir: str) -> tuple:
     """(query_ids, vectors, norms, centroid_ranks): ranks[j] is query j's
     FULL centroid preference order (dist2 asc, ties → lowest cand — the
     same order as the oracle's row_number), so any nprobe is a prefix
-    slice of the memoized ranking."""
-    import os
+    slice of the memoized ranking. The d4d query set is fixed
+    (vec_id < 5), so it is collected once per corpus generation: the
+    "ANN service holds the query batch" posture."""
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (path, os.stat(path).st_mtime_ns)
-    if key not in _QUERY_BATCH_CACHE:
+    def build() -> tuple:
         cb = _codebook(spark, sf_dir)
         rows = sorted(cb, key=lambda r: r.cand)
         cands = [int(r.cand) for r in rows]
@@ -813,44 +739,29 @@ def _query_batch(spark: SparkSession, sf_dir: str) -> tuple:
             ranks = [[cands[i] for i in row] for row in order]
         else:
             ranks = [[] for _ in qrows]
-        _QUERY_BATCH_CACHE[key] = (
+        return (
             [r.vec_id for r in qrows],
             [list(r.ve) for r in qrows],
             [_seq_norm(r.ve) for r in qrows],
             ranks,
         )
-    return _QUERY_BATCH_CACHE[key]
 
-
-#: memoized probe-batch DataFrames: (applicationId, embeddings path,
-#: mtime, nprobe) → the local-relation DataFrame below. The VALUES are
-#: already memoized (_QUERY_BATCH_CACHE); this also memoizes the WRAP —
-#: createDataFrame of the pandas frame costs ~0.1-0.4 s of py4j/Arrow
-#: driver work per call, paid by every probe-family plan build (r14,
-#: guide §1.2: plan-build was the dominant term in d4d's bench total).
-#: DataFrames are immutable plan fragments, so reuse is the same contract
-#: as catalog._table_memo; the appId key drops frames bound to a stopped
-#: SparkContext, the mtime key invalidates on data change.
-_QUERY_BATCH_DF_CACHE: dict[tuple, DataFrame] = {}
+    return plan_memo("query_batch", generation(sf_dir, "embeddings"), build)
 
 
 def _query_batch_df(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """The probe batch as an Arrow-backed local relation (pandas →
     createDataFrame skips the slow Python-RDD path a row-list takes) —
     one row per (query, probed bucket), the exploded multi-probe list.
-    Memoized per (appId, corpus generation, nprobe) — see cache note."""
-    import os
+    The values are memoized by `_query_batch`; this memoizes the wrap
+    too, per (appId, corpus generation, nprobe): createDataFrame costs
+    ~0.1-0.4 s of py4j/Arrow driver work per plan build, and the frame
+    is an immutable plan fragment (the catalog._table_memo contract)."""
+    key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"), nprobe)
+    return plan_memo("query_batch_df", key, lambda: _build_query_batch_df(spark, sf_dir, nprobe))
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        spark.sparkContext.applicationId,
-        path,
-        os.stat(path).st_mtime_ns,
-        nprobe,
-    )
-    cached = _QUERY_BATCH_DF_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _build_query_batch_df(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     qid, qvecs, qnrms, ranks = _query_batch(spark, sf_dir)
     rows = [
         (i, b)
@@ -865,13 +776,9 @@ def _query_batch_df(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
             "bucket": [b for _, b in rows],
         }
     )
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         pdf, "query_id long, qe array<double>, qnrm double, bucket long"
     )
-    from ..session import bounded_memo_put
-
-    bounded_memo_put(_QUERY_BATCH_DF_CACHE, key, df)
-    return df
 
 
 @query(
@@ -2367,26 +2274,16 @@ def edge_bucket_count(n_nodes: int) -> int:
 #: the budget buys.
 BEAM_ROUNDS = 3
 
-#: memoized graph index: (applicationId, embeddings path, mtime) →
-#: (undirected edge DataFrame localCheckpointed, {bucket: entry vec_id}).
-#: A production graph index (Lucene HNSW segment, JVector on-disk graph) is
-#: BUILT once at ingest and served read-only — same build/serve split as
-#: the IVF index; the applicationId key prevents serving a DataFrame bound
-#: to a stopped context.
-_KNN_GRAPH_CACHE: dict[tuple, tuple] = {}
-
-#: erasure generation counter, bumped by invalidate_index_caches under
-#: _IVF_INDEX_LOCK. knn_graph snapshots it before building and refuses to
-#: cache (and rebuilds) if it moved — the cache key alone cannot see an
-#: erasure because forget_vectors rewrites the IVF store, not the
-#: embeddings parquet the key's mtime comes from.
-_ERASURE_GEN: list[int] = [0]
-
-
 def knn_graph(spark: SparkSession, sf_dir: str) -> tuple:
     """Build (memoized) the degree-bounded kNN graph over the corpus
     vectors (vec_id >= 5, matching the d4d serving split) plus the
-    per-IVF-bucket entry points.
+    per-IVF-bucket entry points: (undirected edge DataFrame
+    localCheckpointed, {bucket: entry vec_id}). A production graph index
+    (Lucene HNSW segment, JVector on-disk graph) is BUILT once at ingest
+    and served read-only: memoized per (appId, corpus generation) and
+    pinned to the IVF index's erasure epoch, so a graph built across
+    `forget_vectors` is never served (the key's mtime cannot see an
+    erasure: it rewrites the IVF store, not the embeddings parquet).
 
     Candidate pairs come from TWO blocked equi-joins, never a cross join:
     vectors sharing an IVF centroid bucket (local neighborhoods) UNION
@@ -2414,107 +2311,86 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> tuple:
     low-cardinality window); the edge list is corpus×≤2M rows keyed by
     node, the layout a graph index stores. Search-time cost is
     rounds×beam×2M point lookups per query — the graph-ANN contract."""
-    import os
+    key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"))
+    return _serving_memo(
+        "knn_graph", key, ivf_index_dir(spark, sf_dir), lambda: _build_knn_graph(spark, sf_dir)
+    )
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    # Check-and-set under _IVF_INDEX_LOCK with an erasure-generation
-    # snapshot (judge r11 advice): invalidate_index_caches evicts under
-    # this lock AND bumps _ERASURE_GEN; the build itself runs UNLOCKED
-    # (it is minutes of Spark jobs — holding the lock would serialize
-    # every index user), so a build racing an erasure is detected at
-    # insert time by the moved generation and rebuilt instead of cached.
-    with _IVF_INDEX_LOCK:
-        gen = _ERASURE_GEN[0]
-        cached = _KNN_GRAPH_CACHE.get(key)
-    if cached is None:
-        base = ivf_index(spark, sf_dir).filter(F.col("vec_id") >= 5)
-        # Corpus-adaptive blocking (judge r11 task #2): one count against
-        # the memoized index picks the LSH width and the bucket-split
-        # width from the SAME integer-threshold formulas the oracle's
-        # `nbits` CTE evaluates — per-block candidate sets stay
-        # ~TARGET_LSH_BLOCK_ROWS rows at every corpus size, keeping the
-        # quadratic-per-block join linear-per-byte overall.
-        n = base.count()
-        bits = adaptive_lsh_bits(n)
-        bits2 = adaptive_bucket_split_bits(n)
-        c = _salted_blocks(
-            base.select(
-                "vec_id", "ve", "nrm", "bucket",
-                sign_bits(F.col("ve"), bits).alias("lsh"),
-                sign_bits_range(F.col("ve"), SCALE_LSH_BITS + 1, bits2).alias("lsh2"),
+
+def _build_knn_graph(spark: SparkSession, sf_dir: str) -> tuple:
+    base = ivf_index(spark, sf_dir).filter(F.col("vec_id") >= 5)
+    # Corpus-adaptive blocking (judge r11 task #2): one count against
+    # the memoized index picks the LSH width and the bucket-split
+    # width from the SAME integer-threshold formulas the oracle's
+    # `nbits` CTE evaluates — per-block candidate sets stay
+    # ~TARGET_LSH_BLOCK_ROWS rows at every corpus size, keeping the
+    # quadratic-per-block join linear-per-byte overall.
+    n = base.count()
+    bits = adaptive_lsh_bits(n)
+    bits2 = adaptive_bucket_split_bits(n)
+    c = _salted_blocks(
+        base.select(
+            "vec_id", "ve", "nrm", "bucket",
+            sign_bits(F.col("ve"), bits).alias("lsh"),
+            sign_bits_range(F.col("ve"), SCALE_LSH_BITS + 1, bits2).alias("lsh2"),
+        )
+    )
+    a, b = c.alias("a"), c.alias("b")
+    sim = dot(F.col("a.ve"), F.col("b.ve")) / (F.col("a.nrm") * F.col("b.nrm"))
+    sel = [
+        F.col("a.vec_id").alias("src"),
+        F.col("b.vec_id").alias("dst"),
+        sim.alias("sim"),
+    ]
+    p_ivf = a.join(
+        b,
+        (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.lsh2") == F.col("b.lsh2"))
+        & (F.col("a.salt_b") == F.col("b.salt_b"))
+        & (F.col("a.vec_id") != F.col("b.vec_id")),
+    ).select(*sel)
+    p_lsh = a.join(
+        b,
+        (F.col("a.lsh") == F.col("b.lsh"))
+        & (F.col("a.salt_l") == F.col("b.salt_l"))
+        & (F.col("a.vec_id") != F.col("b.vec_id")),
+    ).select(*sel)
+    # a pair seen in both blocks carries the SAME sim bits (identical
+    # expression over identical inputs), so distinct() dedups exactly
+    pairs = p_ivf.unionAll(p_lsh).distinct()
+    w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
+    knn = (
+        pairs.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= GRAPH_DEGREE)
+        .select("src", "dst", "sim")
+    )
+    # reverse-edge union, then HNSW's neighbor-SHRINK: a popular node
+    # may be the top-M choice of arbitrarily many others, so without
+    # pruning a hub's in-degree is unbounded and the per-round beam
+    # cost bound breaks. Keep each node's best 2M peers (sim DESC,
+    # ties → lowest peer); the result is a directed adjacency of max
+    # out-degree 2M, exactly what HNSW stores after shrink.
+    wn = Window.partitionBy("node").orderBy(F.desc("sim"), F.asc("peer"))
+    und = (
+        knn.select(F.col("src").alias("node"), F.col("dst").alias("peer"), "sim")
+        .unionAll(
+            knn.select(
+                F.col("dst").alias("node"), F.col("src").alias("peer"), "sim"
             )
         )
-        a, b = c.alias("a"), c.alias("b")
-        sim = dot(F.col("a.ve"), F.col("b.ve")) / (F.col("a.nrm") * F.col("b.nrm"))
-        sel = [
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim.alias("sim"),
-        ]
-        p_ivf = a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.lsh2") == F.col("b.lsh2"))
-            & (F.col("a.salt_b") == F.col("b.salt_b"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        ).select(*sel)
-        p_lsh = a.join(
-            b,
-            (F.col("a.lsh") == F.col("b.lsh"))
-            & (F.col("a.salt_l") == F.col("b.salt_l"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        ).select(*sel)
-        # a pair seen in both blocks carries the SAME sim bits (identical
-        # expression over identical inputs), so distinct() dedups exactly
-        pairs = p_ivf.unionAll(p_lsh).distinct()
-        w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-        knn = (
-            pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= GRAPH_DEGREE)
-            .select("src", "dst", "sim")
-        )
-        # reverse-edge union, then HNSW's neighbor-SHRINK: a popular node
-        # may be the top-M choice of arbitrarily many others, so without
-        # pruning a hub's in-degree is unbounded and the per-round beam
-        # cost bound breaks. Keep each node's best 2M peers (sim DESC,
-        # ties → lowest peer); the result is a directed adjacency of max
-        # out-degree 2M, exactly what HNSW stores after shrink.
-        wn = Window.partitionBy("node").orderBy(F.desc("sim"), F.asc("peer"))
-        und = (
-            knn.select(F.col("src").alias("node"), F.col("dst").alias("peer"), "sim")
-            .unionAll(
-                knn.select(
-                    F.col("dst").alias("node"), F.col("src").alias("peer"), "sim"
-                )
-            )
-            .distinct()
-            .withColumn("rn", F.row_number().over(wn))
-            .filter(F.col("rn") <= 2 * GRAPH_DEGREE)
-            # sim is retained: the DURABLE artifact stores it so
-            # incremental upkeep (stream_knn_graph) can re-shrink merged
-            # adjacency without re-scoring old edges; beam search ignores it
-            .select("node", "peer", "sim")
-            .localCheckpoint(eager=True)  # feeds every beam round
-        )
-        reps = (
-            c.groupBy("bucket").agg(F.min("vec_id").alias("rep")).collect()
-        )  # bounded: one row per coarse bucket (codebook-sized)
-        built = (und, {r.bucket: r.rep for r in reps})
-        with _IVF_INDEX_LOCK:
-            if _ERASURE_GEN[0] == gen:
-                _KNN_GRAPH_CACHE[key] = built
-                return built
-        # an erasure landed mid-build: our scan may predate the rewrite,
-        # so drop this graph's checkpoint blocks and build again on the
-        # post-erasure store (recursion depth = number of racing
-        # erasures, each of which is a rare admin action)
-        try:
-            und.unpersist()
-        except Exception:
-            pass
-        return knn_graph(spark, sf_dir)
-    return cached
+        .distinct()
+        .withColumn("rn", F.row_number().over(wn))
+        .filter(F.col("rn") <= 2 * GRAPH_DEGREE)
+        # sim is retained: the DURABLE artifact stores it so
+        # incremental upkeep (stream_knn_graph) can re-shrink merged
+        # adjacency without re-scoring old edges; beam search ignores it
+        .select("node", "peer", "sim")
+        .localCheckpoint(eager=True)  # feeds every beam round
+    )
+    reps = (
+        c.groupBy("bucket").agg(F.min("vec_id").alias("rep")).collect()
+    )  # bounded: one row per coarse bucket (codebook-sized)
+    return (und, {r.bucket: r.rep for r in reps})
 
 
 def _beam_search(
@@ -3620,8 +3496,6 @@ def write_knn_graph(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     segment persists (graph links + entry nodes). Serve with
     `serve_knn_graph`; beam-search bit parity with the inline memoized
     graph is asserted by tests/test_graph_ann.py."""
-    import os
-
     import json
 
     und, reps = knn_graph(spark, sf_dir)
@@ -3656,8 +3530,6 @@ def serve_knn_graph(spark: SparkSession, index_dir: str) -> tuple:
     columns; `part` lives only in the dir names), a legacy flat one
     reads the root, and a file-less store (the all-empty-batch stream)
     serves an empty graph instead of failing schema inference."""
-    import os
-
     edir = os.path.join(index_dir, "edges")
     # Stray-filtered listing (r14, judge r13 advice): a crashed upkeep
     # swap can strand part=N.old.<pid> / .forget. / .next. siblings, and

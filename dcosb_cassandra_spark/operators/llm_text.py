@@ -21,6 +21,7 @@ from ..functions.text import (
     tokens,
 )
 from ..registry import query
+from ..session import generation, plan_memo
 
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
@@ -1601,33 +1602,17 @@ def _doc_bigrams(src: DataFrame) -> DataFrame:
     )
 
 
-#: (documents path, mtime) → per-corpus bigram LM rows [(bg, q)] — the
-#: trained model, bounded at |V|² rows (charset², KBs even for CJK)
-_BIGRAM_MODEL_CACHE: dict[tuple, list] = {}
-
-#: (appId, documents path, mtime) → the literal lookup-map COLUMN built
-#: from the model. Building create_map(*2·|model| literals) costs one py4j
-#: round-trip per literal (~0.1-0.15 s per plan build for the sf0.1
-#: charset) — the column is an immutable expression fragment, so reuse is
-#: the catalog._table_memo contract (r14, guide §1.2: plan-build cost).
-_BIGRAM_MAP_COL_CACHE: dict[tuple, object] = {}
-
-
 def _bigram_model_map(spark: SparkSession, sf_dir: str, model: list):
     """The [(bg, q)] model as a literal create_map Column, memoized per
-    (appId, corpus generation)."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    if key not in _BIGRAM_MAP_COL_CACHE:
-        args: list = []
-        for bg, q in model:
-            args += [F.lit(bg), F.lit(q)]
-        from ..session import bounded_memo_put
-
-        bounded_memo_put(_BIGRAM_MAP_COL_CACHE, key, F.create_map(*args))
-    return _BIGRAM_MAP_COL_CACHE[key]
+    (appId, corpus generation): one py4j round-trip per literal costs
+    ~0.1-0.15 s per plan build at sf0.1, and the column is an immutable
+    expression fragment (the catalog._table_memo contract)."""
+    key = (spark.sparkContext.applicationId, *generation(sf_dir, "documents"))
+    return plan_memo(
+        "bigram_map",
+        key,
+        lambda: F.create_map(*[F.lit(x) for row in model for x in row]),
+    )
 
 
 def _bigram_model(spark: SparkSession, sf_dir: str) -> list:
@@ -1641,12 +1626,10 @@ def _bigram_model(spark: SparkSession, sf_dir: str) -> list:
     (train-once, serve-everywhere). Without this, Catalyst's per-consumer
     column pruning de-canonicalizes the three model subtrees and the
     corpus explode executes three times per query (measured 3×). Returns
-    the [(bg, q)] rows — the scorer folds them into its plan."""
-    import os
+    the [(bg, q)] rows (|V|² at most) — the scorer folds them into its
+    plan."""
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, os.stat(path).st_mtime_ns)
-    if key not in _BIGRAM_MODEL_CACHE:
+    def build() -> list:
         d = table(spark, sf_dir, "documents")
         bc = (
             _doc_bigrams(d)
@@ -1666,11 +1649,12 @@ def _bigram_model(spark: SparkSession, sf_dir: str) -> list:
         for r in d.filter(F.length("text") == 1).select("text").distinct().collect():
             chars.add(r["text"])
         v = len(chars)
-        _BIGRAM_MODEL_CACHE[key] = [
+        return [
             (r["bg"], (r["c"] + 1) * 1_000_000 // (pc[r["bg"][:1]] + v))
             for r in bc
         ]
-    return _BIGRAM_MODEL_CACHE[key]
+
+    return plan_memo("bigram_model", generation(sf_dir, "documents"), build)
 
 
 @query(
@@ -1945,14 +1929,6 @@ def _bpe_merge_expr(left: str, right: str) -> str:
     )
 
 
-#: (documents path, mtime) → the trained merge table
-#: [(round, left, right, merge_count, tokens_after)] — ONE training run
-#: per corpus generation (the _bigram_model/_codebook train-once memo):
-#: the graded training query, the encode pass, and the materialized-vocab
-#: build all reuse it.
-_BPE_TRAIN_CACHE: dict[tuple, list] = {}
-
-
 #: truncate the chained-rewrite lineage every this many training rounds:
 #: without it each round re-analyzes a plan carrying EVERY prior merge
 #: expression, so round cost grows superlinearly past ~2 chain-batches
@@ -1976,15 +1952,17 @@ def _train_bpe(
     reference). ``exclude_doc_ids`` retrains as if those docs never
     existed — the erasure-audit rebuild path (maintenance.erasure_audit):
     a vocab is an AGGREGATE artifact every training doc's pair counts
-    influenced, so the only honest erasure is a retrain without them."""
-    import os
-
+    influenced, so the only honest erasure is a retrain without them.
+    Returns [(round, left, right, merge_count, tokens_after)]: ONE
+    training run per key, reused by the graded training query, the
+    encode pass and the materialized-vocab build."""
     rounds = _BPE_ROUNDS if rounds is None else rounds
     ids = tuple(sorted(int(i) for i in (exclude_doc_ids or ())))
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, os.stat(path).st_mtime_ns, rounds, ids)
-    if key in _BPE_TRAIN_CACHE:
-        return _BPE_TRAIN_CACHE[key]
+    key = (*generation(sf_dir, "documents"), rounds, ids)
+    return plan_memo("bpe_merges", key, lambda: _bpe_merge_rows(spark, sf_dir, rounds, ids))
+
+
+def _bpe_merge_rows(spark: SparkSession, sf_dir: str, rounds: int, ids: tuple) -> list:
     docs = table(spark, sf_dir, "documents")
     if ids:
         docs = docs.filter(~F.col("doc_id").isin(list(ids)))
@@ -2014,7 +1992,6 @@ def _train_bpe(
         df = df.withColumn("seq", F.expr(_bpe_merge_expr(left, right)))
         if r % _BPE_CHAIN_BATCH == 0:
             df = df.localCheckpoint(eager=True)
-    _BPE_TRAIN_CACHE[key] = rows
     return rows
 
 

@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
+from ..session import generation, plan_memo
 from ..streaming.streams import await_stream
 
 # C1 tumbling window = headline tumbling_window_events
@@ -202,7 +203,6 @@ _DOCS_SCHEMA_FULL = (
 )
 
 _SINK_SEQ = [0]
-_STREAM_DIRS: dict = {}
 
 
 def _stage_stream_dir(sf_dir: str, tbl: str) -> str:
@@ -212,18 +212,15 @@ def _stage_stream_dir(sf_dir: str, tbl: str) -> str:
     import os
     import tempfile
 
-    key = (sf_dir, tbl)
-    if key not in _STREAM_DIRS:
+    def build() -> str:
         d = tempfile.mkdtemp(prefix=f"stream_{tbl}_")
         os.symlink(
             os.path.join(sf_dir, f"{tbl}.parquet"),
             os.path.join(d, f"{tbl}.parquet"),
         )
-        _STREAM_DIRS[key] = d
-    return _STREAM_DIRS[key]
+        return d
 
-
-_ORDERED_DIRS: dict = {}
+    return plan_memo("stream_dir", (sf_dir, tbl), build)
 
 
 def _stage_ordered_events_dir(
@@ -255,17 +252,20 @@ def _stage_ordered_events_dir(
     event-time order. Cached per (sf_dir, events mtime); at 100 TB the
     same shape is the already-time-bucketed log directory a collector
     writes — this helper only exists because testdata ships one file."""
+    return plan_memo(
+        "ordered_events_dir",
+        (*generation(sf_dir, "events"), n_chunks),
+        lambda: _write_ordered_events(spark, sf_dir, n_chunks),
+    )
+
+
+def _write_ordered_events(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
+    import atexit
     import os
     import shutil
     import tempfile
     import time
 
-    import atexit
-
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (src, os.stat(src).st_mtime_ns, n_chunks)
-    if key in _ORDERED_DIRS:
-        return _ORDERED_DIRS[key]
     d = tempfile.mkdtemp(prefix="ordered_events_")
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     e = table(spark, sf_dir, "events")
@@ -314,7 +314,6 @@ def _stage_ordered_events_dir(
                 "value double, props string",
             )
         )
-    _ORDERED_DIRS[key] = d
     return d
 
 
@@ -986,7 +985,36 @@ if _tws_runnable():
         )
 
 
-_CHUNK_DIRS: dict = {}
+def _staged_chunks(key: tuple, prefix: str, n_chunks: int, chunk_sql) -> str:
+    """A temp dir of ``n_chunks`` parquet files, ``chunk_<i>.parquet``
+    holding DuckDB's ``chunk_sql(i)`` — the bounded replay of a stream
+    of ingest files; staged once per ``key``."""
+    import tempfile
+
+    import duckdb
+
+    def build() -> str:
+        d = tempfile.mkdtemp(prefix=prefix)
+        con = duckdb.connect()
+        for i in range(n_chunks):
+            con.execute(
+                f"COPY ({chunk_sql(i)}) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"
+            )
+        con.close()
+        return d
+
+    return plan_memo("chunk_dir", key, build)
+
+
+def _ntile_docs_sql(sf_dir: str, n_chunks: int, i: int, cols: str, where: str = "") -> str:
+    """Chunk ``i`` of the documents in doc_id order (ntile over doc_id)."""
+    return f"""SELECT {cols}
+               FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
+                     FROM read_parquet('{sf_dir}/documents.parquet') {where})
+               WHERE nt = {i + 1} ORDER BY doc_id"""
+
+
+_DOC_COLS = "doc_id, text, lang, source, n_chars"
 
 
 def _stage_base_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
@@ -994,27 +1022,14 @@ def _stage_base_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
     ``n_chunks`` doc_id-ordered parquet files, one per micro-batch: the
     bounded replay of a daily-ingest document stream. Cached per
     (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = (sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_docchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/documents.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT doc_id, text, lang, source, n_chars
-                      FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
-                            FROM read_parquet('{src}') WHERE doc_id % 4 <> 0)
-                      WHERE nt = {i + 1} ORDER BY doc_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+    return _staged_chunks(
+        (sf_dir, n_chunks),
+        "stream_docchunks_",
+        n_chunks,
+        lambda i: _ntile_docs_sql(
+            sf_dir, n_chunks, i, _DOC_COLS, "WHERE doc_id % 4 <> 0"
+        ),
+    )
 
 
 def _c14_oracle() -> str:
@@ -1105,27 +1120,12 @@ def _stage_all_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
     """The FULL corpus staged as ``n_chunks`` doc_id-ordered parquet
     files (c15's ingest replay — unlike the base stager, no d2o base/
     increment split). Cached per (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = ("all", sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_alldocchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/documents.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT doc_id, text, lang, source, n_chars
-                      FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
-                            FROM read_parquet('{src}'))
-                      WHERE nt = {i + 1} ORDER BY doc_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+    return _staged_chunks(
+        ("all", sf_dir, n_chunks),
+        "stream_alldocchunks_",
+        n_chunks,
+        lambda i: _ntile_docs_sql(sf_dir, n_chunks, i, _DOC_COLS),
+    )
 
 
 def _c15_oracle() -> str:
@@ -1251,29 +1251,13 @@ def _stage_epoch_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
     makes the replay deterministic under ANY file-arrival order: the
     epoch a row is scored under is data, not an artifact of source file
     ordering. Cached per (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = ("epoch", sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_epochchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/documents.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT doc_id, text, lang, source, n_chars,
-                             CAST(CASE WHEN nt <= {n_chunks // 2} THEN 1
-                                       ELSE 2 END AS BIGINT) AS epoch
-                      FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
-                            FROM read_parquet('{src}'))
-                      WHERE nt = {i + 1} ORDER BY doc_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+    epoch = f"CAST(CASE WHEN nt <= {n_chunks // 2} THEN 1 ELSE 2 END AS BIGINT) AS epoch"
+    return _staged_chunks(
+        ("epoch", sf_dir, n_chunks),
+        "stream_epochchunks_",
+        n_chunks,
+        lambda i: _ntile_docs_sql(sf_dir, n_chunks, i, f"{_DOC_COLS}, {epoch}"),
+    )
 
 
 _DOCS_SCHEMA_EPOCH = _DOCS_SCHEMA_FULL + ", epoch LONG"
@@ -1387,27 +1371,15 @@ def _stage_corpus_embeddings_chunks_dir(sf_dir: str, n_chunks: int = 3) -> str:
     """The CORPUS vectors (vec_id >= 5, the D4-family serving split)
     staged as ``n_chunks`` vec_id-ordered parquet files — c17's vector
     ingest replay. Cached per (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = ("emb", sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_embchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/embeddings.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT vec_id, embedding, label FROM (
+    return _staged_chunks(
+        ("emb", sf_dir, n_chunks),
+        "stream_embchunks_",
+        n_chunks,
+        lambda i: f"""SELECT vec_id, embedding, label FROM (
                           SELECT *, ntile({n_chunks}) OVER (ORDER BY vec_id) AS nt
-                          FROM read_parquet('{src}') WHERE vec_id >= 5)
-                      WHERE nt = {i + 1} ORDER BY vec_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+                          FROM read_parquet('{sf_dir}/embeddings.parquet') WHERE vec_id >= 5)
+                      WHERE nt = {i + 1} ORDER BY vec_id""",
+    )
 
 
 def _c17_oracle() -> str:

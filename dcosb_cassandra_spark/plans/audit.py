@@ -175,6 +175,7 @@ def corpus_window_partitions(df: DataFrame) -> list[list[str]]:
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     """Captured .explain() output (JVM-side prints are not capturable from
     Python, so go through the QueryExecution API directly)."""
+    # private `_jdf`/`_jvm` handles: not available under Spark Connect
     jdf = df._jdf
     jvm = df.sparkSession._jvm
     explain_mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)

@@ -11,6 +11,7 @@ partitions change, and those are all injected here.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -86,19 +87,112 @@ def ship_package(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def bounded_memo_put(cache: dict, key: tuple, value, cap: int = 8) -> None:
-    """Insert into a plan-fragment memo and drop the OLDEST entries past
-    ``cap`` (r15, judge r14 advice: the r14 memo caches keyed on
-    appId/mtime never re-hit stale generations, but also never freed
-    them — on a long-lived driver that regenerates corpora, the dead
-    DataFrames/Columns and their py4j objects accumulate forever). Keys
-    embed the generation (mtime/appId/frame identity), so eviction can
-    never serve a stale value — an evicted live entry just rebuilds on
-    next use. dict preserves insertion order, so FIFO == oldest
-    generation first."""
-    cache[key] = value
-    while len(cache) > cap:
-        cache.pop(next(iter(cache)))
+#: entries kept per `plan_memo` namespace. Keys embed the generation
+#: (appId, corpus mtime, frame identity), so eviction never serves a
+#: stale value: an evicted live entry rebuilds on next use.
+MEMO_CAP = 8
+
+
+class _Memo:
+    """One `plan_memo` namespace: key -> (pin, value) in insertion order
+    (oldest first), the lock guarding it, the counters `memo_stats`
+    reports, and the ``release`` called on every value it drops."""
+
+    def __init__(self, release=None):
+        self.entries: dict = {}
+        self.lock = threading.Lock()
+        self.release = release
+        self.hits = self.misses = self.evictions = 0
+
+    def _drop(self, values: list) -> None:
+        if self.release is not None:
+            for v in values:
+                self.release(v)
+
+
+def _unpersist(value: tuple) -> None:
+    """Free the executor blocks (cache or local checkpoint) that a dropped
+    serving structure's first element holds."""
+    try:
+        value[0].unpersist()
+    except Exception:
+        pass  # context already stopped: the blocks died with it
+
+
+#: every memo namespace of the engine, listed by system_views.caches from
+#: import on; the two that hold executor blocks release what they drop
+_MEMOS = {
+    ns: _Memo(_unpersist if ns in ("ivf_index_ram", "knn_graph") else None)
+    for ns in (
+        "bigram_map", "bigram_model", "bpe_merges", "chunk_dir", "codebook",
+        "gif_store_dir", "index_epoch", "ivf_index_dirs", "ivf_index_ram",
+        "knn_graph", "lsh_candidates", "nation_fold", "ordered_events_dir",
+        "quality_model", "query_batch", "query_batch_df", "rrf_query_df",
+        "stream_dir", "vocab_hash_est",
+    )
+}
+
+
+def plan_memo(namespace: str, key, build, pin=None):
+    """The value memoized under ``key`` in ``namespace``, from ``build()``
+    on a miss. Reuse holds only under an explicit validity key (appId,
+    `generation`, frame id()); ``pin`` is kept with the entry and must be
+    the same object at lookup, so a recycled id() or a replaced epoch
+    misses. The lock covers the lookup and the insert, never ``build()``:
+    when two builds of one key race, the first insert stays and the
+    loser's value is released. Past `MEMO_CAP` the oldest entries go."""
+    m = _MEMOS[namespace]
+    with m.lock:
+        hit = m.entries.get(key)
+        if hit is not None and hit[0] is pin:
+            m.hits += 1
+            return hit[1]
+        m.misses += 1
+    value = build()
+    with m.lock:
+        hit = m.entries.get(key)
+        if hit is not None and hit[0] is pin:
+            value, dropped = hit[1], [value]
+        else:
+            dropped = [] if hit is None else [hit[1]]
+            m.entries[key] = (pin, value)
+            while len(m.entries) > MEMO_CAP:
+                dropped.append(m.entries.pop(next(iter(m.entries)))[1])
+            m.evictions += len(dropped)
+    m._drop(dropped)
+    return value
+
+
+def memo_evict(namespace: str, match) -> int:
+    """Drop (and release) every entry of ``namespace`` whose
+    ``match(key, value)`` is true; returns how many went."""
+    m = _MEMOS[namespace]
+    with m.lock:
+        keys = [k for k, (_, v) in m.entries.items() if match(k, v)]
+        dropped = [m.entries.pop(k)[1] for k in keys]
+        m.evictions += len(dropped)
+    m._drop(dropped)
+    return len(dropped)
+
+
+def memo_stats() -> list[tuple[str, int, int, int, int]]:
+    """(name, entry_count, hit_count, request_count, eviction_count) per
+    namespace, sorted by name: the rows of system_views.caches."""
+    rows = []
+    for ns, m in sorted(_MEMOS.items()):
+        with m.lock:
+            rows.append((ns, len(m.entries), m.hits, m.hits + m.misses, m.evictions))
+    return rows
+
+
+def generation(sf_dir: str, *tables: str) -> tuple:
+    """(path, mtime_ns) of each table's parquet file, flattened: the
+    corpus-generation part of a memo key."""
+    out: tuple = ()
+    for t in tables:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        out += (path, os.stat(path).st_mtime_ns)
+    return out
 
 
 def spread_width(spark: SparkSession) -> int:

@@ -146,6 +146,40 @@ def zorder_rewrite(
     )
 
 
+def artifact_dir(name: str, build) -> str:
+    """Directory ``name`` holding a built artifact, calling ``build(dir)``
+    only when no complete copy (``_SUCCESS``) exists. The root is
+    $SPARK_GRAFT_INDEX_DIR (durable across processes) or else a
+    per-process temp root removed at exit; either way the name is a pure
+    function of the corpus generation, so a forgotten memo entry finds
+    the same (possibly erased-into) artifact instead of rebuilding it.
+    The build goes to ``<dir>.build.<pid>`` and is renamed into place;
+    POSIX rename onto a non-empty dir fails, so a racing loser discards
+    its build and serves the winner's. Only a lost race is swallowed:
+    any other rename failure propagates."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = os.environ.get("SPARK_GRAFT_INDEX_DIR")
+    if not root:
+        root = os.path.join(tempfile.gettempdir(), f"dcosb_artifacts_{os.getpid()}")
+        if not os.path.isdir(root):
+            os.makedirs(root, exist_ok=True)
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+    out = os.path.join(root, name)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        tmp = f"{out}.build.{os.getpid()}"
+        build(tmp)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.exists(os.path.join(out, "_SUCCESS")):
+                raise
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
 def build_ivf_index(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> str:
@@ -161,10 +195,10 @@ def build_ivf_index(
     (partition pruning does the 1/k corpus cut) and pays zero assignment
     or norm work at query time — the FAISS-IVF build/serve split.
 
-    Placement: an explicit ``out_dir`` wins; otherwise
-    $SPARK_GRAFT_INDEX_DIR/ivf_<corpus>_<mtime> (durable, rebuild skipped
-    while the corpus generation is unchanged); otherwise a tempdir
-    removed at exit. Returns the index directory."""
+    Placement: an explicit ``out_dir`` wins; otherwise `artifact_dir`
+    ivf3_<corpus>_<mtime> (durable under $SPARK_GRAFT_INDEX_DIR, rebuild
+    skipped while the corpus generation is unchanged). Returns the index
+    directory."""
     from ..operators.llm_similarity import ivf_index_dir, write_ivf_index
 
     if out_dir is None:

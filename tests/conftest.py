@@ -20,6 +20,20 @@ os.environ["PYTHONPATH"] = (
     _VENDOR + (os.pathsep + os.environ["PYTHONPATH"] if os.environ.get("PYTHONPATH") else "")
 )
 
+
+
+def _host_driver_heap() -> str:
+    """A third of the host's MemTotal, in whole GiB (2g to 16g): the
+    get_spark default of 16g lets the suite's JVM grow past what a 16 GB
+    host can hold next to its Python workers and the local-cluster JVMs."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(2, min(16, kib // (3 << 20)))}g"
+
+
+if "SPARK_DRIVER_MEM" not in os.environ and os.path.exists("/proc/meminfo"):
+    os.environ["SPARK_DRIVER_MEM"] = _host_driver_heap()
+
 from dcosb_cassandra_spark.session import get_spark  # noqa: E402
 
 #: driver's correctness gate runs at sf0.01 — self-check at the same SF

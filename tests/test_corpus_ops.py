@@ -151,7 +151,9 @@ def test_bigram_model_collects_are_charset_bounded(spark, tmp_path, monkeypatch)
         return out
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    llm_text._BIGRAM_MODEL_CACHE.clear()
+    from dcosb_cassandra_spark.session import memo_evict
+
+    memo_evict("bigram_model", lambda k, v: True)
     model = llm_text._bigram_model(spark, str(tmp_path))
     # charset = {a, b, x, ' '}: every training collect is model-sized
     # (bigram table ≤ 4² rows; charset probe ≤ 4 rows), never corpus-sized

@@ -1635,22 +1635,32 @@ def test_system_views_clients_tracks_principals(spark):
 
 
 def test_system_views_caches_reports_artifact_memos(sess):
-    """system_views.caches: the memoized artifact registries with live
-    entry counts — after a codebook-consuming query runs, the codebook
-    cache must show a warm entry."""
+    """system_views.caches: one row per registered memo namespace with
+    live entry/hit/request counts — after a codebook-consuming query
+    runs, the codebook memo shows a warm entry, and running it again
+    raises its hit_count."""
     from dcosb_cassandra_spark.registry import load_all
+    from dcosb_cassandra_spark.session import memo_stats
+
+    def caches() -> dict:
+        return {
+            r["name"]: r.asDict()
+            for r in sess.execute("SELECT * FROM system_views.caches").collect()
+        }
 
     reg = load_all()
     reg["d4b_centroid_assignment"].fn(sess.spark, SMOKE_SF_DIR).collect()
-    rows = {
-        r["name"]: r["entry_count"]
-        for r in sess.execute("SELECT * FROM system_views.caches").collect()
-    }
+    first = caches()
     assert {
         "bpe_merges", "codebook", "ivf_index_dirs", "ivf_index_ram",
         "knn_graph", "quality_model", "query_batch",
-    } <= set(rows)
-    assert rows["codebook"] >= 1
+    } <= set(first)
+    assert set(first) == {r[0] for r in memo_stats()}
+    assert first["codebook"]["entry_count"] >= 1
+    reg["d4b_centroid_assignment"].fn(sess.spark, SMOKE_SF_DIR).collect()
+    second = caches()
+    assert second["codebook"]["hit_count"] > first["codebook"]["hit_count"]
+    assert second["codebook"]["request_count"] > first["codebook"]["request_count"]
 
 
 def test_system_views_describe_and_errors(sess):
@@ -1665,7 +1675,8 @@ def test_system_views_describe_and_errors(sess):
         for r in sess.execute("DESCRIBE system_views.caches").collect()
     }
     assert rows["name"] == "partition_key"
-    assert rows["entry_count"] == "regular"
+    for col in ("entry_count", "hit_count", "request_count", "eviction_count"):
+        assert rows[col] == "regular"
     with _pytest.raises(InvalidRequest):
         sess.execute("SELECT * FROM system_views.local")
     with _pytest.raises(InvalidRequest):

@@ -297,15 +297,19 @@ def test_streamed_index_compacts_and_still_serves(spark, tmp_path_factory):
     assert after_verdicts == before_verdicts and before_verdicts
 
 
-def test_forget_vectors_evicts_live_serving_caches(spark, tmp_path_factory):
+def test_forget_vectors_evicts_live_serving_caches(spark, tmp_path_factory, monkeypatch):
     """judge r10 ADVICE (medium): erasure must reach the RAM-resident
     serving state, not only the parquet — after forget_vectors, a live
     session's `ivf_index` (the cached serving DataFrame) and `knn_graph`
     (built on it) must stop citing the forgotten vec_ids immediately.
-    Runs against a COPIED corpus so the shared memoized index other
-    tests serve from is untouched."""
+    The memo cap is 1 and a second corpus is touched in between, so the
+    corpus's (path, mtime) → index-dir entry is already evicted while
+    its RAM index and graph are live: eviction must not hide them.
+    Runs against COPIED corpora on fresh memos, so the shared memoized
+    index and graph other tests serve from are untouched."""
     import shutil
 
+    from dcosb_cassandra_spark import session
     from dcosb_cassandra_spark.operators.llm_similarity import (
         ivf_index,
         ivf_index_dir,
@@ -313,14 +317,21 @@ def test_forget_vectors_evicts_live_serving_caches(spark, tmp_path_factory):
     )
     from dcosb_cassandra_spark.sources.maintenance import forget_vectors
 
-    sf = str(tmp_path_factory.mktemp("sf_evict"))
-    shutil.copy(f"{SF_DIR}/embeddings.parquet", f"{sf}/embeddings.parquet")
+    for name, memo in list(session._MEMOS.items()):
+        monkeypatch.setitem(session._MEMOS, name, session._Memo(memo.release))
+    monkeypatch.setattr(session, "MEMO_CAP", 1)
+    sf, other = (str(tmp_path_factory.mktemp(n)) for n in ("sf_evict", "sf_other"))
+    for d in (sf, other):
+        shutil.copy(f"{SF_DIR}/embeddings.parquet", f"{d}/embeddings.parquet")
     served = ivf_index(spark, sf)  # materializes + caches the serving DF
     vid = served.filter("vec_id >= 5").limit(1).collect()[0]["vec_id"]
     und_before, _ = knn_graph(spark, sf)
     assert served.filter(F.col("vec_id") == vid).count() == 1
+    idx = ivf_index_dir(spark, sf)
+    ivf_index_dir(spark, other)  # evicts sf's index-dir entry (cap 1)
 
-    forget_vectors(spark, ivf_index_dir(spark, sf), [vid])
+    forget_vectors(spark, idx, [vid])
+    assert not served.is_cached, "erasure left the RAM index's blocks live"
 
     after = ivf_index(spark, sf)
     assert after.filter(F.col("vec_id") == vid).count() == 0, (
@@ -334,6 +345,8 @@ def test_forget_vectors_evicts_live_serving_caches(spark, tmp_path_factory):
         ).count()
         == 0
     )
+    for name in ("ivf_index_ram", "knn_graph"):  # free this test's blocks
+        session.memo_evict(name, lambda k, v: True)
 
 
 def test_forget_swap_crash_recovery(spark, tmp_path_factory):

@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dcosb_cassandra_spark.catalog import table
 from dcosb_cassandra_spark.plans.audit import executed_plan_string
+from dcosb_cassandra_spark.session import memo_evict
 from dcosb_cassandra_spark.sources.maintenance import (
     compact_small_files,
     parquet_files,
@@ -197,13 +199,26 @@ def test_hot_key_warm_cache_removes_exchanges(spark):
         _table_memo.update(before)
 
 
-def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch):
+@pytest.fixture
+def forget_store_dirs():
+    """Returns a callable that drops the (corpus path, mtime) → store-dir
+    memos, as a new process starts without them; dropped again at
+    teardown so no later test serves a store under this test's tmp root."""
+
+    def forget() -> None:
+        for ns in ("ivf_index_dirs", "gif_store_dir"):
+            memo_evict(ns, lambda k, v: True)
+
+    yield forget
+    forget()
+
+
+def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch, forget_store_dirs):
     """build_ivf_index (r8): an explicit out_dir materializes the
     bucket-partitioned index there; the env-var policy builds a durable
     mtime-tagged dir under SPARK_GRAFT_INDEX_DIR and SKIPS the rebuild
     while the corpus generation is unchanged; and the served probe
     (d4d) over a fresh process-state reads the same rows either way."""
-    from dcosb_cassandra_spark.operators import llm_similarity
     from dcosb_cassandra_spark.sources.maintenance import build_ivf_index
 
     from .conftest import SF_DIR
@@ -221,11 +236,11 @@ def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch):
 
     # env-var durable policy: second call reuses, no rebuild
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index_root"))
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
+    forget_store_dirs()
     d1 = build_ivf_index(spark, SF_DIR)
     assert d1.startswith(str(tmp_path / "index_root"))
     stamp = os.path.getmtime(os.path.join(d1, "_SUCCESS"))
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})  # new process
+    forget_store_dirs()  # new process
     d2 = build_ivf_index(spark, SF_DIR)
     assert d2 == d1
     assert os.path.getmtime(os.path.join(d1, "_SUCCESS")) == stamp  # untouched
@@ -240,23 +255,32 @@ def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch):
     assert len(rows) == 15  # 5 queries x top-3
 
 
-def test_ivf_rename_failure_propagates_unless_race_lost(spark, tmp_path, monkeypatch):
-    """Judge r9 advice: the rename-race fallback must only swallow OSError
-    when the durable name already holds a COMPLETE index (_SUCCESS) — a
-    rename failing for any other reason (permissions, read-only fs) must
-    propagate rather than discard the fresh build and point callers at a
-    missing path."""
-    import os as _os
+def _gif_store(spark, sf_dir):
+    from dcosb_cassandra_spark.operators.llm_multimodal import gif_store_dir
 
-    import pytest
+    return gif_store_dir(spark, sf_dir)
 
-    from dcosb_cassandra_spark.operators import llm_similarity
+
+def _ivf_store(spark, sf_dir):
     from dcosb_cassandra_spark.sources.maintenance import build_ivf_index
 
-    from .conftest import SMOKE_SF_DIR
+    return build_ivf_index(spark, sf_dir)
+
+
+@pytest.mark.parametrize("build_store", [_ivf_store, _gif_store], ids=["ivf", "gif"])
+def test_ivf_rename_failure_propagates_unless_race_lost(
+    spark, tmp_path, monkeypatch, forget_store_dirs, build_store
+):
+    """Judge r9 advice: the rename-race fallback must only swallow OSError
+    when the durable name already holds a COMPLETE store (_SUCCESS) — a
+    rename failing for any other reason (permissions, read-only fs) must
+    propagate rather than discard the fresh build and point callers at a
+    missing path. Both durable stores (IVF index, GIF payloads) build
+    through the one `maintenance.artifact_dir`."""
+    import os as _os
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_root"))
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
+    forget_store_dirs()
     real_rename = _os.rename
 
     def deny(src, dst):
@@ -264,17 +288,17 @@ def test_ivf_rename_failure_propagates_unless_race_lost(spark, tmp_path, monkeyp
 
     monkeypatch.setattr(_os, "rename", deny)
     with pytest.raises(PermissionError):
-        build_ivf_index(spark, SMOKE_SF_DIR)
+        build_store(spark, SMOKE_SF_DIR)
 
-    # lost race: the winner's complete index already sits at the durable
+    # lost race: the winner's complete store already sits at the durable
     # name -> the loser discards its build and serves the winner's
     monkeypatch.setattr(_os, "rename", real_rename)
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
-    winner = build_ivf_index(spark, SMOKE_SF_DIR)
+    forget_store_dirs()
+    winner = build_store(spark, SMOKE_SF_DIR)
     assert _os.path.exists(_os.path.join(winner, "_SUCCESS"))
     monkeypatch.setattr(_os, "rename", deny)
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
-    assert build_ivf_index(spark, SMOKE_SF_DIR) == winner  # no raise
+    forget_store_dirs()
+    assert build_store(spark, SMOKE_SF_DIR) == winner  # no raise
 
 
 def test_erasure_audit_reports_training_membership(spark):

@@ -53,8 +53,9 @@ def test_distributed_d4d_prunes_partitions_and_limits_window(spark, monkeypatch)
     # of our Python-level memo, so any prior test's .cache() of the same
     # index scan must be unpersisted, not just forgotten.
     monkeypatch.setattr(llm_similarity, "RAM_INDEX_BYTES", -1)
-    for k in list(llm_similarity._IVF_INDEX_DF_CACHE):
-        llm_similarity._IVF_INDEX_DF_CACHE.pop(k).unpersist()
+    from dcosb_cassandra_spark.session import memo_evict
+
+    memo_evict("ivf_index_ram", lambda k, v: True)  # unpersists each
     plan = plan_string(REGISTRY["d4d_ivf_probe_knn"].fn(spark, SF_DIR))
     assert "PartitionFilters" in plan and "bucket" in plan
     assert "WindowGroupLimit" in plan

@@ -79,7 +79,7 @@ def replica_dir(spark, n: int) -> str:
 def main() -> None:
     ns = [int(a) for a in sys.argv[1:]] or [1, 10, 100]
     from dcosb_cassandra_spark.operators import llm_similarity as sim
-    from dcosb_cassandra_spark.session import get_spark
+    from dcosb_cassandra_spark.session import get_spark, memo_evict
 
     spark = get_spark(
         "graph-scale-probe", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -92,13 +92,8 @@ def main() -> None:
         bits = sim.adaptive_lsh_bits(rows)
         bits2 = sim.adaptive_bucket_split_bits(rows)
         # cold build: clear every memo so the full pipeline runs
-        for key in list(sim._KNN_GRAPH_CACHE):
-            und, _ = sim._KNN_GRAPH_CACHE.pop(key)
-            try:
-                und.unpersist()
-            except Exception:
-                pass
-        sim._CODEBOOK_CACHE.clear()
+        for ns in ("knn_graph", "codebook"):  # evicted graphs unpersist
+            memo_evict(ns, lambda k, v: True)
         t0 = time.perf_counter()
         und, entries = sim.knn_graph(spark, sf_dir)
         edge_rows = und.count()
