@@ -16,16 +16,17 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..session import plan_memo, spread_width
-from ..functions.text import hash_split
+from ..functions import minhash
 from ..functions.minhash import (
-    DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
-    first_collision_only,
-    lsh_bands_keyed,
+    band_pairs,
+    band_rows,
+    maybe_broadcast,
     minhash_oracle_sql,
     minhash_signature,
     tokens_of,
 )
+from ..functions.text import hash_split
 from ..registry import query
 
 
@@ -52,77 +53,124 @@ def d1_exact_dedup_keep_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("text_hash")
 
 
-#: size cap for CONDITIONAL broadcast hints on corpus-scaled sides (band
-#: rows, per-doc token arrays). Catalyst's own size estimate decides; above
-#: the cap the frame is left unhinted and the planner shuffles on the equi
-#: keys — the fallback that used to live only in docstrings, now code.
-BROADCAST_FALLBACK_BYTES = 64 << 20
-
-
-def maybe_broadcast(df: DataFrame) -> DataFrame:
-    """Size-conditional broadcast hint. An explicit `F.broadcast` cannot be
-    demoted by AQE, so hinting a side that scales with the corpus is a
-    deferred OOM — at ~10⁷ docs the band rows / token arrays outgrow
-    executor memory. This helper consults Catalyst's optimized-plan size
-    estimate (the same statistic the planner's own broadcast decision
-    reads) and hints only while the side fits `BROADCAST_FALLBACK_BYTES`;
-    past it, the join degrades to the shuffle equi-join shape
-    (tests/test_dedup_semantics.py forces the fallback and asserts result
-    parity + hint absence). Private `_jdf` handle: not available under
-    Spark Connect."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    if int(stats.sizeInBytes()) <= BROADCAST_FALLBACK_BYTES:
-        return F.broadcast(df)
-    return df
-
-
 def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
     """(id_a, id_b): first-collision MinHash-LSH candidate pairs over a
-    documents frame — the shared candidate generator behind d2b and every
-    audit that consumes its pair set (d2i/d2m/d2n, the split
-    leakage audit + repair). Semantics: 4 bands × 2 rows, pair survives
-    only in its FIRST colliding band (no DISTINCT), probe side spread by
-    cores, build side broadcast while it fits (`maybe_broadcast`: the
-    ~10⁷-doc shuffle-equi-join fallback is the size-conditional hint,
-    not prose).
+    documents frame — `band_pairs` of the corpus's `band_rows` against
+    themselves under ``a.doc_id < b.doc_id``; the shared candidate
+    generator behind d2b and every audit that consumes its pair set
+    (d2i/d2m/d2n/d2s, the split leakage audit + repair).
 
-    Memoized as a plan fragment per (appId, id(d), fallback knobs,
+    Memoized as a plan fragment per (appId, id(d), size-gate cap,
     spread width), pinned to ``d``: the input is usually the catalog's
     memoized documents frame, so the ~0.19 s of py4j expression
     construction is paid once per corpus; the pin rejects a recycled
-    id(), and the knob/width keys rebuild when a test patches the
-    fallback or the session conf moves."""
-    from ..functions.minhash import VOCAB_HASH_BROADCAST_BYTES
-
+    id(), and the cap/width keys rebuild when a test patches the
+    gate or the session conf moves."""
     key = (
         spark.sparkContext.applicationId,
         id(d),
-        BROADCAST_FALLBACK_BYTES,
-        VOCAB_HASH_BROADCAST_BYTES,  # r15: the sig stage's own hint knob
+        minhash.BROADCAST_FALLBACK_BYTES,
         spread_width(spark),
     )
-    return plan_memo("lsh_candidates", key, lambda: _lsh_candidate_pairs(spark, d), pin=d)
+
+    def build() -> DataFrame:
+        bands = band_rows(d)
+        return band_pairs(bands, bands, F.col("a.doc_id") < F.col("b.doc_id"))
+
+    return plan_memo("lsh_candidates", key, build, pin=d)
 
 
-def _lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
-    sigs = minhash_signature(d, "doc_id", "text", DEFAULT_NUM_HASHES)
-    bands = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
-    probe = bands.repartition(spread_width(spark))
-    a, b = probe.alias("a"), bands.alias("b")
-    dup_enum = first_collision_only(
-        F.col("a.band_idx"),
-        DEFAULT_BANDS,
-        lambda j: F.col(f"a.bh{j}") == F.col(f"b.bh{j}"),
+def token_sets(d: DataFrame) -> DataFrame:
+    """(doc_id, toks): each document's token SET as an xxhash64 array —
+    the verification side of every LSH-family query and of the band
+    index. Hashing keeps the intersection exact up to 64-bit collisions
+    (probability ~|tokens|²/2⁶⁴ per pair — negligible at any doc size)."""
+    return d.select(
+        "doc_id",
+        F.transform(tokens_of(F.col("text")), lambda t: F.xxhash64(t)).alias("toks"),
     )
-    return (
-        a.join(
-            maybe_broadcast(b),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+
+
+def pair_columns(pairs: DataFrame, per_doc: DataFrame) -> DataFrame:
+    """``pairs`` (id_a, id_b, …) with every other column ``c`` of the
+    per-doc frame ``per_doc`` (doc_id, …) joined on as ``c_a`` (via
+    id_a) and ``c_b`` (via id_b). Both per-doc sides go through
+    `maybe_broadcast`: n_docs-bounded, hinted while they fit."""
+    cols = [c for c in per_doc.columns if c != "doc_id"]
+    for s in ("a", "b"):
+        side = per_doc.select(
+            F.col("doc_id").alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in cols]
         )
-        .filter(~dup_enum)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        pairs = pairs.join(maybe_broadcast(side), f"id_{s}")
+    return pairs
+
+
+def pair_overlap(cand: DataFrame, ts: DataFrame) -> DataFrame:
+    """(id_a, id_b, both_n, na, nb, jaccard): token-set intersection, set
+    sizes and exact Jaccard per candidate pair, from `token_sets` arrays —
+    the one verify of the LSH family (containment derives from both_n,
+    na and nb). Jaccard is projected here, from the same expressions, so
+    a consumer that reads only it plans a single projection.
+
+    Each pair fetches the two docs' int64 token sets and intersects them
+    in one expression — faster than the exploded token equi-join (which
+    materializes |pairs| × |tokens| rows) when docs are short; for very
+    long documents the exploded join wins, because pair rows then carry
+    whole documents."""
+    both = F.size(F.array_intersect("toks_a", "toks_b"))
+    na, nb = F.size("toks_a"), F.size("toks_b")
+    return pair_columns(cand, ts).select(
+        "id_a",
+        "id_b",
+        both.alias("both_n"),
+        na.alias("na"),
+        nb.alias("nb"),
+        (both / (na + nb - both)).alias("jaccard"),
+    )
+
+
+def same_block_pairs(cand: DataFrame, d: DataFrame) -> DataFrame:
+    """The (id_a, id_b) pairs of ``cand`` whose two documents share a
+    (lang, source) block — a narrow per-doc map joined on both ends."""
+    return (
+        pair_columns(cand, d.select("doc_id", "lang", "source"))
+        .filter(
+            (F.col("lang_a") == F.col("lang_b"))
+            & (F.col("source_a") == F.col("source_b"))
+        )
+        .select("id_a", "id_b")
+    )
+
+
+def blocked_jaccard_pairs(d: DataFrame, min_jaccard: float) -> DataFrame:
+    """(id_a, id_b, jaccard): exact token-set Jaccard ≥ ``min_jaccard``
+    over pairs restricted to one (lang, source) block, computed by
+    joining exploded token sets (the inverted-index join — pairs
+    materialize only for docs sharing ≥1 token within a block, never the
+    full cross product)."""
+    tok = d.select(
+        "doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token")
+    )
+    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    ta, tb = tok.alias("ta"), tok.alias("tb")
+    pair = (
+        ta.join(
+            tb,
+            (F.col("ta.lang") == F.col("tb.lang"))
+            & (F.col("ta.source") == F.col("tb.source"))
+            & (F.col("ta.token") == F.col("tb.token"))
+            & (F.col("ta.doc_id") < F.col("tb.doc_id")),
+        )
+        .groupBy(F.col("ta.doc_id").alias("id_a"), F.col("tb.doc_id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("both_n"))
+    )
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
+    return (
+        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
+        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
+        .filter(jac >= min_jaccard)
+        .select("id_a", "id_b", jac.alias("jaccard"))
     )
 
 
@@ -176,47 +224,14 @@ def d2b_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified with exact Jaccard ≥ 0.5. The cross join never happens: LSH
     banding makes candidate generation a hash join, the 100 TB-safe shape.
 
-    Pair-stream shape (the part that dominates on clustered corpora, where
-    a dup cluster of m docs emits ~m²/2 pairs per colliding band):
-    - NO DISTINCT. Each band row carries all of the doc's band hashes
-      (lsh_bands_keyed), and a pair survives only in its FIRST colliding
-      band — a scalar-equality filter replaces a full shuffle of the
-      enumerated pair stream.
-    - The probe side is repartitioned round-robin BEFORE enumeration: the
-      sf0.1 corpus arrives as one input split, and without the spread one
-      task would enumerate+verify every pair of the dominant LSH bucket
-      serially (measured 24 s → 6 s on local[32]).
-    - Build side and token arrays are broadcast (n_docs-bounded — fine up
-      to dims of ~10⁷ docs; past that, drop the hints: the same plan runs
-      as shuffle equi-joins and the first-collision dedup still holds).
-
-    Verify-join shape: each candidate pair fetches the two docs' token
-    SETS as int64-hashed arrays and intersects them in one expression —
-    faster than the exploded token equi-join (which materializes
-    |pairs| × |tokens| rows) when docs are short; for very long documents
-    the exploded join wins, because pair rows then carry whole documents.
-    xxhash64 keeps the intersection exact up to 64-bit collisions
-    (probability ~|tokens|²/2⁶⁴ per pair — negligible at any doc size).
-    The corpus-scale caveat: pair ENUMERATION is inherently quadratic on
-    clustered corpora regardless of engine — cluster-level dedup (d2f) is
-    the 100 TB endpoint; this operator is the verified-pairs building
-    block."""
+    Candidates are `lsh_candidate_pairs` (the `band_pairs` probe: no
+    DISTINCT, spread probe, size-gated build side); the verify is
+    `pair_overlap` over `token_sets`. The corpus-scale caveat: pair
+    ENUMERATION is inherently quadratic on clustered corpora regardless
+    of engine — cluster-level dedup (d2f) is the 100 TB endpoint; this
+    operator is the verified-pairs building block."""
     d = table(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(spark, d)
-    ts = d.select(
-        "doc_id",
-        F.transform(tokens_of(F.col("text")), lambda t: F.xxhash64(t)).alias("toks"),
-    )
-    ta = ts.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"))
-    tb = ts.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = (
-        cand.join(maybe_broadcast(ta), "id_a")
-        .join(maybe_broadcast(tb), "id_b")
-        .select(
-            (inter / (F.size("toks_a") + F.size("toks_b") - inter)).alias("jaccard")
-        )
-    )
+    jac = pair_overlap(lsh_candidate_pairs(spark, d), token_sets(d))
     return jac.agg(
         F.count(F.lit(1)).alias("n_candidate_pairs"),
         F.count(F.when(F.col("jaccard") >= 0.5, 1)).alias("n_confirmed"),
@@ -254,27 +269,8 @@ def d2c_blocked_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index join — pairs materialize only for docs sharing ≥1
     token within a block, never the full cross product)."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token"))
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = tok.alias("a"), tok.alias("b")
-    pair = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("both_n"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
-    return (
-        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.2)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return blocked_jaccard_pairs(d, 0.2).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -376,28 +372,7 @@ def d2f_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter of dup clusters is tiny in practice. The driver loop carries
     only a 1-row convergence count per round — no data leaves the cluster."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token"))
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = tok.alias("a"), tok.alias("b")
-    pair = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("both_n"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
-    edges = (
-        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.5)
-        .select("id_a", "id_b")
-    )
+    edges = blocked_jaccard_pairs(d, 0.5).select("id_a", "id_b")
     undirected = edges.unionByName(
         edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     )
@@ -699,57 +674,13 @@ def d2i_lsh_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost. Candidates are restricted to the ground truth's (lang, source)
     blocking so both sides measure the same pair universe.
 
-    Scale: candidates come from the d2b first-collision band equi-join
-    (no DISTINCT, no cross join); ground truth from the d2c inverted-index
-    token join — both blocked/bucketed shapes audited at 100 TB. The
-    metric joins shuffle only (id_a, id_b) pair keys; counts are single
-    partial aggregates."""
+    Scale: candidates come from `lsh_candidate_pairs` narrowed by
+    `same_block_pairs`; ground truth from `blocked_jaccard_pairs` — both
+    blocked/bucketed shapes audited at 100 TB. The metric joins shuffle
+    only (id_a, id_b) pair keys; counts are single partial aggregates."""
     d = table(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(spark, d)
-    attrs = d.select("doc_id", "lang", "source")
-    aa = attrs.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("source").alias("source_a"),
-    )
-    ab = attrs.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("source").alias("source_b"),
-    )
-    cand_blocked = (
-        cand.join(maybe_broadcast(aa), "id_a")
-        .join(maybe_broadcast(ab), "id_b")
-        .filter(
-            (F.col("lang_a") == F.col("lang_b"))
-            & (F.col("source_a") == F.col("source_b"))
-        )
-        .select("id_a", "id_b")
-    )
-    tok = d.select(
-        "doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token")
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    pair = (
-        ta.join(
-            tb,
-            (F.col("ta.lang") == F.col("tb.lang"))
-            & (F.col("ta.source") == F.col("tb.source"))
-            & (F.col("ta.token") == F.col("tb.token"))
-            & (F.col("ta.doc_id") < F.col("tb.doc_id")),
-        )
-        .groupBy(F.col("ta.doc_id").alias("id_a"), F.col("tb.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("both_n"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
-    truth = (
-        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.5)
-        .select("id_a", "id_b")
-    )
+    cand_blocked = same_block_pairs(lsh_candidate_pairs(spark, d), d)
+    truth = blocked_jaccard_pairs(d, 0.5).select("id_a", "id_b")
     n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     n_cand = cand_blocked.agg(F.count(F.lit(1)).alias("n_candidates"))
     n_hits = cand_blocked.join(truth, ["id_a", "id_b"]).agg(
@@ -810,34 +741,11 @@ def d2j_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d2f) must replace pair-level verification, before a 100 TB run
     commits to either.
 
-    Scale: reuses the d2c/d2f blocked inverted-index edge construction
-    (never a cross join); degrees are one groupBy on doc_id; the final
-    block aggregate is k-row. The edge set never leaves the executors."""
+    Scale: edges are `blocked_jaccard_pairs` (never a cross join);
+    degrees are one groupBy on doc_id; the final block aggregate is
+    k-row. The edge set never leaves the executors."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token")
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    pair = (
-        ta.join(
-            tb,
-            (F.col("ta.lang") == F.col("tb.lang"))
-            & (F.col("ta.source") == F.col("tb.source"))
-            & (F.col("ta.token") == F.col("tb.token"))
-            & (F.col("ta.doc_id") < F.col("tb.doc_id")),
-        )
-        .groupBy(F.col("ta.doc_id").alias("id_a"), F.col("tb.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("both_n"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
-    edges = (
-        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.5)
-        .select("id_a", "id_b")
-    )
+    edges = blocked_jaccard_pairs(d, 0.5).select("id_a", "id_b")
     und = edges.select(F.col("id_a").alias("node")).unionByName(
         edges.select(F.col("id_b").alias("node"))
     )
@@ -885,35 +793,12 @@ def d2k_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the standard distributed triangle algorithm — two hash joins
     on the ORIENTED edge list (a<b<c ordering prevents double counting
-    and caps the join fan-out at the forward-degree); edge construction
-    reuses the blocked inverted-index shape. Triangle enumeration is
+    and caps the join fan-out at the forward-degree); edges are
+    `blocked_jaccard_pairs`. Triangle enumeration is
     inherently proportional to the triangle count; the oriented join is
     the minimal enumeration."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token")
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    pair = (
-        ta.join(
-            tb,
-            (F.col("ta.lang") == F.col("tb.lang"))
-            & (F.col("ta.source") == F.col("tb.source"))
-            & (F.col("ta.token") == F.col("tb.token"))
-            & (F.col("ta.doc_id") < F.col("tb.doc_id")),
-        )
-        .groupBy(F.col("ta.doc_id").alias("id_a"), F.col("tb.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("both_n"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
-    edges = (
-        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.5)
-        .select("id_a", "id_b")
-    )
+    edges = blocked_jaccard_pairs(d, 0.5).select("id_a", "id_b")
     e1 = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = edges.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
     e3 = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("c"))
@@ -991,15 +876,14 @@ def d_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs before a benchmark number is trusted: count document
     pairs that land in DIFFERENT splits of the deterministic hash split
     (d_split_train_val_test's rule) yet are exact duplicates (same
-    sha256) or near-duplicate candidates (first-collision MinHash band
-    pair, d2b's machinery). A nonzero 'exact' row between train and test
+    sha256) or near-duplicate candidates (`lsh_candidate_pairs`). A nonzero 'exact' row between train and test
     invalidates the eval; 'near' rows bound the softer paraphrase leak.
 
     Scale shape: exact pairs come from a self-equi-join on the 64-byte
-    digest (bodies never move — d1's rule); near pairs reuse the d2b
-    spread + first-collision band equi-join (no DISTINCT, no cross
-    join). Split labels join back on doc_id — corpus-keyed equi-joins.
-    The pair-enumeration caveat is d2b's: quadratic per dup cluster,
+    digest (bodies never move — d1's rule); near pairs are the
+    `band_pairs` probe (no DISTINCT, no cross join). Split labels join
+    back on doc_id — corpus-keyed equi-joins. The pair-enumeration
+    caveat is the probe's: quadratic per dup cluster,
     bounded by cluster-level dedup upstream (d2f) in a real pipeline."""
     d = table(spark, sf_dir, "documents")
     split = hash_split()
@@ -1179,8 +1063,8 @@ def d2m_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     content; heavy diagonal mass means within-source boilerplate. Reports
     pair counts plus a size-normalized rate.
 
-    Scale: candidates are the d2b first-collision band equi-join
-    (spread + broadcast, no DISTINCT, no cross join); source lookups are
+    Scale: candidates are `lsh_candidate_pairs` (the `band_pairs`
+    probe: no DISTINCT, no cross join); source lookups are
     doc_id equi-joins; the matrix is |sources|²-bounded, and the totals
     join runs on those few rows."""
     d = table(spark, sf_dir, "documents")
@@ -1262,22 +1146,11 @@ def d2n_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the config evaluation (d2i): too low a threshold over-merges distinct
     documents, too high leaves paraphrase dups in; this curve is how the
     cutoff is actually chosen. ONE pass computes every pair's exact
-    Jaccard (the d2b first-collision candidate set + token-set intersect
-    verify), then a 4-row threshold grid explodes against the tiny
+    Jaccard (`lsh_candidate_pairs` verified by `pair_overlap`), then a 4-row threshold grid explodes against the tiny
     per-pair scores — the corpus is never re-verified per threshold."""
     d = table(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(spark, d)
-    ts = d.select(
-        "doc_id",
-        F.transform(tokens_of(F.col("text")), lambda t: F.xxhash64(t)).alias("toks"),
-    )
-    ta = ts.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"))
-    tb = ts.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = (
-        cand.join(maybe_broadcast(ta), "id_a")
-        .join(maybe_broadcast(tb), "id_b")
-        .select((inter / (F.size("toks_a") + F.size("toks_b") - inter)).alias("j"))
+    jac = pair_overlap(lsh_candidate_pairs(spark, d), token_sets(d)).select(
+        F.col("jaccard").alias("j")
     )
     thr = F.explode(F.array(*[F.lit(x) for x in (0.3, 0.5, 0.7, 0.9)])).alias("thr")
     return (
@@ -1363,8 +1236,8 @@ def d_split_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     matters, train dup mass is handled by dedup). Reports per-split
     before/after/moved counts; the moved mass is the price of the leak.
 
-    Scale: exact pairs self-join on 64-byte digests; near pairs reuse the
-    d2b spread + first-collision band join; the mover set is a distinct
+    Scale: exact pairs self-join on 64-byte digests; near pairs are
+    `lsh_candidate_pairs`; the mover set is a distinct
     over pair endpoints (doc_id-keyed) anti-filtered to non-train; the
     final relabel is a LEFT join of the corpus against that bounded mover
     set. Note the rule is single-hop by design: A(test)~B(train) moves A;
@@ -1478,7 +1351,7 @@ def d_split_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D2b", "D2", "P1"),
 )
 def d2o_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL near-dup dedup — the daily-ingest posture every
+    """INCREMENTAL near-dup dedup — the daily-ingest shape every
     production corpus actually runs: a new batch (doc_id % 4 == 0, the
     crawl increment) is deduped against the EXISTING base plus earlier
     docs of its own batch, and the base is never re-paired with itself.
@@ -1490,73 +1363,33 @@ def d2o_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one MinHash pass over the corpus (signatures are shared
     work — in production the base's band index is a MATERIALIZED artifact
     like `ivf_index`, so only the increment is signed); the increment's
-    band rows are spread (`spread_width`) and probe the full band set
-    with the d2b first-collision filter (no DISTINCT shuffle of the pair
-    stream); exact-Jaccard verification joins token arrays via
-    `maybe_broadcast` (size-conditional); the per-new-doc verdict is one
+    band rows probe the full band set through `band_pairs` (spread, no
+    DISTINCT shuffle of the pair stream); exact Jaccard comes from
+    `pair_overlap` (size-gated token-array joins); the per-new-doc verdict is one
     partial aggregate + a left join back to the increment (docs with zero
     candidates keep trivially). Every new doc gets an auditable verdict
     row: candidate count, keep flag, lowest verified duplicate partner
     (-1 = none)."""
     d = table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, "doc_id", "text", DEFAULT_NUM_HASHES)
-    bands = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
-    probe = bands.filter(F.col("doc_id") % 4 == 0).repartition(
-        spread_width(spark)
-    )
-    a, b = probe.alias("a"), bands.alias("b")
-    dup_enum = first_collision_only(
-        F.col("a.band_idx"),
-        DEFAULT_BANDS,
-        lambda j: F.col(f"a.bh{j}") == F.col(f"b.bh{j}"),
-    )
-    cand = (
-        a.join(
-            maybe_broadcast(b),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (
-                (F.col("b.doc_id") % 4 != 0)
-                | (F.col("b.doc_id") < F.col("a.doc_id"))
-            ),
-        )
-        .filter(~dup_enum)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    bands = band_rows(d)
+    cand = band_pairs(
+        bands.filter(F.col("doc_id") % 4 == 0),
+        bands,
+        (F.col("b.doc_id") % 4 != 0) | (F.col("b.doc_id") < F.col("a.doc_id")),
     )
     newd = d.filter(F.col("doc_id") % 4 == 0).select("doc_id")
-    return _incremental_verdicts(cand, _inc_token_sets(d), newd)
-
-
-def _inc_token_sets(d: DataFrame) -> DataFrame:
-    """(doc_id, toks): the xxhash64 token-set arrays the incremental
-    verify join consumes — shared by the inline path (d2o) and the
-    index build/probe split."""
-    return d.select(
-        "doc_id",
-        F.transform(tokens_of(F.col("text")), lambda t: F.xxhash64(t)).alias("toks"),
-    )
+    return _incremental_verdicts(cand, token_sets(d), newd)
 
 
 def _incremental_verdicts(
     cand: DataFrame, ts: DataFrame, newd: DataFrame
 ) -> DataFrame:
     """Shared verdict tail of the incremental dedup (inline d2o AND the
-    index probe): exact-Jaccard verify over the candidate pairs, then one
-    partial aggregate + left join back to the increment. Keeping this in
-    ONE place is what makes the probe's bit-parity claim structural
-    rather than coincidental."""
-    ta = ts.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"))
-    tb = ts.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = (
-        cand.join(maybe_broadcast(ta), "id_a")
-        .join(maybe_broadcast(tb), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (inter / (F.size("toks_a") + F.size("toks_b") - inter)).alias("j"),
-        )
-    )
+    index probe): exact Jaccard from `pair_overlap`, then one partial
+    aggregate + left join back to the increment. Keeping this in ONE
+    place is what makes the probe's bit-parity claim structural rather
+    than coincidental."""
+    jac = pair_overlap(cand, ts).select("id_a", "id_b", F.col("jaccard").alias("j"))
     agg = jac.groupBy("id_a").agg(
         F.count(F.lit(1)).alias("nc"),
         F.min(F.when(F.col("j") >= 0.5, F.col("id_b"))).alias("dmin"),
@@ -1569,6 +1402,16 @@ def _incremental_verdicts(
     )
 
 
+def save_band_index(d: DataFrame, out_dir: str, mode: str) -> None:
+    """Write the dedup index rows of the documents in ``d`` under
+    ``out_dir``: its `band_rows` to ``bands/`` and its `token_sets` to
+    ``toks/``, with the writer ``mode`` ("overwrite" for a one-shot
+    build, "append" per streamed micro-batch). Every row derives from
+    exactly one document, so appends commute with a one-shot build."""
+    band_rows(d).write.mode(mode).parquet(f"{out_dir}/bands")
+    token_sets(d).write.mode(mode).parquet(f"{out_dir}/toks")
+
+
 def write_band_index(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     """Materialize the BASE corpus's dedup index — the ingest-time
     artifact d2o's docstring promises: the base's LSH band rows (with all
@@ -1576,13 +1419,10 @@ def write_band_index(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     and its verification token-set arrays. With this on disk, a daily
     increment is deduped WITHOUT ever re-reading, re-tokenizing or
     re-MinHashing the base — the cost that makes naive daily dedup
-    quadratic over a corpus's lifetime. Layout: ``out_dir/bands`` +
-    ``out_dir/toks`` parquet. Returns ``out_dir``."""
+    quadratic over a corpus's lifetime. Layout: `save_band_index`.
+    Returns ``out_dir``."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 != 0)
-    sigs = minhash_signature(d, "doc_id", "text", DEFAULT_NUM_HASHES)
-    bands = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
-    bands.write.mode("overwrite").parquet(f"{out_dir}/bands")
-    _inc_token_sets(d).write.mode("overwrite").parquet(f"{out_dir}/toks")
+    save_band_index(d, out_dir, "overwrite")
     return out_dir
 
 
@@ -1593,35 +1433,20 @@ def incremental_dedup_probe(
     side comes ENTIRELY from the materialized band index
     (`write_band_index`) — only the increment (doc_id % 4 == 0) is read
     from the corpus, tokenized and MinHashed. Bit-identical to the
-    inline d2o by construction (same band rows, same first-collision
-    filter, same verify join); asserted by
-    tests/test_incremental_index.py. At 100 TB the difference is the
-    whole game: signing cost scales with |increment|, not |corpus|."""
+    inline d2o by construction (same band rows, same `band_pairs` probe,
+    same verify); asserted by tests/test_incremental_index.py. At 100 TB
+    the difference is the whole game: signing cost scales with
+    |increment|, not |corpus|."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 0)
-    sigs = minhash_signature(d, "doc_id", "text", DEFAULT_NUM_HASHES)
-    inc_bands = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
+    inc_bands = band_rows(d)
     base_bands = spark.read.parquet(f"{index_dir}/bands").withColumn(
         "is_base", F.lit(True)
     )
     all_bands = base_bands.unionByName(inc_bands.withColumn("is_base", F.lit(False)))
-    probe = inc_bands.repartition(spread_width(spark))
-    a, b = probe.alias("a"), all_bands.alias("b")
-    dup_enum = first_collision_only(
-        F.col("a.band_idx"),
-        DEFAULT_BANDS,
-        lambda j: F.col(f"a.bh{j}") == F.col(f"b.bh{j}"),
+    cand = band_pairs(
+        inc_bands, all_bands, F.col("b.is_base") | (F.col("b.doc_id") < F.col("a.doc_id"))
     )
-    cand = (
-        a.join(
-            maybe_broadcast(b),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("b.is_base") | (F.col("b.doc_id") < F.col("a.doc_id"))),
-        )
-        .filter(~dup_enum)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    )
-    ts = spark.read.parquet(f"{index_dir}/toks").unionByName(_inc_token_sets(d))
+    ts = spark.read.parquet(f"{index_dir}/toks").unionByName(token_sets(d))
     return _incremental_verdicts(cand, ts, d.select("doc_id"))
 
 
@@ -1774,15 +1599,12 @@ def d2s_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the THRESHOLD decision is engine-exact — only the reported ratios
     round).
 
-    Candidate generation rides the d2b BAND INDEX (r11, judge r10 task
-    #3 — the 1× raw-token inverted-index self-join is gone):
-    `lsh_candidate_pairs` is the first-collision banded equi-join, the
-    same rows the materialized `build_band_index` artifact serves (c14
-    proves streamed/batch index parity), and exact containment evaluates
-    ONLY on collided pairs via the stored token-set arrays (the d2o
-    verify join), still restricted to (lang, source) blocks — the verify
-    join carries the block columns and drops cross-block collisions, so
-    the reported pair universe is unchanged from the block semantics
+    Candidate generation rides the band index: `lsh_candidate_pairs` is
+    the `band_pairs` probe, the same rows the materialized
+    `save_band_index` artifact serves, and exact containment evaluates
+    ONLY on collided pairs through `pair_overlap`, still restricted to
+    (lang, source) blocks — `same_block_pairs` drops cross-block
+    collisions before the verify, so the reported pair universe is unchanged from the block semantics
     (measured: dropping the block filter inflated the kept pairs 64× at
     sf0.01 — stopword overlap makes cross-block containment pass the
     threshold constantly, and the pair stream goes quadratic). So the
@@ -1796,50 +1618,15 @@ def d2s_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index path for corpora where that recall matters more than
     the index cut; this operator is the 100 TB serving shape."""
     d = table(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(spark, d)
     # Drop cross-block collisions on the NARROW (doc_id, lang, source) map
     # BEFORE fetching token arrays: sign-bit bands collide across blocks
     # constantly (stopword-shaped signatures), and carrying both full
     # token arrays into pairs that the block filter then discards was the
     # dominant cost (measured 16.3 s → the narrow pre-filter restores the
     # early pruning the old inverted-index path had).
-    meta = d.select("doc_id", "lang", "source")
-    ma = meta.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("source").alias("source_a"),
-    )
-    mb = meta.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("source").alias("source_b"),
-    )
-    cand = (
-        cand.join(maybe_broadcast(ma), "id_a")
-        .join(maybe_broadcast(mb), "id_b")
-        .filter(
-            (F.col("lang_a") == F.col("lang_b"))
-            & (F.col("source_a") == F.col("source_b"))
-        )
-        .select("id_a", "id_b")
-    )
-    ts = d.select(
-        "doc_id",
-        F.transform(tokens_of(F.col("text")), lambda t: F.xxhash64(t)).alias("toks"),
-    )
-    ta = ts.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"))
-    tb = ts.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"))
-    both = F.size(F.array_intersect("toks_a", "toks_b"))
+    cand = same_block_pairs(lsh_candidate_pairs(spark, d), d)
     return (
-        cand.join(maybe_broadcast(ta), "id_a")
-        .join(maybe_broadcast(tb), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            both.alias("both_n"),
-            F.size("toks_a").alias("na"),
-            F.size("toks_b").alias("nb"),
-        )
+        pair_overlap(cand, token_sets(d))
         .filter(F.col("both_n") * 2 >= F.least(F.col("na"), F.col("nb")))
         .select(
             "id_a",
@@ -1915,37 +1702,14 @@ def d2t_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     undirected dup graph has no dangling nodes (every node has an edge by
     construction), so no sink redistribution term is needed.
 
-    Scale: edges reuse the d2c/d2j blocked inverted-index construction
-    (at 100 TB: the d2b band index); each round is ONE join of the edge
+    Scale: edges are `blocked_jaccard_pairs` (at 100 TB: the band
+    index); each round is ONE join of the edge
     list against the k-per-node rank table + a partial-agg groupBy on the
     receiving node — the standard distributed power iteration, rounds
     fixed, lineage bounded. Ranks live per NODE (dup-graph nodes only, a
     small fraction of the corpus)."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", "source", F.explode(tokens_of(F.col("text"))).alias("token")
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    pair = (
-        ta.join(
-            tb,
-            (F.col("ta.lang") == F.col("tb.lang"))
-            & (F.col("ta.source") == F.col("tb.source"))
-            & (F.col("ta.token") == F.col("tb.token"))
-            & (F.col("ta.doc_id") < F.col("tb.doc_id")),
-        )
-        .groupBy(F.col("ta.doc_id").alias("id_a"), F.col("tb.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("both_n"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("both_n") / (F.col("sa.n") + F.col("sb.n") - F.col("both_n"))
-    edges = (
-        pair.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.5)
-        .select("id_a", "id_b")
-    )
+    edges = blocked_jaccard_pairs(d, 0.5).select("id_a", "id_b")
     und = edges.select(
         F.col("id_a").alias("node"), F.col("id_b").alias("peer")
     ).unionAll(edges.select(F.col("id_b").alias("node"), F.col("id_a").alias("peer")))

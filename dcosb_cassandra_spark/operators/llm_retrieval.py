@@ -43,29 +43,6 @@ def _ws_token_count(c) -> F.Column:
     Used for dl/avgdl wherever the term list itself is not needed."""
     return F.length(c) - F.length(F.replace(c, F.lit(" "))) + F.lit(1)
 
-def _rrf_query_df(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The 5-row (qid, qe, qnrm) query batch d18b's vector arm probes
-    with, as an Arrow-backed local relation; None when the embeddings are
-    empty. The values are memoized by `llm_similarity._query_batch`; the
-    createDataFrame wrap (~0.1-0.4 s of py4j/Arrow driver work per plan
-    build) is memoized per (appId, corpus generation)."""
-    from ..session import generation, plan_memo
-    from .llm_similarity import _query_batch
-
-    def build() -> DataFrame | None:
-        qid, qvecs, qnrms, _ranks = _query_batch(spark, sf_dir)
-        if not qid:
-            return None
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame({"qid": qid, "qe": qvecs, "qnrm": qnrms}),
-            "qid long, qe array<double>, qnrm double",
-        )
-
-    key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"))
-    return plan_memo("rrf_query_df", key, build)
-
 
 #: Okapi BM25 parameters (the Lucene/ES defaults — public constants).
 BM25_K1 = 1.2
@@ -312,6 +289,7 @@ def d18b_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     and final window touch O(queries × 20) rows regardless of corpus
     size."""
     from ..functions.vectors import as_double, dot, l2_norm
+    from .llm_similarity import _query_batch, query_frame
 
     lex = _topk_per_query(_bm25_scored(spark, sf_dir), RRF_DEPTH).select(
         "qid", "doc_id", F.col("rnk").alias("lrank")
@@ -320,9 +298,9 @@ def d18b_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = (
         "qid long, doc_id long, rrf double, lrank long, vrank long"
     )
-    qdf = _rrf_query_df(spark, sf_dir)
-    if qdf is None:
+    if not _query_batch(spark, sf_dir)[0]:
         return spark.createDataFrame([], out_schema)
+    qdf = query_frame(spark, sf_dir).withColumnRenamed("query_id", "qid")
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("ve")
     )

@@ -127,7 +127,7 @@ _MEMOS = {
         "bigram_map", "bigram_model", "bpe_merges", "chunk_dir", "codebook",
         "gif_store_dir", "index_epoch", "ivf_index_dirs", "ivf_index_ram",
         "knn_graph", "lsh_candidates", "nation_fold", "ordered_events_dir",
-        "quality_model", "query_batch", "query_batch_df", "rrf_query_df",
+        "quality_model", "query_batch", "query_batch_df", "query_frame",
         "stream_dir", "vocab_hash_est",
     )
 }

@@ -234,22 +234,10 @@ def stream_band_index(
     pipeline can bootstrap in batch and keep maintaining on the stream
     with the same code. Per-batch cost scales with |batch| only — the
     base is never re-read or re-signed. Returns ``out_dir``."""
-    from ..operators.llm_dedup import _inc_token_sets
-    from ..functions.minhash import (
-        DEFAULT_BANDS,
-        DEFAULT_NUM_HASHES,
-        lsh_bands_keyed,
-        minhash_signature,
-    )
+    from ..operators.llm_dedup import save_band_index
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signature(batch_df, "doc_id", "text", DEFAULT_NUM_HASHES)
-        lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS).write.mode(
-            "append"
-        ).parquet(os.path.join(out_dir, "bands"))
-        _inc_token_sets(batch_df).write.mode("append").parquet(
-            os.path.join(out_dir, "toks")
-        )
+        save_band_index(batch_df, out_dir, "append")
 
     stream = (
         spark.readStream.schema(schema)

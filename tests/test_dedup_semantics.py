@@ -10,12 +10,49 @@ from pyspark.sql import functions as F
 
 from dcosb_cassandra_spark.catalog import table
 from dcosb_cassandra_spark.functions.minhash import (
-    lsh_bands,
+    DEFAULT_BANDS,
+    DEFAULT_NUM_HASHES,
     minhash_signature,
     tokens_of,
 )
 
 SF01 = "/root/testdata/sf0.1"
+
+
+def lsh_bands(sigs, id_col, k=DEFAULT_NUM_HASHES, bands=DEFAULT_BANDS):
+    """(id, band_idx, band_hash) — one row per band; docs sharing any
+    (band_idx, band_hash) are candidate near-duplicates. The plain
+    reference form of the engine's keyed `band_rows`."""
+    r = k // bands
+    entries = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.md5(F.concat_ws("|", *[F.col(f"mh{b * r + j}") for j in range(r)])).alias("band_hash"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select(id_col, F.explode(F.array(*entries)).alias("band")).select(
+        id_col, F.col("band.band_idx").alias("band_idx"), F.col("band.band_hash").alias("band_hash")
+    )
+
+
+def distinct_band_pairs(sigs, k=DEFAULT_NUM_HASHES, bands=DEFAULT_BANDS):
+    """{(id_a, id_b)}: every doc_id-ordered pair sharing a band, deduped
+    with DISTINCT — the reference candidate set."""
+    bands_df = lsh_bands(sigs, "doc_id", k, bands)
+    a, b = bands_df.alias("a"), bands_df.alias("b")
+    return {
+        (r["id_a"], r["id_b"])
+        for r in a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .distinct()
+        .collect()
+    }
 
 
 def test_exact_dedup_finds_known_duplicates_at_sf01(spark):
@@ -41,21 +78,7 @@ def test_minhash_lsh_catches_constructed_near_dups(spark):
         docs.append((2 * d + 1, " ".join(b)))
     df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
 
-    sigs = minhash_signature(df, "doc_id", "text")
-    bands = lsh_bands(sigs, "doc_id")
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = {
-        (r["x"], r["y"])
-        for r in a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("x"), F.col("b.doc_id").alias("y"))
-        .distinct()
-        .collect()
-    }
+    pairs = distinct_band_pairs(minhash_signature(df, "doc_id", "text"))
     planted = {(2 * d, 2 * d + 1) for d in range(25)}
     recall = len(planted & pairs) / len(planted)
     assert recall >= 0.8, f"LSH recall {recall} too low for Jaccard≈0.82 pairs"
@@ -92,21 +115,7 @@ def test_minhash_lsh_recall_at_scale_config(spark):
         docs.append((2 * d + 1, " ".join(b)))
     df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
 
-    sigs = minhash_signature(df, "doc_id", "text", k=16)
-    bands = lsh_bands(sigs, "doc_id", k=16, bands=8)
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = {
-        (r["x"], r["y"])
-        for r in a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("x"), F.col("b.doc_id").alias("y"))
-        .distinct()
-        .collect()
-    }
+    pairs = distinct_band_pairs(minhash_signature(df, "doc_id", "text", k=16), k=16, bands=8)
     planted = {(2 * d, 2 * d + 1) for d in range(25)}
     recall = len(planted & pairs) / len(planted)
     assert recall >= 0.9, f"k=16/b=8 recall {recall} too low for Jaccard≈0.82 pairs"
@@ -149,16 +158,11 @@ def test_sign_lsh_multiprobe_recall_on_planted_vectors(spark):
 
 
 def test_first_collision_dedup_equals_distinct(spark):
-    """The distinct-free pair dedup (lsh_bands_keyed + first_collision_only,
-    the d2b/r5 rewrite) must produce EXACTLY the distinct pair set of the
-    reference DISTINCT formulation, on a corpus constructed to collide in
-    multiple bands (identical docs collide in all 4; near-dups in some)."""
-    from dcosb_cassandra_spark.functions.minhash import (
-        DEFAULT_BANDS,
-        DEFAULT_NUM_HASHES,
-        first_collision_only,
-        lsh_bands_keyed,
-    )
+    """The engine's distinct-free band probe (`band_pairs` over
+    `band_rows`) must produce EXACTLY the pair set of the reference
+    DISTINCT formulation, on a corpus constructed to collide in multiple
+    bands (identical docs collide in all 4; near-dups in some)."""
+    from dcosb_cassandra_spark.functions.minhash import band_pairs, band_rows
 
     docs = []
     base = [f"w{i}" for i in range(12)]
@@ -170,71 +174,57 @@ def test_first_collision_dedup_equals_distinct(spark):
         docs.append((3 * d + 1, " ".join(a)))   # identical: all-band collision
         docs.append((3 * d + 2, " ".join(b)))   # near-dup: some-band collision
     df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
-    sigs = minhash_signature(df, "doc_id", "text", DEFAULT_NUM_HASHES)
 
-    ref_bands = lsh_bands(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
-    ra, rb = ref_bands.alias("a"), ref_bands.alias("b")
-    want = {
+    want = distinct_band_pairs(minhash_signature(df, "doc_id", "text", DEFAULT_NUM_HASHES))
+    bands = band_rows(df)
+    got = [
         (r["id_a"], r["id_b"])
-        for r in ra.join(
-            rb,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-        .collect()
-    }
-
-    keyed = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
-    ka, kb = keyed.alias("a"), keyed.alias("b")
-    dup = first_collision_only(
-        F.col("a.band_idx"),
-        DEFAULT_BANDS,
-        lambda j: F.col(f"a.bh{j}") == F.col(f"b.bh{j}"),
-    )
-    got_rows = (
-        ka.join(
-            kb,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(~dup)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .collect()
-    )
-    got = [(r["id_a"], r["id_b"]) for r in got_rows]
+        for r in band_pairs(bands, bands, F.col("a.doc_id") < F.col("b.doc_id")).collect()
+    ]
     assert len(got) == len(set(got)), "first-collision filter emitted a duplicate pair"
     assert set(got) == want
     assert len(want) >= 20, "fixture must actually produce multi-band collisions"
 
 
+#: every registered query whose plan reaches the LSH size gate, and the
+#: number of explicit hints it keeps past the gate: d2m's two
+#: |sources|-row totals are a fixed-size broadcast, not a gated side
+_GATED = {
+    "d2b_minhash_lsh_pairs": 0,
+    "d2i_lsh_dedup_eval": 0,
+    "d2m_cross_source_dup_matrix": 2,
+    "d2n_dedup_threshold_curve": 0,
+    "d2o_incremental_dedup": 0,
+    "d2s_containment_pairs": 0,
+    "d_split_leakage_audit": 0,
+    "d_split_repair": 0,
+}
+
+
 def test_broadcast_fallback_is_shuffle_join_with_equal_results(spark, monkeypatch):
-    """The ~10^7-doc fallback is CODE now, not prose: shrinking
-    BROADCAST_FALLBACK_BYTES to -1 must (a) remove every explicit
-    broadcast hint from the LSH-family plans, (b) leave results
-    row-identical — proving the size-conditional switch degrades to the
-    shuffle equi-join shape without semantic drift."""
+    """The ~10^7-doc fallback is CODE, not prose: shrinking the one
+    `BROADCAST_FALLBACK_BYTES` to -1 must (a) remove every gated
+    broadcast hint from every LSH-family plan — band rows, per-doc
+    columns and the vocab-hash map alike — and (b) leave results
+    row-identical, proving the size-conditional switch degrades to the
+    shuffle equi-join / inline shape without semantic drift."""
     from dcosb_cassandra_spark.functions import minhash
-    from dcosb_cassandra_spark.operators import llm_dedup
-    from dcosb_cassandra_spark.plans.audit import plan_string
-    from dcosb_cassandra_spark.registry import REGISTRY
+    from dcosb_cassandra_spark.registry import REGISTRY, load_all
 
     from .conftest import SF_DIR
 
-    names = ["d2n_dedup_threshold_curve", "d2b_minhash_lsh_pairs"]
-    hinted = {
-        n: sorted(tuple(r) for r in REGISTRY[n].fn(spark, SF_DIR).collect())
-        for n in names
-    }
-    monkeypatch.setattr(llm_dedup, "BROADCAST_FALLBACK_BYTES", -1)
-    # the r15 vocab-hash map carries its own size-conditional hint
-    # (functions/minhash.py) — shrink it too so the WHOLE LSH family
-    # degrades to the zero-hint shuffle/inline shape in one move
-    monkeypatch.setattr(minhash, "VOCAB_HASH_BROADCAST_BYTES", -1)
-    for n in names:
+    load_all()
+
+    def hints(df):
+        return df._jdf.queryExecution().analyzed().toString().count("ResolvedHint")
+
+    hinted = {}
+    for n, fixed in _GATED.items():
         df = REGISTRY[n].fn(spark, SF_DIR)
-        assert "ResolvedHint" not in plan_string(df, "extended"), n
+        assert hints(df) > fixed, f"{n} must reach the gate"
+        hinted[n] = sorted(tuple(r) for r in df.collect())
+    monkeypatch.setattr(minhash, "BROADCAST_FALLBACK_BYTES", -1)
+    for n, fixed in _GATED.items():
+        df = REGISTRY[n].fn(spark, SF_DIR)
+        assert hints(df) == fixed, n
         assert sorted(tuple(r) for r in df.collect()) == hinted[n], n
