@@ -14,7 +14,7 @@ Scale posture (the inverted-index scan expressed relationally):
 - df/idf are aggregates of that restricted posting set (≤|query terms|
   rows, broadcast back); dl rides along from the explode (no corpus
   join); N and avgdl are one bounded 1-row collect;
-- per-query top-k uses the two-phase window recipe ((qid,
+- per-query top-k is `windows.two_phase_top_k` ((qid,
   spark_partition_id) local top-k, then a final window over ≤k·P
   survivors) — no corpus-scale low-cardinality window;
 - RRF fuses two rank-BOUNDED lists (top-20 each side) with a full outer
@@ -29,10 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
+from .windows import top_k, two_phase_top_k
 
 
 def _ws_token_count(c) -> F.Column:
@@ -118,27 +118,6 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _topk_per_query(
-    df: DataFrame, k: int, score_col: str = "score", id_col: str = "doc_id"
-) -> DataFrame:
-    """Two-phase per-query top-k with a GLOBAL rank column ``rnk``:
-    local top-k per (qid, spark_partition_id), final window over ≤k·P
-    survivors — the d4k exact-ground-truth shape (qid alone is a
-    low-cardinality partition key; SCALE.md two-phase rank)."""
-    w1 = Window.partitionBy("qid", "pid").orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.desc(score_col), F.asc(id_col))
-    return (
-        df.withColumn("pid", F.spark_partition_id())
-        .withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= k)
-        .drop("rn", "pid")
-        .withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-    )
-
-
 _BM25_ORACLE_CTES = """
         tok AS (
             SELECT doc_id, len(string_split(text, ' ')) AS dl,
@@ -210,9 +189,9 @@ def d18_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase window. At 100 TB this is the inverted-index scan a text
     index materializes at ingest — same plan, postings pre-grouped."""
     scored = _bm25_scored(spark, sf_dir)
-    return _topk_per_query(scored, 10).select(
-        "qid", "doc_id", F.col("score").alias("bm25")
-    )
+    return two_phase_top_k(
+        scored, ["qid"], [F.desc("score"), F.asc("doc_id")], 10
+    ).select("qid", "doc_id", F.col("score").alias("bm25"))
 
 
 @query(
@@ -291,9 +270,9 @@ def d18b_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import as_double, dot, l2_norm
     from .llm_similarity import _query_batch, query_frame
 
-    lex = _topk_per_query(_bm25_scored(spark, sf_dir), RRF_DEPTH).select(
-        "qid", "doc_id", F.col("rnk").alias("lrank")
-    )
+    lex = two_phase_top_k(
+        _bm25_scored(spark, sf_dir), ["qid"], [F.desc("score"), F.asc("doc_id")], RRF_DEPTH
+    ).select("qid", "doc_id", F.col("rn").alias("lrank"))
 
     out_schema = (
         "qid long, doc_id long, rrf double, lrank long, vrank long"
@@ -310,9 +289,9 @@ def d18b_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e, F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("doc_id"), F.round(sim, 6).alias("sim"))
     )
-    vec = _topk_per_query(vsim, RRF_DEPTH, score_col="sim").select(
-        "qid", "doc_id", F.col("rnk").alias("vrank")
-    )
+    vec = two_phase_top_k(
+        vsim, ["qid"], [F.desc("sim"), F.asc("doc_id")], RRF_DEPTH
+    ).select("qid", "doc_id", F.col("rn").alias("vrank"))
 
     fused = (
         lex.join(vec, ["qid", "doc_id"], "full_outer")
@@ -330,13 +309,8 @@ def d18b_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bounded input (≤ 2·RRF_DEPTH rows per query): a plain per-qid
     # window here is rank-bounded, not corpus-scale
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select(
-            "qid", "doc_id", F.col("score").alias("rrf"), "lrank", "vrank"
-        )
+    return top_k(fused, ["qid"], [F.desc("score"), F.asc("doc_id")], 10).select(
+        "qid", "doc_id", F.col("score").alias("rrf"), "lrank", "vrank"
     )
 
 
@@ -536,6 +510,6 @@ def serve_bm25_topk(
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum(contrib), 6).alias("score"))
     )
-    return _topk_per_query(scored, k).select(
-        "qid", "doc_id", F.col("score").alias("bm25")
-    )
+    return two_phase_top_k(
+        scored, ["qid"], [F.desc("score"), F.asc("doc_id")], k
+    ).select("qid", "doc_id", F.col("score").alias("bm25"))

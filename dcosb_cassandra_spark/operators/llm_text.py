@@ -22,6 +22,7 @@ from ..functions.text import (
 )
 from ..registry import query
 from ..session import generation, plan_memo
+from .windows import two_phase_top_k
 
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
@@ -1097,26 +1098,19 @@ def d5q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave?), reported per language both corpus-weighted and doc-averaged.
 
     Scale: token counts are one partial-aggregated shuffle; the top-V rank
-    is TWO-PHASE (per-input-partition top-V window, then a final window
-    over the <= V*P survivors — the d4f pattern) because the distinct
-    vocabulary of a web corpus is NOT small, so a single global
-    row_number would funnel it through one task. The per-doc membership
-    probe is then a broadcast join against a bounded V-row table
-    (V = {OOV_VOCAB_SIZE}); the per-doc aggregate shuffles on doc_id. No
-    corpus-sized build side anywhere — the same plan runs at 100 TB."""
+    is `two_phase_top_k` (per-input-partition top-V window, then a final
+    window over the <= V*P survivors) because the distinct vocabulary of
+    a web corpus is NOT small, so a single global row_number would
+    funnel it through one task. The per-doc membership probe is then a
+    broadcast join against a bounded V-row table (V = {OOV_VOCAB_SIZE});
+    the per-doc aggregate shuffles on doc_id. No corpus-sized build side
+    anywhere — the same plan runs at 100 TB."""
     d = table(spark, sf_dir, "documents")
     tok = d.select("doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token"))
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    w_local = Window.partitionBy("_part").orderBy(F.desc("n"), F.asc("token"))
-    w_global = Window.orderBy(F.desc("n"), F.asc("token"))
-    vocab = (
-        counts.withColumn("_part", F.spark_partition_id())
-        .withColumn("_rn_local", F.row_number().over(w_local))
-        .filter(F.col("_rn_local") <= OOV_VOCAB_SIZE)
-        .select("token", "n", F.row_number().over(w_global).alias("rn"))
-        .filter(F.col("rn") <= OOV_VOCAB_SIZE)
-        .select("token")
-    )
+    vocab = two_phase_top_k(
+        counts, [], [F.desc("n"), F.asc("token")], OOV_VOCAB_SIZE
+    ).select("token")
     per_doc = (
         tok.join(
             F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "token", "left"
@@ -1174,27 +1168,19 @@ def d5r_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     this the distribution-shape monitor that complements d5n's entropy.
 
     Scale: token counts are one partial-aggregated shuffle; the head rank
-    is TWO-PHASE (per-partition top-N window, then the final per-lang
-    window over <= N*P survivors — the d5q/d4f pattern, because web-corpus
-    vocabulary is not small); the regression is a covar/var aggregate over
+    is `two_phase_top_k` (per-partition top-N window, then the final
+    per-lang window over <= N*P survivors, because web-corpus vocabulary
+    is not small); the regression is a covar/var aggregate over
     N rows per language."""
     d = table(spark, sf_dir, "documents")
     tok = d.select("lang", F.explode(tokens(F.col("text"))).alias("token"))
     counts = tok.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("n"))
-    w_local = Window.partitionBy("lang", "_part").orderBy(F.desc("n"), F.asc("token"))
-    w_final = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("token"))
-    head = (
-        counts.withColumn("_part", F.spark_partition_id())
-        .withColumn("_rn_local", F.row_number().over(w_local))
-        .filter(F.col("_rn_local") <= ZIPF_TOP_N)
-        .withColumn("rnk", F.row_number().over(w_final))
-        .filter(F.col("rnk") <= ZIPF_TOP_N)
-    )
+    head = two_phase_top_k(counts, ["lang"], [F.desc("n"), F.asc("token")], ZIPF_TOP_N)
     return head.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_head"),
         F.round(
-            F.covar_pop(F.log(F.col("rnk")), F.log(F.col("n")))
-            / F.var_pop(F.log(F.col("rnk"))),
+            F.covar_pop(F.log(F.col("rn")), F.log(F.col("n")))
+            / F.var_pop(F.log(F.col("rn"))),
             5,
         ).alias("zipf_slope"),
     )
@@ -1365,25 +1351,18 @@ def d5s_lexical_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources 'similar' that differ in register/vocabulary and vice versa.
 
     Scale: token counts are one partial-aggregated shuffle; the top-V
-    head uses the TWO-PHASE rank (d5q pattern — web-corpus vocabulary is
-    not small); distributions restrict to the bounded V-row vocab via a
-    broadcast join; each source collapses to ONE map row, so the pair
-    enumeration is a |sources|²-bounded self-join and the JS fold runs
-    over V terms per pair — nothing corpus-sized past the first shuffle."""
+    head uses `two_phase_top_k` (web-corpus vocabulary is not small);
+    distributions restrict to the bounded V-row vocab via a broadcast
+    join; each source collapses to ONE map row, so the pair enumeration
+    is a |sources|²-bounded self-join and the JS fold runs over V terms
+    per pair — nothing corpus-sized past the first shuffle."""
     V = JS_VOCAB_SIZE
     d = table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(F.split(F.col("text"), " ")).alias("token"))
     cnt = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("n"))
     glob = cnt.groupBy("token").agg(F.sum("n").alias("g"))
-    w_local = Window.partitionBy("_part").orderBy(F.desc("g"), F.asc("token"))
-    w_global = Window.orderBy(F.desc("g"), F.asc("token"))
-    vocab = (
-        glob.withColumn("_part", F.spark_partition_id())
-        .withColumn("_rl", F.row_number().over(w_local))
-        .filter(F.col("_rl") <= V)
-        .select("token", "g", F.row_number().over(w_global).alias("rn"))
-        .filter(F.col("rn") <= V)
-        .select("token", "rn")
+    vocab = two_phase_top_k(glob, [], [F.desc("g"), F.asc("token")], V).select(
+        "token", "rn"
     )
     p = cnt.join(F.broadcast(vocab), "token")
     tot = p.groupBy("source").agg(F.sum("n").alias("tn"))

@@ -139,6 +139,25 @@ def two_phase_ranking(
     )
 
 
+def top_k(df: DataFrame, by: list, order: list, k: int) -> DataFrame:
+    """Rows whose ``row_number`` over ``by`` ordered by ``order`` is at
+    most ``k``, the number kept as column ``rn``. ``order`` must end in a
+    unique tiebreaker so the cut is deterministic."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def two_phase_top_k(df: DataFrame, by: list, order: list, k: int) -> DataFrame:
+    """`top_k` without a corpus-sized window on ``by`` alone (SCALE.md
+    "two-phase rank"): `top_k` per (``by``, spark_partition_id) prunes
+    each input partition to k rows per group, then `top_k` per ``by``
+    ranks the ≤ k·P survivors. Same rows and ranks as the single window,
+    because a row in the global top k is in its partition's top k. An
+    empty ``by`` is one global ranking."""
+    local = top_k(df.withColumn("_pid", F.spark_partition_id()), [*by, "_pid"], order, k)
+    return top_k(local.drop("_pid", "rn"), by, order, k)
+
+
 @query(
     "b14_lag_lead",
     oracle="""

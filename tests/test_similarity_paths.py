@@ -13,7 +13,9 @@ proof. Without this, the at-scale plan would ship with zero coverage.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from dcosb_cassandra_spark.catalog import table
 from dcosb_cassandra_spark.operators import llm_similarity
 from dcosb_cassandra_spark.registry import REGISTRY, load_all
 
@@ -65,7 +67,9 @@ def test_pq_recon_stored_codes_match_inline_encode(spark):
     """The IVF index's stored PQ codes (write_ivf_index, r8) and the
     inline argmin encode must reconstruct BIT-IDENTICAL vectors — stored
     codes come from the same `_pq_code_positions` on the same codebook,
-    so d8g's gather path is the cheap read of the exact same answer."""
+    so d8g's gather path is the cheap read of the exact same answer; and
+    d4q's `_pq_store`, which gathers the stored codes, must equal d4g's
+    JVM encoder gathered the same way."""
     cb = llm_similarity._codebook(spark, SF_DIR)
     idx = llm_similarity.ivf_index(spark, SF_DIR)
     assert "code" in idx.columns  # the index stores the 8 positions
@@ -75,3 +79,19 @@ def test_pq_recon_stored_codes_match_inline_encode(spark):
     b = {r.vec_id: r.re for r in inline.select("vec_id", "re").collect()}
     assert a.keys() == b.keys() and len(a) > 0
     assert all(a[k] == b[k] for k in a)  # exact float equality, not approx
+    # d4q's store gathers the stored codes: it must equal the shared JVM
+    # encoder (d4g's `_pq_encode`) gathered through the same codebook
+    emb = table(spark, SF_DIR, "embeddings")
+    v = idx.filter(F.col("vec_id") >= 5).select("vec_id", "ve")
+    codes = llm_similarity._pq_encode(v, llm_similarity._label_centroids(emb))
+    pos = {c: i for i, c in enumerate(sorted(r.cand for r in cb))}
+    jvm_codes = {}
+    for r in codes.select("vec_id", "s", "cand").collect():
+        jvm_codes.setdefault(r.vec_id, [0] * llm_similarity._PQ_SUBSPACES)[r.s] = pos[r.cand]
+    jvm = llm_similarity._with_pq_recon(
+        spark.createDataFrame(list(jvm_codes.items()), "vec_id long, code array<int>"), cb
+    )
+    c = {r.vec_id: r.re for r in jvm.select("vec_id", "re").collect()}
+    store = {r.node: r.ve for r in llm_similarity._pq_store(spark, SF_DIR).collect()}
+    assert c.keys() == store.keys() and len(store) > 0
+    assert [k for k in sorted(store) if c[k] != store[k]][:1] == []

@@ -1,7 +1,8 @@
 """Property check for the two-phase ranking rewrite (SCALE.md "two-phase
 rank"): on randomized data — heavy ties, skewed partitions, n<k groups —
 the bucketed form must be row-identical to the plain single-window form
-for rank, dense_rank, percent_rank, and ntile."""
+for rank, dense_rank, percent_rank, and ntile; likewise `top_k` and
+`two_phase_top_k` against one plain row_number window."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import random
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dcosb_cassandra_spark.operators.windows import two_phase_ranking
+from dcosb_cassandra_spark.operators.windows import top_k, two_phase_ranking, two_phase_top_k
 
 
 def _plain(df, part, val, idc, k):
@@ -73,3 +74,47 @@ def test_two_phase_ranking_single_row_partitions(spark):
         for r in _plain(df, "grp", "v", "id", 4).collect()
     }
     assert got == want
+
+
+def _plain_top_k(df, by, order, k):
+    w = Window.partitionBy(*by).orderBy(*order)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def test_top_k_matches_plain_window(spark):
+    """`top_k` and `two_phase_top_k` keep exactly the rows (and ranks) of
+    one plain row_number window: order keys heavily tied (a unique id
+    breaks them), groups smaller than k, one global ranking (by=[]), and
+    frames spread over several partitions, so the per-partition phase
+    really prunes: round-robin, or hashed on the group so that one
+    partition holds a group's whole top k."""
+    rng = random.Random(11)
+    order = [F.desc("v"), F.asc("id")]
+    cases = [  # (rows, k, partitions, hash columns)
+        (400, 1, 4, []),
+        (400, 7, 4, []),
+        (400, 7, 3, ["grp"]),
+        (37, 10, 3, []),
+        (5, 10, 2, []),
+    ]
+    for n, k, parts, hashed in cases:
+        rows = [
+            (i, rng.choice(["a", "b", "c", "d"]), float(rng.randrange(0, 6)))
+            for i in range(n)
+        ]
+        df = spark.createDataFrame(rows, "id long, grp string, v double")
+        df = df.repartition(parts, *hashed)
+        assert df.rdd.getNumPartitions() == parts
+        for by in (["grp"], []):
+            want = sorted(map(tuple, _plain_top_k(df, by, order, k).collect()))
+            for fn in (top_k, two_phase_top_k):
+                got = fn(df, by, order, k)
+                assert got.columns == ["id", "grp", "v", "rn"]
+                assert sorted(map(tuple, got.collect())) == want, (fn.__name__, n, k, by)
+
+
+def test_top_k_empty_frame(spark):
+    df = spark.createDataFrame([], "id long, grp string, v double")
+    for fn in (top_k, two_phase_top_k):
+        for by in (["grp"], []):
+            assert fn(df, by, [F.desc("v"), F.asc("id")], 3).collect() == []

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from dcosb_cassandra_spark.catalog import warm_cache  # noqa: E402
+from dcosb_cassandra_spark.plans.audit import plan_string  # noqa: E402
 from dcosb_cassandra_spark.registry import REGISTRY, load_all  # noqa: E402
 from dcosb_cassandra_spark.session import get_spark  # noqa: E402
 
@@ -51,9 +52,7 @@ def main() -> None:
             print(f"SKIP {name}: not registered")
             continue
         df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(df)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -52,6 +52,7 @@ def main() -> None:
     from dcosb_cassandra_spark.catalog import table
     from dcosb_cassandra_spark.registry import REGISTRY, load_all
     from dcosb_cassandra_spark.operators.llm_corpus import WINDOW_K
+    from dcosb_cassandra_spark.plans.audit import plan_string
 
     # the engine session disables the UI; this probe NEEDS the REST API
     # (shuffle-write bytes), so it builds its own UI-enabled session
@@ -109,9 +110,7 @@ def main() -> None:
         # d8g: the IVF-PQ serving probe (stored-codes JVM gather)
         name = "d8g_ivfpq_search"
         df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(df)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (
             f"{name} at {label}: Python node reappeared on the serving path"
         )
