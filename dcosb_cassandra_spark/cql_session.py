@@ -29,23 +29,18 @@ compacted SSTables, session buffer = memtable).
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import re
 from dataclasses import dataclass
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
-    DateType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 from pyspark.sql.window import Window
 
@@ -69,6 +64,7 @@ from .cql import (
     split_top_level,
     translate_function_body,
 )
+from .session import local_frame, memo_stats
 
 ROW_MARKER = "__row__"
 ROW_TOMBSTONE = "*"
@@ -1248,8 +1244,8 @@ class CqlSession:
                     )
                     for f in self._system_schema(tbl).schema.fields
                 ]
-                return self._local_frame(
-                    rows, "column_name STRING, type STRING, kind STRING"
+                return local_frame(
+                    self.spark, rows, "column_name STRING, type STRING, kind STRING"
                 )
             if dks and dks not in self._keyspaces:
                 raise InvalidRequest(f"unknown keyspace {dks}")
@@ -1274,8 +1270,8 @@ class CqlSession:
             ]
             # the ``mask`` column renders the attached mask exactly as a
             # Cassandra 5 DESCRIBE renders ``MASKED WITH fn(args)``
-            return self._local_frame(
-                rows, "column_name STRING, type STRING, kind STRING, mask STRING"
+            return local_frame(
+                self.spark, rows, "column_name STRING, type STRING, kind STRING, mask STRING"
             )
 
         mb = _BATCH.match(s)
@@ -1577,9 +1573,9 @@ class CqlSession:
             row = dict(zip(cols, vals))
             key = {c: row[c] for c in (*pk, *cc) if c in row}
             if self._row_exists(tbl, key):
-                return self._local_frame([(False,)], _APPLIED)
+                return local_frame(self.spark, [(False,)], _APPLIED)
             self.execute(bare)
-            return self._local_frame([(True,)], _APPLIED)
+            return local_frame(self.spark, [(True,)], _APPLIED)
 
         m = _UPDATE.match(s)
         if m and m.group("cond"):
@@ -1590,12 +1586,12 @@ class CqlSession:
             key = self._key_of(tbl, m.group("where"))
             current = self._cell_value(tbl, key, cm.group(1).lower())
             if current != _literal(cm.group(2)):
-                return self._local_frame([(False,)], _APPLIED)
+                return local_frame(self.spark, [(False,)], _APPLIED)
             # Slice at the regex's cond span, not a textual ' IF ' search —
             # a quoted value may contain ' IF ' (e.g. SET note = 'as if new').
             bare = re.sub(r"\s+IF\s*$", "", s[: m.start("cond")], flags=re.IGNORECASE)
             self.execute(bare)
-            return self._local_frame([(True,)], _APPLIED)
+            return local_frame(self.spark, [(True,)], _APPLIED)
 
         m = _INSERT.match(s)
         if m:
@@ -1786,8 +1782,8 @@ class CqlSession:
                 for n in names
                 if n in self._roles
             ]
-            return self._local_frame(
-                rows, "role STRING, super BOOLEAN, login BOOLEAN"
+            return local_frame(
+                self.spark, rows, "role STRING, super BOOLEAN, login BOOLEAN"
             )
         m = _LIST_PERMISSIONS.match(s)
         if m:
@@ -1807,33 +1803,12 @@ class CqlSession:
                 and (want_perm == "ALL" or p == want_perm)
                 and (want_res is None or res == want_res)
             )
-            return self._local_frame(
-                rows, "role STRING, resource STRING, permission STRING"
+            return local_frame(
+                self.spark, rows, "role STRING, resource STRING, permission STRING"
             )
         return NotImplemented
 
     # -- read path ----------------------------------------------------------
-
-    def _local_frame(self, rows: list[tuple], schema: StructType | str) -> DataFrame:
-        """Driver-held rows as an Arrow-backed ``LocalRelation``.
-
-        The rows travel inside the plan (``LocalTableScan``), so reading
-        them starts no Spark job and no Python worker — unlike a frame made
-        from a Python list, whose ``ExistingRDD`` runs a Python worker per
-        partition. ``schema`` is a StructType or a DDL string.
-        TIMESTAMP and DATE fields also take ISO-8601 text (CQL literals
-        arrive as text); naive datetimes are read as UTC, the engine's
-        pinned session time zone."""
-        struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-        arrow = to_arrow_schema(struct)
-        cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
-        arrays = []
-        for values, field, af in zip(cols, struct.fields, arrow):
-            if isinstance(field.dataType, (TimestampType, DateType)):
-                iso = dt.datetime if isinstance(field.dataType, TimestampType) else dt.date
-                values = [iso.fromisoformat(v) if isinstance(v, str) else v for v in values]
-            arrays.append(pa.array(values, type=af.type))
-        return self.spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
 
     def _pins_partition(self, tbl: str, restricted) -> bool:
         """True when the columns restricted by ``=``/``IN`` cover the
@@ -1846,7 +1821,7 @@ class CqlSession:
         """The merged live view of a table: snapshot + mutations, compacted
         cell-wise. The parquet snapshot is melted into cells inside the
         plan; the memtable (the session cell buffer, driver-held) enters it
-        as a ``LocalRelation`` (``_local_frame``), unioned with those cells.
+        as a ``LocalRelation`` (``session.local_frame``), unioned with those cells.
 
         ``single_partition`` is for reads that fix every partition-key
         column with ``=``/``IN`` (Cassandra's single-partition read).
@@ -1859,7 +1834,7 @@ class CqlSession:
         if tbl in self._created:
             # DDL-created table: empty snapshot with the declared schema;
             # all rows live in the session cell buffer
-            base = self._local_frame([], self._created[tbl].spark_schema)
+            base = local_frame(self.spark, [], self._created[tbl].spark_schema)
         else:
             base = table(self.spark, self.sf_dir, tbl)
         pk, cc = self._keys(tbl)
@@ -1907,7 +1882,7 @@ class CqlSession:
             schema = StructType(
                 [StructField(k, base.schema[k].dataType) for k in keys] + _CELL_FIELDS
             )
-            cells = cells.unionByName(self._local_frame(rows, schema))
+            cells = cells.unionByName(local_frame(self.spark, rows, schema))
 
         # TRUNCATE record: every cell at or below the truncate writetime is
         # gone — including the whole melted snapshot (writetime 0); only
@@ -2023,7 +1998,7 @@ class CqlSession:
             for r in rows:
                 self._insert_row(tbl, {c: r[c] for c in cols}, None)
             n = len(rows)
-        return self._local_frame([(n,)], "n_rows BIGINT")
+        return local_frame(self.spark, [(n,)], "n_rows BIGINT")
 
     # -- schema DDL beyond tables -------------------------------------------
 
@@ -2195,13 +2170,13 @@ class CqlSession:
         ks = self._current_ks
         if which == "keyspaces":
             rows = [(k, True) for k in sorted(self._keyspaces)]
-            return self._local_frame(
-                rows, "keyspace_name STRING, durable_writes BOOLEAN"
+            return local_frame(
+                self.spark, rows, "keyspace_name STRING, durable_writes BOOLEAN"
             )
         if which == "tables":
             rows = [(ks, t) for t in sorted(self._all_tables())]
-            return self._local_frame(
-                rows, "keyspace_name STRING, table_name STRING"
+            return local_frame(
+                self.spark, rows, "keyspace_name STRING, table_name STRING"
             )
         if which == "columns":
             rows = []
@@ -2215,8 +2190,8 @@ class CqlSession:
                     pos = pk.index(c) if c in pk else cc.index(c) if c in cc else -1
                     order = "asc" if c in cc else "none"
                     rows.append((ks, tbl, c, order, kind, pos, t))
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, table_name STRING, column_name STRING, "
                 "clustering_order STRING, kind STRING, position INT, type STRING",
             )
@@ -2230,8 +2205,8 @@ class CqlSession:
                 for c, spec in sorted(td.masks.items()):
                     fn, _, argtext = spec.partition("(")
                     rows.append((ks, tbl, c, "system", fn, argtext.rstrip(")")))
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, table_name STRING, column_name STRING, "
                 "function_keyspace_name STRING, function_name STRING, "
                 "function_arguments STRING",
@@ -2255,15 +2230,15 @@ class CqlSession:
                         _json.dumps(opts, sort_keys=True),
                     )
                 )
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, table_name STRING, index_name STRING, "
                 "kind STRING, options STRING",
             )
         if which == "views":
             rows = [(ks, v.name, v.base) for v in self._views.values()]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, view_name STRING, base_table_name STRING",
             )
         if which == "triggers":
@@ -2273,8 +2248,8 @@ class CqlSession:
                 for tbl, trig in sorted(self._triggers.items())
                 for name, cls in sorted(trig.items())
             ]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, table_name STRING, "
                 "trigger_name STRING, options MAP<STRING, STRING>",
             )
@@ -2283,8 +2258,8 @@ class CqlSession:
                 (ks, name, list(fields), [fields[f] for f in fields])
                 for name, fields in sorted(self._udts.items())
             ]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, type_name STRING, "
                 "field_names ARRAY<STRING>, field_types ARRAY<STRING>",
             )
@@ -2293,8 +2268,8 @@ class CqlSession:
                 (ks, f.name, [t for _, t in f.args], f.returns, f.body_sql)
                 for f in self._functions.values()
             ]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, function_name STRING, "
                 "argument_types ARRAY<STRING>, return_type STRING, body STRING",
             )
@@ -2303,8 +2278,8 @@ class CqlSession:
                 (ks, a.name, a.arg_type, a.stype, a.sfunc, a.finalfunc)
                 for a in self._aggregates.values()
             ]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "keyspace_name STRING, aggregate_name STRING, "
                 "argument_type STRING, state_type STRING, state_func STRING, "
                 "final_func STRING",
@@ -2314,14 +2289,14 @@ class CqlSession:
                 ("local", "dcosb", "3.4.7", "5.0.0",
                  "org.apache.spark.sql.catalyst.expressions.Murmur3Hash", ks)
             ]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "key STRING, cluster_name STRING, cql_version STRING, "
                 "release_version STRING, partitioner STRING, keyspace_name STRING",
             )
         if which == "peers":  # single-engine: no peers, schema only
-            return self._local_frame(
-                [], "peer STRING, data_center STRING, release_version STRING"
+            return local_frame(
+                self.spark, [], "peer STRING, data_center STRING, release_version STRING"
             )
         if which == "settings":
             # [PK `db/virtual/SettingsTable.java`] — the engine's pinned
@@ -2334,7 +2309,7 @@ class CqlSession:
                 "spark.sql.legacy.parquet.nanosAsLong",
             )
             rows = [(n, str(self.spark.conf.get(n, "<unset>"))) for n in names]
-            return self._local_frame(rows, "name STRING, value STRING")
+            return local_frame(self.spark, rows, "name STRING, value STRING")
         if which == "clients":
             # [PK `db/virtual/ClientsTable.java`] — every principal that
             # authenticated on this session with its statement count; the
@@ -2343,17 +2318,15 @@ class CqlSession:
                 (u, "ready" if u == self._principal else "authenticated", c)
                 for u, c in sorted(self._request_counts.items())
             ]
-            return self._local_frame(
-                rows,
+            return local_frame(
+                self.spark, rows,
                 "username STRING, connection_stage STRING, request_count BIGINT",
             )
         if which == "caches":
             # [PK `db/virtual/CachesTable.java`] — one row per engine memo
             # namespace (session.plan_memo), counters read live
-            from .session import memo_stats
-
-            return self._local_frame(
-                memo_stats(),
+            return local_frame(
+                self.spark, memo_stats(),
                 "name STRING, entry_count BIGINT, hit_count BIGINT, "
                 "request_count BIGINT, eviction_count BIGINT",
             )

@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from ..catalog import table
 from ..functions.vectors import as_double, squared_l2_distance
 from ..registry import query
+from ..session import local_frame
 
 #: tokens per dedup window — demo-sized so the synthetic corpus (docs repeat
 #: sentence fragments) yields non-trivial dup rates; Lee et al. use 50.
@@ -448,7 +449,7 @@ def d17b_kcenter_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     first = emb.orderBy("vec_id").limit(1).collect()
     if not first:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     from ..functions.vectors import literal_vector, squared_l2_distance
 
     seeds = [(1, first[0]["vec_id"], list(first[0]["ve"]))]

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from ..session import local_frame
 
 #: tokens per packed training sequence (demo-sized so sf0.01 yields
 #: hundreds of sequences; production would use 2048/4096/8192)
@@ -169,6 +170,11 @@ MIX_WEIGHTS = {"src0": 0.35, "src1": 0.25, "src2": 0.25, "src3": 0.15}
 _MIX_VALUES = ", ".join(f"('{s}', {p})" for s, p in sorted(MIX_WEIGHTS.items()))
 
 
+def _mix_weights(spark: SparkSession) -> DataFrame:
+    """MIX_WEIGHTS as a (source, p) frame: d14, d14d and d14e's broadcast side."""
+    return local_frame(spark, sorted(MIX_WEIGHTS.items()), schema="source string, p double")
+
+
 @query(
     "d14_domain_mixing",
     oracle=f"""
@@ -212,9 +218,7 @@ def d14_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     are IDENTICAL to the single-window form (same oracle, unchanged).
     The feasible total T = min_s(n_s / p_s) stays a broadcast scalar."""
     d = table(spark, sf_dir, "documents")
-    w = spark.createDataFrame(
-        sorted(MIX_WEIGHTS.items()), schema="source string, p double"
-    )
+    w = _mix_weights(spark)
     docs = (
         d.join(F.broadcast(w), "source")
         .select(
@@ -310,9 +314,7 @@ def d14b_domain_upsampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplier — no shuffle at all; the emitted stream is exactly what a
     weighted dataloader would draw, but deterministic and resumable."""
     d = table(spark, sf_dir, "documents")
-    w = spark.createDataFrame(
-        sorted(EPOCH_WEIGHTS.items()), schema="source string, r double"
-    )
+    w = local_frame(spark, sorted(EPOCH_WEIGHTS.items()), "source string, r double")
     hb = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10).cast(
         "bigint"
     )
@@ -718,9 +720,7 @@ def d14d_token_budget_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny broadcast bucket-offset grid; no window ever partitions on
     `source` alone. Quotas and totals are k-row broadcasts."""
     d = table(spark, sf_dir, "documents")
-    w = spark.createDataFrame(
-        sorted(MIX_WEIGHTS.items()), schema="source string, p double"
-    )
+    w = _mix_weights(spark)
     docs = (
         d.join(F.broadcast(w), "source")
         .select(
@@ -1027,9 +1027,7 @@ def d14e_multi_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus streams twice (totals, remainder scan) and nothing
     corpus-scale shuffles except the bounded bucket-window sort."""
     d = table(spark, sf_dir, "documents")
-    w = spark.createDataFrame(
-        sorted(MIX_WEIGHTS.items()), schema="source string, p double"
-    )
+    w = _mix_weights(spark)
     docs = (
         d.join(F.broadcast(w), "source")
         .select(

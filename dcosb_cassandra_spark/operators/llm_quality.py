@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..session import generation, plan_memo
+from ..session import generation, local_frame, plan_memo
 
 _QC_B = 8  # hashed char-trigram feature buckets
 _QC_NF = _QC_B + 3  # + distinct-trigram ppm, mean-token-len, bias
@@ -633,7 +633,7 @@ def write_quality_model(
         ("loss", j, int(v)) for j, v in enumerate(losses)
     ]
     (
-        spark.createDataFrame(rows, _QC_MODEL_SCHEMA)
+        local_frame(spark, rows, _QC_MODEL_SCHEMA)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(out_dir)

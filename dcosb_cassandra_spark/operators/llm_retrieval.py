@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from ..session import local_frame
 from .windows import top_k, two_phase_top_k
 
 
@@ -73,7 +74,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).head()
     n_docs, avgdl = int(stats["n"]), stats["avgdl"]
     if not n_docs:
-        return spark.createDataFrame([], "qid long, doc_id long, score double")
+        return local_frame(spark, [], "qid long, doc_id long, score double")
     # query-term lists: ≤ N_QUERY_DOCS × tokens-per-doc rows, broadcast
     qterms = (
         tok.filter(F.col("doc_id") < N_QUERY_DOCS)
@@ -278,7 +279,7 @@ def d18b_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid long, doc_id long, rrf double, lrank long, vrank long"
     )
     if not _query_batch(spark, sf_dir)[0]:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     qdf = query_frame(spark, sf_dir).withColumnRenamed("query_id", "qid")
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("ve")
@@ -454,7 +455,7 @@ def serve_bm25_topk(
     # are directory-partition columns; the data files carry the rest.
     sroot = os.path.join(index_dir, "stats")
     if not os.path.isdir(sroot):
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     st = (
         spark.read.schema(TEXT_INDEX_STATS_SCHEMA + ", ingest int")
         .parquet(sroot)
@@ -463,7 +464,7 @@ def serve_bm25_topk(
     )
     n_docs = int(st["n"] or 0)
     if not n_docs:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     avgdl = float(st["sdl"]) / n_docs
     p = (
         spark.read.schema(TEXT_INDEX_POSTINGS_SCHEMA + ", ingest int, tb int")

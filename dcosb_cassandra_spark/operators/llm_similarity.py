@@ -25,7 +25,7 @@ from ..functions.vectors import (
     sign_bits_range,
 )
 from ..registry import query
-from ..session import generation, memo_evict, plan_memo
+from ..session import generation, local_frame, memo_evict, plan_memo
 from .windows import top_k, two_phase_ranking, two_phase_top_k
 
 _DOT = "list_sum(list_transform(range(1, 65), i -> a.e[i] * b.e[i]))"
@@ -770,19 +770,17 @@ def _query_batch(spark: SparkSession, sf_dir: str) -> tuple:
 
 
 def _query_rows_frame(spark: SparkSession, qid, qvecs, qnrms) -> DataFrame:
-    return spark.createDataFrame(
-        pd.DataFrame({"query_id": qid, "qe": qvecs, "qnrm": qnrms}),
-        "query_id long, qe array<double>, qnrm double",
+    return local_frame(
+        spark, list(zip(qid, qvecs, qnrms)), "query_id long, qe array<double>, qnrm double"
     )
 
 
 def query_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The `_query_batch` as a (query_id, qe, qnrm) Arrow-backed local
-    relation — the broadcast query side of the vector family. The values
-    are memoized by `_query_batch`; this memoizes the wrap too, per
-    (appId, corpus generation): createDataFrame costs ~0.1-0.4 s of
-    py4j/Arrow driver work per plan build, and the frame is an immutable
-    plan fragment."""
+    """The `_query_batch` as a (query_id, qe, qnrm) `local_frame` — the
+    broadcast query side of the vector family. The values are memoized by
+    `_query_batch`; this memoizes the wrap too, per (appId, corpus
+    generation): the Arrow hand-off is py4j driver work per plan build,
+    and the frame is an immutable plan fragment."""
     key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"))
     return plan_memo(
         "query_frame", key, lambda: _query_rows_frame(spark, *_query_batch(spark, sf_dir)[:3])
@@ -790,13 +788,12 @@ def query_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _query_batch_df(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
-    """The probe batch as an Arrow-backed local relation (pandas →
-    createDataFrame skips the slow Python-RDD path a row-list takes) —
-    one row per (query, probed bucket), the exploded multi-probe list.
-    The values are memoized by `_query_batch`; this memoizes the wrap
-    too, per (appId, corpus generation, nprobe): createDataFrame costs
-    ~0.1-0.4 s of py4j/Arrow driver work per plan build, and the frame
-    is an immutable plan fragment (the catalog._table_memo contract)."""
+    """The probe batch as a `local_frame` — one row per (query, probed
+    bucket), the exploded multi-probe list. The values are memoized by
+    `_query_batch`; this memoizes the wrap too, per (appId, corpus
+    generation, nprobe): the Arrow hand-off is py4j driver work per plan
+    build, and the frame is an immutable plan fragment (the
+    catalog._table_memo contract)."""
     key = (spark.sparkContext.applicationId, *generation(sf_dir, "embeddings"), nprobe)
     return plan_memo("query_batch_df", key, lambda: _build_query_batch_df(spark, sf_dir, nprobe))
 
@@ -804,21 +801,11 @@ def _query_batch_df(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
 def _build_query_batch_df(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     qid, qvecs, qnrms, ranks = _query_batch(spark, sf_dir)
     rows = [
-        (i, b)
+        (qid[i], qvecs[i], qnrms[i], b)
         for i in range(len(qid))
         for b in ranks[i][:nprobe]
     ]
-    pdf = pd.DataFrame(
-        {
-            "query_id": [qid[i] for i, _ in rows],
-            "qe": [qvecs[i] for i, _ in rows],
-            "qnrm": [qnrms[i] for i, _ in rows],
-            "bucket": [b for _, b in rows],
-        }
-    )
-    return spark.createDataFrame(
-        pdf, "query_id long, qe array<double>, qnrm double, bucket long"
-    )
+    return local_frame(spark, rows, "query_id long, qe array<double>, qnrm double, bucket long")
 
 
 @query(
@@ -894,7 +881,7 @@ def _ivf_probe(
     qid, qvecs, qnrms, ranks = _query_batch(spark, sf_dir)
     out_schema = "query_id long, nbr_id long, sim double"
     if not qid:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     probes = [r[:nprobe] for r in ranks]
     all_buckets = sorted({b for p in probes for b in p})
     c = _served_corpus(spark, sf_dir).filter(
@@ -1032,7 +1019,7 @@ def d4k_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     qid = _query_batch(spark, sf_dir)[0]
     out_schema = "nprobe int, query_id long, hits long, recall_at_3 double"
     if not qid:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     q = query_frame(spark, sf_dir)
     scored = F.broadcast(q).join(_served_corpus(spark, sf_dir)).select(
         "query_id", F.col("vec_id").alias("nbr_id"), _stored_cosine().alias("sim")
@@ -2420,8 +2407,8 @@ def _beam_search(
     beam_schema = "query_id long, node long, sim double"
     nodes_schema = "query_id long, node long"
     if not qid:
-        e = spark.createDataFrame([], beam_schema)
-        return e, spark.createDataFrame([], nodes_schema)
+        e = local_frame(spark, [], beam_schema)
+        return e, local_frame(spark, [], nodes_schema)
     und, reps = knn_graph(spark, sf_dir) if graph is None else graph
     entries = []
     for i in range(len(qid)):
@@ -2464,12 +2451,7 @@ def _beam_search(
             .select("query_id", "node", sim.alias("sim"))
         )
 
-    entry_df = spark.createDataFrame(
-        pd.DataFrame(
-            {"query_id": [e[0] for e in entries], "node": [e[1] for e in entries]}
-        ),
-        nodes_schema,
-    )
+    entry_df = local_frame(spark, entries, nodes_schema)
     beam_df = score(entry_df).localCheckpoint(eager=True)
     scored = entry_df
     for _ in range(rounds):
@@ -2760,7 +2742,7 @@ def d4n_graph_vs_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         " recall_at_10 double"
     )
     if not qid:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     beam_df, scored = _beam_search(spark, sf_dir)
     c = _served_corpus(spark, sf_dir).select(
         F.col("vec_id").alias("node"), "ve", "nrm", "bucket"
@@ -2780,14 +2762,8 @@ def d4n_graph_vs_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", F.lit("graph").alias("method"), "n_scored", "hits"
     )
     # ivf rows: nprobe=1 bucket, top-10 via the shared probe
-    qb = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": qid,
-                "bucket": [r[0] if r else -1 for r in ranks],
-            }
-        ),
-        "query_id long, bucket long",
+    qb = local_frame(
+        spark, [(q, r[0] if r else -1) for q, r in zip(qid, ranks)], "query_id long, bucket long"
     )
     ivf10 = _ivf_probe(spark, sf_dir, nprobe=1, k=10).select(
         "query_id", F.col("nbr_id").alias("node")
@@ -2926,7 +2902,7 @@ def d4o_beam_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "beam_width long, n_scored_total long, hits long, recall_at_10 double"
     )
     if not qid:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     exact = _exact_top_k(_served_nodes(spark, sf_dir), query_frame(spark, sf_dir), 10)
     nq = len(qid)  # bounded query batch — a plan-time constant
     out = None
@@ -3147,7 +3123,7 @@ def d4r_filtered_ann_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "returned long, hits long, recall_at_3 double"
     )
     if not qid:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     nq = len(qid)  # bounded query batch — a plan-time constant
     qdf = query_frame(spark, sf_dir)
     lab = table(spark, sf_dir, "embeddings").select(
@@ -3332,8 +3308,8 @@ def write_knn_graph(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     )
     with open(os.path.join(edges_dir, "_meta.json"), "w") as fh:
         json.dump({"buckets": b}, fh)
-    spark.createDataFrame(
-        sorted(reps.items()), "bucket long, rep long"
+    local_frame(
+        spark, sorted(reps.items()), "bucket long, rep long"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "entries")
     )
@@ -3385,7 +3361,7 @@ def serve_knn_graph(spark: SparkSession, index_dir: str) -> tuple:
             edir
         )
     else:
-        edges = spark.createDataFrame([], "node long, peer long, sim double")
+        edges = local_frame(spark, [], "node long, peer long, sim double")
     entries = {}
     if os.path.isdir(os.path.join(index_dir, "entries")):
         entries = {

@@ -21,7 +21,7 @@ from ..functions.text import (
     tokens,
 )
 from ..registry import query
-from ..session import generation, plan_memo
+from ..session import generation, local_frame, plan_memo
 from .windows import two_phase_top_k
 
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
@@ -165,7 +165,7 @@ def d6_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is a broadcast hash join; the explode collapses straight into a
     partial aggregate."""
     d = table(spark, sf_dir, "documents")
-    lex = spark.createDataFrame(list(SENTIMENT_LEXICON), "word STRING, score DOUBLE")
+    lex = local_frame(spark, list(SENTIMENT_LEXICON), "word STRING, score DOUBLE")
     tok = d.select("doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token"))
     doc_scores = (
         tok.join(F.broadcast(lex), tok.token == lex.word, "left")
@@ -1540,11 +1540,10 @@ def d5u_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     charset-bounded (|V|² bigrams max — KBs even for CJK corpora) and,
     when small enough, FOLDS INTO CODEGEN as a literal lookup map (the
     d17 weights-as-literals convention, r10): the scorer is then a pure
-    projection over the per-doc bigram aggregate — no model-side scan,
-    no join, and in particular no Python-RDD local-relation scan (the
-    old createDataFrame model cost one Python task per core per run —
-    measured 0.34 s of d5u's 0.62 s exec). Above the literal-map bound
-    (huge CJK charsets) it degrades to the broadcast-join shape. The
+    projection over the per-doc bigram aggregate — no model-side scan
+    and no join. Above the literal-map bound (huge CJK charsets) it
+    degrades to a broadcast join against the model rows as a
+    ``local_frame``. The
     only shuffles are the model groupBys at train time (vocab-sized) and
     the per-doc aggregate (doc-count-sized)."""
     d = table(spark, sf_dir, "documents")
@@ -1561,7 +1560,7 @@ def d5u_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q", F.element_at(_bigram_model_map(spark, sf_dir, model), F.col("bg"))
         ).filter(F.col("q").isNotNull())  # inner-join semantics preserved
     else:
-        mdf = spark.createDataFrame(model, "bg STRING, q LONG")
+        mdf = local_frame(spark, model, "bg STRING, q LONG")
         scored = docbg.join(F.broadcast(mdf), "bg")
     return scored.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_bigrams"),
@@ -2009,7 +2008,7 @@ def d5w_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     change. Training is memoized per corpus generation (r9,
     ``_train_bpe`` — the _bigram_model pattern) so the encode pass (d5x)
     and the vocab build reuse one run."""
-    return spark.createDataFrame(_train_bpe(spark, sf_dir), _BPE_VOCAB_SCHEMA)
+    return local_frame(spark, _train_bpe(spark, sf_dir), _BPE_VOCAB_SCHEMA)
 
 
 def _bpe_encode_report(
@@ -2058,7 +2057,8 @@ def write_bpe_vocab(
     tests/test_bpe_vocab.py. ``exclude_doc_ids`` rebuilds the vocab as
     if those docs never existed (the erasure-audit retrain)."""
     (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             _train_bpe(spark, sf_dir, exclude_doc_ids=exclude_doc_ids),
             _BPE_VOCAB_SCHEMA,
         )

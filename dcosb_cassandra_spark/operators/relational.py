@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import register_views, table
 from ..registry import query
+from ..session import local_frame
 
 
 @query(
@@ -163,7 +164,8 @@ def b05_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row broadcast → plans as BroadcastNestedLoopJoin, which is the correct
     physical strategy when the inner side is tiny; never a shuffle."""
     l = table(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 17.0), ("mid", 17.0, 34.0), ("high", 34.0, 51.0)],
         "band STRING, lo DOUBLE, hi DOUBLE",
     )

@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
-from ..session import generation, plan_memo
+from ..session import generation, local_frame, plan_memo
 from ..streaming.streams import await_stream
 
 # C1 tumbling window = headline tumbling_window_events
@@ -308,7 +308,8 @@ def _write_ordered_events(spark: SparkSession, sf_dir: str, n_chunks: int) -> st
     for hours in (4, 8):
         st = (hi_us + hours * 3600 * 1_000_000) * 1000
         _emit(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(-1, st, -1, "click", 0.0, "{}"), (-2, st, -1, "purchase", 0.0, "{}")],
                 "event_id long, ts long, user_id long, event_type string, "
                 "value double, props string",
@@ -422,9 +423,7 @@ def c9c_view_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     await_stream(q)
     rows = [(k, n, v) for k, (n, v) in sorted(state.items())]
-    return spark.createDataFrame(
-        rows, "event_type STRING, n_events LONG, value_floor_sum LONG"
-    )
+    return local_frame(spark, rows, "event_type STRING, n_events LONG, value_floor_sum LONG")
 
 
 @query(

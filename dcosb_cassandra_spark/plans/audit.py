@@ -46,6 +46,32 @@ def is_low_card_window(partition_cols: list[str]) -> bool:
         len(partition_cols) < 2 and set(partition_cols) <= LOW_CARDINALITY_COLS
     )
 
+#: most rows a broadcast-hinted LocalRelation (driver-held rows, see
+#: `session.local_frame`) may hold and still count as a ``literal``. The
+#: constant sides hinted today hold 3-10 rows (band table, weights,
+#: lexicon, query batches); a larger local side needs an allowlist entry.
+LOCAL_ROWS_BOUND = 64
+
+
+def _local_relation_rows(df: DataFrame) -> dict[str, int]:
+    """Row count of every LocalRelation in the analyzed plan (subqueries
+    included), keyed by its first output attribute as plan text prints
+    it (``name#id``)."""
+
+    def each(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    analyzed = df._jdf.queryExecution().analyzed()
+    rows = {}
+    for p in (analyzed, *each(analyzed.subqueriesAll())):
+        for leaf in each(p.collectLeaves()):
+            if leaf.nodeName() == "LocalRelation" and leaf.output().nonEmpty():
+                rows[leaf.output().head().toString()] = leaf.data().size()
+    return rows
+
+
 _COL_PREFIX_TO_TABLE = {
     "c_": "customer", "s_": "supplier", "n_": "nation", "r_": "region",
     "o_": "orders", "l_": "lineitem", "p_": "part",
@@ -71,7 +97,12 @@ def broadcast_hint_tables(df: DataFrame) -> list[str]:
     only hand-written hints, which AQE cannot demote, are a scale risk).
 
     Each entry is one of:
-      ``literal``        — the hinted side is a LocalRelation/Range (safe);
+      ``literal``        — the hinted side is a Range, a OneRowRelation or
+                           a LocalRelation of at most `LOCAL_ROWS_BOUND`
+                           rows (safe);
+      ``bounded:local_rows`` — a larger LocalRelation, or an RDD-backed
+                           side (a ``localCheckpoint``ed frame): driver or
+                           executor rows whose bound the caller documents;
       ``bounded:<tbl>``  — an Aggregate/Limit sits between the hint and the
                            scan, so the broadcast side's cardinality is
                            bounded by the group/limit, not the table (safe
@@ -82,6 +113,7 @@ def broadcast_hint_tables(df: DataFrame) -> list[str]:
     """
     lines = plan_string(df, "extended").splitlines()
     tables: set[str] = set()
+    local_rows = None  # read from the JVM plan on the first hinted LocalRelation
     for i, line in enumerate(lines):
         if "ResolvedHint" not in line or "broadcast" not in line.lower():
             continue
@@ -90,18 +122,21 @@ def broadcast_hint_tables(df: DataFrame) -> list[str]:
             lj = lines[j]
             if lj.startswith("== "):  # never walk past a plan-section boundary
                 break
-            if (
-                "LocalRelation" in lj
-                or "OneRowRelation" in lj
-                or re.search(r"\bRange \(", lj)
-            ):
+            if "LocalRelation" in lj:
+                # the parsed and analyzed sections print the same
+                # attribute ids; an unknown relation counts as large
+                if local_rows is None:
+                    local_rows = _local_relation_rows(df)
+                m = re.search(r"LocalRelation (?:<empty>, )?\[([^,\]]+)", lj)
+                n = local_rows.get(m.group(1) if m else None, LOCAL_ROWS_BOUND + 1)
+                tables.add("literal" if n <= LOCAL_ROWS_BOUND else "bounded:local_rows")
+                break
+            if "OneRowRelation" in lj or re.search(r"\bRange \(", lj):
                 tables.add("literal")
                 break
             if "LogicalRDD" in lj:
-                # createDataFrame(driver-local rows): NOT unconditionally
-                # safe — a pandas/driver dataset can be arbitrarily large, so
-                # hinting one requires an allowlist entry documenting why the
-                # local side stays small (e.g. a constant weights table).
+                # RDD-backed rows (a localCheckpoint): hinting one needs an
+                # allowlist entry documenting why the side stays small
                 tables.add("bounded:local_rows")
                 break
             if "Aggregate" in lj or "GlobalLimit" in lj:
@@ -214,7 +249,7 @@ def audit(df: DataFrame) -> dict:
             # cardinality is a CONSTANT (1-row max, k centroids) — that is
             # a per-query claim, so `bounded:` hits on scaling tables must
             # also be allowlisted with their documented bound. Same for
-            # driver-local createDataFrame sides (bounded:local_rows).
+            # driver-held or checkpointed sides (bounded:local_rows).
             or (
                 t.startswith("bounded:")
                 and (t.removeprefix("bounded:") in SCALING_TABLES or t == "bounded:local_rows")

@@ -10,10 +10,14 @@ partitions change, and those are all injected here.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import threading
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DateType, StructType, TimestampType
 
 
 def get_spark(app_name: str = "dcosb-cassandra-spark", cpus: str | None = None) -> SparkSession:
@@ -85,6 +89,29 @@ def ship_package(spark: SparkSession) -> SparkSession:
         sc.addPyFile(_package_zip())
         sc._dcosb_pkg_shipped = True
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """Driver-held rows as an Arrow-backed ``LocalRelation``: the one way
+    rows held on the driver enter a plan.
+
+    The rows travel inside the plan (``LocalTableScan``), so reading
+    them starts no Spark job and no Python worker — unlike a frame made
+    from a Python list, whose ``ExistingRDD`` runs a Python worker per
+    partition. ``schema`` is a StructType or a DDL string.
+    TIMESTAMP and DATE fields also take ISO-8601 text (CQL literals
+    arrive as text); naive datetimes are read as UTC, the engine's
+    pinned session time zone."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    arrays = []
+    for values, field, af in zip(cols, struct.fields, arrow):
+        if isinstance(field.dataType, (TimestampType, DateType)):
+            iso = dt.datetime if isinstance(field.dataType, TimestampType) else dt.date
+            values = [iso.fromisoformat(v) if isinstance(v, str) else v for v in values]
+        arrays.append(pa.array(values, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
 
 
 #: entries kept per `plan_memo` namespace. Keys embed the generation

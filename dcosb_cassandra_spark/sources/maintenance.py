@@ -19,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from ..streaming.streams import await_stream
 
 
@@ -385,7 +386,8 @@ def forget_text_docs(
         stmp = f"{ssub}.forget.{os.getpid()}"
         from ..operators.llm_retrieval import TEXT_INDEX_STATS_SCHEMA
 
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(st["n_docs"]) - int(rm["n_rm"]),
               int(st["sum_dl"]) - int(rm["dl_rm"]))],
             TEXT_INDEX_STATS_SCHEMA,
@@ -706,7 +708,8 @@ def erasure_audit(
             builders[artifact](spark, sf_dir, target, exclude_doc_ids=ids)
             rebuilt = True
         out.append((artifact, n, influenced, rebuilt))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "artifact string, n_forgotten_in_training long, "
         "influenced boolean, rebuilt boolean",

@@ -1,5 +1,6 @@
-"""CqlSession read path: the Arrow-backed local frames that carry
-driver-held rows into plans, and the single-partition merge that serves
+"""CqlSession read path: the Arrow-backed local frames
+(`session.local_frame`) that carry driver-held rows into plans, and the
+single-partition merge that serves
 key-pinned reads without an Exchange. Each fast form is checked against
 the form it replaces."""
 
@@ -9,8 +10,12 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from dcosb_cassandra_spark.cql_session import CqlSession
+from dcosb_cassandra_spark.operators.llm_quality import _QC_MODEL_SCHEMA
+from dcosb_cassandra_spark.operators.llm_text import _BPE_VOCAB_SCHEMA
+from dcosb_cassandra_spark.session import local_frame
 
 from .conftest import SMOKE_SF_DIR
 
@@ -21,7 +26,8 @@ def _plan(df) -> str:
 
 _TS = dt.datetime(2024, 1, 2, 3, 4, 5)
 
-#: (rows, DDL schema) for every frame shape the session builds
+#: (rows, schema) for the frame shapes the engine builds: the CQL
+#: session's, plus the operators' query batch, weights and model rows
 LOCAL_SHAPES = {
     "events_memtable": (
         [
@@ -43,13 +49,21 @@ LOCAL_SHAPES = {
                  "keyspace_name STRING, table_name STRING, "
                  "trigger_name STRING, options MAP<STRING, STRING>"),
     "empty": ([], "peer STRING, data_center STRING, release_version STRING"),
+    "query_batch": ([(0, [0.25, -1.5], 1.52), (3, [2.0, 0.0], 2.0)],
+                    "query_id long, qe array<double>, qnrm double"),
+    "mix_weights": ([("src0", 0.35), ("src1", 0.25)], "source string, p double"),
+    "bpe_vocab": ([(1, "t", "h", 812, 40_210), (2, "th", "e", 507, 39_703)],
+                  _BPE_VOCAB_SCHEMA),
+    "qc_model": ([("w", 0, -1_204), ("loss", 3, 693_147)], _QC_MODEL_SCHEMA),
+    "empty_struct": ([], StructType([StructField("query_id", LongType()),
+                                     StructField("sim", DoubleType())])),
 }
 
 
 @pytest.mark.parametrize("shape", sorted(LOCAL_SHAPES))
 def test_local_frame_matches_list_frame(spark, shape):
     rows, schema = LOCAL_SHAPES[shape]
-    got = CqlSession(spark, SMOKE_SF_DIR)._local_frame(rows, schema)
+    got = local_frame(spark, rows, schema=schema)
     want = spark.createDataFrame(rows, schema)
     assert got.schema == want.schema
     assert got.collect() == want.collect()
@@ -60,7 +74,8 @@ def test_local_frame_matches_list_frame(spark, shape):
 def test_local_frame_reads_iso_text_timestamps(spark):
     """CQL literals arrive as text; a timestamp key written that way reads
     back as the datetime it names."""
-    df = CqlSession(spark, SMOKE_SF_DIR)._local_frame(
+    df = local_frame(
+        spark,
         [("2024-01-02 03:04:05", "2024-01-02")], "ts TIMESTAMP, d DATE"
     )
     assert df.collect()[0] == (_TS, dt.date(2024, 1, 2))

@@ -7,14 +7,20 @@ make the plan part of the contract.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from dcosb_cassandra_spark.catalog import table
 from dcosb_cassandra_spark.plans.audit import (
+    LOCAL_ROWS_BOUND,
     audit,
+    broadcast_hint_tables,
     corpus_window_partitions,
     executed_plan_string,
     is_low_card_window,
     plan_string,
 )
 from dcosb_cassandra_spark.registry import REGISTRY, load_all
+from dcosb_cassandra_spark.session import local_frame
 
 from .conftest import SF_DIR
 
@@ -422,6 +428,25 @@ def test_no_broadcast_hints_on_scaling_tables(spark, query_frame):
         if flagged - allowed:
             offenders[name] = sorted(flagged - allowed)
     assert not offenders, f"unbounded broadcast hints on scaling tables: {offenders}"
+
+
+def test_hinted_local_rows_classified_by_row_count(spark):
+    """A broadcast-hinted `local_frame` is a ``literal`` up to
+    LOCAL_ROWS_BOUND rows and ``bounded:local_rows`` (allowlist-only)
+    past it; a hinted localCheckpoint side is always
+    ``bounded:local_rows``."""
+    cust = table(spark, SF_DIR, "customer")
+
+    def hinted(side):
+        return broadcast_hint_tables(cust.join(F.broadcast(side), cust.c_nationkey == side.k))
+
+    def keys(n):
+        return local_frame(spark, [(i,) for i in range(n)], "k long")
+
+    assert hinted(keys(LOCAL_ROWS_BOUND + 1)) == ["bounded:local_rows"]
+    assert hinted(keys(LOCAL_ROWS_BOUND)) == ["literal"]
+    checkpointed = spark.range(3).withColumnRenamed("id", "k").localCheckpoint()
+    assert hinted(checkpointed) == ["bounded:local_rows"]
 
 
 def test_no_single_low_card_corpus_windows(spark, query_frame):
