@@ -1,8 +1,7 @@
 """CqlSession read path: the Arrow-backed local frames
 (`session.local_frame`) that carry driver-held rows into plans, and the
-single-partition merge that serves
-key-pinned reads without an Exchange. Each fast form is checked against
-the form it replaces."""
+single-partition merge that serves key-pinned reads without an Exchange.
+Each fast form is checked against the form it replaces."""
 
 from __future__ import annotations
 
