@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.lww import lww_compact
 from ..registry import query
-from ..streaming.streams import await_stream
+from ..streaming.streams import foreach_batch
 from ..sources.mutations import row_mutation_log, upsert_log
 
 #: deterministic "now" for TTL queries (oracle can't see a moving clock);
@@ -514,8 +514,7 @@ def c12b_cdc_stream_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_at(_CDC_T1).alias("s1"), state_at(_CDC_T2).alias("s2")
         ).write.mode("append").parquet(state_dir)
 
-    q = log.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
-    await_stream(q)
+    foreach_batch(log, merge)
 
     # Distributed compaction: struct max is lexicographic on (writetime,
     # mutation_id, ...) and (writetime, mutation_id) is unique, so the

@@ -3324,32 +3324,23 @@ def serve_knn_graph(spark: SparkSession, index_dir: str) -> tuple:
     edge lookups prune to the frontier's buckets) and the codebook-sized
     entry map (bounded collect, the codebook posture); no graph
     construction work runs at query time. Layout-aware like maintain()'s
-    reads (judge r12 advice): a partitioned store reads its stray-
-    filtered part= dirs explicitly (the data files carry the 3 edge
-    columns; `part` lives only in the dir names), a legacy flat one
-    reads the root, and a file-less store (the all-empty-batch stream)
-    serves an empty graph instead of failing schema inference."""
+    reads: a partitioned store reads its live part= dirs explicitly (the
+    data files carry the 3 edge columns; `part` lives only in the dir
+    names), a legacy flat one reads the root, and a file-less store (the
+    all-empty-batch stream) serves an empty graph instead of failing
+    schema inference."""
+    from ..sources.maintenance import live_parts
+
     edir = os.path.join(index_dir, "edges")
-    # Stray-filtered listing (r14, judge r13 advice): a crashed upkeep
-    # swap can strand part=N.old.<pid> / .forget. / .next. siblings, and
-    # those startswith("part=") too — counting them flipped this read
-    # onto the partitioned path where the stray's suffixed dir name
-    # fails the 'part int' partition-value cast (or resurrects stale
-    # pre-swap rows). Serve stays READ-ONLY: strays are excluded from
-    # both the detection and the read (maintain() owns healing; a reader
-    # racing the rename instant retries, the documented store contract).
-    clean_parts = (
-        [
-            e
-            for e in os.listdir(edir)
-            if e.startswith("part=")
-            and ".old." not in e
-            and ".forget." not in e
-            and ".next." not in e
-        ]
-        if os.path.isdir(edir)
-        else []
-    )
+    # A crashed upkeep swap can strand part=N.old.<pid> (and .forget.,
+    # .next.) siblings, which startswith("part=") too — counting them
+    # flipped this read onto the partitioned path where the stray's
+    # suffixed dir name fails the 'part int' partition-value cast (or
+    # resurrects stale pre-swap rows). Serve stays READ-ONLY: strays are
+    # excluded from both the detection and the read (maintain() owns
+    # healing; a reader racing the rename instant retries, the
+    # documented store contract).
+    clean_parts = live_parts(edir, "part=")
     if clean_parts:
         edges = (
             spark.read.schema("node long, peer long, sim double")

@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 from ..catalog import table
 from ..registry import query
 from ..session import generation, local_frame, plan_memo
-from ..streaming.streams import await_stream
+from ..streaming.streams import await_stream, file_stream, foreach_batch
 
 # C1 tumbling window = headline tumbling_window_events
 
@@ -415,13 +415,7 @@ def c9c_view_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur = state.get(row["event_type"], (0, 0))
             state[row["event_type"]] = (cur[0] + row["n"], cur[1] + row["vfloor"])
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
+    foreach_batch(stream, merge)
     rows = [(k, n, v) for k, (n, v) in sorted(state.items())]
     return local_frame(spark, rows, "event_type STRING, n_events LONG, value_floor_sum LONG")
 
@@ -1140,7 +1134,7 @@ def _c15_oracle() -> str:
 )
 def c15_manifest_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The d15b shard manifest maintained on a LIVE ingest stream and
-    graded against the BATCH oracle (r10): documents arrive as 4
+    graded against the BATCH oracle: documents arrive as 4
     doc_id-ordered micro-batches, a foreachBatch sink computes each
     batch's PARTIAL manifest (same ``shard_manifest`` code as the batch
     query) and appends it to a manifest store; the graded result is
@@ -1168,20 +1162,17 @@ def c15_manifest_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFra
         # batch_id-keyed subdir + overwrite: a retried/replayed micro-batch
         # rewrites ITS OWN partial instead of appending a double-counting
         # duplicate — the standard foreachBatch exactly-once recipe
-        # (judge r10 advice: mode("append") was not idempotent, and the
-        # xor digest would self-cancel on the duplicate, masking the
-        # n_docs/n_tokens drift rather than flagging it).
+        # (mode("append") is not idempotent, and the xor digest would
+        # self-cancel on the duplicate, masking the n_docs/n_tokens
+        # drift rather than flagging it).
         shard_manifest(batch_df).write.mode("overwrite").parquet(
             os.path.join(part_dir, f"batch_id={batch_id}")
         )
 
-    raw = (
-        spark.readStream.schema(_DOCS_SCHEMA_FULL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stage_all_docs_chunks_dir(sf_dir))
+    foreach_batch(
+        file_stream(spark, _DOCS_SCHEMA_FULL, _stage_all_docs_chunks_dir(sf_dir)),
+        upkeep,
     )
-    q = raw.writeStream.foreachBatch(upkeep).trigger(availableNow=True).start()
-    await_stream(q)
     partials = spark.read.parquet(part_dir).drop("batch_id")
     return merge_manifests(partials)
 
@@ -1198,8 +1189,8 @@ def _c16_oracle() -> str:
     tags=("C16", "C7", "C8", "D5z", "P1"),
 )
 def c16_stream_scoring_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-classifier scoring on the LIVE ingest stream (r10 — the
-    serve artifact meets the stream, completing the c14/c15 trilogy:
+    """Quality-classifier scoring on the LIVE ingest stream (the serve
+    artifact meets the stream, completing the c14/c15 trilogy:
     index upkeep, manifest upkeep, now model SERVING): the d5z model
     trains ONCE as a batch ingest job (memoized — at 100 TB,
     ``maintenance.build_quality_model``), and the arriving document
@@ -1221,11 +1212,7 @@ def c16_stream_scoring_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm_quality import _qc_scored_df
 
     ensure_engine_conf(spark)
-    raw = (
-        spark.readStream.schema(_DOCS_SCHEMA_FULL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stage_all_docs_chunks_dir(sf_dir))
-    )
+    raw = file_stream(spark, _DOCS_SCHEMA_FULL, _stage_all_docs_chunks_dir(sf_dir))
     scored = _qc_scored_df(spark, sf_dir, docs=raw)
     name = _sink_name("c16_sink")
     q = c8_write_stream(scored, name, output_mode="append")
@@ -1301,11 +1288,11 @@ def _c16b_oracle() -> str:
     tags=("C16", "C8", "C9", "D5z", "P1"),
 )
 def c16b_model_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE MODEL REFRESH on the scoring stream (r11, judge r10 task #5):
-    c16 serves a frozen classifier; this replay grades the one event a
-    production serving stream actually has — a model push. Micro-batches
-    1-2 score under model A (the d5z weights, trained on the
-    _QC_TRAIN_MAX_ID labeled subset); the model retrains mid-stream on
+    """LIVE MODEL REFRESH on the scoring stream: c16 serves a frozen
+    classifier; this replay grades the one event a production serving
+    stream actually has — a model push. Micro-batches 1-2 score under
+    model A (the d5z weights, trained on the _QC_TRAIN_MAX_ID labeled
+    subset); the model retrains mid-stream on
     the DOUBLED labeled subset (the extended-labels refresh), and
     batches 3-4 score under model B. The switch is a foreachBatch epoch
     dispatch: each batch scores with the literal-weight plan for its
@@ -1347,13 +1334,10 @@ def c16b_model_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    raw = (
-        spark.readStream.schema(_DOCS_SCHEMA_EPOCH)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_stage_epoch_docs_chunks_dir(sf_dir))
+    foreach_batch(
+        file_stream(spark, _DOCS_SCHEMA_EPOCH, _stage_epoch_docs_chunks_dir(sf_dir)),
+        serve,
     )
-    q = raw.writeStream.foreachBatch(serve).trigger(availableNow=True).start()
-    await_stream(q)
     t = spark.read.parquet(out_dir).drop("batch_id")
     return t.groupBy("epoch", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -16,29 +16,124 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import local_frame
-from ..streaming.streams import await_stream
+from ..streaming.streams import file_stream, foreach_batch
+
+#: infixes of a store's swap siblings, named ``<store><infix><pid>``: the
+#: live copy renamed aside, the rewrite tmp of earlier builds, and the
+#: rewrite in flight. Recovery, healing and readers all key on these.
+SWAP_SIBLINGS = (".old.", ".forget.", ".next.")
+_OLD, _, _NEXT = SWAP_SIBLINGS
 
 
 def parquet_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
 
 
+def promote(tmp: str, path: str) -> None:
+    """Move the finished rewrite ``tmp`` to ``path``: a live ``path`` is
+    renamed aside to ``path.old.<pid>``, ``tmp`` is renamed in and the
+    old copy dropped; an absent ``path`` just receives ``tmp``. The two
+    renames are not one atomic op. Between them ``path`` is absent, and
+    a crash there leaves only the ``.old`` copy, which
+    ``_recover_store_swap`` puts back on the next call (a reader racing
+    that instant retries, the usual contract for rename-swapped
+    stores)."""
+    if not os.path.isdir(path):
+        os.rename(tmp, path)
+        return
+    old = f"{path}{_OLD}{os.getpid()}"
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
+
+
+def swap_store(path: str, write) -> None:
+    """Replace the store at ``path`` crash-safely: ``write(tmp)`` builds
+    the new copy at the sibling ``path.next.<pid>`` and `promote` moves
+    it in. A ``write`` that raises leaves the live store untouched; its
+    half-written sibling is swept by the next ``_recover_store_swap``.
+    Callers run ``_recover_store_swap(path)`` before reading the store."""
+    tmp = f"{path}{_NEXT}{os.getpid()}"
+    write(tmp)
+    promote(tmp, path)
+
+
+def _recover_store_swap(path: str) -> None:
+    """Crash recovery for `promote`. When ``path`` is missing, the newest
+    stranded ``path.old.<pid>`` (the pre-rewrite content) goes back under
+    the live name, so the interrupted rewrite simply re-runs; then the
+    dead writers' siblings are swept. A crashed swap self-heals instead
+    of failing every later call.
+
+    The sweep is gated on pid liveness: every sibling carries its
+    writer's pid, and a rewrite in another live process may have its
+    tmp on disk right now; removing it would fail that writer
+    mid-rename. Only siblings whose owner is dead, or is this process
+    (a leftover of an earlier failed call), are swept."""
+
+    def _owner_dead(p: str) -> bool:
+        try:
+            pid = int(p.rsplit(".", 1)[-1])
+        except ValueError:
+            return True  # malformed suffix: nobody owns it
+        if pid == os.getpid():
+            return True  # our own leftover from a prior failed call
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            return True  # ESRCH → dead owner
+        except PermissionError:
+            return False  # EPERM → process exists under another uid
+        return False
+
+    stranded = glob.glob(f"{path}{_OLD}*")
+    if stranded and not os.path.isdir(path):
+        os.rename(max(stranded, key=os.path.getmtime), path)
+    for infix in SWAP_SIBLINGS:
+        for stale in glob.glob(f"{path}{infix}*"):
+            if _owner_dead(stale):
+                shutil.rmtree(stale, ignore_errors=True)
+
+
+def _named(root: str, prefix: str) -> list[str]:
+    if not os.path.isdir(root):
+        return []
+    return [e for e in os.listdir(root) if e.startswith(prefix)]
+
+
+def live_parts(root: str, prefix: str) -> list[str]:
+    """Names of the live ``prefix…`` stores under ``root``, leaving out
+    their swap siblings (which start with the same prefix)."""
+    return [e for e in _named(root, prefix) if not any(s in e for s in SWAP_SIBLINGS)]
+
+
+def heal_parts(root: str, prefix: str) -> None:
+    """``_recover_store_swap`` each ``prefix…`` store under ``root`` that
+    has a swap sibling, found from one listing. Recovering every store
+    instead ran 3 globs over O(B) entries per store: O(B²) string
+    matching, measured ~290 s per batch at B=8192 with nothing to
+    heal."""
+    strays = {
+        e.split(s)[0] for e in _named(root, prefix) for s in SWAP_SIBLINGS if s in e
+    }
+    for base in sorted(strays):
+        _recover_store_swap(os.path.join(root, base))
+
+
 def compact_small_files(spark: SparkSession, path: str, target_files: int) -> tuple[int, int]:
-    """Rewrite ``path`` in place to ``target_files`` parquet files.
+    """Rewrite ``path`` in place to ``target_files`` parquet files, through
+    ``swap_store`` (the same single-FS rename commit as a compaction).
     Returns (files_before, files_after)."""
+    path = path.rstrip("/")
+    _recover_store_swap(path)
     before = len(parquet_files(path))
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compacting"
-    df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-    # atomic-ish swap (single-FS rename, same as a compaction commit)
-    import shutil
-
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    swap_store(path, df.repartition(target_files).write.mode("overwrite").parquet)
     return before, len(parquet_files(path))
 
 
@@ -184,8 +279,8 @@ def artifact_dir(name: str, build) -> str:
 def build_ivf_index(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> str:
-    """Materialize the IVF ANN index as a MAINTENANCE job (judge r7 task
-    #7): the "index built at ingest" story as an operator a user runs,
+    """Materialize the IVF ANN index as a MAINTENANCE job: the "index
+    built at ingest" story as an operator a user runs,
     alongside compact_small_files/zorder_rewrite — not a cache
     side-effect of the first probe.
 
@@ -237,21 +332,10 @@ def stream_band_index(
     base is never re-read or re-signed. Returns ``out_dir``."""
     from ..operators.llm_dedup import save_band_index
 
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        save_band_index(batch_df, out_dir, "append")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src_dir)
+    foreach_batch(
+        file_stream(spark, schema, stream_src_dir),
+        lambda batch_df, _: save_band_index(batch_df, out_dir, "append"),
     )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
     return out_dir
 
 
@@ -293,21 +377,13 @@ def stream_text_index(
     grouping + one subdir write; the base is never re-read."""
     from ..operators.llm_retrieval import _write_text_index_batch
 
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        _write_text_index_batch(batch_df, out_dir, batch_id)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src_dir)
+    foreach_batch(
+        file_stream(spark, schema, stream_src_dir),
+        lambda batch_df, batch_id: _write_text_index_batch(
+            batch_df, out_dir, batch_id
+        ),
+        timeout_sec,
     )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q, timeout_sec)
     return out_dir
 
 
@@ -328,12 +404,11 @@ def forget_text_docs(
     Scale: a document's postings live in ONE ingest segment, so only
     AFFECTED segments rewrite (the bounded collect is ≤ #segments ids) —
     Lucene's per-segment delete posture; cost = affected segment bytes,
-    never index size, never corpus. Swaps are sibling-write + rename
-    with the shared crash recovery."""
-    import json as _json
-    import shutil
-
+    never index size, never corpus. Each segment's postings and stats
+    are replaced through ``swap_store``."""
     from pyspark.sql import functions as F
+
+    from ..operators.llm_retrieval import TEXT_INDEX_STATS_SCHEMA
 
     ids = [int(i) for i in doc_ids]
     proot = os.path.join(index_dir, "postings")
@@ -341,14 +416,7 @@ def forget_text_docs(
     if not os.path.isdir(proot) or not ids:
         return index_dir
     for root in (proot, sroot):
-        strays = {
-            e.split(".old.")[0].split(".forget.")[0].split(".next.")[0]
-            for e in os.listdir(root)
-            if e.startswith("ingest=")
-            and (".old." in e or ".forget." in e or ".next." in e)
-        }
-        for base in sorted(strays):
-            _recover_store_swap(os.path.join(root, base))
+        heal_parts(root, "ingest=")
     allp = spark.read.parquet(proot)
     affected = sorted(
         r["ingest"]
@@ -372,30 +440,25 @@ def forget_text_docs(
             )
             .head()
         )
-        tmp = f"{sub}.forget.{os.getpid()}"
-        seg.filter(~F.col("doc_id").isin(ids)).write.partitionBy(
-            "tb"
-        ).mode("overwrite").parquet(tmp)
-        old = f"{sub}.old.{os.getpid()}"
-        os.rename(sub, old)
-        os.rename(tmp, sub)
-        shutil.rmtree(old)
+        swap_store(
+            sub,
+            seg.filter(~F.col("doc_id").isin(ids))
+            .write.partitionBy("tb")
+            .mode("overwrite")
+            .parquet,
+        )
 
         ssub = os.path.join(sroot, f"ingest={g}")
         st = spark.read.parquet(ssub).head()
-        stmp = f"{ssub}.forget.{os.getpid()}"
-        from ..operators.llm_retrieval import TEXT_INDEX_STATS_SCHEMA
-
-        local_frame(
-            spark,
-            [(int(st["n_docs"]) - int(rm["n_rm"]),
-              int(st["sum_dl"]) - int(rm["dl_rm"]))],
-            TEXT_INDEX_STATS_SCHEMA,
-        ).coalesce(1).write.mode("overwrite").parquet(stmp)
-        sold = f"{ssub}.old.{os.getpid()}"
-        os.rename(ssub, sold)
-        os.rename(stmp, ssub)
-        shutil.rmtree(sold)
+        swap_store(
+            ssub,
+            local_frame(
+                spark,
+                [(int(st["n_docs"]) - int(rm["n_rm"]),
+                  int(st["sum_dl"]) - int(rm["dl_rm"]))],
+                TEXT_INDEX_STATS_SCHEMA,
+            ).coalesce(1).write.mode("overwrite").parquet,
+        )
     return index_dir
 
 
@@ -480,70 +543,8 @@ def stream_ivf_index(
             .parquet(out_dir)
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
+    foreach_batch(file_stream(spark, schema, stream_src_dir), maintain)
     return out_dir
-
-
-def _recover_store_swap(path: str) -> None:
-    """Crash recovery for the sibling-write + double-rename swap used by
-    the forget_* rewrites. The swap (``src`` → ``src.old.pid`` then
-    ``tmp`` → ``src``) is NOT atomic as a whole: for the instant between
-    the two renames the store path is absent, and a crash there strands
-    the index as only ``*.old.<pid>`` (judge r10 advice — the old
-    docstring overclaimed "readers never see a partial store"). On the
-    next maintenance call this helper puts the newest stranded ``.old``
-    copy back under the live name (the pre-rewrite content — the erasure
-    simply re-runs) and sweeps dead ``.forget``/``.next``/``.old``
-    leftovers, so a crashed swap self-heals instead of failing every
-    later call.
-
-    The sweep is PID-LIVENESS-GATED (judge r11 advice): every sibling
-    carries its writer's pid suffix, and a concurrent forget_*/stream
-    upkeep in ANOTHER live process may have its in-flight tmp on disk
-    right now — unconditionally rmtree'ing it would fail that process's
-    write/rename mid-erasure (the cross-process scenario ivf_index_dir's
-    build path already defends against). Only siblings whose owning pid
-    is dead are swept; a live owner's dirs are left for the owner."""
-    import glob
-    import shutil
-
-    def _owner_dead(p: str) -> bool:
-        try:
-            pid = int(p.rsplit(".", 1)[-1])
-        except ValueError:
-            return True  # malformed suffix: nobody owns it
-        if pid == os.getpid():
-            return True  # our own leftover from a prior failed call
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            return True  # ESRCH → dead owner
-        except PermissionError:
-            return False  # EPERM → process exists under another uid
-        return False
-
-    leftovers = sorted(
-        glob.glob(f"{path}.old.*"), key=os.path.getmtime, reverse=True
-    )
-    if not os.path.isdir(path) and leftovers:
-        os.rename(leftovers[0], path)
-        leftovers = leftovers[1:]
-    for stale in leftovers + glob.glob(f"{path}.forget.*") + glob.glob(
-        f"{path}.next.*"
-    ):
-        if _owner_dead(stale):
-            shutil.rmtree(stale, ignore_errors=True)
 
 
 def forget_documents(
@@ -554,11 +555,7 @@ def forget_documents(
     corpus delete must reach every derived index or the deleted text
     keeps influencing dedup verdicts through its band rows and token
     sets): rewrite ``index_dir/bands`` and ``index_dir/toks`` without the
-    given doc_ids via sibling-write + rename. The swap is two renames,
-    not one atomic op — the store path is absent for the instant between
-    them, and a crash there is healed by ``_recover_store_swap`` on the
-    next call (readers racing that instant should retry, the standard
-    contract for rename-swapped stores). Every index row carries its
+    given doc_ids through ``swap_store``. Every index row carries its
     doc_id, so erasure is an exact row filter and the result is
     BYTE-EQUIVALENT in content to an index built without the documents
     (row-set parity asserted by tests/test_incremental_index.py) — the
@@ -568,27 +565,20 @@ def forget_documents(
     corpus size; the forget list ships as a broadcastable literal (bulk
     erasure batches thousands of ids per pass, amortizing the rewrite
     exactly like tombstone compaction does)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     ids = [int(i) for i in doc_ids]
     for store in ("bands", "toks"):
         src = os.path.join(index_dir, store)
         _recover_store_swap(src)
-        if not os.path.isdir(src):
-            continue
-        tmp = f"{src}.forget.{os.getpid()}"
-        (
-            spark.read.parquet(src)
-            .filter(~F.col("doc_id").isin(ids))
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        old = f"{src}.old.{os.getpid()}"
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old)
+        if os.path.isdir(src):
+            swap_store(
+                src,
+                spark.read.parquet(src)
+                .filter(~F.col("doc_id").isin(ids))
+                .write.mode("overwrite")
+                .parquet,
+            )
     return index_dir
 
 
@@ -598,20 +588,17 @@ def forget_vectors(
     """Erasure propagation into the ANN serving artifact (the
     ``forget_documents`` guarantee for vectors): rewrite the IVF index
     without the given vec_ids, preserving the bucket-partitioned layout
-    (probes keep their partition pruning), via sibling-write + rename
-    (two renames; a crash between them self-heals on the next call —
-    see ``_recover_store_swap``). Row-set-identical to an index built
-    with the vectors never present (tests/test_incremental_index.py).
-    After the on-disk swap the RAM-resident serving state is evicted
-    too (``invalidate_index_caches`` — judge r10 advice: without the
-    eviction a live session's cached index DataFrame and the kNN graph
-    built on it keep serving pre-erasure rows, so probes could still
-    cite forgotten vec_ids). Cost = index size; the bucket layout means
-    a future optimization could rewrite ONLY the buckets containing the
-    forgotten ids — at 100 TB with k ≈ 50k buckets, erasure touches 1/k
-    of the index per distinct bucket hit."""
-    import shutil
-
+    (probes keep their partition pruning), through ``swap_store``.
+    Row-set-identical to an index built with the vectors never present
+    (tests/test_incremental_index.py). After the on-disk swap the
+    RAM-resident serving state is evicted too
+    (``invalidate_index_caches``): without the eviction a live session's
+    cached index DataFrame and the kNN graph built on it keep serving
+    pre-erasure rows, so probes could still cite forgotten vec_ids.
+    Cost = index size; the bucket layout means a future optimization
+    could rewrite ONLY the buckets containing the forgotten ids — at
+    100 TB with k ≈ 50k buckets, erasure touches 1/k of the index per
+    distinct bucket hit."""
     from pyspark.sql import functions as F
 
     from ..operators.llm_similarity import (
@@ -621,19 +608,15 @@ def forget_vectors(
 
     ids = [int(i) for i in vec_ids]
     _recover_store_swap(index_dir)
-    tmp = f"{index_dir}.forget.{os.getpid()}"
-    (
+    swap_store(
+        index_dir,
         spark.read.schema(_IVF_INDEX_SCHEMA)
         .parquet(index_dir)
         .filter(~F.col("vec_id").isin(ids))
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(tmp)
+        .parquet,
     )
-    old = f"{index_dir}.old.{os.getpid()}"
-    os.rename(index_dir, old)
-    os.rename(tmp, index_dir)
-    shutil.rmtree(old)
     invalidate_index_caches(index_dir)
     return index_dir
 
@@ -644,8 +627,8 @@ def erasure_audit(
     doc_ids: list[int],
     rebuild: dict | None = None,
 ):
-    """Erasure accountability for the AGGREGATE artifacts (r11, judge r10
-    task #4). ``forget_documents``/``forget_vectors`` give row-keyed
+    """Erasure accountability for the AGGREGATE artifacts.
+    ``forget_documents``/``forget_vectors`` give row-keyed
     indexes an exact erasure; the BPE vocab and the quality-classifier
     model are aggregates a deleted doc may have INFLUENCED — true
     machine-unlearning is out of scope, but a pipeline must at least
@@ -741,14 +724,14 @@ def forget_graph_nodes(
     their historical neighbor SELECTION (a removed node's neighbors do
     not re-select replacement peers), exactly like a tombstoned HNSW
     segment; `build_knn_graph` is the rebuild when link quality matters.
-    Both stores swap via sibling-write + rename with the shared crash
-    recovery (`_recover_store_swap`). Cost = graph size, never corpus.
+    Both stores are replaced through ``swap_store``. Cost = graph size,
+    never corpus.
 
-    Entry re-seeding (r14 — judge r13 advice): the streamed store's entry
-    map is a durable MIN-merge fed only by each batch's new vectors, so
-    dropping a forgotten rep here would leave its bucket entry-less until
-    some future batch happens to insert into it — degrading beam-search
-    entry coverage indefinitely, not transiently. When the sibling
+    Entry re-seeding: the streamed store's entry map is a durable
+    MIN-merge fed only by each batch's new vectors, so dropping a
+    forgotten rep here would leave its bucket entry-less until some
+    future batch happens to insert into it — degrading beam-search entry
+    coverage indefinitely, not transiently. When the sibling
     ``vectors`` store exists (the stream_knn_graph layout), buckets that
     lose their rep are re-seeded with the min surviving vec_id in the
     bucket — exactly the value the min-merge would hold had the forgotten
@@ -762,6 +745,7 @@ def forget_graph_nodes(
     edges = os.path.join(graph_dir, "edges")
     entries = os.path.join(graph_dir, "entries")
     vecs = os.path.join(graph_dir, "vectors")
+    heal_parts(edges, "part=")  # a crashed upkeep's per-bucket swaps
     for store in (edges, entries):
         _recover_store_swap(store)
     # buckets losing their representative, captured BEFORE the rewrite
@@ -781,7 +765,6 @@ def forget_graph_nodes(
     ):
         if not os.path.isdir(store):
             continue
-        tmp = f"{store}.forget.{os.getpid()}"
         df = spark.read.parquet(store).filter(keep)
         if store is entries:
             if dropped and os.path.isdir(vecs):
@@ -797,25 +780,21 @@ def forget_graph_nodes(
                 )
                 df = df.select("bucket", "rep").unionByName(heal)
             df = df.coalesce(1)
-        w = df.write.mode("overwrite")
-        if "part" in df.columns:  # node-partitioned edge layout (r12)
-            w = w.partitionBy("part")
-        w.parquet(tmp)
-        # carry store metadata through the swap (judge r12 advice: the
-        # Spark rewrite doesn't reproduce _meta.json, and losing the
-        # bucket count makes a later stream batch merge new edges
-        # against a guessed default layout)
-        meta = os.path.join(store, "_meta.json")
-        if os.path.isfile(meta):
-            import shutil
 
-            shutil.copy(meta, os.path.join(tmp, "_meta.json"))
-        old = f"{store}.old.{os.getpid()}"
-        os.rename(store, old)
-        os.rename(tmp, store)
-        import shutil
+        def write(tmp: str) -> None:
+            w = df.write.mode("overwrite")
+            if "part" in df.columns:  # node-partitioned edge layout
+                w = w.partitionBy("part")
+            w.parquet(tmp)
+            # carry store metadata through the swap: the Spark rewrite
+            # doesn't reproduce _meta.json, and losing the bucket count
+            # makes a later stream batch merge new edges against a
+            # guessed default layout
+            meta = os.path.join(store, "_meta.json")
+            if os.path.isfile(meta):
+                shutil.copy(meta, os.path.join(tmp, "_meta.json"))
 
-        shutil.rmtree(old)
+        swap_store(store, write)
     return graph_dir
 
 
@@ -853,8 +832,8 @@ def stream_knn_graph(
     exactly; the shrink re-picks the same top-2M), so a replayed
     micro-batch converges to the same stores.
 
-    INCREMENTAL PREP (r13 — judge r12 task #2; the last O(store)
-    per-micro-batch maintenance term is gone): the store row count, the
+    INCREMENTAL PREP (no O(store) per-micro-batch maintenance term is
+    left): the store row count, the
     ``cnt_l``/``cnt_b`` block-count tables, and the per-bucket entry
     points are DURABLE stores merged commutatively per batch (counts
     add, entry mins min — the c15 manifest argument), and LSH signatures
@@ -906,30 +885,16 @@ def stream_knn_graph(
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         import json as _json
-        import shutil as _shutil
         import time as _time
 
         t0 = _time.monotonic()
         # Heal any crashed prior swap before reading the stores:
-        # per-bucket first (the r12 layout swaps part=N dirs — a
+        # per-bucket first (the edge layout swaps part=N dirs — a
         # stranded part=N.old.<pid> is restored and the replayed batch
         # re-merges idempotently), then the root calls sweep dead-owner
         # root-level .next tmp trees and heal any legacy flat-layout,
         # vector-migration, entries, or blocks swap.
-        if os.path.isdir(edge_store):
-            # ONE directory listing, healing only buckets with stranded
-            # siblings (r13): calling _recover_store_swap on every
-            # part= dir ran 3 globs × O(B) directory entries each —
-            # O(B²) string matching, measured ~290 s/batch at B=8192
-            # (the 100× probe) with zero strays to heal
-            strays = {
-                e.split(".old.")[0].split(".forget.")[0].split(".next.")[0]
-                for e in os.listdir(edge_store)
-                if e.startswith("part=")
-                and (".old." in e or ".forget." in e or ".next." in e)
-            }
-            for base in sorted(strays):
-                _recover_store_swap(os.path.join(edge_store, base))
+        heal_parts(edge_store, "part=")
         for s in (edge_store, vec_store, entry_store, blocks_store):
             _recover_store_swap(s)
         ve = as_double(F.col("embedding"))
@@ -940,7 +905,7 @@ def stream_knn_graph(
             cb,
         ).withColumn("bucket", F.col("bucket").cast("long"))
         nb = newc.count()  # O(batch)
-        # Incremental store-size + width bookkeeping (judge r12 task #2):
+        # Incremental store-size + width bookkeeping:
         # n, the block-count tables, and the last-applied batch id live in
         # the atomically-swapped `blocks` store — counts are commutative
         # sums, so exactly-once application (the high-water mark) makes
@@ -955,10 +920,10 @@ def stream_knn_graph(
         if meta is not None:
             n = int(meta["n"]) if applied else int(meta["n"]) + nb
         else:
-            # bootstrap (fresh stream, or a pre-r13 store without the
-            # blocks artifact): one O(store) count here, never again —
-            # excluding this batch's subdir in case a crashed prior
-            # attempt already wrote it
+            # bootstrap (fresh stream, or a store from an older build
+            # without the blocks artifact): one O(store) count here,
+            # never again — excluding this batch's subdir in case a
+            # crashed prior attempt already wrote it
             prior = 0
             if os.path.isdir(vec_store) and any(
                 e.startswith("batch_id=") for e in os.listdir(vec_store)
@@ -981,12 +946,13 @@ def stream_knn_graph(
             )
 
         # Signatures are STORED on the vector rows at the current widths
-        # (r13 — the join no longer re-signs the whole store per batch).
+        # (the join does not re-sign the whole store per batch).
         # When the adaptive widths cross a threshold (exponentially
         # spaced in n), the store migrates ONCE through the root-level
         # crash-safe swap — the same amortized-O(1)/byte argument as the
         # edge-store bucket doubling. `rebuild` also covers bootstrap
-        # from a pre-r13 store whose rows carry no signature columns.
+        # from an older build's store whose rows carry no signature
+        # columns.
         rebuild = meta is None or (
             int(meta["bits"]) != bits or int(meta["bits2"]) != bits2
         )
@@ -999,18 +965,18 @@ def stream_knn_graph(
             allv = allv.select(
                 *[c for c in allv.columns if c not in ("lsh", "lsh2")]
             )
-            mig = f"{vec_store}.next.{os.getpid()}"
             # sortWithinPartitions(lsh): parquet row-group min/max stats
             # on a SORTED signature column make the per-batch In-filter
             # below skip row groups wholesale — the signature-pruned
             # scan that keeps the candidate join sub-linear in store size
-            signed(allv).sortWithinPartitions("lsh").write.partitionBy(
-                "batch_id"
-            ).mode("overwrite").parquet(mig)
-            vold = f"{vec_store}.old.{os.getpid()}"
-            os.rename(vec_store, vold)
-            os.rename(mig, vec_store)
-            _shutil.rmtree(vold)
+            swap_store(
+                vec_store,
+                signed(allv)
+                .sortWithinPartitions("lsh")
+                .write.partitionBy("batch_id")
+                .mode("overwrite")
+                .parquet,
+            )
         bnew = signed(newc)
         bnew.sortWithinPartitions("lsh").write.mode("overwrite").parquet(
             this_batch
@@ -1052,7 +1018,7 @@ def stream_knn_graph(
         t = float(TARGET_LSH_BLOCK_ROWS)
 
         def salted(df: DataFrame) -> DataFrame:
-            # count tables BROADCAST (r13): they are block-count
+            # count tables BROADCAST: they are block-count
             # dictionaries (~n/TARGET rows — KBs at demo scale, 2-3
             # orders below the store), and joining them by shuffle
             # re-shuffled the whole 200k-row vector store per batch —
@@ -1082,14 +1048,14 @@ def stream_knn_graph(
         # join — one scan, zero store shuffle. The bootstrap/bulk batch
         # (or a replayed one) can be store-sized, so the hint is gated on
         # |batch|: past the threshold both sides shuffle on the block
-        # keys exactly like the batch build (the r12 posture). Measured
+        # keys exactly like the batch build. Measured
         # at 100×: the un-hinted plan shuffled the 200k-row store per
         # small batch and cost 207-226 s/batch; see SCALE.md.
         asalted = salted(bnew)
         b_ivf_src, b_lsh_src = sstore, sstore
         if nb <= 10_000:
             asalted = F.broadcast(asalted)
-            # Signature-pruned store scan (r13): only store rows sharing
+            # Signature-pruned store scan: only store rows sharing
             # a block with the batch can pair, so push the batch's
             # DISTINCT signature sets (≤|batch| literals — the bounded
             # collect is the touched-bucket posture) into the scan as
@@ -1127,7 +1093,7 @@ def stream_knn_graph(
         ).select(*sel)
         pairs = p_ivf.unionAll(p_lsh).distinct()
         w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-        # localCheckpoint (r13): new_edges feeds THREE consumers (the
+        # localCheckpoint: new_edges feeds THREE consumers (the
         # touched-part collect, the undirected union, the merge write) —
         # uncheckpointed, each action re-ran the whole candidate join
         new_edges = (
@@ -1145,7 +1111,7 @@ def stream_knn_graph(
         # dir so layout + bucket count swap atomically. When the meta
         # file is missing but part= dirs exist (an erasure rewrite from
         # an older build dropped it), the count CANNOT be inferred
-        # soundly from the layout (r14, judge r13 advice): partitionBy
+        # soundly from the layout: partitionBy
         # skips empty buckets, and an erasure that emptied the top half
         # of the ladder leaves a store indistinguishable — even by
         # hashing sampled nodes against their dirs — from one genuinely
@@ -1156,18 +1122,7 @@ def stream_knn_graph(
         # (correct whatever count wrote them) and re-pins _meta.json —
         # O(store) once, never again.
         edge_meta_path = os.path.join(edge_store, "_meta.json")
-        part_dirs = (
-            [
-                e
-                for e in os.listdir(edge_store)
-                if e.startswith("part=")
-                and ".old." not in e
-                and ".forget." not in e
-                and ".next." not in e
-            ]
-            if os.path.isdir(edge_store)
-            else []
-        )
+        part_dirs = live_parts(edge_store, "part=")
         flat_files = glob.glob(os.path.join(edge_store, "*.parquet"))
         b_cur = EDGE_STORE_BUCKETS
         metaless_parts = False
@@ -1179,11 +1134,10 @@ def stream_knn_graph(
         b_want = edge_bucket_count(n)
         has_edge_data = bool(part_dirs or flat_files)
         # A legacy FLAT store always migrates wholesale to the
-        # partitioned layout (judge r12 advice: continuing it by writing
-        # part= subdirs NEXT TO the root-level files leaves a mixed
-        # directory Spark's partition discovery rejects on the next
-        # read). Mixed state from an older crashed continuation is read
-        # side-by-side and unioned.
+        # partitioned layout (continuing it by writing part= subdirs NEXT
+        # TO the root-level files leaves a mixed directory Spark's
+        # partition discovery rejects on the next read). Mixed state from
+        # an older crashed continuation is read side-by-side and unioned.
         if has_edge_data and (b_want != b_cur or flat_files or metaless_parts):
             if part_dirs and flat_files:
                 allprev = (
@@ -1203,21 +1157,15 @@ def stream_knn_graph(
                 allprev = spark.read.parquet(edge_store).select(
                     "node", "peer", "sim"
                 )
-            mig = f"{edge_store}.next.{os.getpid()}"
-            (
+
+            def rebucket(tmp: str) -> None:
                 allprev.withColumn(
                     "part", F.pmod(F.hash("node"), F.lit(b_want))
-                )
-                .write.partitionBy("part")
-                .mode("overwrite")
-                .parquet(mig)
-            )
-            with open(os.path.join(mig, "_meta.json"), "w") as fh:
-                _json.dump({"buckets": b_want}, fh)
-            old = f"{edge_store}.old.{os.getpid()}"
-            os.rename(edge_store, old)
-            os.rename(mig, edge_store)
-            _shutil.rmtree(old)
+                ).write.partitionBy("part").mode("overwrite").parquet(tmp)
+                with open(os.path.join(tmp, "_meta.json"), "w") as fh:
+                    _json.dump({"buckets": b_want}, fh)
+
+            swap_store(edge_store, rebucket)
         b_cur = b_want
 
         und_new = (
@@ -1231,9 +1179,7 @@ def stream_knn_graph(
             )
             .withColumn("part", F.pmod(F.hash("node"), F.lit(b_cur)))
         )
-        # NODE-PARTITIONED SELECTIVE REWRITE (judge r11 task #4 — the
-        # "at 100 TB the rewrite narrows to the touched nodes'
-        # partitions" docstring is now code): the edge store is
+        # NODE-PARTITIONED SELECTIVE REWRITE: the edge store is
         # hash-bucketed by node into b_cur subdirs; a batch
         # touches only the buckets holding its new edges' endpoints, so
         # ONLY those are read back (partition-pruned), re-shrunk, and
@@ -1248,8 +1194,8 @@ def stream_knn_graph(
         )
         merge_src = und_new
         # Always the partitioned layout here: a legacy flat store was
-        # migrated wholesale above (judge r12 advice — continuing it in
-        # place left a mixed flat+partitioned directory). The read lists
+        # migrated wholesale above (continuing it in place left a mixed
+        # flat+partitioned directory). The read lists
         # ONLY the touched buckets' paths (basePath keeps the part
         # column): pointing Spark at the store root made it file-index
         # all B part= dirs before pruning — an O(B) driver listing per
@@ -1275,16 +1221,13 @@ def stream_knn_graph(
             .filter(F.col("rn") <= 2 * GRAPH_DEGREE)
             .select("node", "peer", "sim", "part")
         )
-        # Crash-safe per-bucket swap (judge r11 advice posture, now at
-        # bucket granularity): sibling-write the touched buckets, then
-        # rename each live bucket aside, promote, drop. A crash mid-loop
-        # strands at most single buckets as part=N.old.<pid>, healed by
-        # the per-bucket _recover_store_swap at the top of maintain();
-        # a replayed batch then re-merges idempotently (see above).
-        tmp = f"{edge_store}.next.{os.getpid()}"
+        # Crash-safe per-bucket swap: sibling-write the touched buckets,
+        # then `promote` each one. A crash mid-loop strands at most
+        # single buckets as part=N.old.<pid>, healed by heal_parts at the
+        # top of maintain(); a replayed batch then re-merges
+        # idempotently (see above).
+        tmp = f"{edge_store}{_NEXT}{os.getpid()}"
         merged.write.partitionBy("part").mode("overwrite").parquet(tmp)
-        import shutil
-
         os.makedirs(edge_store, exist_ok=True)
         rewritten = 0
         for p in touched:
@@ -1295,19 +1238,12 @@ def stream_knn_graph(
                 os.path.getsize(f)
                 for f in glob.glob(os.path.join(srcp, "*.parquet"))
             )
-            dstp = os.path.join(edge_store, f"part={p}")
-            if os.path.isdir(dstp):
-                old = f"{dstp}.old.{os.getpid()}"
-                os.rename(dstp, old)
-                os.rename(srcp, dstp)
-                shutil.rmtree(old)
-            else:
-                os.rename(srcp, dstp)
+            promote(srcp, os.path.join(edge_store, f"part={p}"))
         shutil.rmtree(tmp, ignore_errors=True)
-        # pin the bucket count after every per-bucket swap (judge r12
-        # advice): a fresh store, or one whose meta an older erasure
-        # dropped, gets the authoritative count written here so later
-        # batches and erasures never guess the layout
+        # pin the bucket count after every per-bucket swap: a fresh
+        # store, or one whose meta an older erasure dropped, gets the
+        # authoritative count written here so later batches and erasures
+        # never guess the layout
         with open(edge_meta_path, "w") as fh:
             _json.dump({"buckets": int(b_cur)}, fh)
         total_bytes = sum(
@@ -1329,46 +1265,34 @@ def stream_knn_graph(
                 .groupBy("bucket")
                 .agg(F.min("rep").alias("rep"))
             )
-        etmp = f"{entry_store}.next.{os.getpid()}"
-        ent_new.coalesce(1).write.mode("overwrite").parquet(etmp)
-        if os.path.isdir(entry_store):
-            eold = f"{entry_store}.old.{os.getpid()}"
-            os.rename(entry_store, eold)
-            os.rename(etmp, entry_store)
-            shutil.rmtree(eold)
-        else:
-            os.rename(etmp, entry_store)
+        swap_store(entry_store, ent_new.coalesce(1).write.mode("overwrite").parquet)
         # Durable block-count tables + {n, widths, high-water mark}: one
         # atomic root swap makes the count merge exactly-once (a replay
         # whose counts already landed skipped the delta above and skips
         # the swap here).
         agg_bytes = 0
         if not applied:
-            btmp = f"{blocks_store}.next.{os.getpid()}"
-            cnt_l.write.mode("overwrite").parquet(os.path.join(btmp, "cnt_l"))
-            cnt_b.write.mode("overwrite").parquet(os.path.join(btmp, "cnt_b"))
-            with open(os.path.join(btmp, "_meta.json"), "w") as fh:
-                _json.dump(
-                    {
-                        "n": int(n),
-                        "bits": int(bits),
-                        "bits2": int(bits2),
-                        "last_batch_id": int(batch_id),
-                    },
-                    fh,
-                )
+
+            def write_blocks(tmp: str) -> None:
+                cnt_l.write.mode("overwrite").parquet(os.path.join(tmp, "cnt_l"))
+                cnt_b.write.mode("overwrite").parquet(os.path.join(tmp, "cnt_b"))
+                with open(os.path.join(tmp, "_meta.json"), "w") as fh:
+                    _json.dump(
+                        {
+                            "n": int(n),
+                            "bits": int(bits),
+                            "bits2": int(bits2),
+                            "last_batch_id": int(batch_id),
+                        },
+                        fh,
+                    )
+
+            swap_store(blocks_store, write_blocks)
             agg_bytes = sum(
                 os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(btmp)
+                for r, _d, fs in os.walk(blocks_store)
                 for f in fs
             )
-            if os.path.isdir(blocks_store):
-                bold = f"{blocks_store}.old.{os.getpid()}"
-                os.rename(blocks_store, bold)
-                os.rename(btmp, blocks_store)
-                shutil.rmtree(bold)
-            else:
-                os.rename(btmp, blocks_store)
         with open(os.path.join(out_dir, "upkeep_stats.jsonl"), "a") as fh:
             fh.write(
                 _json.dumps(
@@ -1391,16 +1315,5 @@ def stream_knn_graph(
                 + "\n"
             )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q, timeout_sec)
+    foreach_batch(file_stream(spark, schema, stream_src_dir), maintain, timeout_sec)
     return out_dir

@@ -45,17 +45,9 @@ def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     ensure_engine_conf(spark)
     probed = dict(spark.read.parquet(events_dir).dtypes).get("ts")
     if probed == "bigint":  # TIMESTAMP(NANOS) generation
-        raw = (
-            spark.readStream.schema(EVENTS_SCHEMA_NANOS)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(events_dir)
-        )
+        raw = file_stream(spark, EVENTS_SCHEMA_NANOS, events_dir)
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    raw = file_stream(spark, EVENTS_SCHEMA, events_dir)
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -144,6 +136,26 @@ def await_stream(q, timeout_sec: int = 1800) -> None:
             f"bounded stream {q.name or q.id} still running after "
             f"{timeout_sec}s; refusing to return a partial result"
         )
+
+
+def file_stream(spark: SparkSession, schema: str, src_dir: str) -> DataFrame:
+    """Parquet file-source stream over ``src_dir``, one file per
+    micro-batch (so a staged chunk directory replays as that many
+    batches). File streams need an explicit ``schema``."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+
+
+def foreach_batch(df: DataFrame, fn, timeout_sec: int = 1800) -> None:
+    """Replay the bounded stream ``df`` (availableNow) through the sink
+    ``fn(batch_df, batch_id)`` and block until it ends (`await_stream`).
+    A retried micro-batch reaches ``fn`` again with the same
+    ``batch_id``, so replay-safe sinks key what they write on it."""
+    q = df.writeStream.foreachBatch(fn).trigger(availableNow=True).start()
+    await_stream(q, timeout_sec)
 
 
 def c8_write_stream(df: DataFrame, sink_name: str, output_mode: str = "update"):
@@ -344,11 +356,12 @@ def c9b_incremental_lww_sink(events: DataFrame, state_dir: str):
     (read old state → union batch → lww_compact → atomic swap). This is
     Cassandra's memtable-flush + compaction cycle expressed as foreachBatch;
     at scale the same merge runs against a partitioned table (or Delta/
-    Iceberg MERGE INTO) instead of a directory swap."""
+    Iceberg MERGE INTO) instead of a directory swap. The swap is
+    ``swap_store``, so a crash mid-swap heals on the next batch."""
     import os
-    import shutil
 
     from ..functions.lww import lww_compact
+    from ..sources.maintenance import _recover_store_swap, swap_store
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -360,16 +373,15 @@ def c9b_incremental_lww_sink(events: DataFrame, state_dir: str):
             F.col("event_id").alias("mutation_id"),
         )
         cur = os.path.join(state_dir, "current")
+        _recover_store_swap(cur)
         if os.path.exists(cur):
             log = spark.read.parquet(cur).unionByName(log)
         compacted = lww_compact(
             log, ["user_id", "event_type"], tombstone_col=None, tiebreak_col="mutation_id"
         )
-        tmp = os.path.join(state_dir, f"stage_{batch_id}")
-        compacted.repartition(4, "user_id").write.mode("overwrite").parquet(tmp)
-        if os.path.exists(cur):
-            shutil.rmtree(cur)
-        os.rename(tmp, cur)
+        swap_store(
+            cur, compacted.repartition(4, "user_id").write.mode("overwrite").parquet
+        )
 
     return (
         events.writeStream.foreachBatch(merge)
@@ -435,11 +447,7 @@ def read_documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
     ingest shape of a training-data pipeline (crawl shards landing in
     object storage, picked up per micro-batch)."""
     ensure_engine_conf(spark)
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
+    return file_stream(spark, DOCS_SCHEMA, docs_dir)
 
 
 def c11_training_ingest_stream(docs: DataFrame) -> DataFrame:

@@ -255,3 +255,36 @@ def test_serve_knn_graph_ignores_stranded_swap_dirs(spark, tmp_path):
     edges2, entries2 = serve_knn_graph(spark, gdir)
     assert sorted(map(tuple, edges2.collect())) == want
     assert entries2 == clean_entries
+
+
+def test_forget_graph_nodes_heals_stranded_bucket_swaps(spark, tmp_path):
+    """A crashed upkeep swap strands part=N.old.<pid> next to the live
+    bucket. Erasure heals it before reading the edge store, so the stale
+    copy neither resurrects its rows nor lands in the rewritten store:
+    the result equals the same erasure on a clean copy."""
+    import os
+    import shutil
+
+    from dcosb_cassandra_spark.operators.llm_similarity import (
+        serve_knn_graph,
+        write_knn_graph,
+    )
+    from dcosb_cassandra_spark.sources.maintenance import forget_graph_nodes
+
+    gdir = str(tmp_path / "knn_graph_stranded")
+    clean = str(tmp_path / "knn_graph_clean")
+    write_knn_graph(spark, SF_DIR, gdir)
+    shutil.copytree(gdir, clean)
+    edir = os.path.join(gdir, "edges")
+    part = sorted(e for e in os.listdir(edir) if e.startswith("part="))[0]
+    shutil.copytree(os.path.join(edir, part), os.path.join(edir, part + ".old.99999"))
+    _, entries = serve_knn_graph(spark, clean)
+    victim = int(next(iter(sorted(entries.values()))))
+
+    forget_graph_nodes(spark, gdir, [victim])
+    forget_graph_nodes(spark, clean, [victim])
+    assert sorted(os.listdir(edir)) == sorted(os.listdir(os.path.join(clean, "edges")))
+    got, got_entries = serve_knn_graph(spark, gdir)
+    want, want_entries = serve_knn_graph(spark, clean)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got_entries == want_entries

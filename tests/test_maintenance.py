@@ -40,6 +40,69 @@ def test_compact_small_files_preserves_rows(spark):
     assert tuple(checksum_before) == tuple(checksum_after)
 
 
+def test_compact_small_files_heals_a_crashed_swap(spark, monkeypatch):
+    """A crash between the swap's two renames leaves the store only as
+    its ``.old`` sibling; the next compaction restores it and loses no
+    row. A ``write`` that raises leaves the live store byte-identical."""
+    import glob
+    import shutil
+
+    path = os.path.join(TMP, "crashed_swap")
+    shutil.rmtree(path, ignore_errors=True)
+    table(spark, SMOKE_SF_DIR, "orders").repartition(8).write.parquet(path)
+
+    def checksum():
+        return tuple(
+            spark.read.parquet(path)
+            .agg(F.count(F.lit(1)), F.sum("o_orderkey"), F.round(F.sum("o_totalprice"), 2))
+            .head()
+        )
+
+    want = checksum()
+    real_rename = os.rename
+    crashed = []
+
+    def crash_once(src, dst):
+        if dst == path and not crashed:  # the tmp -> path rename
+            crashed.append(src)
+            raise OSError("simulated crash inside the swap")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_once)
+    with pytest.raises(OSError):
+        compact_small_files(spark, path, target_files=2)
+    assert crashed
+    _, after = compact_small_files(spark, path, target_files=2)
+    assert after <= 2
+    assert checksum() == want
+    assert not glob.glob(path + ".*")
+
+    def files():
+        return {
+            os.path.relpath(f, path): open(f, "rb").read()
+            for f in glob.glob(os.path.join(path, "**"), recursive=True)
+            if os.path.isfile(f)
+        }
+
+    from dcosb_cassandra_spark.sources.maintenance import (
+        _recover_store_swap,
+        swap_store,
+    )
+
+    live = files()
+
+    def broken(tmp):
+        spark.read.parquet(path).limit(1).write.parquet(tmp)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        swap_store(path, broken)
+    assert files() == live
+    _recover_store_swap(path)  # sweeps this process's half-written sibling
+    assert not glob.glob(path + ".*")
+    assert files() == live
+
+
 def test_bucketed_join_has_no_shuffle(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
     try:

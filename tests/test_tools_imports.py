@@ -3,8 +3,9 @@ where nothing in the suite executes them. Parse every script and check
 that each `from dcosb_cassandra_spark… import name` (and each
 `import dcosb_cassandra_spark…`) still resolves, so a rename in the
 engine cannot silently break a tool. The same walk over the package
-checks that driver-held rows enter plans one way. Spark-free: modules
-are imported, no session is started."""
+checks that driver-held rows enter plans one way and that store swaps
+and bounded file streams each have one source. Spark-free: modules are
+imported, no session is started."""
 
 from __future__ import annotations
 
@@ -48,23 +49,74 @@ def test_tool_engine_imports_resolve(path):
             pytest.fail(f"{path.name}: {module} has no {name}")
 
 
-def create_dataframe_sites(path: Path):
-    """(file, enclosing function) of every ``.createDataFrame(...)`` call
-    in ``path``; the function is None at module level."""
+def call_sites(path: Path, attr: str, on: str | None = None):
+    """(file, enclosing functions outermost first) of every
+    ``.attr(...)`` call in ``path``, or only of ``on.attr(...)`` when
+    ``on`` is given; the functions are () at module level."""
     tree = ast.parse(path.read_text(), str(path))
     owner: dict = {}
     for node in ast.walk(tree):  # breadth-first: parents before children
         for child in ast.iter_child_nodes(node):
             is_def = isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-            owner[child] = node.name if is_def else owner.get(node)
+            owner[child] = owner.get(node, ()) + ((node.name,) if is_def else ())
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame"
+            and node.func.attr == attr
+            and (on is None or getattr(node.func.value, "id", None) == on)
         ):
-            yield path.relative_to(PACKAGE).as_posix(), owner.get(node)
+            yield path.relative_to(PACKAGE).as_posix(), owner.get(node, ())
+
+
+def code_strings(path: Path):
+    """Every string constant in ``path`` outside docstrings, f-string
+    pieces included."""
+    tree = ast.parse(path.read_text(), str(path))
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if id(node) not in docs:
+                yield node.value
+
+
+MODULES = sorted(PACKAGE.rglob("*.py"))
 
 
 def test_driver_rows_enter_plans_only_through_local_frame():
-    sites = [s for p in sorted(PACKAGE.rglob("*.py")) for s in create_dataframe_sites(p)]
-    assert sites == [("session.py", "local_frame")]
+    sites = [s for p in MODULES for s in call_sites(p, "createDataFrame")]
+    assert sites == [("session.py", ("local_frame",))]
+
+
+def test_store_swaps_and_stream_replays_have_one_source():
+    """Durable stores are replaced through ``maintenance.swap_store`` /
+    ``promote`` and bounded file streams open through
+    ``streams.file_stream``: each swap-sibling infix and
+    ``maxFilesPerTrigger`` is spelled in one place, and only the swap
+    primitives, the build-once ``artifact_dir`` and the ordered-events
+    stager rename directories."""
+    for literal in (".old.", ".forget.", ".next.", "maxFilesPerTrigger"):
+        hits = [
+            p.relative_to(PACKAGE).as_posix()
+            for p in MODULES
+            for v in code_strings(p)
+            if literal in v
+        ]
+        assert len(hits) == 1, (literal, hits)
+    renamers = {
+        (path, funcs[0] if funcs else None)
+        for p in MODULES
+        for path, funcs in call_sites(p, "rename", on="os")
+    }
+    assert renamers == {
+        ("sources/maintenance.py", "promote"),
+        ("sources/maintenance.py", "_recover_store_swap"),
+        ("sources/maintenance.py", "artifact_dir"),
+        ("operators/streaming_batch.py", "_write_ordered_events"),
+    }
