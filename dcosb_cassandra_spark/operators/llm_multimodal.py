@@ -7,6 +7,10 @@ even the Python stages are oracle-checkable in SQL.
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Iterator
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -14,7 +18,34 @@ from pyspark.sql.types import DoubleType
 
 from ..catalog import table
 from ..registry import query
-from ..sources.multimodal import DECODE_SCHEMA, decode_image_stub, multimodal_frame
+from ..sources.multimodal import (
+    DECODE_SCHEMA,
+    decode_image_stub,
+    gif_decode,
+    gif_encode_gray,
+    inflate,
+    jpeg_decode_pixels,
+    jpeg_encode_color,
+    jpeg_encode_container,
+    jpeg_encode_gray,
+    jpeg_parse_meta,
+    mp4_decode_frames,
+    mp4_encode_container,
+    mp4_encode_mjpeg,
+    mp4_parse_meta,
+    mulaw_encode,
+    multimodal_frame,
+    pack_nibbles,
+    png_decode,
+    png_decode_gray,
+    png_encode,
+    sniff_format,
+    wav_decode_samples,
+    wav_encode_adpcm,
+    wav_encode_mulaw,
+    wav_parse_meta,
+    ycbcr_to_rgb,
+)
 
 
 @query(
@@ -219,6 +250,61 @@ def d7d_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _render_decode(mm: DataFrame, encode, decode, schema: str) -> DataFrame:
+    """The D7 codec queries' one plan: render, then decode. Stage 1 maps
+    ``encode(doc_id, payload) -> bytes`` over each row of ``mm`` into
+    ``doc_id long, media binary`` — the encoded file a media table would
+    store. Stage 2 sees only those bytes: ``decode(media)`` returns a list
+    of row tuples (one per file, or one per frame where a query explodes
+    rows), each emitted under ``schema`` with the file's ``doc_id`` put
+    first. Two chained mapInPandas stages: Arrow batches in and out,
+    partition-parallel, zero shuffles — the plumbing a library-backed
+    codec drops into, byte-compatible payloads included."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in frames:
+            media = [
+                encode(int(d), p) for d, p in zip(batch["doc_id"], batch["payload"])
+            ]
+            yield pd.DataFrame({"doc_id": batch["doc_id"], "media": media})
+
+    def decode_rows(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in frames:
+            rows = [
+                (d, *row)
+                for d, media in zip(batch["doc_id"], batch["media"])
+                for row in decode(media)
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    media = mm.mapInPandas(render, schema="doc_id long, media binary")
+    return media.mapInPandas(decode_rows, schema=schema)
+
+
+def _digest_tile(payload: bytes, n: int) -> bytes:
+    """The first ``n`` bytes of md5(payload) repeated — the pixel and
+    sample source of the rendered media, which the oracles read back
+    from md5(text)."""
+    return (hashlib.md5(payload).digest() * (n // 16 + 1))[:n]
+
+
+def _pixel_mean(px, n: int) -> float:
+    """Exact integer sum of the uint8 samples ``px`` over ``n``."""
+    return int(np.frombuffer(bytes(px), dtype=np.uint8).sum(dtype=np.int64)) / n
+
+
+def _mulaw_wav(_doc_id: int, payload: bytes) -> bytes:
+    """The mu-law WAV d7k and d7n render: ``48 + len(text) % 32``
+    samples, sample i the exact mu-law reconstruction level addressed by
+    digest byte i % 16 (sign = bit 0, mantissa = bits 1-4, exponent =
+    bits 5-7), so companding round-trips losslessly."""
+    ns = 48 + len(payload.decode("utf-8")) % 32
+    x = np.frombuffer(_digest_tile(payload, ns), dtype=np.uint8).astype(np.int64)
+    smp = (1 - 2 * (x & 1)) * (((8 * ((x >> 1) & 15) + 132) << (x >> 5)) - 132)
+    return wav_encode_mulaw(mulaw_encode(smp.astype(np.int16)), 8000)
+
+
 @query(
     "d7e_image_decode",
     oracle="""
@@ -238,63 +324,33 @@ def d7d_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7e_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-path multimodal extraction with a REAL decoder (judge r6
-    "what's missing #2", done without codec libraries): stage 1 renders
-    each document into genuine PNG bytes (8-bit grayscale, dims derived
-    from the text length, pixels tiling the text's md5 digest); stage 2 —
-    the graded path — gets ONLY the binary column and must parse it:
-    signature check, per-chunk CRC32 verification, IDAT zlib inflate,
-    scanline unfiltering, then numpy pixel statistics. The oracle derives
-    the same numbers independently from the construction, so a decoder
-    that misreads dims, drops a scanline, or mis-unfilters hash-mismatches.
-    (JPEG/video remain fingerprint-stubbed — those need real codecs; this
-    makes the PNG image path as honest as d7d's audio math.)
+    """Image-path multimodal extraction with a REAL decoder, done without
+    codec libraries (`_render_decode`): stage 1 renders each document
+    into genuine PNG bytes (8-bit grayscale, dims derived from the text
+    length, pixels tiling the text's md5 digest); stage 2 — the graded
+    path — gets ONLY the binary column and must parse it: signature
+    check, per-chunk CRC32 verification, IDAT zlib inflate, scanline
+    unfiltering, then numpy pixel statistics. The oracle derives the same
+    numbers independently from the construction, so a decoder that
+    misreads dims, drops a scanline, or mis-unfilters hash-mismatches.
 
-    Scale: two chained mapInPandas stages (encode → decode), Arrow batch
-    in/out, zero shuffles, partition-parallel — the exact plumbing a
-    PIL-backed decoder drops into, byte-compatible payloads included.
     Mean over pixels is computed as exact integer sum / n_pixels: both
     engines' quotients are correctly-rounded versions of the same
     rational, so 6dp rounding cannot diverge."""
-    from collections.abc import Iterator
 
-    from ..sources.multimodal import multimodal_frame, png_decode_gray, png_encode_gray
+    def encode(_doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))  # characters, matching len(text)
+        w, h = 16 * (1 + n % 8), 1 + (n * 7) % 48
+        return png_encode(_digest_tile(payload, w * h), w, h)
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))  # characters, matching len(text)
-                w, h = 16 * (1 + n % 8), 1 + (n * 7) % 48
-                digest = hashlib.md5(b).digest()
-                px = (digest * ((w * h) // 16 + 1))[: w * h]
-                payloads.append(png_encode_gray(px, w, h))
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "png": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in frames:
-            rows = {"doc_id": [], "width": [], "height": [], "bit_depth": [], "mean_pixel": []}
-            for doc_id, png in zip(batch["doc_id"], batch["png"]):
-                w, h, depth, px = png_decode_gray(png)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bit_depth"].append(depth)
-                rows["mean_pixel"].append(
-                    int(np.frombuffer(bytes(px), dtype=np.uint8).sum(dtype=np.int64))
-                    / (w * h)
-                )
-            yield pd.DataFrame(rows)
+    def decode(png: bytes) -> list:
+        w, h, depth, px = png_decode_gray(png)
+        return [(w, h, depth, _pixel_mean(px, w * h))]
 
     mm = multimodal_frame(spark, sf_dir).filter(F.col("doc_id") < 60)
-    pngs = mm.mapInPandas(render, schema="doc_id long, png binary")
-    out = pngs.mapInPandas(
-        decode,
-        schema="doc_id long, width int, height int, bit_depth int, mean_pixel double",
+    out = _render_decode(
+        mm, encode, decode,
+        "doc_id long, width int, height int, bit_depth int, mean_pixel double",
     )
     return out.select(
         "doc_id", "width", "height", "bit_depth", F.round("mean_pixel", 6).alias("mean_pixel")
@@ -322,63 +378,43 @@ def d7e_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7f_jpeg_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG-path multimodal extraction with a REAL container+EXIF parser
-    (no codec libraries): stage 1 renders each document into a
-    structurally valid baseline-JFIF byte stream (SOI/APP0/APP1/DQT/SOF0/
-    DHT/SOS/entropy/EOI; dims from the text length, EXIF Orientation from
-    doc_id, TIFF byte order alternating II/MM so BOTH endiannesses are
-    exercised); stage 2 — the graded path — gets ONLY the binary column
-    and must walk the marker stream: big-endian segment lengths, JFIF id,
-    the TIFF header + IFD0 entry decode inside APP1, SOF0 dims, and the
-    0xFF-stuffing-aware entropy-segment scan. The oracle derives the same
-    values independently from the construction. This is the metadata pass
-    PIL performs before pixel work; pixel reconstruction is real too as
-    of r8 — d7h grades the full entropy decode + IDCT path.
+    """JPEG-path multimodal extraction with a REAL container+EXIF parser,
+    no codec libraries (`_render_decode`): stage 1 renders each document
+    into a structurally valid baseline-JFIF byte stream (SOI/APP0/APP1/
+    DQT/SOF0/DHT/SOS/entropy/EOI; dims from the text length, EXIF
+    Orientation from doc_id, TIFF byte order alternating II/MM so BOTH
+    endiannesses are exercised); stage 2 — the graded path — gets ONLY
+    the binary column and must walk the marker stream: big-endian segment
+    lengths, JFIF id, the TIFF header + IFD0 entry decode inside APP1,
+    SOF0 dims, and the 0xFF-stuffing-aware entropy-segment scan. The
+    oracle derives the same values independently from the construction.
+    This is the metadata pass PIL performs before pixel work; d7h grades
+    the pixel path (entropy decode + IDCT)."""
+    cols = (
+        "width", "height", "precision", "n_components",
+        "orientation", "exif_byte_order", "entropy_bytes",
+    )
 
-    Scale: two chained mapInPandas stages (encode → parse), Arrow batch
-    in/out, zero shuffles, partition-parallel — byte-compatible with a
-    libjpeg-backed decoder dropping into stage 2."""
-    from collections.abc import Iterator
-
-    from ..sources.multimodal import jpeg_encode_container, jpeg_parse_meta, multimodal_frame
-
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in frames:
-            payloads = []
-            for doc_id, b in zip(batch["doc_id"], batch["payload"]):
-                n = len(b.decode("utf-8"))  # characters, matching len(text)
-                payloads.append(
-                    jpeg_encode_container(
-                        width=8 * (1 + n % 16),
-                        height=1 + (n * 5) % 64,
-                        orientation=1 + int(doc_id) % 8,
-                        entropy_len=16 + (n * 3) % 32,
-                        byte_order="II" if int(doc_id) % 2 == 0 else "MM",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "jpeg": payloads})
-
-    def parse(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "width", "height", "precision", "n_components",
-            "orientation", "exif_byte_order", "entropy_bytes",
+    def encode(doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))  # characters, matching len(text)
+        return jpeg_encode_container(
+            width=8 * (1 + n % 16),
+            height=1 + (n * 5) % 64,
+            orientation=1 + doc_id % 8,
+            entropy_len=16 + (n * 3) % 32,
+            byte_order="II" if doc_id % 2 == 0 else "MM",
         )
-        for batch in frames:
-            rows = {"doc_id": list(batch["doc_id"])}
-            metas = [jpeg_parse_meta(bytes(b)) for b in batch["jpeg"]]
-            for c in cols:
-                rows[c] = [m[c] for m in metas]
-            yield pd.DataFrame(rows)
+
+    def decode(jpeg: bytes) -> list:
+        meta = jpeg_parse_meta(jpeg)
+        return [tuple(meta[c] for c in cols)]
 
     mm = multimodal_frame(spark, sf_dir).filter(F.col("doc_id") < 60)
-    jpegs = mm.mapInPandas(render, schema="doc_id long, jpeg binary")
-    return jpegs.mapInPandas(
-        parse,
-        schema=(
-            "doc_id long, width int, height int, precision int, "
-            "n_components int, orientation int, exif_byte_order string, "
-            "entropy_bytes int"
-        ),
+    return _render_decode(
+        mm, encode, decode,
+        "doc_id long, width int, height int, precision int, "
+        "n_components int, orientation int, exif_byte_order string, "
+        "entropy_bytes int",
     )
 
 
@@ -405,72 +441,49 @@ def d7f_jpeg_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d7g_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-path multimodal extraction with a REAL ISO-BMFF container
-    parser (no codec libraries): stage 1 renders each document into a
-    structurally valid MP4 box tree (ftyp / moov > mvhd + trak > tkhd +
-    mdia > mdhd + hdlr + minf > stbl > stsz / mdat; timescale, duration,
-    16.16 fixed-point dims, and the per-sample size table all derived
-    deterministically); stage 2 — the graded path — gets ONLY the binary
-    column and must walk the box tree: big-endian sizes (incl. the 64-bit
-    largesize form), nested containers, versioned full boxes, the fixed-
-    point dim decode, and the stsz table sum, which it cross-checks
-    against the actual mdat payload length. The oracle derives the same
-    values independently from the construction. This is the metadata pass
-    ffprobe performs before any codec work; frame reconstruction stays
-    gated (`mp4_decode_frames`) because H.264 et al. need codec libs —
-    completing the modality set: PNG decode + JPEG container (image),
-    RMS math (audio), and BMFF box walk (video) are all real byte work.
+    parser, no codec libraries (`_render_decode`): stage 1 renders each
+    document into a structurally valid MP4 box tree (ftyp / moov > mvhd +
+    trak > tkhd + mdia > mdhd + hdlr + minf > stbl > stsz / mdat;
+    timescale, duration, 16.16 fixed-point dims, and the per-sample size
+    table all derived deterministically); stage 2 — the graded path —
+    gets ONLY the binary column and must walk the box tree: big-endian
+    sizes (incl. the 64-bit largesize form), nested containers, versioned
+    full boxes, the fixed-point dim decode, and the stsz table sum, which
+    it cross-checks against the actual mdat payload length. The oracle
+    derives the same values independently from the construction. This is
+    the metadata pass ffprobe performs before any codec work; d7j decodes
+    frames of MJPEG tracks, and inter-coded codecs stay gated in
+    `mp4_decode_frames`."""
+    cols = (
+        "major_brand", "timescale", "duration", "width", "height",
+        "handler", "n_samples", "mdat_bytes",
+    )
 
-    Scale: two chained mapInPandas stages (encode → parse), Arrow batch
-    in/out, zero shuffles, partition-parallel."""
-    from collections.abc import Iterator
-
-    from ..sources.multimodal import mp4_encode_container, mp4_parse_meta, multimodal_frame
-
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in frames:
-            payloads = []
-            for doc_id, b in zip(batch["doc_id"], batch["payload"]):
-                n = len(b.decode("utf-8"))  # characters, matching len(text)
-                payloads.append(
-                    mp4_encode_container(
-                        duration=100 + (n * 7) % 5000,
-                        timescale=1000 * (1 + int(doc_id) % 3),
-                        width=16 * (1 + n % 20),
-                        height=16 * (1 + (n * 3) % 20),
-                        sample_sizes=[8 + (n + i) % 16 for i in range(1 + n % 40)],
-                    )
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "mp4": payloads})
-
-    def parse(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "major_brand", "timescale", "duration", "width", "height",
-            "handler", "n_samples", "mdat_bytes",
+    def encode(doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))  # characters, matching len(text)
+        return mp4_encode_container(
+            duration=100 + (n * 7) % 5000,
+            timescale=1000 * (1 + doc_id % 3),
+            width=16 * (1 + n % 20),
+            height=16 * (1 + (n * 3) % 20),
+            sample_sizes=[8 + (n + i) % 16 for i in range(1 + n % 40)],
         )
-        for batch in frames:
-            rows = {"doc_id": list(batch["doc_id"])}
-            metas = []
-            for b in batch["mp4"]:
-                m = mp4_parse_meta(bytes(b))
-                if m["total_sample_bytes"] != m["mdat_bytes"]:
-                    raise ValueError(
-                        f"stsz sum {m['total_sample_bytes']} != mdat payload "
-                        f"{m['mdat_bytes']}"
-                    )
-                metas.append(m)
-            for c in cols:
-                rows[c] = [m[c] for m in metas]
-            yield pd.DataFrame(rows)
+
+    def decode(mp4: bytes) -> list:
+        m = mp4_parse_meta(mp4)
+        if m["total_sample_bytes"] != m["mdat_bytes"]:
+            raise ValueError(
+                f"stsz sum {m['total_sample_bytes']} != mdat payload "
+                f"{m['mdat_bytes']}"
+            )
+        return [tuple(m[c] for c in cols)]
 
     mm = multimodal_frame(spark, sf_dir).filter(F.col("doc_id") < 60)
-    mp4s = mm.mapInPandas(render, schema="doc_id long, mp4 binary")
-    return mp4s.mapInPandas(
-        parse,
-        schema=(
-            "doc_id long, major_brand string, timescale int, duration int, "
-            "width int, height int, handler string, n_samples int, "
-            "mdat_bytes int"
-        ),
+    return _render_decode(
+        mm, encode, decode,
+        "doc_id long, major_brand string, timescale int, duration int, "
+        "width int, height int, handler string, n_samples int, "
+        "mdat_bytes int",
     )
 
 
@@ -497,13 +510,13 @@ def d7g_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7h_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG pixel path with a REAL baseline codec (judge r7 task #5 — the
-    last D7 honesty gap, stdlib+numpy only): stage 1 renders each document
-    into genuine baseline-JPEG bytes via a real encoder (level shift, 8x8
-    FDCT, quantize, zig-zag, DC-difference + AC run-length Huffman coding
-    with the Annex-K luminance tables, byte stuffing); stage 2 — the
-    graded path — gets ONLY the binary column and must entropy-DECODE it:
-    DHT table reconstruction, Huffman decode, DC chain, dequantize,
+    """JPEG pixel path with a REAL baseline codec, stdlib+numpy only
+    (`_render_decode`): stage 1 renders each document into genuine
+    baseline-JPEG bytes via a real encoder (level shift, 8x8 FDCT,
+    quantize, zig-zag, DC-difference + AC run-length Huffman coding with
+    the Annex-K luminance tables, byte stuffing); stage 2 — the graded
+    path — gets ONLY the binary column and must entropy-DECODE it: DHT
+    table reconstruction, Huffman decode, DC chain, dequantize,
     un-zig-zag, IDCT, level shift, clamp, then numpy pixel statistics.
 
     The construction makes the lossy codec exactly gradeable: every 8x8
@@ -515,65 +528,23 @@ def d7h_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     16, so the mean over blocks equals the mean of the 16 digest bytes
     (same derivation trick as d7e's PNG path). AC/run-length/stuffing
     codepaths are exercised by the pytest roundtrips on random and
-    gradient images (tests/test_multimodal_sources.py).
+    gradient images (tests/test_jpeg_codec.py)."""
 
-    Scale: two chained mapInPandas stages (encode -> decode), Arrow batch
-    in/out, zero shuffles, partition-parallel — the same plumbing as
-    d7e/d7f, now with real pixels end-to-end."""
-    from collections.abc import Iterator
+    def encode(_doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))  # characters, matching len(text)
+        bx, by = 4 * (1 + n % 2), 4 * (1 + (n * 5) % 3)
+        vals = np.frombuffer(_digest_tile(payload, bx * by), dtype=np.uint8)
+        px = np.repeat(np.repeat(vals.reshape(by, bx), 8, axis=0), 8, axis=1)
+        return jpeg_encode_gray(px.tobytes(), bx * 8, by * 8)
 
-    from ..sources.multimodal import (
-        jpeg_decode_pixels,
-        jpeg_encode_gray,
-        multimodal_frame,
-    )
-
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))  # characters, matching len(text)
-                bx, by = 4 * (1 + n % 2), 4 * (1 + (n * 5) % 3)
-                digest = hashlib.md5(b).digest()
-                vals = np.frombuffer(
-                    (digest * ((bx * by) // 16))[: bx * by], dtype=np.uint8
-                ).reshape(by, bx)
-                px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                payloads.append(jpeg_encode_gray(px.tobytes(), bx * 8, by * 8))
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "jpeg": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in frames:
-            rows = {
-                "doc_id": [], "width": [], "height": [],
-                "n_components": [], "mean_pixel": [],
-            }
-            for doc_id, jpg in zip(batch["doc_id"], batch["jpeg"]):
-                w, h, nc, px = jpeg_decode_pixels(jpg)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_components"].append(nc)
-                rows["mean_pixel"].append(
-                    int(np.frombuffer(px, dtype=np.uint8).sum(dtype=np.int64))
-                    / (w * h * nc)
-                )
-            yield pd.DataFrame(rows)
+    def decode(jpeg: bytes) -> list:
+        w, h, nc, px = jpeg_decode_pixels(jpeg)
+        return [(w, h, nc, _pixel_mean(px, w * h * nc))]
 
     mm = multimodal_frame(spark, sf_dir).filter(F.col("doc_id") < 60)
-    jpegs = mm.mapInPandas(render, schema="doc_id long, jpeg binary")
-    out = jpegs.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, width int, height int, n_components int, "
-            "mean_pixel double"
-        ),
+    out = _render_decode(
+        mm, encode, decode,
+        "doc_id long, width int, height int, n_components int, mean_pixel double",
     )
     return out.select(
         "doc_id", "width", "height", "n_components",
@@ -609,12 +580,12 @@ def d7h_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7i_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLOR JPEG path, graded end-to-end (r8 follow-through to d7h):
-    stage 1 renders each document into a real 4:2:0 baseline-JPEG — RGB →
-    JFIF YCbCr, chroma box-downsampled, interleaved MCUs (4 luma + 2
-    chroma blocks each) Huffman-coded; stage 2 — the graded path — must
-    decode the interleaved MCU structure, upsample the chroma planes, and
-    invert the color transform.
+    """COLOR JPEG path, graded end-to-end (`_render_decode`): stage 1
+    renders each document into a real 4:2:0 baseline-JPEG — RGB → JFIF
+    YCbCr, chroma box-downsampled, interleaved MCUs (4 luma + 2 chroma
+    blocks each) Huffman-coded; stage 2 — the graded path — must decode
+    the interleaved MCU structure, upsample the chroma planes, and invert
+    the color transform.
 
     Exactness construction: every 16x16 MCU is a flat ACHROMATIC color
     (r=g=b=digest byte), so Y round-trips exactly (the BT.601 luma
@@ -623,70 +594,28 @@ def d7i_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere; the oracle asserts max_chroma_dev = 0 and derives the
     channel mean from the digest tiling. Chromatic fidelity (±1 rounding
     through the YCbCr chain) is pytest-gated instead
-    (tests/test_jpeg_codec.py color suite). Same two-stage mapInPandas
-    shape as d7e/d7h: Arrow batches, zero shuffles."""
-    from collections.abc import Iterator
+    (tests/test_jpeg_codec.py color suite)."""
 
-    from ..sources.multimodal import (
-        jpeg_decode_pixels,
-        jpeg_encode_color,
-        multimodal_frame,
-        ycbcr_to_rgb,
-    )
+    def encode(_doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))
+        mx, my = 1 + n % 4, 1 + (n * 7) % 3
+        vals = np.frombuffer(_digest_tile(payload, mx * my), dtype=np.uint8)
+        gray = np.repeat(np.repeat(vals.reshape(my, mx), 16, axis=0), 16, axis=1)
+        rgb = np.stack([gray, gray, gray], axis=-1)
+        return jpeg_encode_color(rgb.tobytes(), mx * 16, my * 16, "420")
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))
-                mx, my = 1 + n % 4, 1 + (n * 7) % 3
-                digest = hashlib.md5(b).digest()
-                vals = np.frombuffer(
-                    (digest * ((mx * my) // 16 + 1))[: mx * my], dtype=np.uint8
-                ).reshape(my, mx)
-                gray = np.repeat(np.repeat(vals, 16, axis=0), 16, axis=1)
-                rgb = np.stack([gray, gray, gray], axis=-1)
-                payloads.append(
-                    jpeg_encode_color(rgb.tobytes(), mx * 16, my * 16, "420")
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "jpeg": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in frames:
-            rows = {
-                "doc_id": [], "width": [], "height": [], "n_components": [],
-                "max_chroma_dev": [], "mean_red": [],
-            }
-            for doc_id, jpg in zip(batch["doc_id"], batch["jpeg"]):
-                w, h, nc, px = jpeg_decode_pixels(jpg)
-                ycc = np.frombuffer(px, dtype=np.uint8).reshape(h, w, nc)
-                rgb = ycbcr_to_rgb(ycc)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_components"].append(nc)
-                rows["max_chroma_dev"].append(
-                    int(np.abs(ycc[..., 1:].astype(np.int64) - 128).max())
-                )
-                rows["mean_red"].append(
-                    int(rgb[..., 0].sum(dtype=np.int64)) / (w * h)
-                )
-            yield pd.DataFrame(rows)
+    def decode(jpeg: bytes) -> list:
+        w, h, nc, px = jpeg_decode_pixels(jpeg)
+        ycc = np.frombuffer(px, dtype=np.uint8).reshape(h, w, nc)
+        rgb = ycbcr_to_rgb(ycc)
+        chroma_dev = int(np.abs(ycc[..., 1:].astype(np.int64) - 128).max())
+        return [(w, h, nc, chroma_dev, int(rgb[..., 0].sum(dtype=np.int64)) / (w * h))]
 
     mm = multimodal_frame(spark, sf_dir).filter(F.col("doc_id") < 60)
-    jpegs = mm.mapInPandas(render, schema="doc_id long, jpeg binary")
-    out = jpegs.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, width int, height int, n_components int, "
-            "max_chroma_dev int, mean_red double"
-        ),
+    out = _render_decode(
+        mm, encode, decode,
+        "doc_id long, width int, height int, n_components int, "
+        "max_chroma_dev int, mean_red double",
     )
     return out.select(
         "doc_id", "width", "height", "n_components", "max_chroma_dev",
@@ -718,75 +647,38 @@ def d7i_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7j_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VIDEO frame decode, graded end-to-end (r8 — closes the last D7
-    stub): stage 1 renders each document as a real MJPEG-in-MP4 track
-    (1-4 frames of 16x16 constant-block JPEGs from the md5 digest, stsd
-    'jpeg' sample entry, true stsz sizes, concatenated mdat); stage 2 —
-    the graded path — must walk the box tree, slice mdat by the stsz
-    table, and entropy-decode EVERY frame with the baseline JPEG codec,
-    emitting one row per frame. Constant blocks + the DC-step-8 table
-    make each frame's pixels bit-exact (d7h's argument), so the oracle
-    derives per-frame means from the digest. Inter-coded codecs
-    (H.264 et al.) stay honestly gated in `mp4_decode_frames`; MJPEG is
-    the real, decodable video path — same two-stage mapInPandas shape as
-    d7e/d7h/d7i: Arrow batches, zero shuffles."""
-    from collections.abc import Iterator
+    """VIDEO frame decode, graded end-to-end (`_render_decode`): stage 1
+    renders each document as a real MJPEG-in-MP4 track (1-4 frames of
+    16x16 constant-block JPEGs from the md5 digest, stsd 'jpeg' sample
+    entry, true stsz sizes, concatenated mdat); stage 2 — the graded path
+    — must walk the box tree, slice mdat by the stsz table, and
+    entropy-decode EVERY frame with the baseline JPEG codec, emitting one
+    row per frame. Constant blocks + the DC-step-8 table make each
+    frame's pixels bit-exact (d7h's argument), so the oracle derives
+    per-frame means from the digest. Inter-coded codecs (H.264 et al.)
+    stay honestly gated in `mp4_decode_frames`; MJPEG is the real,
+    decodable video path."""
 
-    from ..sources.multimodal import (
-        jpeg_encode_gray,
-        mp4_decode_frames,
-        mp4_encode_mjpeg,
-        multimodal_frame,
-    )
+    def encode(_doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))
+        digest = hashlib.md5(payload).digest()
+        jpegs = []
+        for f in range(1 + n % 4):
+            vals = np.frombuffer(digest[4 * f : 4 * f + 4], dtype=np.uint8)
+            px = np.repeat(np.repeat(vals.reshape(2, 2), 8, axis=0), 8, axis=1)
+            jpegs.append(jpeg_encode_gray(px.tobytes(), 16, 16))
+        return mp4_encode_mjpeg(jpegs, 16, 16)
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))
-                digest = hashlib.md5(b).digest()
-                jpegs = []
-                for f in range(1 + n % 4):
-                    vals = np.frombuffer(
-                        digest[4 * f : 4 * f + 4], dtype=np.uint8
-                    ).reshape(2, 2)
-                    px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                    jpegs.append(jpeg_encode_gray(px.tobytes(), 16, 16))
-                payloads.append(mp4_encode_mjpeg(jpegs, 16, 16))
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "mp4": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in frames:
-            rows = {
-                "doc_id": [], "frame_idx": [], "width": [],
-                "height": [], "frame_mean": [],
-            }
-            for doc_id, mp4 in zip(batch["doc_id"], batch["mp4"]):
-                for idx, (w, h, nc, px) in enumerate(mp4_decode_frames(mp4)):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(idx)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["frame_mean"].append(
-                        int(np.frombuffer(px, dtype=np.uint8).sum(dtype=np.int64))
-                        / (w * h * nc)
-                    )
-            yield pd.DataFrame(rows)
+    def decode(mp4: bytes) -> list:
+        return [
+            (idx, w, h, _pixel_mean(px, w * h * nc))
+            for idx, (w, h, nc, px) in enumerate(mp4_decode_frames(mp4))
+        ]
 
     mm = multimodal_frame(spark, sf_dir).filter(F.col("doc_id") < 60)
-    mp4s = mm.mapInPandas(render, schema="doc_id long, mp4 binary")
-    out = mp4s.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_idx int, width int, height int, "
-            "frame_mean double"
-        ),
+    out = _render_decode(
+        mm, encode, decode,
+        "doc_id long, frame_idx int, width int, height int, frame_mean double",
     )
     return out.select(
         "doc_id", "frame_idx", "width", "height",
@@ -830,83 +722,35 @@ def d7j_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7k_mulaw_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPRESSED-audio decode, graded end-to-end (r8): stage 1 renders
-    each document as a real G.711 mu-law RIFF/WAVE file (format tag 7) —
-    deterministic int16 samples drawn from the md5 digest, companded by
-    the real encoder; stage 2 — the graded path — must size-walk the RIFF
-    chunks, honor the fmt-7 descriptor, and EXPAND every 8-bit code
-    through the exact ITU mu-law formula before the integer energy
-    aggregates.
+    """COMPRESSED-audio decode, graded end-to-end (`_render_decode`):
+    stage 1 renders each document as a real G.711 mu-law RIFF/WAVE file
+    (`_mulaw_wav`, format tag 7) — deterministic int16 samples drawn from
+    the md5 digest, companded by the real encoder; stage 2 — the graded
+    path — must size-walk the RIFF chunks, honor the fmt-7 descriptor,
+    and EXPAND every 8-bit code through the exact ITU mu-law formula
+    before the integer energy aggregates.
 
     Exactness construction: rendered samples are exact mu-law
     reconstruction levels (mag = (8*mant + 132)*2^exp - 132), so
     encode→decode is the identity on them (pytest-verified over all 256
     codes) and the oracle derives the decoded values straight from the
     digest bytes. All aggregates are integer (sum|x|, sum x², peak) — no
-    float summation order anywhere. Same two-stage mapInPandas shape as
-    d7e/d7h: Arrow batches, ZERO shuffles; the per-doc aggregation
-    happens inside the decode stage (samples never leave the executor)."""
-    from collections.abc import Iterator
+    float summation order anywhere. The per-doc aggregation happens
+    inside the decode stage (samples never leave the executor)."""
 
-    from ..sources.multimodal import (
-        multimodal_frame,
-        mulaw_encode,
-        wav_decode_samples,
-        wav_encode_mulaw,
-        wav_parse_meta,
-    )
+    def decode(wav: bytes) -> list:
+        assert wav_parse_meta(wav)["audio_format"] == 7
+        rate, _ch, pcm = wav_decode_samples(wav)
+        s = pcm.astype(np.int64).ravel()
+        return [(
+            len(s), rate, int(np.abs(s).sum()), int((s * s).sum()),
+            int(np.abs(s).max()),
+        )]
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))
-                ns = 48 + n % 32
-                digest = hashlib.md5(b).digest()
-                x = np.frombuffer(
-                    (digest * ((ns // 16) + 1))[:ns], dtype=np.uint8
-                ).astype(np.int64)
-                smp = (1 - 2 * (x & 1)) * (
-                    ((8 * ((x >> 1) & 15) + 132) << (x >> 5)) - 132
-                )
-                payloads.append(
-                    wav_encode_mulaw(mulaw_encode(smp.astype(np.int16)), 8000)
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "wav": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in frames:
-            rows = {
-                "doc_id": [], "n_samples": [], "sample_rate": [],
-                "sum_abs": [], "sum_sq": [], "peak_abs": [],
-            }
-            for doc_id, wav in zip(batch["doc_id"], batch["wav"]):
-                meta = wav_parse_meta(wav)
-                assert meta["audio_format"] == 7
-                rate, _ch, pcm = wav_decode_samples(wav)
-                s = pcm.astype(np.int64).ravel()
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(len(s))
-                rows["sample_rate"].append(rate)
-                rows["sum_abs"].append(int(np.abs(s).sum()))
-                rows["sum_sq"].append(int((s * s).sum()))
-                rows["peak_abs"].append(int(np.abs(s).max()))
-            yield pd.DataFrame(rows)
-
-    mm = multimodal_frame(spark, sf_dir)
-    wavs = mm.mapInPandas(render, schema="doc_id long, wav binary")
-    return wavs.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, n_samples int, sample_rate int, "
-            "sum_abs long, sum_sq long, peak_abs int"
-        ),
+    return _render_decode(
+        multimodal_frame(spark, sf_dir), _mulaw_wav, decode,
+        "doc_id long, n_samples int, sample_rate int, "
+        "sum_abs long, sum_sq long, peak_abs int",
     )
 
 
@@ -987,86 +831,46 @@ def d7k_mulaw_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7l_adpcm_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STATEFUL-codec decode, graded end-to-end (r8): stage 1 renders each
-    document as a real IMA ADPCM RIFF/WAVE file (format tag 0x11) — block
-    header (digest-seeded predictor + step index) plus a digest-derived
-    4-bit code stream; stage 2 — the graded path — must size-walk the
-    RIFF chunks, parse the fmt-0x11 cbSize extension (wSamplesPerBlock),
-    read the block header, unpack nibbles low-first, and replay the exact
-    adaptive-quantizer recurrence (step table, both clamps, index
-    adaptation) to reconstruct every sample.
+    """STATEFUL-codec decode, graded end-to-end (`_render_decode`): stage
+    1 renders each document as a real IMA ADPCM RIFF/WAVE file (format
+    tag 0x11) — block header (digest-seeded predictor + step index) plus
+    a digest-derived 4-bit code stream; stage 2 — the graded path — must
+    size-walk the RIFF chunks, parse the fmt-0x11 cbSize extension
+    (wSamplesPerBlock), read the block header, unpack nibbles low-first,
+    and replay the exact adaptive-quantizer recurrence (step table, both
+    clamps, index adaptation) to reconstruct every sample.
 
-    This is the repo's first STATEFUL compressed-audio grading: unlike
-    mu-law (d7k, stateless per sample) a single mis-decoded nibble here
-    desynchronizes the remainder of the stream, so the integer aggregates
-    (plus last_sample, a direct probe of the final state) certify the
-    whole walk. The oracle replays the state machine as a recursive CTE —
-    the same WITH RECURSIVE technique as the connected-components and
-    context-chunking oracles, applied to codec state.
+    Unlike mu-law (d7k, stateless per sample) a single mis-decoded nibble
+    here desynchronizes the remainder of the stream, so the integer
+    aggregates (plus last_sample, a direct probe of the final state)
+    certify the whole walk. The oracle replays the state machine as a
+    recursive CTE — the same WITH RECURSIVE technique as the
+    connected-components and context-chunking oracles, applied to codec
+    state. Per-doc aggregation happens inside the decode stage (samples
+    never leave the executor); at 100 TB each task decodes its own files
+    independently."""
 
-    Scale shape: same two-stage mapInPandas as d7e/d7h/d7k — Arrow
-    batches, ZERO shuffles, per-doc aggregation inside the decode stage
-    (samples never leave the executor); at 100 TB each task decodes its
-    own files independently."""
-    from collections.abc import Iterator
+    def encode(_doc_id: int, payload: bytes) -> bytes:
+        n = len(payload.decode("utf-8"))
+        nn = 37 + n % 22
+        dg = hashlib.md5(payload).digest()
+        pred0 = int.from_bytes(dg[0:2], "little", signed=True)
+        idx0 = dg[2] % 89
+        nibs = [(dg[(3 + k // 2) % 16] >> (4 * (k % 2))) & 15 for k in range(nn)]
+        return wav_encode_adpcm(pred0, idx0, pack_nibbles(nibs), nn, 8000)
 
-    from ..sources.multimodal import (
-        multimodal_frame,
-        pack_nibbles,
-        wav_decode_samples,
-        wav_encode_adpcm,
-        wav_parse_meta,
-    )
+    def decode(wav: bytes) -> list:
+        assert wav_parse_meta(wav)["audio_format"] == 0x11
+        s = wav_decode_samples(wav)[2].astype(np.int64).ravel()
+        return [(
+            len(s), int(np.abs(s).sum()), int((s * s).sum()),
+            int(np.abs(s).max()), int(s[-1]),
+        )]
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))
-                nn = 37 + n % 22
-                dg = hashlib.md5(b).digest()
-                pred0 = int.from_bytes(dg[0:2], "little", signed=True)
-                idx0 = dg[2] % 89
-                nibs = [
-                    (dg[(3 + k // 2) % 16] >> (4 * (k % 2))) & 15
-                    for k in range(nn)
-                ]
-                payloads.append(
-                    wav_encode_adpcm(pred0, idx0, pack_nibbles(nibs), nn, 8000)
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "wav": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in frames:
-            rows = {
-                "doc_id": [], "n_samples": [], "sum_abs": [],
-                "sum_sq": [], "peak_abs": [], "last_sample": [],
-            }
-            for doc_id, wav in zip(batch["doc_id"], batch["wav"]):
-                meta = wav_parse_meta(wav)
-                assert meta["audio_format"] == 0x11
-                _rate, _ch, pcm = wav_decode_samples(wav)
-                s = pcm.astype(np.int64).ravel()
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(len(s))
-                rows["sum_abs"].append(int(np.abs(s).sum()))
-                rows["sum_sq"].append(int((s * s).sum()))
-                rows["peak_abs"].append(int(np.abs(s).max()))
-                rows["last_sample"].append(int(s[-1]))
-            yield pd.DataFrame(rows)
-
-    mm = multimodal_frame(spark, sf_dir)
-    wavs = mm.mapInPandas(render, schema="doc_id long, wav binary")
-    return wavs.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, n_samples int, sum_abs long, sum_sq long, "
-            "peak_abs int, last_sample int"
-        ),
+    return _render_decode(
+        multimodal_frame(spark, sf_dir), encode, decode,
+        "doc_id long, n_samples int, sum_abs long, sum_sq long, "
+        "peak_abs int, last_sample int",
     )
 
 
@@ -1097,7 +901,7 @@ def _render_gifs(frames) -> "pd.DataFrame":
 
 def _decode_gif_aggregates(gifs_df: DataFrame) -> DataFrame:
     """The GRADED decode half: real GIF89a bytes → per-image integer
-    aggregates, through the vectorized batch decoder (r10): one
+    aggregates, through the vectorized batch decoder: one
     table-gather LZW pass + one palette gather for ALL frames in the
     Arrow batch, aggregates as reduceat segments over the concatenated
     luminance stream — no per-image Python anywhere."""
@@ -1149,8 +953,8 @@ _GIF_STORE_LOCK = __import__("threading").Lock()
 def gif_store_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the rendered GIF payloads ONCE per corpus generation —
     the build/serve split for media: production tables STORE encoded
-    bytes (the r8 verdict's framing), so the encode runs at ingest and
-    the serving path is decode-only. Built through
+    bytes, so the encode runs at ingest and the serving path is
+    decode-only. Built through
     `maintenance.artifact_dir` (the IVF index's durable-store rule) and
     memoized per corpus generation. Build/serve parity with the inline
     render+decode pass is asserted by tests/test_gif_codec.py."""
@@ -1218,7 +1022,7 @@ def d7m_render_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7m_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAND-ROLLED-LZW image decode, graded end-to-end (r8): the corpus's
+    """HAND-ROLLED-LZW image decode, graded end-to-end: the corpus's
     documents render as real GIF89a files (digest-derived 8-bit
     grayscale pixels, 16xH) and the graded path must validate the
     signature, walk the logical screen descriptor + 256-entry color
@@ -1233,10 +1037,10 @@ def d7m_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional probes (first/last pixel) that catch ordering bugs a
     commutative sum would forgive.
 
-    Scale shape (r10): the ENCODE runs at ingest — ``gif_store_dir``
+    Scale shape: the ENCODE runs at ingest — ``gif_store_dir``
     materializes the rendered payloads once per corpus generation (the
     d8g durable-index convention; production media tables store encoded
-    bytes, per the r8 verdict's framing) — so the graded serving path is
+    bytes) — so the graded serving path is
     ONE decode-only mapInPandas over real GIF bytes, vectorized across
     the whole Arrow batch by the table-gather LZW decoder
     (``_lzw_decompress_batch``: fixed-width fast path + scalar fallback,
@@ -1296,79 +1100,35 @@ def d7m_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7n_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio FEATURE-EXTRACTION stage, graded end-to-end (r8): the step a
-    training pipeline runs after codec decode — frame the PCM stream on
-    the standard STFT grid (frame 16, hop 8: 50% overlap) and emit
-    per-frame integer features (energy = sum x^2, peak, zero-crossing
-    count with the strict-sign-flip convention). Stage 1 renders the d7k
-    mu-law WAV; stage 2 REALLY decodes it (RIFF walk + G.711 expansion)
-    and frames with numpy stride tricks.
+    """Audio FEATURE-EXTRACTION stage, graded end-to-end
+    (`_render_decode`): the step a training pipeline runs after codec
+    decode — frame the PCM stream on the standard STFT grid (frame 16,
+    hop 8: 50% overlap) and emit per-frame integer features (energy =
+    sum x^2, peak, zero-crossing count with the strict-sign-flip
+    convention). Stage 1 renders the d7k mu-law WAV (`_mulaw_wav`); stage
+    2 REALLY decodes it (RIFF walk + G.711 expansion) and frames with
+    numpy fancy indexing.
 
     Unlike d7k/d7l (per-doc aggregates) this emits the per-frame feature
     MATRIX — the row-explosion shape (|docs| x |frames|) a downstream
-    audio-quality filter consumes. Scale shape: two-stage mapInPandas,
-    Arrow batches, ZERO shuffles — framing multiplies rows inside the
+    audio-quality filter consumes; framing multiplies rows inside the
     executor, never through an exchange."""
-    from collections.abc import Iterator
+    frame, hop = 16, 8
 
-    from ..sources.multimodal import (
-        multimodal_frame,
-        mulaw_encode,
-        wav_decode_samples,
-        wav_encode_mulaw,
-    )
+    def decode(wav: bytes) -> list:
+        s = wav_decode_samples(wav)[2].astype(np.int64).ravel()
+        nf = (len(s) - frame) // hop + 1
+        w = s[np.arange(frame)[None, :] + hop * np.arange(nf)[:, None]]
+        return list(zip(
+            range(nf),
+            (w * w).sum(axis=1).tolist(),
+            np.abs(w).max(axis=1).tolist(),
+            ((w[:, :-1] * w[:, 1:]) < 0).sum(axis=1).tolist(),
+        ))
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))
-                ns = 48 + n % 32
-                digest = hashlib.md5(b).digest()
-                x = np.frombuffer(
-                    (digest * ((ns // 16) + 1))[:ns], dtype=np.uint8
-                ).astype(np.int64)
-                smp = (1 - 2 * (x & 1)) * (
-                    ((8 * ((x >> 1) & 15) + 132) << (x >> 5)) - 132
-                )
-                payloads.append(
-                    wav_encode_mulaw(mulaw_encode(smp.astype(np.int16)), 8000)
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "wav": payloads})
-
-    def featurize(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        FRAME, HOP = 16, 8
-        for batch in frames:
-            rows = {
-                "doc_id": [], "frame_idx": [], "energy": [],
-                "peak": [], "zcr": [],
-            }
-            for doc_id, wav in zip(batch["doc_id"], batch["wav"]):
-                _rate, _ch, pcm = wav_decode_samples(wav)
-                s = pcm.astype(np.int64).ravel()
-                nf = (len(s) - FRAME) // HOP + 1
-                idx = np.arange(FRAME)[None, :] + HOP * np.arange(nf)[:, None]
-                w = s[idx]  # (nf, FRAME) frame matrix
-                rows["doc_id"].extend([doc_id] * nf)
-                rows["frame_idx"].extend(range(nf))
-                rows["energy"].extend((w * w).sum(axis=1).tolist())
-                rows["peak"].extend(np.abs(w).max(axis=1).tolist())
-                rows["zcr"].extend(
-                    ((w[:, :-1] * w[:, 1:]) < 0).sum(axis=1).tolist()
-                )
-            yield pd.DataFrame(rows)
-
-    mm = multimodal_frame(spark, sf_dir)
-    wavs = mm.mapInPandas(render, schema="doc_id long, wav binary")
-    return wavs.mapInPandas(
-        featurize,
-        schema="doc_id long, frame_idx int, energy long, peak int, zcr int",
+    return _render_decode(
+        multimodal_frame(spark, sf_dir), _mulaw_wav, decode,
+        "doc_id long, frame_idx int, energy long, peak int, zcr int",
     )
 
 
@@ -1397,125 +1157,70 @@ def d7n_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7o_format_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal INGEST QUARANTINE, graded end-to-end (r8): the
-    operational front door of a 100 TB media pipeline — classify every
-    binary payload by magic bytes (never by filename or metadata), run
-    the full structural validation for its format, and quarantine
-    corrupt files instead of crashing the job. Stage 1 renders each doc
-    as one of the five REAL container formats this engine speaks (PNG,
-    baseline JPEG, GIF89a, mu-law RIFF/WAVE, ISO-BMFF MP4; format =
-    doc_id % 5) and TRUNCATES every 17th payload to 24 bytes; stage 2 —
-    the graded path — sniffs and fully validates: PNG chunk walk with
-    CRC checks, JPEG marker scan + entropy decode, GIF palette + LZW
-    decompression, RIFF size walk + G.711 expansion, MP4 box walk with
-    the stsz-vs-mdat cross-check (the box walk itself tolerates
-    truncation, so validity asserts the required boxes exist and agree).
+    """Multimodal INGEST QUARANTINE, graded end-to-end (`_render_decode`):
+    the operational front door of a 100 TB media pipeline — classify
+    every binary payload by magic bytes (`sniff_format`, never by
+    filename or metadata), run the full structural validation for its
+    format, and quarantine corrupt files instead of crashing the job.
+    Stage 1 renders each doc as one of the five REAL container formats
+    this engine speaks (PNG, baseline JPEG, GIF89a, mu-law RIFF/WAVE,
+    ISO-BMFF MP4; format = doc_id % 5) and TRUNCATES every 17th payload
+    to 24 bytes; stage 2 — the graded path — sniffs and fully validates:
+    PNG chunk walk with CRC checks, JPEG marker scan + entropy decode, GIF
+    palette + LZW decompression, RIFF size walk + G.711 expansion, MP4
+    box walk with the stsz-vs-mdat cross-check (the box walk itself
+    tolerates truncation, so validity asserts the required boxes exist
+    and agree).
 
     The oracle knows every verdict from the construction; the engine has
     to EARN each one through real parsing, so all five codecs' accept
-    AND reject paths are graded in one query. Scale shape: two-stage
-    mapInPandas, Arrow batches, ZERO shuffles; per-file try/except is
-    the quarantine semantics (errors become rows, never task
-    failures)."""
-    from collections.abc import Iterator
+    AND reject paths are graded in one query. Per-file try/except is the
+    quarantine semantics (errors become rows, never task failures)."""
 
-    from ..sources.multimodal import (
-        gif_decode,
-        gif_encode_gray,
-        jpeg_decode_pixels,
-        jpeg_encode_gray,
-        mp4_encode_container,
-        mp4_parse_meta,
-        mulaw_encode,
-        multimodal_frame,
-        png_decode,
-        png_encode_gray,
-        wav_decode_samples,
-        wav_encode_mulaw,
-    )
-
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for batch in frames:
-            payloads = []
-            for doc_id, b in zip(batch["doc_id"], batch["payload"]):
-                dg = hashlib.md5(b).digest() * 3
-                f = int(doc_id) % 5
-                if f == 0:
-                    data = png_encode_gray(dg[:48], 8, 6)
-                elif f == 1:
-                    data = jpeg_encode_gray([dg[i % 48] for i in range(128)], 16, 8)
-                elif f == 2:
-                    data = gif_encode_gray(dg[:48], 8, 6)
-                elif f == 3:
-                    smp = (
-                        np.frombuffer(dg[:48], dtype=np.uint8).astype(np.int64)
-                        * 64 - 8000
-                    )
-                    data = wav_encode_mulaw(
-                        mulaw_encode(smp.astype(np.int16)), 8000
-                    )
-                else:
-                    data = mp4_encode_container(
-                        90, 30, 64, 48, [8 + dg[0] % 8, 8 + dg[1] % 8]
-                    )
-                if int(doc_id) % 17 == 0:
-                    data = data[:24]
-                payloads.append(data)
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "blob": payloads})
-
-    _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-    def sniff_validate(data: bytes) -> tuple[str, int]:
-        if data[:8] == _PNG_SIG:
-            fmt = "png"
-        elif data[:2] == b"\xff\xd8":
-            fmt = "jpeg"
-        elif data[:6] in (b"GIF87a", b"GIF89a"):
-            fmt = "gif"
-        elif data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-            fmt = "wav"
-        elif data[4:8] == b"ftyp":
-            fmt = "mp4"
+    def encode(doc_id: int, payload: bytes) -> bytes:
+        dg = hashlib.md5(payload).digest() * 3
+        f = doc_id % 5
+        if f == 0:
+            data = png_encode(dg[:48], 8, 6)
+        elif f == 1:
+            data = jpeg_encode_gray([dg[i % 48] for i in range(128)], 16, 8)
+        elif f == 2:
+            data = gif_encode_gray(dg[:48], 8, 6)
+        elif f == 3:
+            smp = np.frombuffer(dg[:48], dtype=np.uint8).astype(np.int64) * 64 - 8000
+            data = wav_encode_mulaw(mulaw_encode(smp.astype(np.int16)), 8000)
         else:
-            return "unknown", 0
+            data = mp4_encode_container(90, 30, 64, 48, [8 + dg[0] % 8, 8 + dg[1] % 8])
+        return data[:24] if doc_id % 17 == 0 else data
+
+    def mp4_validate(data: bytes) -> None:
+        meta = mp4_parse_meta(data)
+        if any(
+            meta[k] is None
+            for k in ("timescale", "duration", "n_samples",
+                      "total_sample_bytes", "mdat_bytes")
+        ) or meta["total_sample_bytes"] != meta["mdat_bytes"]:
+            raise ValueError("MP4 lacks a required box or stsz disagrees with mdat")
+
+    validate = {
+        "png": png_decode, "jpeg": jpeg_decode_pixels, "gif": gif_decode,
+        "wav": wav_decode_samples, "mp4": mp4_validate,
+    }
+
+    def decode(blob: bytes) -> list:
+        fmt = sniff_format(blob)
+        if fmt is None:
+            return [("unknown", 0)]
         try:
-            if fmt == "png":
-                png_decode(data)
-            elif fmt == "jpeg":
-                jpeg_decode_pixels(data)
-            elif fmt == "gif":
-                gif_decode(data)
-            elif fmt == "wav":
-                wav_decode_samples(data)
-            else:
-                meta = mp4_parse_meta(data)
-                if any(
-                    meta[k] is None
-                    for k in ("timescale", "duration", "n_samples",
-                              "total_sample_bytes", "mdat_bytes")
-                ) or meta["total_sample_bytes"] != meta["mdat_bytes"]:
-                    return fmt, 0
+            validate[fmt](blob)
         except Exception:
-            return fmt, 0
-        return fmt, 1
+            return [(fmt, 0)]
+        return [(fmt, 1)]
 
-    def verdicts(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in frames:
-            rows = {"doc_id": [], "fmt": [], "valid": []}
-            for doc_id, blob in zip(batch["doc_id"], batch["blob"]):
-                fmt, valid = sniff_validate(bytes(blob))
-                rows["doc_id"].append(doc_id)
-                rows["fmt"].append(fmt)
-                rows["valid"].append(valid)
-            yield pd.DataFrame(rows)
-
-    mm = multimodal_frame(spark, sf_dir)
-    blobs = mm.mapInPandas(render, schema="doc_id long, blob binary")
-    return blobs.mapInPandas(verdicts, schema="doc_id long, fmt string, valid int")
+    return _render_decode(
+        multimodal_frame(spark, sf_dir), encode, decode,
+        "doc_id long, fmt string, valid int",
+    )
 
 
 @query(
@@ -1549,64 +1254,33 @@ def d7o_format_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7p_png_hand_inflate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fully LIBRARY-FREE image chain, graded end-to-end (r8): d7e's
-    PNG decode re-run with the hand-rolled DEFLATE inflate
-    (sources/multimodal.inflate — RFC 1950 zlib wrapper + RFC 1951
-    stored/fixed/dynamic-Huffman blocks, the LZ77 extra-bit tables, the
-    code-length meta-alphabet, overlap-copy back-references, Adler-32
-    verification) instead of stdlib zlib. With GIF's LZW already
+    """The fully LIBRARY-FREE image chain, graded end-to-end
+    (`_render_decode`): d7e's PNG decode re-run with the hand-rolled
+    DEFLATE inflate (sources/multimodal.inflate — RFC 1950 zlib wrapper
+    + RFC 1951 stored/fixed/dynamic-Huffman blocks, the LZ77 extra-bit
+    tables, the code-length meta-alphabet, overlap-copy back-references,
+    Adler-32 verification) instead of stdlib zlib. With GIF's LZW already
     hand-rolled, every compression layer the image path depends on is
-    now implemented in this repo; stdlib zlib remains the production
-    fast path (C beats Python), and this query PROVES the two agree on
-    genuine encoder output bit-for-bit — a wrong width bump, a
-    mis-ordered canonical code or a broken repeat symbol mismatches.
+    implemented in this repo; stdlib zlib remains the production fast
+    path (C beats Python), and this query PROVES the two agree on genuine
+    encoder output bit-for-bit — a wrong width bump, a mis-ordered
+    canonical code or a broken repeat symbol mismatches.
 
     Integer aggregates plus first/last positional probes (ordering bugs
-    a commutative sum would forgive). Same zero-shuffle two-stage
-    mapInPandas shape as the rest of the codec family."""
-    from collections.abc import Iterator
+    a commutative sum would forgive)."""
 
-    from ..sources.multimodal import inflate, multimodal_frame, png_decode, png_encode_gray
+    def encode(_doc_id: int, payload: bytes) -> bytes:
+        h = 2 + len(payload.decode("utf-8")) % 6
+        return png_encode(_digest_tile(payload, 16 * h), 16, h)
 
-    def render(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def decode(png: bytes) -> list:
+        w, h, _depth, _color, px = png_decode(png, raw_inflate=inflate)
+        return [(w, h, sum(px), sum(x * x for x in px), px[0], px[-1])]
 
-        for batch in frames:
-            payloads = []
-            for b in batch["payload"]:
-                n = len(b.decode("utf-8"))
-                h = 2 + n % 6
-                digest = hashlib.md5(b).digest()
-                payloads.append(png_encode_gray(digest * h, 16, h))
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "png": payloads})
-
-    def decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in frames:
-            rows = {
-                "doc_id": [], "width": [], "height": [], "sum_px": [],
-                "sum_sq": [], "first_px": [], "last_px": [],
-            }
-            for doc_id, png in zip(batch["doc_id"], batch["png"]):
-                w, h, _depth, _color, px = png_decode(
-                    bytes(png), raw_inflate=inflate
-                )
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_px"].append(sum(px))
-                rows["sum_sq"].append(sum(x * x for x in px))
-                rows["first_px"].append(px[0])
-                rows["last_px"].append(px[-1])
-            yield pd.DataFrame(rows)
-
-    mm = multimodal_frame(spark, sf_dir)
-    pngs = mm.mapInPandas(render, schema="doc_id long, png binary")
-    return pngs.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, width int, height int, sum_px long, "
-            "sum_sq long, first_px int, last_px int"
-        ),
+    return _render_decode(
+        multimodal_frame(spark, sf_dir), encode, decode,
+        "doc_id long, width int, height int, sum_px long, "
+        "sum_sq long, first_px int, last_px int",
     )
 
 
@@ -1642,17 +1316,17 @@ def d7p_png_hand_inflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("D7", "A33", "P2"),
 )
 def d7q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BMP (Windows DIB) image decode, graded end-to-end (r9 — the sixth
-    real container in the codec library): each document renders as an
+    """BMP (Windows DIB) image decode, graded end-to-end (the sixth real
+    container in the codec library): each document renders as an
     8-bit palettized BMP (digest-derived grayscale, 16xH) and the graded
     path must validate both headers, walk the BGRA palette, strip the
     4-byte row padding and RE-FLIP the bottom-up rows. The positional
     probes (first/last pixel) are what catch a missing flip — sum/peak
     are row-order-blind, first_px is not.
 
-    Scale shape: ONE fused mapInPandas (the d7m r9 shape — encoded bytes
-    never cross Arrow between stages), zero shuffles, per-doc
-    aggregation inside the stage."""
+    Scale shape: ONE fused mapInPandas (encoded bytes never cross Arrow
+    between stages), zero shuffles, per-doc aggregation inside the
+    stage."""
     from collections.abc import Iterator
 
     from ..sources.multimodal import bmp_decode, bmp_encode_gray, multimodal_frame
@@ -1938,7 +1612,8 @@ def d7s_image_pixel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bmp_encode_gray,
         multimodal_frame,
         png_decode_gray,
-        png_encode_gray,
+        png_encode,
+        sniff_format,
     )
 
     def render_decode(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1950,13 +1625,13 @@ def d7s_image_pixel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 prefix = bytes(b).decode("utf-8")[:40].encode("utf-8")
                 px = hashlib.md5(prefix).digest() * 8
                 img = (
-                    png_encode_gray(px, 16, 8)
+                    png_encode(px, 16, 8)
                     if doc_id % 2 == 0
                     else bmp_encode_gray(px, 16, 8)
                 )
                 # graded half: sniff + decode + canonicalize (no peeking
                 # at px — the digest must come from the decoded bytes)
-                if img[:8] == b"\x89PNG\r\n\x1a\n":
+                if sniff_format(img) == "png":
                     w, h, _, gray = png_decode_gray(img)
                     fmt = "png"
                 else:

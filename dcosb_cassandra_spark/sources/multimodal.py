@@ -2,27 +2,30 @@
 as opaque ``binary`` columns with typed metadata structs, processed by
 Arrow-batched ``mapInPandas``.
 
-The container has no image/audio codec libraries (environment constraint),
-so coverage is split by what's honestly computable: the AUDIO path (d7d)
-does real numpy math on real bytes, the PNG image path (d7e) does a REAL
-encode+decode with stdlib zlib/struct (`png_encode`/`png_decode` below —
-signature, chunk CRCs, IDAT inflate, all five scanline filters, 8-bit
-gray/RGB/RGBA), the JPEG
-path does a REAL container+EXIF metadata parse (`jpeg_parse_meta`: marker
-walk, JFIF/TIFF-IFD decode, entropy-segment scan) AND a real baseline
-pixel codec (r8: `jpeg_encode_gray`/`jpeg_encode_color`/
-`jpeg_decode_pixels` — FDCT/Huffman encode, full entropy decode + dequant
-+ IDCT, interleaved-MCU 4:2:0/4:2:2 chroma with replication upsampling,
-JFIF YCbCr<->RGB), and only video
-keeps the fingerprint STUB (``decode_image_stub``: deterministic fake
-dims from the payload's md5 — plumbing real and oracle-checkable, body
-swapped for ffmpeg in a real deployment).
+The container has no image/audio codec libraries, so every codec below
+is written with stdlib ``struct``/``zlib`` and numpy alone: PNG (chunk
+CRCs, IDAT inflate, all five scanline filters; plus a hand-rolled RFC
+1951 ``inflate``), baseline JPEG (marker + EXIF parse, FDCT/Huffman
+encode, entropy decode + IDCT, 4:2:0/4:2:2/4:4:4 interleaved MCUs),
+ISO-BMFF MP4 (box walk, MJPEG tracks), RIFF/WAVE (PCM, G.711 mu-law,
+IMA ADPCM), GIF89a (hand-rolled LZW) and 8-bit BMP. Only the fingerprint
+stubs (``decode_image_stub`` and friends: deterministic fake dims from
+the payload's md5) stand in for inter-coded video, whose codecs are out
+of reach; their plumbing is real and oracle-checkable.
+
+Every parser holds one contract: structural corruption raises
+ValueError, an unsupported variant NotImplementedError (`_parser`).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import struct
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,7 +40,7 @@ def multimodal_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (doc_id, payload binary, meta struct). Stands in for a
     table of blob-typed media cells (Cassandra `blob` ≈ BinaryType,
     SURVEY §1.2). Codec stages inherit the scan's partitioning on
-    purpose: a core-width repartition was measured (r9, d7m at sf0.1)
+    purpose: a core-width repartition was measured (d7m at sf0.1)
     to save nothing at 4 scan partitions and to COST 2× at width 64 —
     per-task Python round-trips dominate tiny partitions; at 100 TB the
     source layout provides the parallelism."""
@@ -59,7 +62,6 @@ def _decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
     A real decoder would call PIL here — same signature, same batch shape.
     NOTE: would raise NotImplementedError for real media kinds; text/plain
     payloads take the deterministic-fake path so the plumbing is testable."""
-    import hashlib
 
     def dims(b: bytes) -> tuple[int, int]:
         h = hashlib.md5(b).hexdigest()
@@ -104,7 +106,6 @@ def resize_image_stub(target_w: int, target_h: int):
     deterministic fingerprint md5(md5(payload) || '<w>x<h>') — a real
     deployment swaps the body for PIL's resize and hashes the actual
     output bytes. Signature, schema, and batch shape are the real ones."""
-    import hashlib
 
     def body(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in frames:
@@ -131,7 +132,6 @@ def sample_frames_stub(every_k: int, bytes_per_frame: int = 32):
     payload is treated as n_bytes // bytes_per_frame frames; every k-th
     frame is 'extracted' as md5(payload_md5 ':' idx). Real deployment:
     ffmpeg keyframe extraction with the same batch shape."""
-    import hashlib
 
     def body(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in frames:
@@ -170,7 +170,6 @@ def audio_frame_energy_stub(frame_bytes: int = 32):
     vectorized per Arrow batch), so the whole Python path is
     oracle-checkable from the characters' code points — a real deployment
     swaps only the sample decode (s16le/flac) for the byte view."""
-    import numpy as np
 
     def body(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in frames:
@@ -199,45 +198,51 @@ def audio_frame_energy_stub(frame_bytes: int = 32):
     return body
 
 
-# ---------------------------------------------------------------------------
-# REAL image path (no codec libraries needed): PNG is writable and readable
-# with stdlib zlib + struct alone, so the D7 image stage can do genuine
-# decode work on genuine image bytes — signature check, chunk walk, CRC
-# verification, IDAT inflate, scanline unfilter, pixel statistics — instead
-# of the fingerprint stub above (which remains the documented stand-in for
-# codec-bound formats like JPEG).
-# ---------------------------------------------------------------------------
+def _parser(fn):
+    """Hold the parser ``fn`` to the module's contract: structural
+    corruption raises ValueError. On a truncated or bit-flipped stream a
+    read otherwise fails first wherever the damage lands — struct.error
+    on a short unpack, IndexError past a buffer or table, KeyError on an
+    undefined table id, zlib.error in a damaged IDAT — and each becomes a
+    ValueError naming the parser. NotImplementedError (an unsupported
+    variant) passes through."""
+
+    @functools.wraps(fn)
+    def parse(data, *args, **kwargs):
+        try:
+            return fn(data, *args, **kwargs)
+        except (struct.error, IndexError, KeyError, zlib.error) as e:
+            raise ValueError(
+                f"{fn.__name__}: corrupt stream ({type(e).__name__}: {e})"
+            ) from e
+
+    return parse
+
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def png_encode_gray(pixels, width: int, height: int) -> bytes:
-    """Minimal valid 8-bit grayscale PNG: IHDR + one zlib IDAT (filter 0
-    per scanline) + IEND, CRCs included. `pixels` is a length w*h uint8
-    sequence, row-major."""
-    import struct
-    import zlib
+def sniff_format(data: bytes) -> str | None:
+    """The container of ``data`` by its magic bytes alone (never by name
+    or metadata): "png", "jpeg", "gif", "wav", "mp4", or None."""
+    if data[:8] == _PNG_SIG:
+        return "png"
+    if data[:2] == b"\xff\xd8":
+        return "jpeg"
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        return "gif"
+    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
+        return "wav"
+    if data[4:8] == b"ftyp":
+        return "mp4"
+    return None
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
 
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = bytearray()
-    mv = memoryview(bytes(pixels))
-    for y in range(height):
-        raw += b"\x00" + mv[y * width : (y + 1) * width]
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
+# ---------------------------------------------------------------------------
+# PNG: writable and readable with stdlib zlib + struct alone, so the D7
+# image stage does genuine decode work on genuine image bytes — signature
+# check, chunk walk, CRC verification, IDAT inflate, scanline unfilter.
+# ---------------------------------------------------------------------------
 
 #: PNG color type → channels (8-bit depth only)
 _PNG_CHANNELS = {0: 1, 2: 3, 6: 4}
@@ -261,9 +266,6 @@ def png_encode(
     real encoders choose per-row; a fixed choice exercises each decoder
     branch deterministically. ``pixels`` is w*h*channels uint8 bytes,
     row-major, channel-interleaved."""
-    import struct
-    import zlib
-
     ch = _PNG_CHANNELS[color_type]
     rowbytes = width * ch
     mv = memoryview(bytes(pixels))
@@ -300,6 +302,7 @@ def png_encode(
     )
 
 
+@_parser
 def png_decode(data: bytes, raw_inflate=None):
     """Parse + decode an 8-bit gray/RGB/RGBA PNG: validates the signature
     and every chunk CRC, reads IHDR, inflates the IDAT stream, reverses
@@ -312,9 +315,6 @@ def png_decode(data: bytes, raw_inflate=None):
     (the C fast path); pass this module's hand-rolled ``inflate`` (RFC
     1950/1951) for the fully library-free chain — both are graded (d7e
     vs d7p) and bit-identical by construction."""
-    import struct
-    import zlib
-
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG: bad signature")
     pos, width = 8, None
@@ -386,20 +386,19 @@ def png_decode_gray(data: bytes):
 
 
 def resize_image_real(data: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL image resize (r8 — the operation `resize_image_stub`
-    fingerprints): sniff the container (PNG signature / JPEG SOI), decode
+    """REAL image resize (the operation `resize_image_stub`
+    fingerprints): sniff the container (`sniff_format`), decode
     with the real codec, nearest-neighbor resample (the deterministic
     kernel — a production pipeline swaps in area/lanczos), re-encode as
     PNG (lossless, so the output is exactly the resampled pixels).
     Gray stays gray; JPEG color decodes to YCbCr and is converted to RGB
     before the resample so the output PNG is directly viewable."""
-    import numpy as np
-
-    if data[:8] == _PNG_SIG:
+    fmt = sniff_format(data)
+    if fmt == "png":
         w, h, _, color, px = png_decode(data)
         ch = _PNG_CHANNELS[color]
         arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, ch)
-    elif data[:2] == b"\xff\xd8":
+    elif fmt == "jpeg":
         w, h, ch, px = jpeg_decode_pixels(data)
         arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
         if ch == 3:
@@ -420,8 +419,8 @@ def resize_image_real(data: bytes, out_w: int, out_h: int) -> bytes:
 # work, so dims / precision / component layout / EXIF orientation are
 # honestly extractable (the same metadata pass PIL's `Image.open` +
 # `_getexif` performs before any pixel work). The entropy DECODE
-# (Huffman + dequant + IDCT) is real too as of r8 — see the baseline
-# codec section below (`jpeg_encode_gray` / `jpeg_decode_pixels`).
+# (Huffman + dequant + IDCT) is real too — see the baseline codec
+# section below (`jpeg_encode_gray` / `jpeg_decode_pixels`).
 # ---------------------------------------------------------------------------
 
 #: Annex K.1 luminance quantization table (public JPEG spec constant),
@@ -434,6 +433,48 @@ _JPEG_DQT_LUMA = bytes(
         49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99,
     ]
 )
+
+
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    """One length-carrying marker segment: FF, marker, the big-endian
+    length (counting itself), body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _jpeg_segments(data: bytes) -> Iterator[tuple]:
+    """The one JPEG marker walk: check SOI, then yield ``(marker, body,
+    pos)`` for each length-carrying segment starting at offset ``pos``
+    (standalone TEM/RSTn markers are stepped over) and ``(0xD9, b"",
+    pos)`` for EOI, where the walk ends. Each SOS is followed by ``(None,
+    entropy, start)``: the entropy-coded bytes up to the next true marker,
+    FF00 (a stuffed data byte) and FFD0-D7 (restart markers) counted in."""
+    if data[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG: missing SOI")
+    pos = 2
+    while pos < len(data):
+        if data[pos] != 0xFF:
+            raise ValueError(f"expected marker at offset {pos}")
+        marker = data[pos + 1]
+        if marker == 0xD9:
+            yield marker, b"", pos
+            return
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
+            pos += 2
+            continue
+        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
+        body = data[pos + 4 : pos + 2 + length]
+        if len(body) != length - 2:
+            raise ValueError("truncated segment")
+        yield marker, body, pos
+        pos += 2 + length
+        if marker == 0xDA:
+            i = pos
+            while i < len(data) - 1 and not (
+                data[i] == 0xFF and data[i + 1] != 0x00 and not 0xD0 <= data[i + 1] <= 0xD7
+            ):
+                i += 1
+            yield None, data[pos:i], pos
+            pos = i
 
 
 def jpeg_encode_container(
@@ -451,11 +492,6 @@ def jpeg_encode_container(
     (a real encoder's Huffman bitstream goes here), and EOI. Every marker,
     length field, and IFD offset is spec-correct, so any conformant
     metadata parser reads it."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
     app0 = b"JFIF\x00" + bytes([1, 2, 0]) + struct.pack(">HH", 1, 1) + bytes([0, 0])
     e = "<" if byte_order == "II" else ">"
     # TIFF: byte order, magic 42, IFD0 at offset 8; IFD0 = 1 entry
@@ -483,53 +519,39 @@ def jpeg_encode_container(
     entropy = bytes((i * 37 + 13) % 255 for i in range(entropy_len))  # never 0xFF
     return (
         b"\xff\xd8"
-        + seg(0xE0, app0)
-        + seg(0xE1, app1)
-        + seg(0xDB, dqt)
-        + seg(0xC0, sof0)
-        + seg(0xC4, dht)
-        + seg(0xDA, sos)
+        + _jpeg_seg(0xE0, app0)
+        + _jpeg_seg(0xE1, app1)
+        + _jpeg_seg(0xDB, dqt)
+        + _jpeg_seg(0xC0, sof0)
+        + _jpeg_seg(0xC4, dht)
+        + _jpeg_seg(0xDA, sos)
         + entropy
         + b"\xff\xd9"
     )
 
 
+@_parser
 def jpeg_parse_meta(data: bytes) -> dict:
     """REAL JPEG metadata parse — the pre-pixel pass of any image loader:
-    verifies SOI, walks the marker stream honoring per-segment big-endian
-    length fields, parses JFIF (APP0 id + version), parses EXIF (APP1:
-    'Exif\\0\\0' preamble, TIFF byte order II/MM, magic 42, IFD0 entry walk
-    with endian-aware tag/type/count/value decode → Orientation), reads
-    SOF0/1/2 (precision, dims, component count, progressive flag), counts
-    DQT/DHT segments, and scans the post-SOS entropy segment with correct
-    0xFF00 byte-stuffing and RSTn handling until the next true marker.
-    Raises ValueError on structural corruption. Pixel reconstruction
-    lives in `jpeg_decode_pixels` (real as of r8, baseline 1x1
-    sampling)."""
-    import struct
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
+    walks the marker stream (`_jpeg_segments`: SOI, per-segment
+    big-endian lengths), parses JFIF (APP0 id + version), parses EXIF
+    (APP1: 'Exif\\0\\0' preamble, TIFF byte order II/MM, magic 42, IFD0
+    entry walk with endian-aware tag/type/count/value decode →
+    Orientation), reads SOF0/1/2 (precision, dims, component count,
+    progressive flag), counts DQT/DHT segments and measures the post-SOS
+    entropy segment. Raises ValueError on structural corruption. Pixel
+    reconstruction lives in `jpeg_decode_pixels`."""
     meta = {
         "width": None, "height": None, "precision": None, "n_components": None,
         "orientation": None, "exif_byte_order": None, "jfif_version": None,
         "n_dqt": 0, "n_dht": 0, "entropy_bytes": 0, "progressive": False,
     }
-    pos = 2
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at offset {pos}")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
+    for marker, body, _pos in _jpeg_segments(data):
+        if marker == 0xD9:
             return meta
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # standalone
-            pos += 2
-            continue
-        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        body = data[pos + 4 : pos + 2 + length]
-        if len(body) != length - 2:
-            raise ValueError("truncated segment")
-        if marker == 0xE0 and body[:5] == b"JFIF\x00":
+        if marker is None:
+            meta["entropy_bytes"] = len(body)
+        elif marker == 0xE0 and body[:5] == b"JFIF\x00":
             meta["jfif_version"] = f"{body[5]}.{body[6]:02d}"
         elif marker == 0xE1 and body[:6] == b"Exif\x00\x00":
             tiff = body[6:]
@@ -559,34 +581,17 @@ def jpeg_parse_meta(data: bytes) -> dict:
                 struct.unpack_from(">BHHB", body, 0)
             )
             meta["progressive"] = marker == 0xC2
-        elif marker == 0xDA:
-            # entropy-coded segment: scan to the next true marker,
-            # treating FF00 (stuffed data byte) and FFD0-D7 (restart
-            # markers) as part of the segment.
-            i = pos + 2 + length
-            n = 0
-            while i < len(data) - 1:
-                if data[i] == 0xFF and data[i + 1] != 0x00 and not (
-                    0xD0 <= data[i + 1] <= 0xD7
-                ):
-                    break
-                n += 1
-                i += 1
-            meta["entropy_bytes"] = n
-            pos = i
-            continue
-        pos += 2 + length
     raise ValueError("JPEG missing EOI")
 
 
 # ---------------------------------------------------------------------------
-# REAL baseline-JPEG pixel codec (r8 — closes the judge's last D7 honesty
-# gap, stdlib+numpy only): FDCT/quantize/zig-zag/Huffman on the encode
-# side, the full Huffman entropy decode + dequantize + IDCT + level shift
-# on the decode side, per ITU-T T.81 (the public JPEG spec). Baseline
-# sequential, 8-bit; grayscale, 4:4:4, and subsampled 4:2:0/4:2:2
-# interleaved-MCU layouts (replication chroma upsampling + JFIF
-# YCbCr<->RGB helpers) — the full baseline pixel path, no codec libs.
+# REAL baseline-JPEG pixel codec (stdlib+numpy only): FDCT/quantize/
+# zig-zag/Huffman on the encode side, the full Huffman entropy decode +
+# dequantize + IDCT + level shift on the decode side, per ITU-T T.81 (the
+# public JPEG spec). Baseline sequential, 8-bit; grayscale, 4:4:4, and
+# subsampled 4:2:0/4:2:2 interleaved-MCU layouts (replication chroma
+# upsampling + JFIF YCbCr<->RGB helpers) — the full baseline pixel path,
+# no codec libs.
 # ---------------------------------------------------------------------------
 
 #: zig-zag scan order: zigzag index -> raster index (T.81 Figure 5)
@@ -648,8 +653,6 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
 
 
 def _dct_matrix():
-    import numpy as np
-
     n = np.arange(8)
     m = np.cos((2 * n[None, :] + 1) * n[:, None] * np.pi / 16) * 0.5
     m[0, :] *= 1 / np.sqrt(2)
@@ -698,8 +701,6 @@ def _encode_block(w, block, m, q, dc_codes, ac_codes, prev_dc: int) -> int:
     """FDCT + quantize + zig-zag + Huffman-encode ONE level-shifted 8x8
     block into BitWriter ``w``; returns the block's DC for the caller's
     difference chain."""
-    import numpy as np
-
     coeffs = m @ block @ m.T
     quant = np.rint(coeffs / q).astype(np.int64)
     zz = [int(quant.flat[r]) for r in _ZIGZAG]
@@ -727,29 +728,18 @@ def _encode_block(w, block, m, q, dc_codes, ac_codes, prev_dc: int) -> int:
     return zz[0]
 
 
-def jpeg_encode_gray(
-    pixels, width: int, height: int, restart_interval: int = 0
+def _jpeg_encode(
+    components, width: int, height: int, restart_interval: int = 0
 ) -> bytes:
-    """REAL baseline-JPEG encoder, grayscale, stdlib+numpy: level shift,
-    8x8 orthonormal FDCT, quantize (`_JPEG_DQT_DC8`), zig-zag, DC
-    difference coding + AC run-length coding with the Annex-K luminance
-    Huffman tables, 0xFF byte stuffing, final-byte 1-padding. Container:
-    SOI, DQT, [DRI], SOF0 (1 component, 1x1), DHT (DC class 0 + AC class
-    0), SOS, entropy data, EOI. ``restart_interval`` > 0 emits a DRI
-    segment and an RSTm marker every that-many MCUs (byte-aligned, DC
-    prediction reset — T.81 E.1.4, what real encoders emit for error
-    resilience). width/height must be multiples of 8 (the corpus
-    construction guarantees it; general edge replication is an encoder
-    nicety, not a decoder requirement)."""
-    import struct
-
-    import numpy as np
-
-    if width % 8 or height % 8:
-        raise ValueError("jpeg_encode_gray requires dims that are multiples of 8")
-    px = np.asarray(
-        np.frombuffer(bytes(pixels), dtype=np.uint8), dtype=np.float64
-    ).reshape(height, width)
+    """The one baseline-JPEG writer behind `jpeg_encode_gray` and
+    `jpeg_encode_color`. ``components`` is ``[(plane, h, v)]``: level-
+    shifted float planes (component i gets id i+1) with their h x v
+    sampling factors. Each MCU codes h*v blocks of every component in
+    turn (T.81 A.2.3), all through one quant table (`_JPEG_DQT_DC8`) and
+    the Annex-K luminance Huffman tables. ``restart_interval`` > 0 emits
+    a DRI segment and an RSTm marker every that-many MCUs (byte-aligned,
+    DC prediction reset — T.81 E.1.4). Container: SOI, DQT, [DRI], SOF0,
+    DHT (DC class 0 + AC class 0), SOS, entropy data, EOI."""
     m = _dct_matrix()
     q = np.empty(64)
     for zz, raster in enumerate(_ZIGZAG):
@@ -758,45 +748,65 @@ def jpeg_encode_gray(
     dc_codes = _huff_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
     ac_codes = _huff_codes(_AC_LUMA_BITS, _AC_LUMA_VALS)
     w = _BitWriter()
-    prev_dc = 0
-    n_mcus = (height // 8) * (width // 8)
-    rst = 0
-    for mcu in range(n_mcus):
-        by, bx = divmod(mcu, width // 8)
+    prev = [0] * len(components)
+    mcus_x = width // (8 * max(h for _, h, _ in components))
+    mcus_y = height // (8 * max(v for _, _, v in components))
+    for mcu in range(mcus_x * mcus_y):
+        my, mx = divmod(mcu, mcus_x)
         if restart_interval and mcu and mcu % restart_interval == 0:
-            w.restart(rst)
-            rst += 1
-            prev_dc = 0
-        block = px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-        prev_dc = _encode_block(w, block, m, q, dc_codes, ac_codes, prev_dc)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dri = seg(0xDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    dqt = bytes([0]) + _JPEG_DQT_DC8
-    sof0 = struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
+            w.restart(mcu // restart_interval - 1)
+            prev = [0] * len(components)
+        for ci, (plane, h, v) in enumerate(components):
+            for bv in range(v):
+                for bh in range(h):
+                    y0, x0 = (my * v + bv) * 8, (mx * h + bh) * 8
+                    prev[ci] = _encode_block(
+                        w, plane[y0 : y0 + 8, x0 : x0 + 8],
+                        m, q, dc_codes, ac_codes, prev[ci],
+                    )
+    ids = range(1, len(components) + 1)
+    sof0 = struct.pack(">BHHB", 8, height, width, len(components)) + b"".join(
+        bytes([i, (h << 4) | v, 0]) for i, (_, h, v) in zip(ids, components)
+    )
     dht = (
         bytes([0x00]) + bytes(_DC_LUMA_BITS) + bytes(_DC_LUMA_VALS)
         + bytes([0x10]) + bytes(_AC_LUMA_BITS) + bytes(_AC_LUMA_VALS)
     )
-    sos = bytes([1]) + bytes([1, 0x00]) + bytes([0, 63, 0])
+    sos = bytes([len(components)]) + b"".join(bytes([i, 0x00]) for i in ids)
+    dri = struct.pack(">H", restart_interval)
     return (
         b"\xff\xd8"
-        + seg(0xDB, dqt)
-        + dri
-        + seg(0xC0, sof0)
-        + seg(0xC4, dht)
-        + seg(0xDA, sos)
+        + _jpeg_seg(0xDB, bytes([0]) + _JPEG_DQT_DC8)
+        + (_jpeg_seg(0xDD, dri) if restart_interval else b"")
+        + _jpeg_seg(0xC0, sof0)
+        + _jpeg_seg(0xC4, dht)
+        + _jpeg_seg(0xDA, sos + bytes([0, 63, 0]))
         + w.flush()
         + b"\xff\xd9"
     )
 
 
+def jpeg_encode_gray(
+    pixels, width: int, height: int, restart_interval: int = 0
+) -> bytes:
+    """REAL baseline-JPEG encoder, grayscale, stdlib+numpy: level shift,
+    8x8 orthonormal FDCT, quantize (`_JPEG_DQT_DC8`), zig-zag, DC
+    difference coding + AC run-length coding with the Annex-K luminance
+    Huffman tables, 0xFF byte stuffing, final-byte 1-padding — one
+    component, 1x1 sampling (`_jpeg_encode`). ``restart_interval`` > 0
+    adds DRI + RSTm markers, what real encoders emit for error
+    resilience. width/height must be multiples of 8 (the corpus
+    construction guarantees it; general edge replication is an encoder
+    nicety, not a decoder requirement)."""
+    if width % 8 or height % 8:
+        raise ValueError("jpeg_encode_gray requires dims that are multiples of 8")
+    px = np.frombuffer(bytes(pixels), dtype=np.uint8).astype(np.float64)
+    plane = px.reshape(height, width) - 128.0
+    return _jpeg_encode([(plane, 1, 1)], width, height, restart_interval)
+
+
 def rgb_to_ycbcr(rgb):
     """JFIF (BT.601 full-range) color transform, float in → float out."""
-    import numpy as np
-
     r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
     y = 0.299 * r + 0.587 * g + 0.114 * b
     cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
@@ -806,8 +816,6 @@ def rgb_to_ycbcr(rgb):
 
 def ycbcr_to_rgb(ycbcr):
     """Inverse JFIF color transform; clamps to [0, 255] uint8."""
-    import numpy as np
-
     arr = np.asarray(ycbcr, dtype=np.float64)
     y, cb, cr = arr[..., 0], arr[..., 1], arr[..., 2]
     r = y + 1.402 * (cr - 128.0)
@@ -817,19 +825,15 @@ def ycbcr_to_rgb(ycbcr):
 
 
 def jpeg_encode_color(rgb, width: int, height: int, subsample: str = "420") -> bytes:
-    """REAL baseline-JPEG COLOR encoder (r8 follow-through): RGB →
-    JFIF YCbCr, chroma box-downsampled per ``subsample`` ("420", "422" or
-    "444"), MCU-interleaved entropy coding (T.81 A.2.3 — h*v luma blocks
-    then the chroma blocks per MCU), one shared quant + Huffman table set
-    for all components (legal baseline; Annex-K luminance tables). Dims
-    must be multiples of the MCU size (16x16 for 4:2:0, 16x8 for 4:2:2,
-    8x8 for 4:4:4). `jpeg_decode_pixels` round-trips the output —
+    """REAL baseline-JPEG COLOR encoder: RGB → JFIF YCbCr, chroma
+    box-downsampled per ``subsample`` ("420", "422" or "444"),
+    MCU-interleaved entropy coding (`_jpeg_encode`: h*v luma blocks then
+    one block per chroma plane per MCU), one shared quant + Huffman table
+    set for all components (legal baseline; Annex-K luminance tables).
+    Dims must be multiples of the MCU size (16x16 for 4:2:0, 16x8 for
+    4:2:2, 8x8 for 4:4:4). `jpeg_decode_pixels` round-trips the output —
     decoder-side replication upsampling pairs with the box downsample
     here, so flat-chroma regions are loss-free through the chroma path."""
-    import struct
-
-    import numpy as np
-
     hs, vs = {"420": (2, 2), "422": (2, 1), "444": (1, 1)}[subsample]
     if width % (8 * hs) or height % (8 * vs):
         raise ValueError(f"dims must be multiples of the {subsample} MCU size")
@@ -837,62 +841,13 @@ def jpeg_encode_color(rgb, width: int, height: int, subsample: str = "420") -> b
         np.frombuffer(bytes(rgb), dtype=np.uint8), dtype=np.float64
     ).reshape(height, width, 3)
     ycc = rgb_to_ycbcr(rgb)
-    y_plane = ycc[..., 0] - 128.0
-    chroma = []
+    components = [(ycc[..., 0] - 128.0, hs, vs)]
     for ci in (1, 2):
         p = ycc[..., ci]
         if hs > 1 or vs > 1:  # box average over the sampling footprint
             p = p.reshape(height // vs, vs, width // hs, hs).mean(axis=(1, 3))
-        chroma.append(p - 128.0)
-    m = _dct_matrix()
-    q = np.empty(64)
-    for zzi, raster in enumerate(_ZIGZAG):
-        q[raster] = _JPEG_DQT_DC8[zzi]
-    q = q.reshape(8, 8)
-    dc_codes = _huff_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
-    ac_codes = _huff_codes(_AC_LUMA_BITS, _AC_LUMA_VALS)
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(height // (8 * vs)):
-        for mx in range(width // (8 * hs)):
-            for bv in range(vs):  # luma: hs*vs blocks per MCU
-                for bh in range(hs):
-                    y0, x0 = (my * vs + bv) * 8, (mx * hs + bh) * 8
-                    prev[0] = _encode_block(
-                        w, y_plane[y0 : y0 + 8, x0 : x0 + 8],
-                        m, q, dc_codes, ac_codes, prev[0],
-                    )
-            for ci, p in enumerate(chroma, start=1):  # 1 block per chroma
-                y0, x0 = my * 8, mx * 8
-                prev[ci] = _encode_block(
-                    w, p[y0 : y0 + 8, x0 : x0 + 8],
-                    m, q, dc_codes, ac_codes, prev[ci],
-                )
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = bytes([0]) + _JPEG_DQT_DC8
-    sof0 = (
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, (hs << 4) | vs, 0])
-        + bytes([2, 0x11, 0])
-        + bytes([3, 0x11, 0])
-    )
-    dht = (
-        bytes([0x00]) + bytes(_DC_LUMA_BITS) + bytes(_DC_LUMA_VALS)
-        + bytes([0x10]) + bytes(_AC_LUMA_BITS) + bytes(_AC_LUMA_VALS)
-    )
-    sos = bytes([3]) + bytes([1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0])
-    return (
-        b"\xff\xd8"
-        + seg(0xDB, dqt)
-        + seg(0xC0, sof0)
-        + seg(0xC4, dht)
-        + seg(0xDA, sos)
-        + w.flush()
-        + b"\xff\xd9"
-    )
+        components.append((p - 128.0, 1, 1))
+    return _jpeg_encode(components, width, height)
 
 
 class _BitReader:
@@ -958,43 +913,27 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
+@_parser
 def jpeg_decode_pixels(data: bytes):
-    """REAL baseline-JPEG pixel decode (r8 — previously gated behind
-    NotImplementedError): walks the marker stream collecting DQT/DHT/
-    SOF0/SOS, Huffman-decodes the entropy segment (DC difference coding,
-    AC run-length with ZRL and EOB, 0xFF00 unstuffing), dequantizes,
-    un-zig-zags, applies the orthonormal 8x8 IDCT, level-shifts and
-    clamps. Supports baseline sequential 8-bit with ARBITRARY sampling
-    factors (grayscale, 4:4:4, 4:2:0/4:2:2 interleaved MCUs with
-    replication chroma upsampling). Returns (width, height,
-    n_components, bytes) with components interleaved per pixel in their
-    native color space (YCbCr for JFIF color — `ycbcr_to_rgb` converts)."""
-    import struct
-
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
+    """REAL baseline-JPEG pixel decode: walks the marker stream
+    (`_jpeg_segments`) collecting DQT/DHT/SOF0/DRI/SOS, Huffman-decodes
+    the entropy segment (DC difference coding, AC run-length with ZRL and
+    EOB, 0xFF00 unstuffing), dequantizes, un-zig-zags, applies the
+    orthonormal 8x8 IDCT, level-shifts and clamps. Supports baseline
+    sequential 8-bit with ARBITRARY sampling factors (grayscale, 4:4:4,
+    4:2:0/4:2:2 interleaved MCUs with replication chroma upsampling).
+    Returns (width, height, n_components, bytes) with components
+    interleaved per pixel in their native color space (YCbCr for JFIF
+    color — `ycbcr_to_rgb` converts)."""
     qtables: dict[int, list[int]] = {}
     hufflut: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     comps: list[tuple[int, int, int]] = []  # (comp id, sampling, qtable id)
     scan: list[tuple[int, int, int]] = []  # (comp id, dc table, ac table)
     width = height = None
     restart_interval = 0
-    pos = 2
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at offset {pos}")
-        marker = data[pos + 1]
+    for marker, body, pos in _jpeg_segments(data):
         if marker == 0xD9:
             raise ValueError("EOI before SOS")
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        body = data[pos + 4 : pos + 2 + length]
-        if len(body) != length - 2:
-            raise ValueError("truncated segment")
         if marker == 0xDB:
             i = 0
             while i < len(body):
@@ -1034,9 +973,8 @@ def jpeg_decode_pixels(data: bytes):
             for si in range(ns):
                 cid, tabs = body[1 + 2 * si : 3 + 2 * si]
                 scan.append((cid, tabs >> 4, tabs & 0x0F))
-            pos = pos + 2 + length
+            pos += 4 + len(body)  # the entropy segment starts here
             break
-        pos += 2 + length
     else:
         raise ValueError("JPEG missing SOS")
     if width is None or not scan:
@@ -1155,7 +1093,6 @@ def mp4_encode_container(
     (default: deterministic filler); ``codec`` adds an stsd
     VisualSampleEntry declaring the sample format (e.g. b"jpeg" for an
     MJPEG track, decodable by `mp4_decode_frames`)."""
-    import struct
 
     def box(fourcc: bytes, body: bytes) -> bytes:
         return struct.pack(">I", len(body) + 8) + fourcc + body
@@ -1223,78 +1160,82 @@ def mp4_encode_container(
     return ftyp + moov + mdat
 
 
+#: the container boxes the walk descends into
+_MP4_CONTAINERS = (b"moov", b"trak", b"mdia", b"minf", b"stbl")
+
+
+def _mp4_boxes(data: bytes, start: int = 0, end: int | None = None, depth: int = 0):
+    """The one ISO-BMFF box walk: yield ``(fourcc, body_start,
+    body_end)`` for every box of ``data[start:end]`` in file order,
+    descending the `_MP4_CONTAINERS` instead of yielding them. Honors
+    32-bit sizes, the size==1 64-bit largesize form, and size==0
+    (extends to the end of the enclosing box); a truncated header, a
+    size outside the enclosing box or nesting deeper than 16 raises
+    ValueError."""
+    end = len(data) if end is None else end
+    if depth > 16:
+        raise ValueError("box nesting too deep")
+    pos = start
+    while pos < end:
+        if end - pos < 8:
+            raise ValueError(f"truncated box header at offset {pos}")
+        (size,) = struct.unpack_from(">I", data, pos)
+        fourcc = data[pos + 4 : pos + 8]
+        hdr = 8
+        if size == 1:  # 64-bit largesize
+            (size,) = struct.unpack_from(">Q", data, pos + 8)
+            hdr = 16
+        elif size == 0:  # extends to end of enclosing scope
+            size = end - pos
+        if size < hdr or pos + size > end:
+            raise ValueError(f"bad box size {size} for {fourcc!r} at {pos}")
+        if fourcc in _MP4_CONTAINERS:
+            yield from _mp4_boxes(data, pos + hdr, pos + size, depth + 1)
+        else:
+            yield fourcc, pos + hdr, pos + size
+        pos += size
+
+
+@_parser
 def mp4_parse_meta(data: bytes) -> dict:
     """REAL ISO-BMFF metadata parse — the pre-codec pass of any video
-    loader: walks the box tree honoring 32-bit sizes, the size==1 64-bit
-    largesize form, and size==0 extends-to-EOF; descends container boxes
-    (moov/trak/mdia/minf/stbl); decodes versioned full boxes (mvhd/tkhd/
-    mdhd v0 AND v1, whose time fields widen to 64-bit); reads the track's
-    16.16 fixed-point dims, the hdlr handler fourcc, the stsz sample-size
-    table, and the mdat payload length. Raises ValueError on structural
-    corruption. Only frame reconstruction is out of scope
-    (`mp4_decode_frames`)."""
-    import struct
-
+    loader: walks the box tree (`_mp4_boxes`); decodes versioned full
+    boxes (mvhd/tkhd/mdhd v0 AND v1, whose time fields widen to 64-bit);
+    reads the track's 16.16 fixed-point dims, the hdlr handler fourcc,
+    the stsz sample-size table, and the mdat payload length. Raises
+    ValueError on structural corruption. Only frame reconstruction is
+    out of scope (`mp4_decode_frames`)."""
     meta = {
         "major_brand": None, "timescale": None, "duration": None,
         "width": None, "height": None, "handler": None,
         "n_samples": None, "total_sample_bytes": None, "mdat_bytes": None,
     }
-
-    def walk(buf: bytes, start: int, end: int, depth: int = 0) -> None:
-        pos = start
-        if depth > 16:
-            raise ValueError("box nesting too deep")
-        while pos < end:
-            if end - pos < 8:
-                raise ValueError(f"truncated box header at offset {pos}")
-            (size,) = struct.unpack_from(">I", buf, pos)
-            fourcc = buf[pos + 4 : pos + 8]
-            hdr = 8
-            if size == 1:  # 64-bit largesize
-                (size,) = struct.unpack_from(">Q", buf, pos + 8)
-                hdr = 16
-            elif size == 0:  # extends to end of enclosing scope
-                size = end - pos
-            if size < hdr or pos + size > end:
-                raise ValueError(f"bad box size {size} for {fourcc!r} at {pos}")
-            body_start, body_end = pos + hdr, pos + size
-            if fourcc == b"ftyp":
-                meta["major_brand"] = buf[body_start : body_start + 4].decode(
-                    "ascii", "replace"
+    for fourcc, b0, b1 in _mp4_boxes(data):
+        if fourcc == b"ftyp":
+            meta["major_brand"] = data[b0 : b0 + 4].decode("ascii", "replace")
+        elif fourcc == b"mvhd":
+            if data[b0] == 1:  # version 1: 64-bit times
+                _, _, ts, dur = struct.unpack_from(">QQIQ", data, b0 + 4)
+            else:
+                _, _, ts, dur = struct.unpack_from(">IIII", data, b0 + 4)
+            meta["timescale"], meta["duration"] = ts, dur
+        elif fourcc == b"tkhd":
+            fixed = b0 + 4 + (32 if data[b0] == 1 else 20) + 8 + 8 + 36
+            w, h = struct.unpack_from(">II", data, fixed)
+            meta["width"], meta["height"] = w >> 16, h >> 16
+        elif fourcc == b"hdlr":
+            meta["handler"] = data[b0 + 8 : b0 + 12].decode("ascii", "replace")
+        elif fourcc == b"stsz":
+            uniform, count = struct.unpack_from(">II", data, b0 + 4)
+            meta["n_samples"] = count
+            if uniform:
+                meta["total_sample_bytes"] = uniform * count
+            else:
+                meta["total_sample_bytes"] = sum(
+                    struct.unpack_from(f">{count}I", data, b0 + 12)
                 )
-            elif fourcc in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-                walk(buf, body_start, body_end, depth + 1)
-            elif fourcc == b"mvhd":
-                version = buf[body_start]
-                if version == 1:
-                    _, _, ts, dur = struct.unpack_from(">QQIQ", buf, body_start + 4)
-                else:
-                    _, _, ts, dur = struct.unpack_from(">IIII", buf, body_start + 4)
-                meta["timescale"], meta["duration"] = ts, dur
-            elif fourcc == b"tkhd":
-                version = buf[body_start]
-                fixed = body_start + 4 + (32 if version == 1 else 20) + 8 + 8 + 36
-                w, h = struct.unpack_from(">II", buf, fixed)
-                meta["width"], meta["height"] = w >> 16, h >> 16
-            elif fourcc == b"hdlr":
-                meta["handler"] = buf[body_start + 8 : body_start + 12].decode(
-                    "ascii", "replace"
-                )
-            elif fourcc == b"stsz":
-                uniform, count = struct.unpack_from(">II", buf, body_start + 4)
-                meta["n_samples"] = count
-                if uniform:
-                    meta["total_sample_bytes"] = uniform * count
-                else:
-                    meta["total_sample_bytes"] = sum(
-                        struct.unpack_from(f">{count}I", buf, body_start + 12)
-                    )
-            elif fourcc == b"mdat":
-                meta["mdat_bytes"] = body_end - body_start
-            pos += size
-
-    walk(data, 0, len(data))
+        elif fourcc == b"mdat":
+            meta["mdat_bytes"] = b1 - b0
     if meta["major_brand"] is None:
         raise ValueError("not an ISO-BMFF stream: missing ftyp")
     return meta
@@ -1318,59 +1259,35 @@ def mp4_encode_mjpeg(
     )
 
 
+@_parser
 def mp4_decode_frames(data: bytes):
-    """REAL frame decode for MJPEG tracks (r8 — possible once the JPEG
-    entropy codec landed): walks the box tree for the stsd sample format,
-    the stsz size table, and the mdat payload; for a 'jpeg'/'mjpa' track
-    every sample is a complete baseline JPEG, so each is sliced by its
-    stsz size and entropy-decoded with `jpeg_decode_pixels`. Returns
+    """REAL frame decode for MJPEG tracks: walks the box tree
+    (`_mp4_boxes`) for the stsd sample format, the stsz size table, and
+    the mdat payload; for a 'jpeg'/'mjpa' track every sample is a
+    complete baseline JPEG, so each is sliced by its stsz size and
+    entropy-decoded with `jpeg_decode_pixels`. Returns
     [(width, height, n_components, pixel_bytes)] in sample order.
 
     Inter-coded codecs (H.264/H.265/AV1: motion compensation + their own
     entropy coders) remain honestly gated — a deployment swaps the gate
     branch for PyAV/ffmpeg; the container walk and the MJPEG path stay."""
-    import struct
-
     codec: list[bytes] = []
     sizes: list[int] = []
     mdat: list[bytes] = []
-
-    def walk(buf: bytes, start: int, end: int, depth: int = 0) -> None:
-        pos = start
-        if depth > 16:
-            raise ValueError("box nesting too deep")
-        while pos < end:
-            if end - pos < 8:
-                raise ValueError(f"truncated box header at offset {pos}")
-            (size,) = struct.unpack_from(">I", buf, pos)
-            fourcc = buf[pos + 4 : pos + 8]
-            hdr = 8
-            if size == 1:
-                (size,) = struct.unpack_from(">Q", buf, pos + 8)
-                hdr = 16
-            elif size == 0:
-                size = end - pos
-            if size < hdr or pos + size > end:
-                raise ValueError(f"bad box size {size} for {fourcc!r} at {pos}")
-            b0, b1 = pos + hdr, pos + size
-            if fourcc in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-                walk(buf, b0, b1, depth + 1)
-            elif fourcc == b"stsd":
-                (n_entries,) = struct.unpack_from(">I", buf, b0 + 4)
-                if n_entries >= 1:
-                    codec.append(buf[b0 + 12 : b0 + 16])
-            elif fourcc == b"stsz":
-                uniform, count = struct.unpack_from(">II", buf, b0 + 4)
-                sizes.extend(
-                    [uniform] * count
-                    if uniform
-                    else struct.unpack_from(f">{count}I", buf, b0 + 12)
-                )
-            elif fourcc == b"mdat":
-                mdat.append(buf[b0:b1])
-            pos += size
-
-    walk(data, 0, len(data))
+    for fourcc, b0, b1 in _mp4_boxes(data):
+        if fourcc == b"stsd":
+            (n_entries,) = struct.unpack_from(">I", data, b0 + 4)
+            if n_entries >= 1:
+                codec.append(data[b0 + 12 : b0 + 16])
+        elif fourcc == b"stsz":
+            uniform, count = struct.unpack_from(">II", data, b0 + 4)
+            sizes.extend(
+                [uniform] * count
+                if uniform
+                else struct.unpack_from(f">{count}I", data, b0 + 12)
+            )
+        elif fourcc == b"mdat":
+            mdat.append(data[b0:b1])
     fmt = codec[0] if codec else b"?"
     if fmt not in (b"jpeg", b"mjpa"):
         raise NotImplementedError(
@@ -1391,7 +1308,7 @@ def mp4_decode_frames(data: bytes):
 
 
 # ---------------------------------------------------------------------------
-# REAL WAV / RIFF container path (audio, r8): the chunk structure — RIFF
+# REAL WAV / RIFF container path (audio): the chunk structure — RIFF
 # size + WAVE form, fmt_ PCM descriptor, data payload, optional chunks
 # honored by size-walking — is plain struct-level byte work, and PCM
 # samples ARE the decoded audio, so unlike image/video the FULL audio
@@ -1401,15 +1318,22 @@ def mp4_decode_frames(data: bytes):
 # ---------------------------------------------------------------------------
 
 
+def _riff_wave(fmt: bytes, data: bytes) -> bytes:
+    """The one RIFF/WAVE writer: the RIFF header and WAVE form around a
+    ``fmt `` chunk carrying ``fmt`` and a ``data`` chunk carrying
+    ``data``, padded to the word alignment RIFF chunks require."""
+    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    chunks += b"data" + struct.pack("<I", len(data)) + data
+    if len(data) % 2:
+        chunks += b"\x00"
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
 def wav_encode_pcm16(
     samples, sample_rate: int = 16000, channels: int = 1
 ) -> bytes:
     """Valid RIFF/WAVE file: fmt_ chunk (PCM, s16le) + data chunk.
     ``samples`` is an iterable of int16 values, channel-interleaved."""
-    import struct
-
-    import numpy as np
-
     pcm = np.asarray(list(samples) if not hasattr(samples, "dtype") else samples)
     data = pcm.astype("<i2").tobytes()
     block_align = 2 * channels
@@ -1417,21 +1341,16 @@ def wav_encode_pcm16(
         "<HHIIHH", 1, channels, sample_rate, sample_rate * block_align,
         block_align, 16,
     )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) % 2:  # RIFF chunks are word-aligned
-        chunks += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _riff_wave(fmt, data)
 
 
+@_parser
 def wav_parse_meta(data: bytes) -> dict:
     """REAL RIFF/WAVE parse: validates the RIFF header and form type,
     size-walks the chunk list (skipping unknown chunks — LIST/INFO/cue
     etc. — by their declared sizes, honoring word alignment), decodes the
     fmt_ PCM descriptor, and locates the data payload. Raises ValueError
     on structural corruption."""
-    import struct
-
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")
     (riff_size,) = struct.unpack_from("<I", data, 4)
@@ -1500,12 +1419,11 @@ def wav_parse_meta(data: bytes) -> dict:
     return meta
 
 
+@_parser
 def wav_decode_samples(data: bytes):
     """REAL PCM decode: parse the container, slice the data chunk, view as
     little-endian int16 (the fmt_-declared layout). Returns
     (sample_rate, channels, numpy int16 array of shape [n, channels])."""
-    import numpy as np
-
     meta = wav_parse_meta(data)
     raw = data[meta["data_offset"] : meta["data_offset"] + meta["data_bytes"]]
     if meta["audio_format"] == 0x11:  # IMA ADPCM: stateful block decode
@@ -1540,8 +1458,6 @@ def mulaw_encode(pcm) -> bytes:
     """Linear int16 -> 8-bit mu-law codes (sign | 3-bit exponent | 4-bit
     mantissa, ones-complemented per the wire format). Vectorized; exact on
     every reconstruction level (decode . encode == identity there)."""
-    import numpy as np
-
     s = np.asarray(pcm, dtype=np.int64)
     sign = (s < 0).astype(np.int64)
     mag = np.minimum(np.abs(s) + _MULAW_BIAS, 0x7FFF)
@@ -1557,8 +1473,6 @@ def mulaw_encode(pcm) -> bytes:
 def mulaw_decode(codes: bytes):
     """8-bit mu-law codes -> linear int16 numpy array (the exact G.711
     expansion: mag = ((8*mant + 0x84) << exp) - 0x84, sign-applied)."""
-    import numpy as np
-
     u = ~np.frombuffer(codes, dtype=np.uint8).astype(np.int64) & 0xFF
     exp = (u >> 4) & 7
     mant = u & 0x0F
@@ -1569,14 +1483,8 @@ def mulaw_decode(codes: bytes):
 def wav_encode_mulaw(codes: bytes, sample_rate: int = 8000) -> bytes:
     """Valid RIFF/WAVE file with format tag 7 (mu-law, 8 bits/sample,
     mono) wrapping pre-companded codes."""
-    import struct
-
     fmt = struct.pack("<HHIIHH", 7, 1, sample_rate, sample_rate, 1, 8)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(codes)) + codes
-    if len(codes) % 2:
-        chunks += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _riff_wave(fmt, codes)
 
 
 # ---------------------------------------------------------------------------
@@ -1603,27 +1511,35 @@ _ADPCM_STEPS = [
 _ADPCM_INDEX_ADJ = [-1, -1, -1, -1, 2, 4, 6, 8]
 
 
+def _adpcm_step(pred: int, idx: int, n: int) -> tuple[int, int]:
+    """One IMA ADPCM state transition for the 4-bit code ``n``: diff =
+    step>>3 plus the per-bit step fractions, sign bit 8, the predictor
+    clamped to int16 and the step index to [0, 88]. The decoder runs it
+    per nibble and the encoder replays it to track the decoder."""
+    step = _ADPCM_STEPS[idx]
+    diff = step >> 3
+    if n & 1:
+        diff += step >> 2
+    if n & 2:
+        diff += step >> 1
+    if n & 4:
+        diff += step
+    pred = pred - diff if n & 8 else pred + diff
+    return (
+        max(-32768, min(32767, pred)),
+        max(0, min(88, idx + _ADPCM_INDEX_ADJ[n & 7])),
+    )
+
+
 def adpcm_decode_nibbles(nibbles, pred0: int, idx0: int):
     """The IMA ADPCM state machine: given the block header state
     (initial predictor = sample 0, initial step index) and the 4-bit code
     stream, reconstruct int16 samples 1..n. Pure integer; the reference
     recurrence (diff = step>>3 + per-bit step fractions, both clamps)."""
-    import numpy as np
-
     pred, idx = int(pred0), int(idx0)
     out = [pred]
     for n in nibbles:
-        step = _ADPCM_STEPS[idx]
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        pred = pred - diff if n & 8 else pred + diff
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + _ADPCM_INDEX_ADJ[n & 7]))
+        pred, idx = _adpcm_step(pred, idx, n)
         out.append(pred)
     return np.asarray(out, dtype=np.int16)
 
@@ -1653,16 +1569,7 @@ def adpcm_encode(pcm, idx0: int = 0) -> tuple[int, int, bytes]:
         if delta >= step >> 2:
             n |= 1
         # replay the decoder so the next delta is vs the RECONSTRUCTION
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        pred = pred - diff if n & 8 else pred + diff
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + _ADPCM_INDEX_ADJ[n & 7]))
+        pred, idx = _adpcm_step(pred, idx, n)
         nibs.append(n)
     return s[0], int(idx0), pack_nibbles(nibs)
 
@@ -1689,10 +1596,6 @@ def adpcm_decode_blocks(raw: bytes, block_align: int, samples_per_block: int):
     """Walk the fmt-0x11 data chunk block by block: each block carries a
     4-byte header (initial predictor int16 LE, step index uint8,
     reserved) and then packed nibbles for samples_per_block-1 codes."""
-    import struct
-
-    import numpy as np
-
     out = []
     for off in range(0, len(raw) - block_align + 1, block_align):
         pred0, idx0 = struct.unpack_from("<hB", raw, off)
@@ -1713,19 +1616,13 @@ def wav_encode_adpcm(
     sample, mono, one block): fmt_ carries the cbSize=2 extension with
     wSamplesPerBlock; the data chunk is the 4-byte block header plus the
     packed nibble payload."""
-    import struct
-
     spb = n_nibbles + 1  # header predictor is sample 0
     block = struct.pack("<hBB", pred0, idx0, 0) + nibbles
     fmt = struct.pack(
         "<HHIIHHHH", 0x11, 1, sample_rate,
         sample_rate * len(block) // spb, len(block), 4, 2, spb,
     )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(block)) + block
-    if len(block) % 2:
-        chunks += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _riff_wave(fmt, block)
 
 
 # ---------------------------------------------------------------------------
@@ -1761,11 +1658,11 @@ def _lzw_compress(indices: bytes, min_code_size: int = 8) -> bytes:
             acc >>= 8
             n_bits -= 8
 
-    # int-keyed dictionary (r9 perf): the accumulated string w is tracked
-    # by its CODE, and table keys are (prefix_code << 8) | next_byte —
-    # zero bytes allocations per pixel (the judge-flagged 5.5x-twin cost
-    # was exactly these per-pixel `w + bytes([b])` allocs). Base strings
-    # need no entries: their code IS the byte value.
+    # int-keyed dictionary: the accumulated string w is tracked by its
+    # CODE, and table keys are (prefix_code << 8) | next_byte — zero bytes
+    # allocations per pixel (per-pixel `w + bytes([b])` allocs were the
+    # encoder's dominant cost). Base strings need no entries: their code
+    # IS the byte value.
     table: dict = {}
     next_code, width = eoi + 1, min_code_size + 1
     put(clear, width)
@@ -1805,14 +1702,15 @@ def _lzw_decompress(data: bytes, min_code_size: int = 8) -> bytes:
     after assigning code c the width grows when c+1 would overflow —
     the 'early change' convention GIF writers use."""
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    # slice-table representation (r9 perf): every dictionary entry is a
-    # CONTIGUOUS SLICE of the output already produced — table[next] =
-    # prev + entry[0], and entry is appended immediately after prev, so
-    # the new string is exactly out[prev_start : prev_start+prev_len+1].
-    # Entries are therefore (start, len) int pairs in flat lists: zero
-    # bytes allocations and zero dict ops per code (the judge-flagged
-    # 5.5x-twin cost). Base codes (< clear) need no entries; assignment
-    # is bounded by `eoi+1 <= code < next_code`, which a CLEAR resets.
+    # slice-table representation: every dictionary entry is a CONTIGUOUS
+    # SLICE of the output already produced — table[next] = prev +
+    # entry[0], and entry is appended immediately after prev, so the new
+    # string is exactly out[prev_start : prev_start+prev_len+1]. Entries
+    # are therefore (start, len) int pairs in flat lists: zero bytes
+    # allocations and zero dict ops per code (the dominant cost of a
+    # bytes-valued table). Base codes (< clear) need no entries;
+    # assignment is bounded by `eoi+1 <= code < next_code`, which a
+    # CLEAR resets.
     starts = [0] * 4096
     lens = [0] * 4096
     next_code, width = eoi + 1, min_code_size + 1
@@ -1867,9 +1765,9 @@ def _lzw_decompress(data: bytes, min_code_size: int = 8) -> bytes:
 
 
 def _lzw_decompress_batch(streams: list, min_code_size: int = 8) -> list:
-    """Vectorized TABLE-GATHER decode for a BATCH of LZW streams (r10 —
-    judge r9 task #4): the per-code Python walk of ``_lzw_decompress``
-    becomes numpy column operations shared by every stream in the batch.
+    """Vectorized TABLE-GATHER decode for a BATCH of LZW streams: the
+    per-code Python walk of ``_lzw_decompress`` becomes numpy column
+    operations shared by every stream in the batch.
 
     Fast path (the overwhelmingly common shape for small GIF frames):
     streams whose codes never leave the INITIAL width — one CLEAR up
@@ -1897,8 +1795,6 @@ def _lzw_decompress_batch(streams: list, min_code_size: int = 8) -> list:
     which also owns all error reporting — so batch and scalar are
     bit-identical by construction (asserted by
     tests/test_gif_codec.py::test_batch_decode_parity*)."""
-    import numpy as np
-
     n = len(streams)
     out: list = [None] * n
     width = min_code_size + 1
@@ -2051,74 +1947,78 @@ def _lzw_decompress_batch(streams: list, min_code_size: int = 8) -> list:
     return out
 
 
-def gif_decode_batch(datas: list) -> list:
-    """Batch ``gif_decode``: scalar container walks (signature, screen
-    descriptor, color tables, sub-block reassembly — a few µs each), then
-    ONE vectorized LZW decode over every frame whose stream shares a
-    min-code-size, then per-image palette gathers. Returns the same
-    (width, height, rgb) tuples as ``gif_decode``, bit-for-bit (parity
-    asserted in tests/test_gif_codec.py)."""
-    import struct
-
-    import numpy as np
-
-    parsed = []
-    for data in datas:
-        if data[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("not a GIF stream")
-        _sw, _sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", data, 6)
-        pos = 13
-        palette = None
-        if flags & 0x80:
-            cn = 2 << (flags & 7)
-            palette = data[pos : pos + 3 * cn]
-            if len(palette) < 3 * cn:
-                raise ValueError("truncated global color table")
-            pos += 3 * cn
-        while True:
+def _gif_image(data: bytes):
+    """The one GIF container walk: validates the signature, reads the
+    logical screen descriptor + global color table, skips 89a extension
+    blocks by their sub-block sizes, reads the first image descriptor
+    (a local color table overrides the global one) and reassembles the
+    LZW stream from its <=255-byte sub-blocks. Returns (width, height,
+    palette, min_code_size, lzw stream)."""
+    if data[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF stream")
+    _sw, _sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", data, 6)
+    pos = 13
+    palette = None
+    if flags & 0x80:
+        n = 2 << (flags & 7)
+        palette = data[pos : pos + 3 * n]
+        if len(palette) < 3 * n:
+            raise ValueError("truncated global color table")
+        pos += 3 * n
+    while True:
+        if pos >= len(data):
+            raise ValueError("GIF truncated before any image block")
+        b = data[pos]
+        if b == 0x3B:  # trailer before any image
+            raise ValueError("GIF contains no image data")
+        if b == 0x21:  # extension: label + sub-blocks
+            pos += 2
+            while pos < len(data) and data[pos] != 0:
+                pos += 1 + data[pos]
             if pos >= len(data):
-                raise ValueError("GIF truncated before any image block")
-            b = data[pos]
-            if b == 0x3B:
-                raise ValueError("GIF contains no image data")
-            if b == 0x21:
-                pos += 2
-                while pos < len(data) and data[pos] != 0:
-                    pos += 1 + data[pos]
-                if pos >= len(data):
-                    raise ValueError("GIF extension sub-blocks truncated")
-                pos += 1
-                continue
-            if b != 0x2C:
-                raise ValueError(f"unexpected GIF block 0x{b:02x}")
-            break
-        if pos + 10 > len(data):
-            raise ValueError("GIF image descriptor truncated")
-        _ix, _iy, iw, ih, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
-        pos += 10
-        if iflags & 0x80:
-            cn = 2 << (iflags & 7)
-            palette = data[pos : pos + 3 * cn]
-            if len(palette) < 3 * cn:
-                raise ValueError("truncated local color table")
-            pos += 3 * cn
-        if iflags & 0x40:
-            raise NotImplementedError("interlaced GIF not supported")
-        if palette is None:
-            raise ValueError("GIF image has no color table")
-        min_code = data[pos]
-        pos += 1
-        stream = bytearray()
-        while True:
-            if pos >= len(data):
-                raise ValueError("GIF data sub-blocks truncated")
-            blen = data[pos]
+                raise ValueError("GIF extension sub-blocks truncated")
             pos += 1
-            if blen == 0:
-                break
-            stream += data[pos : pos + blen]
-            pos += blen
-        parsed.append((iw, ih, palette, min_code, bytes(stream)))
+            continue
+        if b != 0x2C:
+            raise ValueError(f"unexpected GIF block 0x{b:02x}")
+        break
+    if pos + 10 > len(data):
+        raise ValueError("GIF image descriptor truncated")
+    _ix, _iy, iw, ih, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
+    pos += 10
+    if iflags & 0x80:  # local color table overrides
+        n = 2 << (iflags & 7)
+        palette = data[pos : pos + 3 * n]
+        if len(palette) < 3 * n:
+            raise ValueError("truncated local color table")
+        pos += 3 * n
+    if iflags & 0x40:
+        raise NotImplementedError("interlaced GIF not supported")
+    if palette is None:
+        raise ValueError("GIF image has no color table")
+    min_code = data[pos]
+    pos += 1
+    stream = bytearray()
+    while True:
+        if pos >= len(data):
+            raise ValueError("GIF data sub-blocks truncated")
+        blen = data[pos]
+        pos += 1
+        if blen == 0:
+            break
+        stream += data[pos : pos + blen]
+        pos += blen
+    return iw, ih, palette, min_code, bytes(stream)
+
+
+@_parser
+def gif_decode_batch(datas: list) -> list:
+    """Batch ``gif_decode``: scalar container walks (`_gif_image`, a few
+    µs each), then ONE vectorized LZW decode over every frame whose
+    stream shares a min-code-size, then per-image palette gathers.
+    Returns the same (width, height, rgb) tuples as ``gif_decode``,
+    bit-for-bit (parity asserted in tests/test_gif_codec.py)."""
+    parsed = [_gif_image(data) for data in datas]
 
     by_mcs: dict = {}
     for i, (_w, _h, _p, mcs, st) in enumerate(parsed):
@@ -2162,8 +2062,6 @@ def gif_encode_gray(pixels, width: int, height: int) -> bytes:
     descriptor, LZW-compressed pixel indices packaged into <=255-byte
     sub-blocks, trailer. ``pixels`` is row-major bytes/iterable of 0-255
     values (index == luminance under the ramp palette)."""
-    import struct
-
     px = bytes(pixels)
     if len(px) != width * height:
         raise ValueError("pixel count != width*height")
@@ -2183,79 +2081,23 @@ def gif_encode_gray(pixels, width: int, height: int) -> bytes:
     return bytes(out)
 
 
+@_parser
 def gif_decode(data: bytes):
-    """REAL GIF decode: validates the signature, walks the logical screen
-    descriptor + global color table, skips 89a extension blocks by their
-    sub-block sizes, reads the image descriptor, reassembles the LZW
-    stream from its sub-blocks and hand-decompresses it, then maps
-    indices through the palette. Returns (width, height, rgb bytes
+    """REAL GIF decode: walks the container (`_gif_image`: signature,
+    screen descriptor, color tables, extension skips, sub-block
+    reassembly), hand-decompresses the LZW stream with the scalar
+    `_lzw_decompress` (the reference `gif_decode_batch` is held to), then
+    maps indices through the palette. Returns (width, height, rgb bytes
     row-major). Raises ValueError on structural corruption."""
-    import struct
-
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF stream")
-    sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", data, 6)
-    pos = 13
-    palette = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        palette = data[pos : pos + 3 * n]
-        if len(palette) < 3 * n:
-            raise ValueError("truncated global color table")
-        pos += 3 * n
-    while True:
-        if pos >= len(data):
-            raise ValueError("GIF truncated before any image block")
-        b = data[pos]
-        if b == 0x3B:  # trailer before any image
-            raise ValueError("GIF contains no image data")
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(data) and data[pos] != 0:
-                pos += 1 + data[pos]
-            if pos >= len(data):
-                raise ValueError("GIF extension sub-blocks truncated")
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{b:02x}")
-        break
-    if pos + 10 > len(data):
-        raise ValueError("GIF image descriptor truncated")
-    ix, iy, iw, ih, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
-    pos += 10
-    if iflags & 0x80:  # local color table overrides
-        n = 2 << (iflags & 7)
-        palette = data[pos : pos + 3 * n]
-        if len(palette) < 3 * n:
-            raise ValueError("truncated local color table")
-        pos += 3 * n
-    if iflags & 0x40:
-        raise NotImplementedError("interlaced GIF not supported")
-    if palette is None:
-        raise ValueError("GIF image has no color table")
-    min_code = data[pos]
-    pos += 1
-    stream = bytearray()
-    while True:
-        if pos >= len(data):
-            raise ValueError("GIF data sub-blocks truncated")
-        blen = data[pos]
-        pos += 1
-        if blen == 0:
-            break
-        stream += data[pos : pos + blen]
-        pos += blen
-    idx = _lzw_decompress(bytes(stream), min_code)
+    iw, ih, palette, min_code, stream = _gif_image(data)
+    idx = _lzw_decompress(stream, min_code)
     if len(idx) < iw * ih:
         raise ValueError("LZW pixel data short of image size")
     px = idx[: iw * ih]
     if px and max(px) * 3 + 3 > len(palette):
         raise ValueError("GIF pixel index exceeds color table")
-    # vectorized palette gather (r9 perf): one numpy fancy-index instead
-    # of a per-pixel Python loop
-    import numpy as np
-
+    # vectorized palette gather: one numpy fancy-index instead of a
+    # per-pixel Python loop
     pal = np.frombuffer(palette, dtype=np.uint8).reshape(-1, 3)
     rgb = pal[np.frombuffer(px, dtype=np.uint8)].tobytes()
     return iw, ih, rgb
@@ -2339,13 +2181,11 @@ _FIXED_LIT = _huff_table([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
 _FIXED_DIST = _huff_table([5] * 30)
 
 
+@_parser
 def inflate(data: bytes) -> bytes:
     """RFC 1950/1951 decompression: validate the zlib header, walk the
     DEFLATE block sequence, verify the Adler-32 trailer. Raises
     ValueError on any structural corruption."""
-    import struct
-    import zlib as _z  # adler32 only — the checksum, not the codec
-
     if len(data) < 6:
         raise ValueError("zlib stream too short")
     cmf, flg = data[0], data[1]
@@ -2425,7 +2265,7 @@ def inflate(data: bytes) -> bytes:
     if br.pos + 4 > len(data):
         raise ValueError("Adler-32 trailer missing")
     (want,) = struct.unpack_from(">I", data, br.pos)
-    if _z.adler32(bytes(out)) & 0xFFFFFFFF != want:
+    if zlib.adler32(bytes(out)) & 0xFFFFFFFF != want:  # checksum, not codec
         raise ValueError("Adler-32 mismatch")
     return bytes(out)
 
@@ -2446,8 +2286,6 @@ def bmp_encode_gray(pixels, width: int, height: int) -> bytes:
     """Valid 8-bit palettized BMP: BITMAPFILEHEADER, BITMAPINFOHEADER,
     256-entry grayscale BGRA palette, bottom-up rows padded to 4 bytes.
     ``pixels`` is row-major TOP-DOWN bytes (index == luminance)."""
-    import struct
-
     px = bytes(pixels)
     if len(px) != width * height:
         raise ValueError("pixel count != width*height")
@@ -2469,6 +2307,7 @@ def bmp_encode_gray(pixels, width: int, height: int) -> bytes:
     return bytes(out)
 
 
+@_parser
 def bmp_decode(data: bytes):
     """REAL BMP decode: validates the 'BM' magic and both header sizes,
     walks the palette, un-pads and re-flips the bottom-up rows (top-down
@@ -2476,10 +2315,6 @@ def bmp_decode(data: bytes):
     palette. Only the 8-bit uncompressed form is implemented — anything
     else raises ValueError (the d7o quarantine posture). Returns
     (width, height, rgb bytes row-major top-down)."""
-    import struct
-
-    import numpy as np
-
     if data[:2] != b"BM":
         raise ValueError("not a BMP stream")
     if len(data) < 54:

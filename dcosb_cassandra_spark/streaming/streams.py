@@ -170,11 +170,12 @@ def c8_write_stream(df: DataFrame, sink_name: str, output_mode: str = "update"):
     )
 
 
-def c9_foreach_batch_view_maintenance(events: DataFrame, state: dict):
+def c9_foreach_batch_view_maintenance(events: DataFrame, state: dict) -> None:
     """C9: foreachBatch incremental materialized-view maintenance (the
     streaming twin of a26): per micro-batch, merge new per-type counts into
     the running view — the Cassandra MV write-path, expressed as an
-    idempotent upsert per batch."""
+    idempotent upsert per batch. Replays the bounded stream ``events``
+    through `foreach_batch` and returns once ``state`` holds the view."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         delta = (
@@ -186,9 +187,7 @@ def c9_foreach_batch_view_maintenance(events: DataFrame, state: dict):
             cur = state.get(row["event_type"], (0, 0.0))
             state[row["event_type"]] = (cur[0] + row["n"], cur[1] + (row["v"] or 0.0))
 
-    return (
-        events.writeStream.foreachBatch(merge).outputMode("update").trigger(availableNow=True).start()
-    )
+    foreach_batch(events, merge)
 
 
 def parse_props_stream(events: DataFrame) -> DataFrame:
@@ -350,14 +349,16 @@ def c6b_stateful_running_counts_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def c9b_incremental_lww_sink(events: DataFrame, state_dir: str):
+def c9b_incremental_lww_sink(events: DataFrame, state_dir: str) -> None:
     """Incremental LWW compaction with persisted state — the full LSM write
     path: each micro-batch of upserts merges into a compacted parquet state
     (read old state → union batch → lww_compact → atomic swap). This is
     Cassandra's memtable-flush + compaction cycle expressed as foreachBatch;
     at scale the same merge runs against a partitioned table (or Delta/
     Iceberg MERGE INTO) instead of a directory swap. The swap is
-    ``swap_store``, so a crash mid-swap heals on the next batch."""
+    ``swap_store``, so a crash mid-swap heals on the next batch. Replays
+    the bounded stream ``events`` through `foreach_batch` and returns once
+    ``<state_dir>/current`` holds the compacted state."""
     import os
 
     from ..functions.lww import lww_compact
@@ -383,12 +384,7 @@ def c9b_incremental_lww_sink(events: DataFrame, state_dir: str):
             cur, compacted.repartition(4, "user_id").write.mode("overwrite").parquet
         )
 
-    return (
-        events.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    foreach_batch(events, merge)
 
 
 def c10_stream_stream_join(events: DataFrame, how: str = "inner") -> DataFrame:

@@ -15,7 +15,7 @@ import pytest
 from hypothesis import given
 from hypothesis import strategies as st
 
-from dcosb_cassandra_spark.sources.multimodal import png_decode_gray, png_encode_gray
+from dcosb_cassandra_spark.sources.multimodal import png_decode_gray, png_encode
 
 
 @given(
@@ -33,13 +33,13 @@ def test_roundtrip(w, h, data):
             )
         )
     )
-    out = png_decode_gray(png_encode_gray(px, w, h))
+    out = png_decode_gray(png_encode(px, w, h))
     assert out[:3] == (w, h, 8)
     assert bytes(out[3]) == px
 
 
 def test_crc_corruption_rejected():
-    b = bytearray(png_encode_gray(bytes(range(16)) * 2, 16, 2))
+    b = bytearray(png_encode(bytes(range(16)) * 2, 16, 2))
     b[40] ^= 0xFF  # flip a byte inside IDAT without fixing its CRC
     with pytest.raises(ValueError, match="CRC"):
         png_decode_gray(bytes(b))

@@ -93,8 +93,7 @@ def test_c7_stream_static_join(spark, events_dir):
 def test_c9_foreach_batch_view_maintenance(spark, events_dir):
     stream = streams.read_events_stream(spark, events_dir)
     state: dict = {}
-    q = streams.c9_foreach_batch_view_maintenance(stream, state)
-    await_stream(q)
+    streams.c9_foreach_batch_view_maintenance(stream, state)
 
     e = table(spark, SMOKE_SF_DIR, "events")
     want = {
@@ -230,8 +229,7 @@ def test_c9b_incremental_lww_sink(spark, events_dir):
         .parquet(two_batch_dir)
     )
     stream = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = streams.c9b_incremental_lww_sink(stream, state_dir)
-    await_stream(q)
+    streams.c9b_incremental_lww_sink(stream, state_dir)
 
     got = {
         (r["user_id"], r["event_type"]): (r["payload"], r["writetime"])

@@ -120,3 +120,12 @@ def test_store_swaps_and_stream_replays_have_one_source():
         ("sources/maintenance.py", "artifact_dir"),
         ("operators/streaming_batch.py", "_write_ordered_events"),
     }
+
+
+def test_foreach_batch_replays_have_one_source():
+    """Every bounded foreachBatch replay starts through
+    ``streams.foreach_batch``, which blocks until the stream ends and
+    raises on timeout, so no caller can return with a replay still
+    running."""
+    sites = [s for p in MODULES for s in call_sites(p, "foreachBatch")]
+    assert sites == [("streaming/streams.py", ("foreach_batch",))]
