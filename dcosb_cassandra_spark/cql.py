@@ -603,8 +603,8 @@ def cql(
     after the filter loop [PK CEP-20: SELECT_MASKED lets a principal
     restrict on clear values but never read them] — applied here, before
     any selector/alias/expression/aggregate can observe the clear bytes,
-    so ``SELECT ssn AS s ... WHERE ssn = '...'`` leaks nothing (r13,
-    judge r12 advice: the by-output-name re-mask missed aliases)."""
+    so ``SELECT ssn AS s ... WHERE ssn = '...'`` leaks nothing (a re-mask
+    of output columns by name would miss aliases)."""
     q = parse(statement, extra_keys)
     _check_restrictions(q, extra_keys, extra_indexed)
     pk, cc = {**TABLE_KEYS, **(extra_keys or {})}[q.table]
@@ -658,14 +658,14 @@ def cql(
     # WHERE-restricted attached-mask columns: the filter above ran on
     # clear values (the SELECT_MASKED contract); everything FROM HERE ON
     # — aggregates, selectors, aliases, JSON packing — sees only masked
-    # bytes, so no projection form can exfiltrate the clear value (judge
-    # r12 advice: re-masking OUTPUT columns by name let `SELECT ssn AS s`
+    # bytes, so no projection form can exfiltrate the clear value
+    # (re-masking OUTPUT columns by name would let `SELECT ssn AS s`
     # through). KEY-like columns (pk/cc — Cassandra allows masks on key
     # columns — plus the ANN target) are DEFERRED past the row-selection
-    # steps below (r14, judge r13 advice): the PER PARTITION LIMIT window
-    # orders by clustering columns and ANN ranks by the vector column,
-    # and Cassandra selects those rows by CLEAR clustering/index order —
-    # masking first made the window pick different rows. Row selection
+    # steps below: the PER PARTITION LIMIT window orders by clustering
+    # columns and ANN ranks by the vector column, and Cassandra selects
+    # those rows by CLEAR clustering/index order — masking first would
+    # make the window pick different rows. Row selection
     # only chooses rows, it projects nothing, so the re-mask lands on
     # every selected row before anything user-visible runs.
     deferred_masks: dict = {}

@@ -20,27 +20,44 @@ model (SURVEY.md §1.1, §3.2):
   semantics), fold tombstones/TTL, and pivot back to wide rows.
 
 The mutation buffer is driver-side (mutations arrive through the API one
-statement at a time — inherently small); the read path is pure DataFrame:
-melt snapshot → union mutation cells → window compaction → pivot. At scale
-the same plan runs over a persisted cell log instead of the in-memory list
-(this is exactly an LSM memtable/SSTable split: parquet snapshot =
-compacted SSTables, session buffer = memtable).
+statement at a time — inherently small), indexed by partition. A read that
+names its partitions (every partition-key column restricted by ``=``/``IN``)
+folds just those partitions' memtable cells and snapshot rows in Python,
+as Cassandra's single-partition read merges one partition's memtable and
+SSTable cells (``fold_cells``). Every other read is a DataFrame plan: melt
+snapshot → union mutation cells → window compaction → pivot. At scale that
+plan runs over a persisted cell log instead of the in-memory list (this is
+exactly an LSM memtable/SSTable split: parquet snapshot = compacted
+SSTables, session buffer = memtable).
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
+import functools
+import itertools
 import json
+import math
+import os
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
+    DateType,
+    FractionalType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 from pyspark.sql.window import Window
 
@@ -80,6 +97,165 @@ _CELL_FIELDS = [
     StructField("expires_at", LongType()),
     StructField("tombstone", BooleanType()),
 ]
+
+#: the most partitions (the product of the partition key's ``=``/``IN``
+#: lists) and the most snapshot rows a key-pinned read folds in Python
+#: (``CqlSession._pinned_fold``); a larger read takes the Spark merge
+FAST_READ_MAX_ROWS = 1024
+
+
+def _complex(dtype: str) -> bool:
+    """True for a collection or UDT column (``DataFrame.dtypes`` form)."""
+    return dtype.startswith(("array", "map", "struct"))
+
+
+#: Python types a key value of each scalar Spark type may arrive as
+_KEY_TYPES = {
+    IntegralType: (int,),
+    FractionalType: (int, float, decimal.Decimal),
+    StringType: (str,),
+    BooleanType: (bool,),
+}
+
+
+def _key_norm(dtype):
+    """How a primary-key value of Spark type ``dtype`` compares when memtable
+    and snapshot rows are grouped: timestamps and dates as the naive-UTC
+    datetime/date ``local_frame`` reads from ISO text, the other scalar types
+    as written. A value the type does not take raises TypeError or
+    ValueError, and the read takes the Spark merge."""
+    if isinstance(dtype, (TimestampType, DateType)):
+        iso = dt.datetime if isinstance(dtype, TimestampType) else dt.date
+
+        def norm(v):
+            v = iso.fromisoformat(v) if isinstance(v, str) else v
+            if type(v) is not iso:
+                raise TypeError(f"{v!r} is not a {dtype.simpleString()} key")
+            if iso is dt.datetime and v.tzinfo is not None:
+                v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+            return v
+
+        return norm
+    takes = next((t for base, t in _KEY_TYPES.items() if isinstance(dtype, base)), ())
+
+    def norm(v):
+        if not isinstance(v, takes) or (type(v) is bool) != (bool in takes):
+            raise TypeError(f"{v!r} is not a {dtype.simpleString()} key")
+        return v
+
+    return norm
+
+
+#: arrow type -> the Spark type ``catalog.table`` reads it as
+_ARROW_SPARK = {
+    pa.int8(): "tinyint", pa.int16(): "smallint", pa.int32(): "int",
+    pa.int64(): "bigint", pa.float32(): "float", pa.float64(): "double",
+    pa.string(): "string", pa.large_string(): "string", pa.bool_(): "boolean",
+    pa.date32(): "date",
+}
+
+
+def _reads_as(t: pa.DataType, spark_type: str) -> bool:
+    """True when ``catalog.table`` reads an arrow column of type ``t`` as
+    ``spark_type`` (``DataFrame.dtypes`` form); a timestamp may read as
+    either timestamp type, as ``events.ts`` does."""
+    if pa.types.is_timestamp(t):
+        return spark_type in ("timestamp", "timestamp_ntz")
+    if pa.types.is_decimal(t):
+        return spark_type == f"decimal({t.precision},{t.scale})"
+    return _ARROW_SPARK.get(t) == spark_type
+
+
+def _may_hold(column_chunk, values) -> bool:
+    """False when a row group's min/max statistics of a key column rule out
+    every one of ``values``."""
+    stats = column_chunk.statistics
+    if stats is None or not stats.has_min_max:
+        return True
+    try:
+        return any(stats.min <= v <= stats.max for v in values)
+    except TypeError:
+        return True
+
+
+def _melt(t: pa.DataType):
+    """Text of one snapshot value of arrow type ``t``, as the Spark merge's
+    ``CAST(col AS STRING)`` melts it, up to spelling: the text is only ever
+    cast back to the column type, never compared with another snapshot
+    value (a partition holding a duplicate primary key or a memtable cell
+    at writetime <= 0 takes the Spark merge)."""
+    if pa.types.is_boolean(t):
+        return lambda v: "true" if v else "false"
+    if pa.types.is_floating(t):
+        return repr
+    if pa.types.is_decimal(t):
+        return lambda v: format(v, "f")
+    if pa.types.is_timestamp(t):
+        return lambda v: v.isoformat(sep=" ")
+    if pa.types.is_date(t):
+        return dt.date.isoformat
+    return str
+
+
+def fold_cells(cells, now_micros: int, truncated: int | None = None) -> dict:
+    """Cassandra's read-time reconcile of one read's cells, the rules
+    ``CqlSession.snapshot`` runs as a Spark merge. ``cells`` yields
+    ``(primary key, column, value, writetime, expires_at, tombstone)``;
+    snapshot cells carry writetime 0. In order:
+
+    - a TRUNCATE at writetime ``truncated`` drops every cell at or below it;
+    - a row tombstone drops every cell of its row with a writetime at or
+      below the tombstone's;
+    - per (row, column) the cell with the highest (writetime, tombstone,
+      value) wins [PK `db/rows/Cells.java reconcile`]: on equal writetimes
+      a tombstone beats a live cell, then the greater value wins (a null
+      value is the least);
+    - a winner that is a tombstone, or whose TTL has expired at
+      ``now_micros``, leaves no cell.
+
+    Returns {primary key: {column: (value, writetime, expires_at)}} for the
+    visible rows: those with any cell left, the row marker included."""
+    kept, row_del = [], {}
+    for cell in cells:
+        key, column, _, wt, _, _ = cell
+        if truncated is not None and wt <= truncated:
+            continue
+        kept.append(cell)
+        if column == ROW_TOMBSTONE:
+            row_del[key] = max(row_del.get(key, -1), wt)
+    winners: dict = {}
+    for key, column, value, wt, exp, tomb in kept:
+        if column != ROW_TOMBSTONE and wt <= row_del.get(key, -1):
+            continue
+        rank = (wt, tomb, value is not None, value or "")
+        won = winners.get((key, column))
+        if won is None or rank > won[0]:
+            winners[(key, column)] = (rank, value, wt, exp, tomb)
+    rows: dict = {}
+    for (key, column), (_, value, wt, exp, tomb) in winners.items():
+        if tomb or (exp is not None and exp <= now_micros):
+            continue
+        rows.setdefault(key, {})[column] = (value, wt, exp)
+    return rows
+
+
+class _PartitionIndex:
+    """The memtable cells of one table by partition: partition key ->
+    [(primary key, cell)], with every key value normalized by ``_key_norm``
+    so a memtable row and its snapshot row fold together."""
+
+    def __init__(self, schema: StructType, pk: tuple, cc: tuple, cells: list[dict]):
+        self.keys = (*pk, *cc)
+        self.n_pk = len(pk)
+        self.norms = {k: _key_norm(schema[k].dataType) for k in self.keys}
+        self.parts: dict[tuple, list[tuple[tuple, dict]]] = {}
+        for cell in cells:
+            self.add(cell)
+
+    def add(self, cell: dict) -> None:
+        key = tuple(self.norms[k](cell["key"][k]) for k in self.keys)
+        self.parts.setdefault(key[: self.n_pk], []).append((key, cell))
+
 
 _USING = (
     r"(?:\s+USING\s+(?:TTL\s+(?P<ttl>\d+)(?:\s+AND\s+TIMESTAMP\s+(?P<wts>\d+))?"
@@ -270,9 +446,9 @@ def register_trigger_class(name: str):
 
 #: table -> erasure wiring the ErasureTrigger propagates DELETEs into
 #: (tables without an entry are untouched). Two accepted value shapes:
-#: a plain str = band-index dir (the original r10 wiring), or a dict
-#: {"band_index": dir?, "sf_dir": dir?, "rebuild": {artifact: dir}?} —
-#: the r11 extension covering the AGGREGATE artifacts via
+#: a plain str = band-index dir, or a dict
+#: {"band_index": dir?, "sf_dir": dir?, "rebuild": {artifact: dir}?} that
+#: also covers the AGGREGATE artifacts via
 #: ``maintenance.erasure_audit`` (audit always runs when sf_dir is
 #: wired; retrains fire only for artifacts given a rebuild dir).
 ERASURE_TARGETS: dict = {}
@@ -326,7 +502,7 @@ def _audit_trigger(sess, tbl: str, op: str, data: dict) -> None:
     JSON. The side table is created on first fire; if a user pre-created
     a table under that name with a DIFFERENT shape, the trigger raises a
     clear configuration error instead of mis-targeting the user's columns
-    on every subsequent mutation (judge r9 advice)."""
+    on every subsequent mutation."""
     if "trigger_audit" not in sess._created:
         sess.execute(
             "CREATE TABLE trigger_audit (seq bigint PRIMARY KEY, "
@@ -518,6 +694,11 @@ class CqlSession:
         #: table -> list of cell dicts (keys json, column, value str|None,
         #: writetime, expires_at micros|None, tombstone)
         self._cells: dict[str, list[dict]] = {}
+        #: table -> its memtable cells by partition, built by the first
+        #: key-pinned read and kept by ``_emit``; None when a key value does
+        #: not normalize (every pinned read then takes the Spark merge).
+        #: DROP TABLE, ALTER ... DROP and RENAME drop the entry.
+        self._parts: dict[str, _PartitionIndex | None] = {}
         #: session-created tables (CREATE TABLE DDL) -> parsed TableDef;
         #: they start from an EMPTY snapshot and live in the cell buffer
         self._created: dict[str, TableDef] = {}
@@ -636,16 +817,21 @@ class CqlSession:
             # collection cell (frozen semantics: whole-value replace): store
             # as JSON so the typed snapshot can from_json it back
             value = json.dumps(value, separators=(",", ":"), sort_keys=True)
-        self._cells.setdefault(tbl, []).append(
-            {
-                "key": key,
-                "column": column,
-                "value": None if value is None else str(value),
-                "writetime": wt,
-                "expires_at": (wt + ttl * 1_000_000) if ttl else None,
-                "tombstone": tombstone,
-            }
-        )
+        cell = {
+            "key": key,
+            "column": column,
+            "value": None if value is None else str(value),
+            "writetime": wt,
+            "expires_at": (wt + ttl * 1_000_000) if ttl else None,
+            "tombstone": tombstone,
+        }
+        self._cells.setdefault(tbl, []).append(cell)
+        index = self._parts.get(tbl)
+        if index is not None:
+            try:
+                index.add(cell)
+            except (TypeError, ValueError):
+                self._parts[tbl] = None
 
     def _apply_collection_op(
         self, tbl: str, col: str, current, operand, op: str, prepend: bool
@@ -710,15 +896,21 @@ class CqlSession:
         finally:
             self._in_trigger = False
 
-    def _key_rows(self, tbl: str, key: dict) -> DataFrame:
-        """The merged rows whose columns equal ``key``'s values."""
-        df = self.snapshot(tbl, single_partition=self._pins_partition(tbl, key))
+    @staticmethod
+    def _where_key(df: DataFrame, key: dict) -> DataFrame:
         for k, v in key.items():
             df = df.filter(F.col(k) == v)
         return df
 
+    def _key_rows(self, tbl: str, key: dict) -> DataFrame:
+        """The merged rows whose columns equal ``key``'s values."""
+        return self._where_key(self._source(tbl, {k: [v] for k, v in key.items()}), key)
+
     def _row_exists(self, tbl: str, key: dict) -> bool:
-        return self._key_rows(tbl, key).limit(1).count() > 0
+        folded = self._pinned_fold(tbl, {k: [v] for k, v in key.items()})
+        if folded is not None:
+            return bool(folded[3])
+        return self._where_key(self.snapshot(tbl), key).limit(1).count() > 0
 
     def _cell_value(self, tbl: str, key: dict, col: str):
         rows = self._key_rows(tbl, key).select(col).limit(1).collect()
@@ -775,11 +967,11 @@ class CqlSession:
         bodies (quotes stay, so clause shape survives) before the
         authorization regexes scan for clause keywords — a FROM or
         SUPERUSER inside string DATA must not read as statement structure
-        (judge r8 advice: ``WHERE note = 'from x'`` spuriously authorized
-        table ``x``). One left-to-right scan; whichever quote style opens
-        FIRST owns the literal until its own closer, so a ``$$`` inside a
-        single-quoted literal (or a ``'`` inside a $$ body) is data, not a
-        delimiter (judge r9 advice: two independent split passes let
+        (``WHERE note = 'from x'`` must not authorize table ``x``). One
+        left-to-right scan; whichever quote style opens FIRST owns the
+        literal until its own closer, so a ``$$`` inside a single-quoted
+        literal (or a ``'`` inside a $$ body) is data, not a delimiter
+        (two independent split passes would let
         ``'a$$from x$$b'`` re-expose string data as clause structure). A
         doubled '' escape reads as close-then-reopen — both parts blank,
         all four quotes survive, equally inert."""
@@ -850,8 +1042,8 @@ class CqlSession:
         granted) stay clear ONLY through the filter: cql() re-masks them
         via ``post_filter_masks`` immediately after the WHERE loop, so
         selectors, aliases, and expressions see masked bytes exactly like
-        the unrestricted case (r13 — judge r12 advice closed the
-        by-output-name alias leak)."""
+        the unrestricted case (re-masking output columns by name would
+        leak clear text through an alias)."""
         td = self._created[tbl]
         if not td.masks or self._holds_permission(
             "UNMASK", self._table_chain(tbl)
@@ -896,8 +1088,7 @@ class CqlSession:
         the table, its keyspace, or ALL KEYSPACES satisfies; permission
         ALL satisfies any; superusers (direct or inherited) bypass. A
         BATCH authorizes MODIFY on EVERY table it touches, and a SELECT
-        authorizes EVERY ``FROM`` reference (r8 — closes the judge's
-        first-table-only and qualified-name under-check gaps)."""
+        authorizes EVERY ``FROM`` reference, qualified names included."""
         if self._in_trigger:  # trigger-augmented mutations apply internally
             return
         s = self._blank_literals(s)
@@ -931,9 +1122,8 @@ class CqlSession:
 
     def _authorize_ddl(self, s: str) -> None:
         """Gate schema DDL and auth statements for the logged-in principal
-        (r8 — closes the judge's self-escalation gap: previously only data
-        statements were checked, so any login-capable role could GRANT
-        itself ALL). Per Cassandra's CassandraAuthorizer:
+        (were only data statements checked, any login-capable role could
+        GRANT itself ALL). Per Cassandra's CassandraAuthorizer:
 
         - GRANT/REVOKE a permission requires AUTHORIZE on the resource
           (or an ancestor in the resource hierarchy);
@@ -976,12 +1166,12 @@ class CqlSession:
         if m:
             # Granting or REMOVING superuser STATUS requires an actual
             # superuser grantor in Cassandra — a verb grant on ALL ROLES
-            # must not allow self-escalation (judge r8 advice). We only
+            # must not allow self-escalation. We only
             # reach here when _is_super() is false. But upstream only
             # restricts statements that CHANGE superuser status: an
             # explicit `SUPERUSER = false` on CREATE (or on ALTER of a
             # role that is not currently super) is a no-op shape a
-            # CREATE/ALTER-on-ALL-ROLES holder may run (judge r9 advice).
+            # CREATE/ALTER-on-ALL-ROLES holder may run.
             # Literals are already blanked, so a password containing
             # "superuser" cannot trip this.
             if re.search(r"\b(?:NO)?SUPERUSER\b", s, re.IGNORECASE):
@@ -1421,6 +1611,7 @@ class CqlSession:
             if tbl in self._created:
                 del self._created[tbl]
                 self._cells.pop(tbl, None)
+                self._parts.pop(tbl, None)
                 self._indexed.pop(tbl, None)
                 for k in [k for k in self._index_options if k.startswith(f"{tbl}.")]:
                     del self._index_options[k]
@@ -1516,6 +1707,7 @@ class CqlSession:
             self._cells[tbl] = [
                 c for c in self._cells.get(tbl, []) if c["column"] != col
             ]
+            self._parts.pop(tbl, None)
             return None
 
         m = _ALTER_RENAME.match(s)
@@ -1542,6 +1734,7 @@ class CqlSession:
             for cell in self._cells.get(tbl, []):
                 if old in cell["key"]:
                     cell["key"][new] = cell["key"].pop(old)
+            self._parts.pop(tbl, None)
             return None
 
         m = _COPY.match(s)
@@ -1680,8 +1873,7 @@ class CqlSession:
         The grants are recorded and fully introspectable (mirroring
         Cassandra's system_auth tables) AND enforced on the data path:
         `login()` sets the session principal and `_authorize_data` gates
-        every SELECT/MODIFY/BATCH against the grant set (r7 — closes the
-        judge's "recorded but not enforced" gap)."""
+        every SELECT/MODIFY/BATCH against the grant set."""
         m = _ALTER_KEYSPACE.match(s)
         if m:
             name = m.group("name").lower()
@@ -1696,7 +1888,7 @@ class CqlSession:
                     return None
                 raise InvalidRequest(f"role {name} already exists")
             # blank literal contents first: a PASSWORD of 'superuser =
-            # true' must not read as the SUPERUSER option (r9, the same
+            # true' must not read as the SUPERUSER option (the same
             # literal-blanking the authorizer applies)
             opts = self._blank_literals(m.group("opts") or "").upper()
             # CREATE USER defaults LOGIN=true, CREATE ROLE defaults false
@@ -1810,27 +2002,198 @@ class CqlSession:
 
     # -- read path ----------------------------------------------------------
 
-    def _pins_partition(self, tbl: str, restricted) -> bool:
-        """True when the columns restricted by ``=``/``IN`` cover the
-        table's whole partition key: the read names its partitions."""
-        return set(self._keys(tbl)[0]) <= set(restricted)
+    def _schema(self, tbl: str) -> StructType:
+        if tbl in self._created:
+            return StructType.fromDDL(self._created[tbl].spark_schema)
+        return table(self.spark, self.sf_dir, tbl).schema
 
-    def snapshot(
-        self, tbl: str, with_writetimes: bool = False, single_partition: bool = False
-    ) -> DataFrame:
-        """The merged live view of a table: snapshot + mutations, compacted
-        cell-wise. The parquet snapshot is melted into cells inside the
-        plan; the memtable (the session cell buffer, driver-held) enters it
-        as a ``LocalRelation`` (``session.local_frame``), unioned with those cells.
+    def _pins(self, tbl: str, conds: list) -> dict | None:
+        """Partition-key column -> the values a SELECT's ``=``/``IN``
+        restrictions name, or None when a column is restricted twice."""
+        pk = self._keys(tbl)[0]
+        pins: dict = {}
+        for col, op, lit in conds:
+            if col in pk and op in ("=", "in"):
+                if col in pins:
+                    return None
+                pins[col] = lit if op == "in" else [lit]
+        return pins
 
-        ``single_partition`` is for reads that fix every partition-key
-        column with ``=``/``IN`` (Cassandra's single-partition read).
-        Catalyst pushes such a key filter below the windows and the pivot,
-        which are keyed on the primary key, so only the named partitions'
-        cells reach the merge; they are coalesced to one partition before
-        the two windows and the pivot, and the read runs as one task with
-        no Exchange. Coalescing never changes the result. Every other read
-        keeps the hash-partitioned merge."""
+    def _snapshot_cells(self, tbl: str, schema: StructType, keys: list, pk_want: dict):
+        """The cells of the named partitions' snapshot rows, read with
+        pyarrow from the file ``catalog.table`` reads: row groups whose
+        statistics rule out every wanted key are skipped, the rest are read
+        and filtered. None when the read must take the Spark merge."""
+        path = os.path.join(self.sf_dir, f"{tbl}.parquet")
+        if not os.path.isfile(path):
+            return None
+        try:
+            pf = pq.ParquetFile(path)
+            arrow = pf.schema_arrow
+            if arrow.names != schema.names or not all(
+                _reads_as(f.type, schema[f.name].dataType.simpleString()) for f in arrow
+            ):
+                return None
+            groups = [
+                g for g in range(pf.num_row_groups)
+                if all(_may_hold(pf.metadata.row_group(g).column(arrow.get_field_index(c)), vs)
+                       for c, vs in pk_want.items())
+            ]
+            got = pf.read_row_groups(groups) if groups else arrow.empty_table()
+            got = got.filter(functools.reduce(pc.and_, (
+                pc.is_in(got.column(c), value_set=pa.array(list(vs), arrow.field(c).type))
+                for c, vs in pk_want.items()
+            )))
+        except (pa.ArrowException, OSError, TypeError, ValueError):
+            return None
+        if got.num_rows > FAST_READ_MAX_ROWS:
+            return None
+        cols = {}
+        for f in arrow:
+            col = got.column(f.name)
+            if pa.types.is_timestamp(f.type):
+                col = col.cast(pa.timestamp("us"), safe=False)
+            cols[f.name] = col.to_pylist()
+        row_keys = list(zip(*(cols[k] for k in keys)))
+        if len(set(row_keys)) != len(row_keys):
+            return None  # a duplicate primary key ties at writetime 0
+        payload = [f for f in arrow if f.name not in keys]
+        cells = [(key, ROW_MARKER, "1", 0, None, False) for key in row_keys]
+        for f in payload:
+            melt = _melt(f.type)
+            cells += [
+                (key, f.name, None if v is None else melt(v), 0, None, False)
+                for key, v in zip(row_keys, cols[f.name])
+            ]
+        return cells
+
+    def _pinned_fold(self, tbl: str, pins: dict | None):
+        """The fast path of a key-pinned read (Cassandra's single-partition
+        read, ``SinglePartitionReadCommand``): the partitions ``pins`` names
+        (key column -> candidate values, covering the partition key) are
+        read alone — their memtable cells through the partition index,
+        their snapshot rows through a pyarrow key filter — and folded in
+        Python by ``fold_cells``. Returns ``(schema, keys, payload, rows)``,
+        ``rows`` holding the visible rows whose key columns take the pinned
+        values, or None when the read must take the Spark merge (see
+        ``snapshot``)."""
+        if pins is None or tbl in self._views:
+            return None
+        pk, cc = self._keys(tbl)
+        if not set(pk) <= set(pins) or math.prod(len(pins[c]) for c in pk) > FAST_READ_MAX_ROWS:
+            return None
+        schema = self._schema(tbl)
+        if tbl not in self._created and any(
+            _complex(f.dataType.simpleString()) for f in schema.fields
+        ):
+            return None
+        index = self._parts.get(tbl, False)
+        if index is False:
+            try:
+                index = _PartitionIndex(schema, pk, cc, self._cells.get(tbl, []))
+            except (TypeError, ValueError):
+                index = None
+            self._parts[tbl] = index
+        if index is None:
+            return None
+        try:
+            want = {c: {index.norms[c](v) for v in vs} for c, vs in pins.items()}
+            parts = set(itertools.product(*(want[c] for c in pk)))
+        except (TypeError, ValueError):
+            return None
+        mem = [cell for part in parts for cell in index.parts.get(part, ())]
+        if any(cell["writetime"] <= 0 for _, cell in mem):
+            return None  # could tie with the snapshot's writetime 0
+        keys = list(index.keys)
+        cells = []
+        if tbl not in self._created:
+            cells = self._snapshot_cells(tbl, schema, keys, {c: want[c] for c in pk})
+            if cells is None:
+                return None
+        cells += [
+            (key, c["column"], c["value"], c["writetime"], c["expires_at"], c["tombstone"])
+            for key, c in mem
+        ]
+        at = [(keys.index(c), vs) for c, vs in want.items()]
+        rows = {
+            key: row
+            for key, row in fold_cells(cells, self.now_micros, self._truncated.get(tbl)).items()
+            if all(key[i] in vs for i, vs in at)
+        }
+        payload = [c for c in schema.names if c not in keys]
+        return schema, keys, payload, rows
+
+    def _source(self, tbl: str, pins: dict | None, with_writetimes: bool = False) -> DataFrame:
+        """The merged view a read restricted by ``pins`` runs on: the
+        folded rows of the named partitions as a ``LocalRelation``, typed by
+        the Spark merge's own final select, or else the Spark merge."""
+        folded = self._pinned_fold(tbl, pins)
+        if folded is None:
+            return self.snapshot(tbl, with_writetimes)
+        schema, keys, payload, rows = folded
+        names = [f"{c}_v" if with_writetimes else c for c in payload]
+        fields = [schema[k] for k in keys] + [StructField(n, StringType()) for n in names]
+        data = []
+        for key, row in rows.items():
+            cells = [row.get(c, (None, None, None)) for c in payload]
+            data.append(key + tuple(
+                cell[i] for i in ((0, 1, 2) if with_writetimes else (0,)) for cell in cells
+            ))
+        if with_writetimes:
+            fields += [StructField(f"{c}_wt", LongType()) for c in payload]
+            fields += [StructField(f"{c}_exp", LongType()) for c in payload]
+        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        wide = local_frame(self.spark, data, StructType(fields))
+        return self._typed(wide, keys, payload, dtypes, with_writetimes)
+
+    def _typed(self, wide: DataFrame, keys: list, payload: list, dtypes: dict,
+               with_writetimes: bool) -> DataFrame:
+        """The merge's final select over the wide text rows: each payload
+        column cast (or, for collections and UDTs, ``from_json``-parsed) to
+        its type; with ``with_writetimes``, the winning cell's writetime as
+        ``__wt_<col>`` and its remaining TTL as ``__ttl_<col>``."""
+
+        def typed(c: str) -> str:
+            v = f"`{c}_v`" if with_writetimes else f"`{c}`"
+            t = dtypes[c]
+            return (f"from_json({v}, '{t}')" if _complex(t) else f"CAST({v} AS {t})") + f" AS `{c}`"
+
+        # one SQL select, so building it is one call into the JVM
+        cols = [*(f"`{k}`" for k in keys), *map(typed, payload)]
+        if with_writetimes:
+            cols += [f"`{c}_wt` AS `__wt_{c}`" for c in payload]
+            # TTL(col): whole seconds remaining until expiry, at the
+            # session's injectable `now` [PK ExpirationDateOverflowHandling:
+            # localDeletionTime - nowInSeconds]
+            cols += [
+                f"CAST(floor((`{c}_exp` - {self.now_micros}) / 1000000) AS INT) AS `__ttl_{c}`"
+                for c in payload
+            ]
+        return wide.selectExpr(*cols)
+
+    def snapshot(self, tbl: str, with_writetimes: bool = False) -> DataFrame:
+        """The merged live view of a table as a Spark merge: snapshot +
+        mutations, compacted cell-wise. The parquet snapshot is melted into
+        cells inside the plan; the memtable (the session cell buffer,
+        driver-held) enters it as a ``LocalRelation``
+        (``session.local_frame``), unioned with those cells; two windows
+        fold tombstones, TTL and last-write-wins, and a pivot makes the
+        rows wide again.
+
+        A read that pins every partition-key column with ``=``/``IN``
+        (SELECT, ``_row_exists``, ``_cell_value``) does not come here: it
+        reads only the named partitions and folds their cells in Python
+        (``_pinned_fold``, ``fold_cells``). It comes here when:
+
+        - the table is a materialized view;
+        - the read names more than ``FAST_READ_MAX_ROWS`` partitions, or
+          its partitions hold more snapshot rows than that;
+        - the table's snapshot has a collection or UDT column, or its
+          parquet schema differs from ``catalog.table``'s;
+        - a named partition holds a memtable cell at writetime <= 0, which
+          could tie with the snapshot's writetime 0, or a duplicate primary
+          key in the snapshot;
+        - a key value does not normalize to its column type."""
         if tbl in self._created:
             # DDL-created table: empty snapshot with the declared schema;
             # all rows live in the session cell buffer
@@ -1842,14 +2205,11 @@ class CqlSession:
         payload = [c for c in base.columns if c not in keys]
         dtypes = dict(base.dtypes)
 
-        def _complex(c: str) -> bool:
-            return dtypes[c].startswith(("array", "map", "struct"))
-
         # melt the snapshot into cells (writetime 0 = pre-session history);
         # collection cells serialize as JSON (matching _emit), scalars as
         # plain string casts
         stack_cols = ", ".join(
-            f"'{c}', to_json({c})" if _complex(c) else f"'{c}', CAST({c} AS STRING)"
+            f"'{c}', to_json({c})" if _complex(dtypes[c]) else f"'{c}', CAST({c} AS STRING)"
             for c in payload
         )
         cells = base.selectExpr(
@@ -1889,8 +2249,6 @@ class CqlSession:
         # post-truncate mutations survive
         if tbl in self._truncated:
             cells = cells.filter(F.col("writetime") > F.lit(self._truncated[tbl]))
-        if single_partition:
-            cells = cells.coalesce(1)
 
         # row tombstones shadow all older cells of the key
         w_key = Window.partitionBy(*keys)
@@ -1919,56 +2277,19 @@ class CqlSession:
             .filter(F.col("column") != ROW_TOMBSTONE)
         )
 
-        # pivot back to wide; a row is visible if ANY live cell remains
-        if not with_writetimes:
-            wide = (
-                live.groupBy(*keys)
-                .pivot("column", [ROW_MARKER, *payload])
-                .agg(F.first("value"))
-            )
-            return wide.select(
-                *keys,
-                *[
-                    (
-                        F.from_json(F.col(c), dtypes[c]) if _complex(c) else F.col(c).cast(dtypes[c])
-                    ).alias(c)
-                    for c in payload
-                ],
-            )
-        # per-cell writetime/TTL pivot: multi-agg pivot names columns
-        # <col>_v / <col>_wt / <col>_exp; snapshot-origin cells carry
-        # writetime 0 ("pre-session history" — the original cluster
-        # timestamp is not in the export) and no TTL
-        wide = (
-            live.groupBy(*keys)
-            .pivot("column", [ROW_MARKER, *payload])
-            .agg(
-                F.first("value").alias("v"),
-                F.max("writetime").alias("wt"),
-                F.max("expires_at").alias("exp"),
-            )
+        # pivot back to wide; a row is visible if ANY live cell remains.
+        # With writetimes the multi-agg pivot names columns <col>_v /
+        # <col>_wt / <col>_exp; snapshot-origin cells carry writetime 0
+        # ("pre-session history" — the original cluster timestamp is not in
+        # the export) and no TTL
+        aggs = (
+            [F.first("value").alias("v"), F.max("writetime").alias("wt"),
+             F.max("expires_at").alias("exp")]
+            if with_writetimes
+            else [F.first("value")]
         )
-        return wide.select(
-            *keys,
-            *[
-                (
-                    F.from_json(F.col(f"{c}_v"), dtypes[c])
-                    if _complex(c)
-                    else F.col(f"{c}_v").cast(dtypes[c])
-                ).alias(c)
-                for c in payload
-            ],
-            *[F.col(f"{c}_wt").alias(f"__wt_{c}") for c in payload],
-            *[
-                # TTL(col): whole seconds remaining until expiry, at the
-                # session's injectable `now` [PK ExpirationDateOverflowHandling:
-                # localDeletionTime - nowInSeconds]
-                F.floor((F.col(f"{c}_exp") - F.lit(self.now_micros)) / 1_000_000)
-                .cast("int")
-                .alias(f"__ttl_{c}")
-                for c in payload
-            ],
-        )
+        wide = live.groupBy(*keys).pivot("column", [ROW_MARKER, *payload]).agg(*aggs)
+        return self._typed(wide, keys, payload, dtypes, with_writetimes)
 
     def _copy(self, m: re.Match) -> DataFrame:
         """cqlsh COPY [PK `pylib/cqlshlib/copyutil.py`]: CSV export of the
@@ -2121,8 +2442,8 @@ class CqlSession:
         # Cassandra 5.0 attached-mask metadata [PK CEP-20 /
         # `schema/SchemaKeyspace.java` COLUMN_MASKS]
         "column_masks": (("keyspace_name",), ("table_name", "column_name")),
-        # [PK `schema/SchemaKeyspace.java` INDEXES] — r13, pairs with the
-        # SAI similarity_function option wiring
+        # [PK `schema/SchemaKeyspace.java` INDEXES]; pairs with the SAI
+        # similarity_function option wiring
         "indexes": (("keyspace_name",), ("table_name", "index_name")),
         "views": (("keyspace_name",), ("view_name",)),
         "types": (("keyspace_name",), ("type_name",)),
@@ -2377,12 +2698,7 @@ class CqlSession:
         if tbl in self._views:
             src = self._mv_source(self._views[tbl])
         else:
-            restricted = [c for c, op, _ in parse(statement, extra).conds if op in ("=", "in")]
-            src = self.snapshot(
-                tbl,
-                with_writetimes=with_wt,
-                single_partition=self._pins_partition(tbl, restricted),
-            )
+            src = self._source(tbl, self._pins(tbl, parse(statement, extra).conds), with_wt)
         post_mask: tuple[str, ...] = ()
         if tbl in self._created and self._created[tbl].masks:
             src, post_mask = self._apply_attached_masks(tbl, src, statement)
@@ -2397,9 +2713,9 @@ class CqlSession:
             extra_aggregates=self._aggregates,
             extra_index_options=self._index_options,
             # re-masked inside cql() immediately after the WHERE filter —
-            # BEFORE selectors/aliases/expressions run (judge r12 advice:
-            # masking the matching OUTPUT columns by name leaked clear
-            # text through `SELECT ssn AS s ... WHERE ssn = ...`)
+            # BEFORE selectors/aliases/expressions run (masking the
+            # matching OUTPUT columns by name would leak clear text
+            # through `SELECT ssn AS s ... WHERE ssn = ...`)
             post_filter_masks={
                 c: self._created[tbl].masks[c] for c in post_mask
             },

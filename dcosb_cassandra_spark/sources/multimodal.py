@@ -1272,7 +1272,7 @@ def mp4_decode_frames(data: bytes):
     entropy coders) remain honestly gated — a deployment swaps the gate
     branch for PyAV/ffmpeg; the container walk and the MJPEG path stay."""
     codec: list[bytes] = []
-    sizes: list[int] = []
+    tables: list[tuple[int, int, int]] = []  # (uniform, count, table offset)
     mdat: list[bytes] = []
     for fourcc, b0, b1 in _mp4_boxes(data):
         if fourcc == b"stsd":
@@ -1280,12 +1280,7 @@ def mp4_decode_frames(data: bytes):
             if n_entries >= 1:
                 codec.append(data[b0 + 12 : b0 + 16])
         elif fourcc == b"stsz":
-            uniform, count = struct.unpack_from(">II", data, b0 + 4)
-            sizes.extend(
-                [uniform] * count
-                if uniform
-                else struct.unpack_from(f">{count}I", data, b0 + 12)
-            )
+            tables.append((*struct.unpack_from(">II", data, b0 + 4), b0 + 12))
         elif fourcc == b"mdat":
             mdat.append(data[b0:b1])
     fmt = codec[0] if codec else b"?"
@@ -1295,9 +1290,18 @@ def mp4_decode_frames(data: bytes):
             "requires a codec library (ffmpeg/PyAV); MJPEG tracks decode "
             "natively and box parsing (mp4_parse_meta) is always real"
         )
+    payload = mdat[0] if mdat else b""
+    sizes: list[int] = []
+    for uniform, count, off in tables:
+        # a uniform table is bounded by the payload before it is expanded:
+        # a corrupt 32-bit count must not become a 2^32-slot list
+        if uniform and uniform * count > len(payload):
+            raise ValueError("stsz sum does not match mdat payload")
+        sizes.extend(
+            [uniform] * count if uniform else struct.unpack_from(f">{count}I", data, off)
+        )
     if not mdat or not sizes:
         raise ValueError("MJPEG track missing stsz or mdat")
-    payload = mdat[0]
     if sum(sizes) != len(payload):
         raise ValueError("stsz sum does not match mdat payload")
     frames, off = [], 0

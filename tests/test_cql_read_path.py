@@ -1,7 +1,10 @@
 """CqlSession read path: the Arrow-backed local frames
 (`session.local_frame`) that carry driver-held rows into plans, and the
-single-partition merge that serves key-pinned reads without an Exchange.
-Each fast form is checked against the form it replaces."""
+fast path of key-pinned reads, which folds the named partitions in Python
+(`CqlSession._pinned_fold`) and runs on a `LocalRelation` without an
+Exchange; unpinned reads keep the Spark merge (`CqlSession.snapshot`), and
+tests/test_cql_fold.py covers the fallback conditions. Each fast form is
+checked against the form it replaces."""
 
 from __future__ import annotations
 

@@ -182,3 +182,30 @@ def test_mjpeg_corrupt_stsz_rejected():
     struct.pack_into(">I", data, i + 16, sz + 8)
     with pytest.raises(ValueError, match="stsz"):
         mp4_decode_frames(bytes(data))
+
+
+@pytest.mark.parametrize("uniform", [8, 0])
+def test_mjpeg_huge_stsz_count_rejected_in_bounded_memory(uniform):
+    """A stsz that declares 2^32-1 samples is rejected before any table of
+    that length is built, whether the sizes are uniform or listed."""
+    import tracemalloc
+
+    import numpy as np
+
+    from dcosb_cassandra_spark.sources.multimodal import (
+        jpeg_encode_gray,
+        mp4_encode_mjpeg,
+    )
+
+    px = np.full((16, 16), 7, dtype=np.uint8)
+    data = bytearray(mp4_encode_mjpeg([jpeg_encode_gray(px.tobytes(), 16, 16)], 16, 16))
+    i = bytes(data).index(b"stsz")
+    struct.pack_into(">II", data, i + 8, uniform, 2**32 - 1)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError):
+            mp4_decode_frames(bytes(data))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
 from pathlib import Path
 
 import pytest
@@ -129,3 +130,24 @@ def test_foreach_batch_replays_have_one_source():
     running."""
     sites = [s for p in MODULES for s in call_sites(p, "foreachBatch")]
     assert sites == [("streaming/streams.py", ("foreach_batch",))]
+
+
+def test_ab_report_counts_wins_per_pair():
+    """tools/ab.py's report: per-arm median and quartiles, and the pairs
+    in which the change beat the parent on a lower-is-better metric."""
+    spec = importlib.util.spec_from_file_location("ab", ROOT / "tools" / "ab.py")
+    ab = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab)
+
+    def result(v):
+        return {"correct": True, "failed": 0, "metrics": {"cpu_ms_per_op": {"value": v}}}
+
+    metric = [{"name": "cpu_ms_per_op", "unit": "ms", "better": "lower", "bound": 0.25}]
+    lines = ab.summarize(
+        {"parent": [result(v) for v in (10, 12, 11)],
+         "change": [result(v) for v in (5, 13, 4)]},
+        metric,
+    )
+    assert "median     11.000" in lines[1] and "median      5.000" in lines[2]
+    assert lines[3] == "  change beat parent in 2 of 3 pairs"
+    assert ab.quartiles([1.0, 2.0, 3.0, 4.0, 5.0]) == (2.0, 3.0, 4.0)
