@@ -587,6 +587,7 @@ def cql(
     extra_aggregates: dict | None = None,
     extra_index_options: dict | None = None,
     post_filter_masks: dict | None = None,
+    applied_keys: frozenset = frozenset(),
 ) -> DataFrame:
     """Execute a CQL SELECT against the catalog (or an injected source —
     the CqlSession merged view); returns a DataFrame. ``extra_keys``
@@ -604,13 +605,18 @@ def cql(
     restrict on clear values but never read them] — applied here, before
     any selector/alias/expression/aggregate can observe the clear bytes,
     so ``SELECT ssn AS s ... WHERE ssn = '...'`` leaks nothing (a re-mask
-    of output columns by name would miss aliases)."""
+    of output columns by name would miss aliases); ``applied_keys`` names
+    the key columns whose ``=``/``IN`` restrictions ``source_df`` already
+    applies (a pinned read's fold), which are checked but not filtered
+    again."""
     q = parse(statement, extra_keys)
     _check_restrictions(q, extra_keys, extra_indexed)
     pk, cc = {**TABLE_KEYS, **(extra_keys or {})}[q.table]
     df = source_df if source_df is not None else table(spark, sf_dir, q.table)
 
     for col, op, lit in q.conds:
+        if col in applied_keys and op in ("=", "in"):
+            continue
         if col.startswith("token("):
             from .functions.murmur3 import token_murmur3
 
@@ -781,6 +787,14 @@ def cql(
             df = df.groupBy(*group_cols).agg(*exprs)
         else:
             df = df.agg(*exprs)
+    elif [s[0] for s in q.selectors] == ["star"]:
+        # a lone `*` is an identity unless the source carries the hidden
+        # writetime/TTL columns
+        shown = [c for c in df.columns if not c.startswith(("__wt_", "__ttl_"))]
+        if len(shown) < len(df.columns):
+            df = df.select(*shown)
+        if q.distinct:
+            df = df.distinct()
     else:
         cols: list[Column] = []
         for kind, arg, alias in q.selectors:
@@ -900,7 +914,16 @@ def cql(
             df = df.distinct()
 
     if q.order_by:
-        df = df.orderBy(*[F.desc(c) if d else F.asc(c) for c, d in q.order_by])
+        # rows that tie on the ORDER BY columns follow partition order, then
+        # the clustering order of the rest of the clustering columns (read
+        # in the direction ORDER BY gives), so LIMIT always cuts at the same
+        # rows; an aggregate or DISTINCT result can only sort by its outputs
+        ordered = {c for c, _ in q.order_by}
+        desc = q.order_by[0][1]
+        ties = [(c, False) for c in pk] + [(c, desc) for c in cc if c not in ordered]
+        if aggs or q.distinct:
+            ties = [(c, d) for c, d in ties if c in df.columns]
+        df = df.orderBy(*[F.desc(c) if d else F.asc(c) for c, d in [*q.order_by, *ties]])
     if q.limit is not None:
         df = df.limit(q.limit)
     if q.json:

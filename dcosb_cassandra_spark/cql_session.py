@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DateType,
+    DoubleType,
     FractionalType,
     IntegralType,
     LongType,
@@ -144,6 +145,12 @@ def _key_norm(dtype):
         return v
 
     return norm
+
+
+#: key column types on which the fold's ``=``/``IN`` test of a pinned value
+#: is the test Spark's filter makes: no text parsed (dates, timestamps) and
+#: no value rounded to the column type (float, decimal) on one side only
+_EXACT_KEY_TYPES = (IntegralType, StringType, BooleanType, DoubleType)
 
 
 #: arrow type -> the Spark type ``catalog.table`` reads it as
@@ -762,6 +769,8 @@ class CqlSession:
         #: melted snapshot, which carries writetime 0) at or below this
         #: writetime is shadowed — exactly Cassandra's truncate record
         self._truncated: dict[str, int] = {}
+        #: the ``[applied]`` true and false results, built on first use
+        self._lwt_frames: dict[bool, DataFrame] = {}
 
     # -- write path ---------------------------------------------------------
 
@@ -904,7 +913,8 @@ class CqlSession:
 
     def _key_rows(self, tbl: str, key: dict) -> DataFrame:
         """The merged rows whose columns equal ``key``'s values."""
-        return self._where_key(self._source(tbl, {k: [v] for k, v in key.items()}), key)
+        df, applied = self._source(tbl, {k: [v] for k, v in key.items()})
+        return self._where_key(df, {k: v for k, v in key.items() if k not in applied})
 
     def _row_exists(self, tbl: str, key: dict) -> bool:
         folded = self._pinned_fold(tbl, {k: [v] for k, v in key.items()})
@@ -915,6 +925,13 @@ class CqlSession:
     def _cell_value(self, tbl: str, key: dict, col: str):
         rows = self._key_rows(tbl, key).select(col).limit(1).collect()
         return rows[0][0] if rows else None
+
+    def _applied(self, ok: bool) -> DataFrame:
+        """The 1-row ``[applied]`` result of a lightweight transaction."""
+        frame = self._lwt_frames.get(ok)
+        if frame is None:
+            frame = self._lwt_frames[ok] = local_frame(self.spark, [(ok,)], _APPLIED)
+        return frame
 
     def prepare(self, statement: str) -> Prepared:
         """Parse-once prepared statement; execute with
@@ -1766,9 +1783,9 @@ class CqlSession:
             row = dict(zip(cols, vals))
             key = {c: row[c] for c in (*pk, *cc) if c in row}
             if self._row_exists(tbl, key):
-                return local_frame(self.spark, [(False,)], _APPLIED)
+                return self._applied(False)
             self.execute(bare)
-            return local_frame(self.spark, [(True,)], _APPLIED)
+            return self._applied(True)
 
         m = _UPDATE.match(s)
         if m and m.group("cond"):
@@ -1779,12 +1796,12 @@ class CqlSession:
             key = self._key_of(tbl, m.group("where"))
             current = self._cell_value(tbl, key, cm.group(1).lower())
             if current != _literal(cm.group(2)):
-                return local_frame(self.spark, [(False,)], _APPLIED)
+                return self._applied(False)
             # Slice at the regex's cond span, not a textual ' IF ' search —
             # a quoted value may contain ' IF ' (e.g. SET note = 'as if new').
             bare = re.sub(r"\s+IF\s*$", "", s[: m.start("cond")], flags=re.IGNORECASE)
             self.execute(bare)
-            return local_frame(self.spark, [(True,)], _APPLIED)
+            return self._applied(True)
 
         m = _INSERT.match(s)
         if m:
@@ -2123,13 +2140,19 @@ class CqlSession:
         payload = [c for c in schema.names if c not in keys]
         return schema, keys, payload, rows
 
-    def _source(self, tbl: str, pins: dict | None, with_writetimes: bool = False) -> DataFrame:
+    def _source(
+        self, tbl: str, pins: dict | None, with_writetimes: bool = False
+    ) -> tuple[DataFrame, frozenset]:
         """The merged view a read restricted by ``pins`` runs on: the
         folded rows of the named partitions as a ``LocalRelation``, typed by
-        the Spark merge's own final select, or else the Spark merge."""
+        the Spark merge's own final select, or else the Spark merge. Also
+        returns the pinned columns whose ``=``/``IN`` restriction the frame
+        already applies (none for the Spark merge): a caller need not filter
+        on them again, and should not, since Catalyst compiles a filter over
+        a ``LocalRelation`` anew for each distinct literal."""
         folded = self._pinned_fold(tbl, pins)
         if folded is None:
-            return self.snapshot(tbl, with_writetimes)
+            return self.snapshot(tbl, with_writetimes), frozenset()
         schema, keys, payload, rows = folded
         names = [f"{c}_v" if with_writetimes else c for c in payload]
         fields = [schema[k] for k in keys] + [StructField(n, StringType()) for n in names]
@@ -2144,7 +2167,8 @@ class CqlSession:
             fields += [StructField(f"{c}_exp", LongType()) for c in payload]
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         wide = local_frame(self.spark, data, StructType(fields))
-        return self._typed(wide, keys, payload, dtypes, with_writetimes)
+        applied = frozenset(c for c in pins if isinstance(schema[c].dataType, _EXACT_KEY_TYPES))
+        return self._typed(wide, keys, payload, dtypes, with_writetimes), applied
 
     def _typed(self, wide: DataFrame, keys: list, payload: list, dtypes: dict,
                with_writetimes: bool) -> DataFrame:
@@ -2695,10 +2719,13 @@ class CqlSession:
         with_wt = bool(
             re.search(r"\b(?:max)?(?:writetime|ttl)\s*\(", statement, re.IGNORECASE)
         )
+        applied: frozenset = frozenset()
         if tbl in self._views:
             src = self._mv_source(self._views[tbl])
         else:
-            src = self._source(tbl, self._pins(tbl, parse(statement, extra).conds), with_wt)
+            src, applied = self._source(
+                tbl, self._pins(tbl, parse(statement, extra).conds), with_wt
+            )
         post_mask: tuple[str, ...] = ()
         if tbl in self._created and self._created[tbl].masks:
             src, post_mask = self._apply_attached_masks(tbl, src, statement)
@@ -2712,6 +2739,7 @@ class CqlSession:
             extra_functions=self._functions,
             extra_aggregates=self._aggregates,
             extra_index_options=self._index_options,
+            applied_keys=applied,
             # re-masked inside cql() immediately after the WHERE filter —
             # BEFORE selectors/aliases/expressions run (masking the
             # matching OUTPUT columns by name would leak clear text

@@ -182,6 +182,7 @@ def test_created_table_paths_agree(spark, ops, advance_s):
     sess.now_micros += advance_s * 1_000_000
     assert_paths_agree(sess, "SELECT * FROM kv WHERE k IN (1, 2)")
     assert_paths_agree(sess, "SELECT * FROM kv WHERE k = 1 ORDER BY c DESC LIMIT 1")
+    assert_paths_agree(sess, "SELECT * FROM kv WHERE k IN (1, 2) ORDER BY c LIMIT 1")
     assert_paths_agree(
         sess, "SELECT k, c, writetime(v) AS wt, ttl(v) AS t FROM kv WHERE k = 1"
     )
@@ -236,3 +237,73 @@ def test_memtable_index_follows_ddl(spark):
     sess.execute("CREATE TABLE ix (k int, c int, v text, PRIMARY KEY (k, c))")
     sess.execute("INSERT INTO ix (k, c, v) VALUES (2, 1, 'new')")
     check("SELECT * FROM ix WHERE k IN (1, 2)", [(2, 1, "new")])
+
+
+def test_in_read_breaks_order_by_ties_by_partition(spark):
+    """Rows of two partitions that tie on the ORDER BY column are cut by
+    LIMIT in partition-key order, on both paths."""
+    sess = CqlSession(spark, SMOKE_SF_DIR)
+    sess.execute("CREATE TABLE kv (k int, c int, v text, PRIMARY KEY (k, c))")
+    for k in (2, 1):
+        sess.execute(f"INSERT INTO kv (k, c, v) VALUES ({k}, 1, 'v{k}')")
+        sess.execute(f"INSERT INTO kv (k, c, v) VALUES ({k}, 2, 'w{k}')")
+    assert assert_paths_agree(
+        sess, "SELECT * FROM kv WHERE k IN (2, 1) ORDER BY c LIMIT 1") == [(1, 1, "v1")]
+    assert assert_paths_agree(
+        sess, "SELECT k, v FROM kv WHERE k IN (2, 1) ORDER BY c DESC LIMIT 3"
+    ) == [(1, "w1"), (2, "w2"), (1, "v1")]
+
+
+def _codegen_compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_pinned_reads_compile_no_code_per_key(spark):
+    """A fold-path read filters no literal in Spark, so reading a new key
+    compiles no class: Catalyst would compile a predicate over the
+    ``LocalRelation`` for each distinct key literal."""
+    sess = CqlSession(spark, SMOKE_SF_DIR)
+    keys = [r["c_custkey"] for r in pq.read_table(
+        f"{SMOKE_SF_DIR}/customer.parquet", columns=["c_custkey"]).slice(0, 6).to_pylist()]
+    sess.execute(f"UPDATE customer SET c_acctbal = 1.5 WHERE c_custkey = {keys[1]}")
+    sess.execute(f"SELECT * FROM customer WHERE c_custkey = {keys[0]}").collect()
+    before = _codegen_compiles(spark)
+    for k in keys[1:]:
+        assert sess._pinned_fold("customer", {"c_custkey": [k]}) is not None
+        assert len(sess.execute(f"SELECT * FROM customer WHERE c_custkey = {k}").collect()) == 1
+    assert _codegen_compiles(spark) == before
+
+
+def test_spark_merge_keeps_every_filter(spark):
+    """The Spark merge applies no restriction itself, so a read that takes
+    it still filters on the key, on other columns and on clustering
+    ranges, and ``SELECT *`` keeps the columns, in order, that the fold
+    path returns."""
+    sess = CqlSession(spark, SMOKE_SF_DIR)
+    first = pq.read_table(f"{SMOKE_SF_DIR}/customer.parquet").slice(0, 2).to_pylist()
+    k0, k1 = (r["c_custkey"] for r in first)
+    sess.execute(f"UPDATE customer SET c_name = 'renamed' WHERE c_custkey = {k1}")
+    rows = assert_paths_agree(sess, f"SELECT * FROM customer WHERE c_custkey IN ({k0}, {k1})")
+    assert len(rows) == 2
+    name = first[0]["c_name"]
+    assert len(assert_paths_agree(
+        sess, f"SELECT * FROM customer WHERE c_custkey = {k0} AND c_name = '{name}' "
+              "ALLOW FILTERING")) == 1
+    assert assert_paths_agree(
+        sess, f"SELECT * FROM customer WHERE c_custkey = {k1} AND c_name = '{name}' "
+              "ALLOW FILTERING") == []
+
+    sess.execute("CREATE TABLE kv (k int, c int, v text, PRIMARY KEY (k, c))")
+    for c in range(1, 5):
+        sess.execute(f"INSERT INTO kv (k, c, v) VALUES (1, {c}, 'v{c}') USING TTL 600")
+    assert assert_paths_agree(
+        sess, "SELECT c FROM kv WHERE k = 1 AND c > 1 AND c <= 3") == [(2,), (3,)]
+    for stmt in ("SELECT * FROM kv WHERE k = 1",
+                 "SELECT *, writetime(v) AS wt, ttl(v) AS t FROM kv WHERE k = 1"):
+        fast = sess.execute(stmt)
+        with spark_merge():
+            slow = sess.execute(stmt)
+        assert fast.columns == slow.columns, stmt
+        assert_paths_agree(sess, stmt)
+    assert sess.execute("SELECT * FROM kv WHERE k = 1").columns == ["k", "c", "v"]
