@@ -790,9 +790,9 @@ def cql(
     elif [s[0] for s in q.selectors] == ["star"]:
         # a lone `*` is an identity unless the source carries the hidden
         # writetime/TTL columns
-        shown = [c for c in df.columns if not c.startswith(("__wt_", "__ttl_"))]
-        if len(shown) < len(df.columns):
-            df = df.select(*shown)
+        hidden = [c for c in df.columns if c.startswith(("__wt_", "__ttl_"))]
+        if hidden:
+            df = df.drop(*hidden)
         if q.distinct:
             df = df.distinct()
     else:

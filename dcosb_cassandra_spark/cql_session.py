@@ -2719,9 +2719,8 @@ class CqlSession:
         with_wt = bool(
             re.search(r"\b(?:max)?(?:writetime|ttl)\s*\(", statement, re.IGNORECASE)
         )
-        applied: frozenset = frozenset()
         if tbl in self._views:
-            src = self._mv_source(self._views[tbl])
+            src, applied = self._mv_source(self._views[tbl]), frozenset()
         else:
             src, applied = self._source(
                 tbl, self._pins(tbl, parse(statement, extra).conds), with_wt

@@ -299,11 +299,15 @@ def test_spark_merge_keeps_every_filter(spark):
         sess.execute(f"INSERT INTO kv (k, c, v) VALUES (1, {c}, 'v{c}') USING TTL 600")
     assert assert_paths_agree(
         sess, "SELECT c FROM kv WHERE k = 1 AND c > 1 AND c <= 3") == [(2,), (3,)]
-    for stmt in ("SELECT * FROM kv WHERE k = 1",
-                 "SELECT *, writetime(v) AS wt, ttl(v) AS t FROM kv WHERE k = 1"):
-        fast = sess.execute(stmt)
+    sess.execute("UPDATE kv SET v = 'ttl(v)' WHERE k = 1 AND c = 4")
+    # the literal names ttl(), so the source carries the hidden writetime
+    # and TTL columns that a lone `*` must not show
+    hidden = "SELECT * FROM kv WHERE k = 1 AND v = 'ttl(v)' ALLOW FILTERING"
+    for stmt, cols in (("SELECT * FROM kv WHERE k = 1", ["k", "c", "v"]),
+                       (hidden, ["k", "c", "v"]),
+                       ("SELECT *, writetime(v) AS wt, ttl(v) AS t FROM kv WHERE k = 1",
+                        ["k", "c", "v", "wt", "t"])):
+        assert sess.execute(stmt).columns == cols, stmt
         with spark_merge():
-            slow = sess.execute(stmt)
-        assert fast.columns == slow.columns, stmt
-        assert_paths_agree(sess, stmt)
-    assert sess.execute("SELECT * FROM kv WHERE k = 1").columns == ["k", "c", "v"]
+            assert sess.execute(stmt).columns == cols, stmt
+        assert assert_paths_agree(sess, stmt)
