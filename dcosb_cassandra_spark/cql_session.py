@@ -41,6 +41,7 @@ import json
 import math
 import os
 import re
+import struct
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -50,14 +51,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
+    ByteType,
     DateType,
+    DecimalType,
     DoubleType,
+    FloatType,
     FractionalType,
+    IntegerType,
     IntegralType,
     LongType,
+    ShortType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 from pyspark.sql.window import Window
@@ -82,7 +89,7 @@ from .cql import (
     split_top_level,
     translate_function_body,
 )
-from .session import local_frame, memo_stats
+from .session import HeldFrame, generation, local_frame, memo_stats
 
 ROW_MARKER = "__row__"
 ROW_TOMBSTONE = "*"
@@ -185,23 +192,129 @@ def _may_hold(column_chunk, values) -> bool:
         return True
 
 
-def _melt(t: pa.DataType):
-    """Text of one snapshot value of arrow type ``t``, as the Spark merge's
-    ``CAST(col AS STRING)`` melts it, up to spelling: the text is only ever
-    cast back to the column type, never compared with another snapshot
-    value (a partition holding a duplicate primary key or a memtable cell
-    at writetime <= 0 takes the Spark merge)."""
-    if pa.types.is_boolean(t):
+def _melt(dtype):
+    """Text of one value of Spark type ``dtype``, as the Spark merge's
+    ``CAST(col AS STRING)`` melts a snapshot value, up to spelling: the
+    text is only ever cast back to the column type, never compared with
+    another snapshot value (a partition holding a duplicate primary key or
+    a memtable cell at writetime <= 0 takes the Spark merge)."""
+    if isinstance(dtype, BooleanType):
         return lambda v: "true" if v else "false"
-    if pa.types.is_floating(t):
+    if isinstance(dtype, (FloatType, DoubleType)):
         return repr
-    if pa.types.is_decimal(t):
+    if isinstance(dtype, DecimalType):
         return lambda v: format(v, "f")
-    if pa.types.is_timestamp(t):
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
         return lambda v: v.isoformat(sep=" ")
-    if pa.types.is_date(t):
+    if isinstance(dtype, DateType):
         return dt.date.isoformat
     return str
+
+
+_EPOCH = dt.datetime(1970, 1, 1)
+
+#: what a text that does not type on the driver raises (see ``_held_value``)
+_NOT_HELD = (ValueError, KeyError, ArithmeticError)
+
+
+def _float32(s: str) -> float:
+    return struct.unpack("f", struct.pack("f", float(s)))[0]
+
+
+def _decimal(dtype: DecimalType):
+    """A parsed decimal at ``dtype``'s scale, as Spark's cast stores it;
+    raises where the cast would round or overflow."""
+    exp = decimal.Decimal(1).scaleb(-dtype.scale)
+    ctx = decimal.Context(prec=dtype.precision)
+
+    def internal(v: decimal.Decimal) -> decimal.Decimal:
+        if v.is_zero() and v.is_signed():
+            raise ValueError(v)  # Spark has no negative zero decimal
+        q = v.quantize(exp, context=ctx)  # raises past the precision
+        if q != v:
+            raise ValueError(v)
+        return q
+
+    return internal
+
+
+def _timestamp(s: str) -> dt.datetime:
+    v = dt.datetime.fromisoformat(s)
+    if v.tzinfo is not None:
+        raise ValueError(s)
+    return v
+
+
+def _held_value(dtype):
+    """How a folded text of Spark type ``dtype`` becomes the value
+    ``CAST(text AS type)`` gives, in Spark's internal form (dates as days,
+    timestamps as microseconds since the epoch, naive text read as UTC, the
+    engine's session time zone), or None for a type not typed on the
+    driver (collections, UDTs, binary). Only a text that ``_melt`` of the
+    value spells back is typed; another spelling (``'1.50'``, ``'True'``,
+    ``'+5'``) or a value out of the type's range raises one of
+    ``_NOT_HELD``, and the read takes Spark's cast (``_typed``)."""
+    internal = None
+    if isinstance(dtype, IntegralType):
+        bound = 1 << (8 * {ByteType: 1, ShortType: 2, IntegerType: 4}.get(type(dtype), 8) - 1)
+
+        def parse(s: str) -> int:
+            v = int(s)
+            if not -bound <= v < bound:
+                raise ValueError(s)
+            return v
+    elif isinstance(dtype, BooleanType):
+        parse = {"true": True, "false": False}.__getitem__
+    elif isinstance(dtype, DoubleType):
+        parse = float
+    elif isinstance(dtype, FloatType):
+        parse = _float32
+    elif isinstance(dtype, DecimalType):
+        parse, internal = decimal.Decimal, _decimal(dtype)
+    elif isinstance(dtype, StringType):
+        parse = str
+    elif isinstance(dtype, DateType):
+        parse, internal = dt.date.fromisoformat, DateType().toInternal
+    elif isinstance(dtype, (TimestampType, TimestampNTZType)):
+        parse = _timestamp
+
+        def internal(v: dt.datetime) -> int:
+            return (v - _EPOCH) // dt.timedelta(microseconds=1)
+    else:
+        return None
+    melt = _melt(dtype)
+
+    def held(s: str):
+        v = parse(s)
+        if melt(v) != s:
+            raise ValueError(s)
+        return v if internal is None else internal(v)
+
+    return held
+
+
+def _held_rows(schema: StructType, keys: list, payload: list, rows: dict) -> list | None:
+    """The folded rows of a pinned read (``CqlSession._pinned_fold``) in
+    Spark's internal form, key columns then payload columns, or None when
+    a column or a text does not type on the driver (see ``_held_value``).
+    Float and decimal keys are not held: the fold may compare a key value
+    unrounded to the column type."""
+    if any(isinstance(schema[k].dataType, (FloatType, DecimalType)) for k in keys):
+        return None
+    cols = [*keys, *payload]
+    held = [_held_value(schema[c].dataType) for c in cols]
+    if None in held:
+        return None
+    key_text = [_melt(schema[k].dataType) for k in keys]
+    out = []
+    try:
+        for key, row in rows.items():
+            texts = [m(v) for m, v in zip(key_text, key)]
+            texts += [row.get(c, (None,))[0] for c in payload]
+            out.append(tuple(None if t is None else h(t) for h, t in zip(held, texts)))
+    except _NOT_HELD:
+        return None
+    return out
 
 
 def fold_cells(cells, now_micros: int, truncated: int | None = None) -> dict:
@@ -771,6 +884,9 @@ class CqlSession:
         self._truncated: dict[str, int] = {}
         #: the ``[applied]`` true and false results, built on first use
         self._lwt_frames: dict[bool, DataFrame] = {}
+        #: table -> (schema key, StructType) for ``_schema``: the key is the
+        #: snapshot file's ``generation`` or a created table's DDL
+        self._schemas: dict[str, tuple[tuple | str, StructType]] = {}
 
     # -- write path ---------------------------------------------------------
 
@@ -923,6 +1039,22 @@ class CqlSession:
         return self._where_key(self.snapshot(tbl), key).limit(1).count() > 0
 
     def _cell_value(self, tbl: str, key: dict, col: str):
+        """The value of ``col`` in the row ``key`` names, or None. A scalar
+        payload column is typed from the fold on the driver; other columns,
+        and texts that do not type there, read through a Spark frame."""
+        folded = self._pinned_fold(tbl, {k: [v] for k, v in key.items()})
+        if folded is not None and col in folded[2]:
+            dtype = folded[0][col].dataType
+            held = _held_value(dtype)
+            row = next(iter(folded[3].values()), {})
+            text = row.get(col, (None,))[0]
+            if text is None:
+                return None
+            if held is not None:
+                try:
+                    return dtype.fromInternal(held(text))
+                except _NOT_HELD:
+                    pass
         rows = self._key_rows(tbl, key).select(col).limit(1).collect()
         return rows[0][0] if rows else None
 
@@ -930,7 +1062,7 @@ class CqlSession:
         """The 1-row ``[applied]`` result of a lightweight transaction."""
         frame = self._lwt_frames.get(ok)
         if frame is None:
-            frame = self._lwt_frames[ok] = local_frame(self.spark, [(ok,)], _APPLIED)
+            frame = self._lwt_frames[ok] = HeldFrame(self.spark, [(ok,)], _APPLIED)
         return frame
 
     def prepare(self, statement: str) -> Prepared:
@@ -2020,9 +2152,17 @@ class CqlSession:
     # -- read path ----------------------------------------------------------
 
     def _schema(self, tbl: str) -> StructType:
-        if tbl in self._created:
-            return StructType.fromDDL(self._created[tbl].spark_schema)
-        return table(self.spark, self.sf_dir, tbl).schema
+        """The table's schema, kept per session while the snapshot file (a
+        created table's DDL) stays the same: reading it from the catalog
+        frame or the DDL costs py4j calls."""
+        ddl = self._created[tbl].spark_schema if tbl in self._created else None
+        key = ddl or generation(self.sf_dir, tbl)
+        kept = self._schemas.get(tbl)
+        if kept is None or kept[0] != key:
+            schema = (StructType.fromDDL(ddl) if ddl
+                      else table(self.spark, self.sf_dir, tbl).schema)
+            kept = self._schemas[tbl] = (key, schema)
+        return kept[1]
 
     def _pins(self, tbl: str, conds: list) -> dict | None:
         """Partition-key column -> the values a SELECT's ``=``/``IN``
@@ -2077,7 +2217,7 @@ class CqlSession:
         payload = [f for f in arrow if f.name not in keys]
         cells = [(key, ROW_MARKER, "1", 0, None, False) for key in row_keys]
         for f in payload:
-            melt = _melt(f.type)
+            melt = _melt(schema[f.name].dataType)
             cells += [
                 (key, f.name, None if v is None else melt(v), 0, None, False)
                 for key, v in zip(row_keys, cols[f.name])
@@ -2144,16 +2284,26 @@ class CqlSession:
         self, tbl: str, pins: dict | None, with_writetimes: bool = False
     ) -> tuple[DataFrame, frozenset]:
         """The merged view a read restricted by ``pins`` runs on: the
-        folded rows of the named partitions as a ``LocalRelation``, typed by
-        the Spark merge's own final select, or else the Spark merge. Also
-        returns the pinned columns whose ``=``/``IN`` restriction the frame
-        already applies (none for the Spark merge): a caller need not filter
-        on them again, and should not, since Catalyst compiles a filter over
-        a ``LocalRelation`` anew for each distinct literal."""
+        folded rows of the named partitions, typed on the driver and held in
+        a ``HeldFrame`` (no JVM call until a Spark operator needs them); or,
+        when a text does not type there or the read asks for writetimes, a
+        ``LocalRelation`` of the texts typed by the Spark merge's own final
+        select; or else the Spark merge. Also returns the pinned columns
+        whose ``=``/``IN`` restriction the frame already applies (none for
+        the Spark merge): a caller need not filter on them again, and should
+        not, since Catalyst compiles a filter over a ``LocalRelation`` anew
+        for each distinct literal."""
         folded = self._pinned_fold(tbl, pins)
         if folded is None:
             return self.snapshot(tbl, with_writetimes), frozenset()
         schema, keys, payload, rows = folded
+        applied = frozenset(c for c in pins if isinstance(schema[c].dataType, _EXACT_KEY_TYPES))
+        held = None if with_writetimes else _held_rows(schema, keys, payload, rows)
+        if held is not None:
+            fields = [schema[k] for k in keys] + [
+                StructField(c, schema[c].dataType) for c in payload
+            ]
+            return HeldFrame(self.spark, held, StructType(fields)), applied
         names = [f"{c}_v" if with_writetimes else c for c in payload]
         fields = [schema[k] for k in keys] + [StructField(n, StringType()) for n in names]
         data = []
@@ -2167,7 +2317,6 @@ class CqlSession:
             fields += [StructField(f"{c}_exp", LongType()) for c in payload]
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         wide = local_frame(self.spark, data, StructType(fields))
-        applied = frozenset(c for c in pins if isinstance(schema[c].dataType, _EXACT_KEY_TYPES))
         return self._typed(wide, keys, payload, dtypes, with_writetimes), applied
 
     def _typed(self, wide: DataFrame, keys: list, payload: list, dtypes: dict,

@@ -13,9 +13,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 import threading
+from functools import cached_property
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DateType, StructType, TimestampType
 
@@ -100,8 +102,9 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str
     from a Python list, whose ``ExistingRDD`` runs a Python worker per
     partition. ``schema`` is a StructType or a DDL string.
     TIMESTAMP and DATE fields also take ISO-8601 text (CQL literals
-    arrive as text); naive datetimes are read as UTC, the engine's
-    pinned session time zone."""
+    arrive as text) or Spark's internal integers (microseconds, days since
+    the epoch); naive datetimes are read as UTC, the engine's pinned
+    session time zone."""
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
     cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
@@ -112,6 +115,36 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str
             values = [iso.fromisoformat(v) if isinstance(v, str) else v for v in values]
         arrays.append(pa.array(values, type=af.type))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
+
+
+class HeldFrame(ClassicDataFrame):
+    """A DataFrame of rows the driver already holds, served without the JVM.
+
+    ``collect()`` returns the held rows and ``schema`` (hence ``columns``
+    and ``dtypes``) is the given StructType, with no py4j call. Any other
+    use builds the Spark frame on first need through `local_frame`, so
+    that stays the one way driver rows enter a plan. ``rows`` hold Spark's
+    internal values (``StructType.toInternal``: dates as days, timestamps
+    as microseconds since the epoch), which ``collect()`` converts as
+    Spark's own collect does, on any host time zone."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, rows: list[tuple], schema: StructType):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._held = rows
+        self.__dict__["schema"] = schema  # classic `schema` is a cached_property
+
+    @cached_property
+    def _jdf(self):
+        return local_frame(self._session, self._held, self.schema)._jdf
+
+    def collect(self) -> list:
+        return [self.schema.fromInternal(r) for r in self._held]
 
 
 #: entries kept per `plan_memo` namespace. Keys embed the generation

@@ -1,15 +1,21 @@
-"""CqlSession's two read paths agree. A read that pins its partition key is
-served by the Python fold of the named partitions (``_pinned_fold``); with
-``FAST_READ_MAX_ROWS`` patched to 0 every read takes the Spark merge
-(``snapshot``) instead. Over random statement sequences, and across the DDL
-that rewrites the memtable, both paths return the same rows with the same
-Spark types, and the LWT probes ``_row_exists`` / ``_cell_value`` give the
-same answers."""
+"""CqlSession's read paths agree. A read that pins its partition key is
+served by the Python fold of the named partitions (``_pinned_fold``), its
+texts typed on the driver and held in a ``HeldFrame``; with
+``_held_value`` patched to type nothing the fold's texts take Spark's cast
+(``_typed``) instead, and with ``FAST_READ_MAX_ROWS`` patched to 0 every
+read takes the Spark merge (``snapshot``). Over random statement
+sequences, and across the DDL that rewrites the memtable, the held and the
+cast route return the same rows in the same order with the same schema,
+the Spark merge the same rows and schema, and the LWT probes
+``_row_exists`` / ``_cell_value`` give the same answers on all three."""
 
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
+import decimal
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
@@ -18,6 +24,7 @@ from hypothesis import strategies as st
 from dcosb_cassandra_spark import cql_session
 from dcosb_cassandra_spark.cql import InvalidRequest
 from dcosb_cassandra_spark.cql_session import CqlSession
+from dcosb_cassandra_spark.session import HeldFrame
 
 from .conftest import SMOKE_SF_DIR
 
@@ -29,25 +36,58 @@ def spark_merge():
         yield
 
 
-def _result(df, ordered: bool):
-    rows = [tuple(r) for r in df.collect()]
-    return df.dtypes, rows if ordered else sorted(rows, key=repr)
+@contextlib.contextmanager
+def cast_route():
+    """The fold's texts go to Spark's cast, as when a text does not type
+    on the driver."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cql_session, "_held_value", lambda dtype: None)
+        yield
 
 
-def assert_paths_agree(sess: CqlSession, stmt: str) -> list[tuple]:
-    ordered = "ORDER BY" in stmt.upper()
-    fast = _result(sess.execute(stmt), ordered)
+def _result(sess: CqlSession, stmt: str, raises: bool):
+    """(frame type, schema, rows in order); with ``raises``, the name of
+    the error the statement raised instead (Spark's ANSI cast fails a text
+    out of the column's range when the rows are collected)."""
+    try:
+        df = sess.execute(stmt)
+        return type(df).__name__, df.schema, [tuple(r) for r in df.collect()]
+    except Exception as e:
+        if not raises:
+            raise
+        return type(e).__name__
+
+
+def assert_paths_agree(sess: CqlSession, stmt: str, raises: bool = False) -> list[tuple]:
+    """The statement's result on the three routes: the session's own
+    (held, unless a text does not type) and the cast route agree row for
+    row and on the schema; the Spark merge on the schema and the rows, in
+    order when the statement has an ORDER BY. With ``raises``, a statement
+    may fail, the same way on every route. Returns the rows, sorted unless
+    ordered."""
+    fast = _result(sess, stmt, raises)
+    with cast_route():
+        cast = _result(sess, stmt, raises)
     with spark_merge():
-        slow = _result(sess.execute(stmt), ordered)
-    assert fast == slow, stmt
-    return fast[1]
+        slow = _result(sess, stmt, raises)
+    if isinstance(fast, str) or isinstance(cast, str) or isinstance(slow, str):
+        assert fast == cast == slow, stmt
+        return []
+    assert cast[0] != "HeldFrame", stmt
+    assert fast[1:] == cast[1:], stmt
+    ordered = "ORDER BY" in stmt.upper()
+    rows = fast[2] if ordered else sorted(fast[2], key=repr)
+    assert (fast[1], rows) == (slow[1], slow[2] if ordered else sorted(slow[2], key=repr)), stmt
+    return rows
 
 
 def assert_probes_agree(sess: CqlSession, tbl: str, key: dict, col: str) -> None:
     fast = (sess._row_exists(tbl, key), sess._cell_value(tbl, key, col))
+    with cast_route():
+        cast = (sess._row_exists(tbl, key), sess._cell_value(tbl, key, col))
     with spark_merge():
         slow = (sess._row_exists(tbl, key), sess._cell_value(tbl, key, col))
-    assert fast == slow, (tbl, key)
+    assert fast == cast == slow, (tbl, key)
 
 
 #: USING TIMESTAMP choices; "small"/"big" become distinct values per
@@ -311,3 +351,101 @@ def test_spark_merge_keeps_every_filter(spark):
         with spark_merge():
             assert sess.execute(stmt).columns == cols, stmt
         assert assert_paths_agree(sess, stmt)
+
+
+#: a scalar column of every type the fold types on the driver:
+#: (CQL type of a created table, arrow type of a snapshot column)
+SCALARS = {
+    "ti": ("tinyint", pa.int8()),
+    "si": ("smallint", pa.int16()),
+    "i": ("int", pa.int32()),
+    "bi": ("bigint", pa.int64()),
+    "f": ("float", pa.float32()),
+    "d": ("double", pa.float64()),
+    "dec": ("decimal", pa.decimal128(12, 2)),
+    "t": ("text", pa.string()),
+    "b": ("boolean", pa.bool_()),
+    "day": ("date", pa.date32()),
+    "ts": ("timestamp", pa.timestamp("us", tz="UTC")),
+    "ntz": (None, pa.timestamp("us")),  # CQL has no timestamp_ntz type
+}
+
+#: (column, literal) spelled as the fold melts a value: typed on the driver
+CANONICAL = [
+    ("ti", "-128"), ("ti", "127"), ("si", "300"), ("i", "-7"),
+    ("bi", "9223372036854775807"), ("f", "1.5"), ("d", "1234.5"), ("d", "0.1"),
+    ("dec", "12.34"), ("t", "'it''s'"), ("b", "'true'"), ("day", "'2024-02-29'"),
+    ("ts", "'2024-01-01 12:30:00'"), ("ts", "'1969-12-31 23:59:59.500000'"),
+    ("ntz", "'1995-01-01 00:00:00'"),
+]
+
+#: other spellings and out-of-range values: Spark's cast types them, and
+#: fails the tinyint and bigint ones
+NON_CANONICAL = [
+    ("d", "'1.50'"), ("i", "'+5'"), ("ti", "300"), ("bi", str(2**63)), ("b", "true"),
+    ("b", "'True'"), ("ts", "'2024-01-01T00:00:00'"), ("f", "0.1"), ("dec", "'1e1'"),
+    ("ntz", "'2024-01-01T00:00:00'"),
+]
+
+
+@pytest.fixture(scope="module")
+def typed_snapshot(tmp_path_factory):
+    """A snapshot directory whose ``orders`` table has one column of every
+    scalar type, timestamp_ntz included, and two rows."""
+    d = tmp_path_factory.mktemp("typed")
+    values = {
+        "ti": [-128, None], "si": [300, 7], "i": [-7, 0], "bi": [2**63 - 1, -(2**63)],
+        "f": [0.1, 1.5], "d": [0.1, -0.0],
+        "dec": [decimal.Decimal("12.34"), decimal.Decimal("-0.50")], "t": ["x", ""],
+        "b": [True, False], "day": [dt.date(2024, 2, 29), dt.date(1900, 1, 1)],
+        "ts": [dt.datetime(2024, 1, 1, 12, 30), dt.datetime(1969, 12, 31, 23, 59, 59, 500000)],
+        "ntz": [dt.datetime(1995, 1, 1), None],
+    }
+    table = {"o_orderkey": pa.array([1, 2], pa.int64())}
+    table.update({c: pa.array(values[c], SCALARS[c][1]) for c in SCALARS})
+    pq.write_table(pa.table(table), d / "orders.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("kind", ["created", "snapshot"])
+def test_scalar_types_match_the_spark_merge(spark, typed_snapshot, kind):
+    """Every scalar type reads the same on the held route, on the cast
+    route and from the Spark merge: rows, row order and schema. Canonical
+    texts are held; any other spelling sends the read to the cast route,
+    and a value the column cannot take fails there as on the merge."""
+    if kind == "created":
+        sess = CqlSession(spark, SMOKE_SF_DIR)
+        cols = ", ".join(f"{c} {t}" for c, (t, _) in SCALARS.items() if t)
+        sess.execute(f"CREATE TABLE alltypes (k bigint, c int, {cols}, PRIMARY KEY (k, c))")
+        tbl, base = "alltypes", []
+    else:
+        sess = CqlSession(spark, typed_snapshot)
+        tbl, base = "orders", [1, 2]
+    pk = "k" if kind == "created" else "o_orderkey"
+
+    def write(k: int, col: str, lit: str) -> dict:
+        key = {pk: k, "c": 0} if kind == "created" else {pk: k}
+        where = " AND ".join(f"{c} = {v}" for c, v in key.items())
+        sess.execute(f"UPDATE {tbl} SET {col} = {lit} WHERE {where}")
+        return key
+
+    def select(keys: list[int]) -> str:
+        return f"SELECT * FROM {tbl} WHERE {pk} IN ({', '.join(map(str, keys))})"
+
+    canonical = [(c, lit) for c, lit in CANONICAL if c in sess._schema(tbl).names]
+    probes = [(write(10 + j, c, lit), c) for j, (c, lit) in enumerate(canonical)]
+    keys = base + [10 + j for j in range(len(canonical))]
+    assert isinstance(sess.execute(select(keys)), HeldFrame)
+    assert len(assert_paths_agree(sess, select(keys))) == len(keys)
+    for key, col in probes:
+        assert_probes_agree(sess, tbl, key, col)
+
+    for j, (col, lit) in enumerate(NON_CANONICAL):
+        if col not in sess._schema(tbl).names:
+            continue
+        key = write(100 + j, col, lit)
+        assert not isinstance(sess.execute(select([100 + j])), HeldFrame), lit
+        if assert_paths_agree(sess, select([100 + j]), raises=True):
+            assert_probes_agree(sess, tbl, key, col)
+        # one text the driver does not type sends the whole read to the cast
+        assert not isinstance(sess.execute(select([*keys, 100 + j])), HeldFrame), lit

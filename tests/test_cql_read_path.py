@@ -1,23 +1,26 @@
 """CqlSession read path: the Arrow-backed local frames
 (`session.local_frame`) that carry driver-held rows into plans, and the
 fast path of key-pinned reads, which folds the named partitions in Python
-(`CqlSession._pinned_fold`) and runs on a `LocalRelation` without an
-Exchange; unpinned reads keep the Spark merge (`CqlSession.snapshot`), and
-tests/test_cql_fold.py covers the fallback conditions. Each fast form is
-checked against the form it replaces."""
+(`CqlSession._pinned_fold`) and returns them as a `session.HeldFrame`:
+collected on the driver, run on a `LocalRelation` without an Exchange when
+a Spark operator needs them. Unpinned reads keep the Spark merge
+(`CqlSession.snapshot`), and tests/test_cql_fold.py covers the fallback
+conditions. Each fast form is checked against the form it replaces."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from dcosb_cassandra_spark import cql_session
 from dcosb_cassandra_spark.cql_session import CqlSession
 from dcosb_cassandra_spark.operators.llm_quality import _QC_MODEL_SCHEMA
 from dcosb_cassandra_spark.operators.llm_text import _BPE_VOCAB_SCHEMA
-from dcosb_cassandra_spark.session import local_frame
+from dcosb_cassandra_spark.session import HeldFrame, local_frame
 
 from .conftest import SMOKE_SF_DIR
 
@@ -172,3 +175,64 @@ def test_unpinned_reads_keep_the_exchange(mixed):
     slice_ = mixed.execute("SELECT * FROM kv WHERE c = 2 ALLOW FILTERING")
     assert "Exchange hashpartitioning" in _plan(slice_)
     assert _rows(slice_) == [(1, 2, "kept")]
+
+
+def _first_keys(tbl: str, col: str, n: int) -> list:
+    return pq.read_table(f"{SMOKE_SF_DIR}/{tbl}.parquet", columns=[col]).column(0).to_pylist()[:n]
+
+
+def test_held_frames_stay_off_the_jvm(spark, monkeypatch):
+    """A pinned ``SELECT *`` and both LWT forms answer from held rows: after
+    ``collect()`` no Spark frame was built, and a warm read makes no py4j
+    call at all."""
+    sess = CqlSession(spark, SMOKE_SF_DIR)
+    k0, k1, k2 = _first_keys("customer", "c_custkey", 3)
+    seg = sess.execute(f"SELECT * FROM customer WHERE c_custkey = {k1}").collect()[0].c_mktsegment
+    sess.execute(f"UPDATE customer SET c_acctbal = 2.5 WHERE c_custkey = {k0}")
+    frames = [
+        sess.execute(f"SELECT * FROM customer WHERE c_custkey = {k0}"),
+        sess.execute(f"INSERT INTO customer (c_custkey, c_name) VALUES ({k0}, 'x') IF NOT EXISTS"),
+        sess.execute(f"UPDATE customer SET c_acctbal = 1.5 WHERE c_custkey = {k1} "
+                     f"IF c_mktsegment = '{seg}'"),
+    ]
+    assert [f.collect()[0][-1] for f in frames] == [frames[0].collect()[0].c_mktsegment,
+                                                   False, True]
+    for frame in frames:
+        assert isinstance(frame, HeldFrame) and "_jdf" not in frame.__dict__
+
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+    monkeypatch.setattr(client, "send_command", lambda *a, **kw: calls.append(a) or send(*a, **kw))
+    rows = sess.execute(f"SELECT * FROM customer WHERE c_custkey IN ({k0}, {k2})").collect()
+    assert [r.c_custkey for r in rows] == [k0, k2] and rows[0].c_acctbal == 2.5
+    assert sess.execute(f"UPDATE customer SET c_acctbal = 3.5 WHERE c_custkey = {k2} "
+                        f"IF c_acctbal = -1.0").collect() == [(False,)]
+    assert calls == []
+    assert frames[0].count() == 1 and calls  # the counter sees a Spark plan
+
+
+def test_held_frame_matches_the_spark_route(mixed):
+    """Everything but ``collect()`` builds the held frame's Spark plan on
+    first use; ``count()``, ``filter``, ``columns`` and ``toPandas()``
+    equal the Spark merge's."""
+    for stmt, key in (
+        ("SELECT * FROM customer WHERE c_custkey IN (1, 2, 3, 900001)", "c_custkey"),
+        ("SELECT * FROM events WHERE user_id = 900002", "event_id"),
+        (f"SELECT * FROM orders WHERE o_orderkey IN "
+         f"({', '.join(map(str, _first_keys('orders', 'o_orderkey', 3)))})", "o_orderkey"),
+    ):
+        held = mixed.execute(stmt)
+        assert isinstance(held, HeldFrame), stmt
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cql_session, "FAST_READ_MAX_ROWS", 0)
+            merged = mixed.execute(stmt)
+        assert not isinstance(merged, HeldFrame)
+        assert held.columns == merged.columns and held.schema == merged.schema
+        assert held.count() == merged.count() > 0
+        pred = F.col(key) > 1
+        assert _rows(held.filter(pred)) == _rows(merged.filter(pred))
+        want = merged.toPandas().sort_values(key, ignore_index=True)
+        got = held.toPandas().sort_values(key, ignore_index=True)
+        assert got.equals(want) and list(got.dtypes) == list(want.dtypes), stmt
+        assert _rows(held) == _rows(merged)

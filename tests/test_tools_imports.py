@@ -133,8 +133,9 @@ def test_foreach_batch_replays_have_one_source():
 
 
 def test_ab_report_counts_wins_per_pair():
-    """tools/ab.py's report: per-arm median and quartiles, and the pairs
-    in which the change beat the parent on a lower-is-better metric."""
+    """tools/ab.py's report: per-arm median and quartiles, the pairs in
+    which the change beat the parent on a lower-is-better metric, and the
+    traced runs' per-layer metrics with the change over the parent."""
     spec = importlib.util.spec_from_file_location("ab", ROOT / "tools" / "ab.py")
     ab = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(ab)
@@ -151,3 +152,21 @@ def test_ab_report_counts_wins_per_pair():
     assert "median     11.000" in lines[1] and "median      5.000" in lines[2]
     assert lines[3] == "  change beat parent in 2 of 3 pairs"
     assert ab.quartiles([1.0, 2.0, 3.0, 4.0, 5.0]) == (2.0, 3.0, 4.0)
+
+    # --trace: one traced run per arm, its per-layer metrics side by side
+    layers = [{"name": "cql_session.lwt_ms", "unit": "ms", "better": "lower"},
+              {"name": "spark.jobs_per_op", "unit": "count", "better": "lower"},
+              {"name": "registry.build_ms", "unit": "ms", "better": "lower"}]
+    traced = ab.summarize_trace(
+        {"parent": {"correct": True, "failed": 0, "metrics": {
+            "cql_session.lwt_ms": {"value": 40.0}, "spark.jobs_per_op": {"value": 0},
+            "client.read_ms": {"value": 2.0}}},
+         "change": {"correct": False, "failed": 1, "metrics": {
+            "cql_session.lwt_ms": {"value": 4.0}, "spark.jobs_per_op": {"value": 0}}}},
+        layers,
+    )
+    assert traced[0].split() == ["metric", "parent", "change", "change/parent"]
+    assert traced[1].split() == ["cql_session.lwt_ms", "(ms)", "40", "4", "0.100"]
+    assert traced[2].split() == ["spark.jobs_per_op", "(count)", "0", "0", "-"]
+    assert traced[3].split() == ["client.read_ms", "2", "-", "-"]
+    assert traced[4] == "  change traced run: failed 1"
