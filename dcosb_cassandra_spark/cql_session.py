@@ -24,11 +24,12 @@ statement at a time — inherently small), indexed by partition. A read that
 names its partitions (every partition-key column restricted by ``=``/``IN``)
 folds just those partitions' memtable cells and snapshot rows in Python,
 as Cassandra's single-partition read merges one partition's memtable and
-SSTable cells (``fold_cells``). Every other read is a DataFrame plan: melt
-snapshot → union mutation cells → window compaction → pivot. At scale that
-plan runs over a persisted cell log instead of the in-memory list (this is
-exactly an LSM memtable/SSTable split: parquet snapshot = compacted
-SSTables, session buffer = memtable).
+SSTable cells (``fold_cells``), types the rows on the driver and hands them
+back in a ``session.HeldFrame`` that needs no JVM call to collect. Every
+other read is a DataFrame plan: melt snapshot → union mutation cells →
+window compaction → pivot. At scale that plan runs over a persisted cell
+log instead of the in-memory list (this is exactly an LSM memtable/SSTable
+split: parquet snapshot = compacted SSTables, session buffer = memtable).
 """
 
 from __future__ import annotations
@@ -297,9 +298,9 @@ def _held_rows(schema: StructType, keys: list, payload: list, rows: dict) -> lis
     """The folded rows of a pinned read (``CqlSession._pinned_fold``) in
     Spark's internal form, key columns then payload columns, or None when
     a column or a text does not type on the driver (see ``_held_value``).
-    Float and decimal keys are not held: the fold may compare a key value
-    unrounded to the column type."""
-    if any(isinstance(schema[k].dataType, (FloatType, DecimalType)) for k in keys):
+    Decimal keys are not held: a key keeps the Python value it was written
+    as (an int, float or Decimal), which Arrow converts in its own way."""
+    if any(isinstance(schema[k].dataType, DecimalType) for k in keys):
         return None
     cols = [*keys, *payload]
     held = [_held_value(schema[c].dataType) for c in cols]
@@ -1044,10 +1045,9 @@ class CqlSession:
         and texts that do not type there, read through a Spark frame."""
         folded = self._pinned_fold(tbl, {k: [v] for k, v in key.items()})
         if folded is not None and col in folded[2]:
-            dtype = folded[0][col].dataType
+            dtype, rows = folded[0][col].dataType, folded[3]
+            text = next(iter(rows.values()), {}).get(col, (None,))[0]
             held = _held_value(dtype)
-            row = next(iter(folded[3].values()), {})
-            text = row.get(col, (None,))[0]
             if text is None:
                 return None
             if held is not None:
@@ -1388,10 +1388,21 @@ class CqlSession:
             self._need_permission(verb, chain)
 
     def execute(self, statement: str | Prepared, parameters: tuple = ()) -> DataFrame | None:
-        """Execute a statement. LWT forms (IF NOT EXISTS / IF col = v) return
-        a 1-row DataFrame with an ``[applied]`` boolean, like Cassandra
-        [PK `service/paxos/`; single-engine: the condition check is a point
-        read, no consensus needed — SURVEY A25]."""
+        """Execute a statement. A SELECT returns a DataFrame; writes and DDL
+        return None. LWT forms (IF NOT EXISTS / IF col = v) return a 1-row
+        DataFrame with an ``[applied]`` boolean, like Cassandra [PK
+        `service/paxos/`; single-engine: the condition check is a point
+        read, no consensus needed — SURVEY A25].
+
+        A SELECT that restricts every partition-key column with ``=``/``IN``
+        reads only those partitions (Cassandra's single-partition read). Its
+        rows are typed on the driver and, for a lone ``*`` with no other
+        clause that needs a Spark operator, it returns them as a
+        ``session.HeldFrame``: ``collect()``, ``schema`` and ``columns``
+        answer from the held rows with no JVM call, and any other use
+        builds a ``LocalRelation`` of them on first need. The ``[applied]``
+        results are HeldFrames as well. Other SELECTs return a Spark plan
+        over the same rows, or over the Spark merge (``snapshot``)."""
         if isinstance(statement, Prepared):
             statement = statement.bind(*parameters)
         elif parameters:
@@ -2877,6 +2888,9 @@ class CqlSession:
         post_mask: tuple[str, ...] = ()
         if tbl in self._created and self._created[tbl].masks:
             src, post_mask = self._apply_attached_masks(tbl, src, statement)
+        # a lone `*` whose every restriction the fold applied needs no Spark
+        # operator: cql() checks the restrictions and hands a held source
+        # back as it is, so the read is served without the JVM
         res = cql(
             self.spark,
             self.sf_dir,
